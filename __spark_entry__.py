@@ -209,15 +209,16 @@ def q_volume_anomaly_events(spark, sf):
 
 
 def q_validate_lineitem_fused(spark, sf):
-    """FUSED aggregation table checks through the declarative path
-    (operators/table_checks.py _fused_agg_violations, VERDICT r3 #2):
-    one ruleset declares x-unique(l_partkey) + x-quantile(l_quantity
-    p99<=45) + x-volume(l_shipdate monthly, k=2) and all three ride ONE
-    scan + ONE shuffle (plan-pinned in tests/test_fused_table_checks).
-    The oracle re-derives each check independently and unions them —
-    proving the fused rows are byte-identical to three standalone
-    passes. `expected` dropped (mixed NULL/non-NULL arrays; driver
-    canonicalizer rule)."""
+    """Six aggregation table checks declared in ONE ruleset through
+    the declarative path (operators/table_checks.py): x-unique
+    (l_partkey), x-quantile (l_quantity p99<=45), x-mask + x-skew
+    (l_returnflag), x-volume (l_shipdate monthly, k=2) and x-freshness
+    (l_shipdate). Each runs as its own column-pruned pass and the rows
+    are unioned. The oracle re-derives each check independently and
+    unions them — the engine's rows must equal the standalone checks'.
+    The query keeps its historical name. `expected` dropped: the
+    oracle comparison's canonicalizer cannot sort mixed NULL/non-NULL
+    arrays."""
     from remark_lint_frontmatter_schema_spark import compile_ruleset
     from remark_lint_frontmatter_schema_spark.operators.table_checks import (
         table_check_violations)

@@ -564,6 +564,11 @@ def main(argv: list[str] | None = None) -> int:
 
     if violations is not None and n_consumers > 1:
         violations.unpersist()
+    # free what reuse=True operators persisted (e.g. x-skew's per-key
+    # counts) once the last consumer above has run, as the workspace
+    # path does
+    from .operators.dedup import release_all
+    release_all()
     if args.frail and (n_viol > 0 or report.errors):
         return 1
     return 0

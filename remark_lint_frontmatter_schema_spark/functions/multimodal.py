@@ -334,11 +334,12 @@ def decode_image(b: bytes) -> np.ndarray:
     """Pixel decode. REAL for PNG, GIF, baseline JPEG and lossless
     WEBP (pure numpy/zlib/LZW/DCT/VP8L codecs — see functions/jpeg.py
     and functions/webp.py for the subsets: baseline sequential 4:4:4
-    JPEG; full-feature VP8L). The remaining refusal is narrow (round
-    5): lossy VP8 (boolean-arithmetic DCT) and VP8X-extended
-    containers raise — codec-library territory, libs not in this
-    sandbox. Production swaps only this dispatch; everything around it
-    (batching, schema, partitioning) is live either way."""
+    JPEG; full-feature VP8L). VP8X-extended containers holding a VP8L
+    still are unwrapped and decoded. The remaining refusal is narrow:
+    lossy VP8 (boolean-arithmetic DCT) and animated WEBP raise —
+    codec-library territory. Production swaps only this dispatch;
+    everything around it (batching, schema, partitioning) is live
+    either way."""
     fmt = sniff_image_format(b)
     if fmt == "png":
         return png_decode(b)

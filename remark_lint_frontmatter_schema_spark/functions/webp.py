@@ -111,7 +111,8 @@ class _Huffman:
     """Canonical prefix code from a code-length array (DEFLATE
     assignment: codes ascend by (length, symbol)); decoding walks the
     bitstream MSB-of-code-first. A table with exactly one used symbol
-    decodes it for 0 bits, per spec."""
+    decodes it for 0 bits, per spec; any other table must be complete
+    (Kraft sum exactly 1)."""
 
     def __init__(self, lengths):
         used = [(ln, sym) for sym, ln in enumerate(lengths) if ln > 0]
@@ -123,9 +124,13 @@ class _Huffman:
             self.codes = {used[0][1]: (0, 0)}
             return
         self.single = None
-        kraft = sum(2.0 ** -ln for ln, _ in used)
-        if kraft > 1.0 + 1e-9:
+        # exact integer Kraft sum over 2^15 (the longest VP8L code);
+        # libwebp refuses a multi-symbol code that is not complete
+        kraft = sum(1 << (15 - ln) for ln, _ in used)
+        if kraft > 1 << 15:
             raise ValueError("VP8L: over-subscribed prefix code")
+        if kraft < 1 << 15:
+            raise ValueError("VP8L: incomplete prefix code")
         code = 0
         prev_len = 0
         self.table = {}
@@ -486,7 +491,8 @@ def _predict(mode, left, top, tl, tr):
         p = [a + b - c for a, b, c in zip(lc, tc, tlc)]
         pa = sum(abs(pc - a) for pc, a in zip(p, lc))
         pb = sum(abs(pc - b) for pc, b in zip(p, tc))
-        return left if pa <= pb else top
+        # RFC 9649 / libwebp: left only when strictly closer
+        return left if pa < pb else top
     if mode == 12:                              # ClampAddSubtractFull
         return _pack(tuple(
             min(255, max(0, a + b - c))

@@ -453,81 +453,31 @@ def drift_violations(df: DataFrame, value_col: str, *, partition_col: str,
     carries ks + psi; emd/jsd/cvm stay global-only (their bucket-width
     and pooled-mass semantics are tuned per declaration, not per
     segment)."""
-    if by is None:
+    if by is not None:
+        if any(t is not None for t in (emd_threshold, jsd_threshold,
+                                       cvm_threshold)):
+            raise ValueError(
+                "x-drift `by:` supports ks/psi only; emd/jsd/cvm are "
+                "global-form statistics")
+        hist = histogram_by(df, value_col, partition_col, by, lo=lo, hi=hi,
+                            n_buckets=n_buckets)
+        ks = ks_by(hist, str(side_a), str(side_b))
+        p = psi_by(hist, str(side_a), str(side_b)) \
+            .select(F.col("grp").alias("_pgrp"), "psi")
+        # both relations enumerate exactly hist's group set -> equi-join
+        j = (ks.join(p, F.col("grp") == F.col("_pgrp"))
+             .select(F.col("grp"),
+                     F.round("ks_stat", 6).alias("ks_stat"),
+                     F.round("psi", 6).alias("psi")))
+        rid = F.col("grp").cast("string")
+    else:
         hist = histogram(df, value_col, partition_col, lo=lo, hi=hi,
                          n_buckets=n_buckets)
-        return drift_violations_from_hist(
-            hist, value_col, partition_col=partition_col, side_a=side_a,
-            side_b=side_b, lo=lo, hi=hi, n_buckets=n_buckets,
-            ks_threshold=ks_threshold, psi_threshold=psi_threshold,
-            emd_threshold=emd_threshold, jsd_threshold=jsd_threshold,
-            cvm_threshold=cvm_threshold, ruleset_name=ruleset_name,
-            severity=severity)
-    if any(t is not None for t in (emd_threshold, jsd_threshold,
-                                   cvm_threshold)):
-        raise ValueError(
-            "x-drift `by:` supports ks/psi only; emd/jsd/cvm are "
-            "global-form statistics")
-    hist = histogram_by(df, value_col, partition_col, by, lo=lo, hi=hi,
-                        n_buckets=n_buckets)
-    ks = ks_by(hist, str(side_a), str(side_b))
-    p = psi_by(hist, str(side_a), str(side_b)) \
-        .select(F.col("grp").alias("_pgrp"), "psi")
-    # both relations enumerate exactly hist's group set -> equi-join
-    j = (ks.join(p, F.col("grp") == F.col("_pgrp"))
-         .select(F.col("grp"),
-                 F.round("ks_stat", 6).alias("ks_stat"),
-                 F.round("psi", 6).alias("psi")))
-    missing = F.col("ks_stat").isNull() | F.col("psi").isNull()
-    drifted = j.where((F.col("ks_stat") > ks_threshold)
-                      | (F.col("psi") > psi_threshold) | missing)
-    return drifted.select(
-        F.col("grp").cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"drift:{value_col}:by={by}").alias("constraint_id"),
-        F.when(missing, F.lit("drift-config")).otherwise(F.lit("drift"))
-         .alias("keyword"),
-        F.lit(f"/{value_col}").alias("instance_path"),
-        F.lit(f"#/x-drift/{value_col}").alias("schema_path"),
-        F.when(missing,
-               F.lit(f"Drift sides '{side_a}'/'{side_b}' not both "
-                     f"present in '{partition_col}'"))
-         .otherwise(F.lit(
-             f"Distribution drift on '{value_col}' "
-             f"({side_a} vs {side_b}): ks>{ks_threshold} "
-             f"or psi>{psi_threshold}")).alias("message"),
-        F.when(missing, F.lit("sides missing"))
-         .otherwise(F.concat(F.lit("ks="),
-                             F.col("ks_stat").cast("string"),
-                             F.lit(" psi="),
-                             F.col("psi").cast("string")))
-         .alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
-
-
-def drift_violations_from_hist(hist: DataFrame, value_col: str, *,
-                               partition_col: str, side_a: str,
-                               side_b: str, lo: float, hi: float,
-                               n_buckets: int = 25,
-                               ks_threshold: float = 0.1,
-                               psi_threshold: float = 0.2,
-                               emd_threshold: float | None = None,
-                               jsd_threshold: float | None = None,
-                               cvm_threshold: float | None = None,
-                               ruleset_name: str = "engine",
-                               severity: str = "warning") -> DataFrame:
-    """:func:`drift_violations` from a precomputed ``(side, bucket, n)``
-    histogram relation — the shared tail behind the standalone operator
-    and the fused single-scan table-check pass (the x-drift histogram is
-    a groupBy count, so it rides operators/table_checks.py's tagged
-    explode: same statistics, byte-identical rows either way)."""
-    ks = ks_statistic(hist, str(side_a), str(side_b))
-    p = psi(hist, str(side_a), str(side_b))
-    j = ks.crossJoin(p).select(F.round("ks_stat", 6).alias("ks_stat"),
-                               F.round("psi", 6).alias("psi"))
+        ks = ks_statistic(hist, str(side_a), str(side_b))
+        p = psi(hist, str(side_a), str(side_b))
+        j = ks.crossJoin(p).select(F.round("ks_stat", 6).alias("ks_stat"),
+                                   F.round("psi", 6).alias("psi"))
+        rid = F.lit(f"{side_a}~{side_b}")
     emd_fired = F.lit(False)
     emd_tail = F.lit("")
     if emd_threshold is not None:
@@ -568,10 +518,11 @@ def drift_violations_from_hist(hist: DataFrame, value_col: str, *,
                       | F.coalesce(jsd_fired, F.lit(False))
                       | F.coalesce(cvm_fired, F.lit(False)) | missing)
     return drifted.select(
-        F.lit(f"{side_a}~{side_b}").alias("row_id"),
+        rid.alias("row_id"),
         F.lit("all").alias("partition_id"),
         F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"drift:{value_col}").alias("constraint_id"),
+        F.lit(f"drift:{value_col}"
+              + (f":by={by}" if by else "")).alias("constraint_id"),
         F.when(missing, F.lit("drift-config")).otherwise(F.lit("drift"))
          .alias("keyword"),
         F.lit(f"/{value_col}").alias("instance_path"),
@@ -641,26 +592,6 @@ def benford(df: DataFrame, value_col: str) -> DataFrame:
     counts = (df.where(d.isNotNull())
               .groupBy(d.alias("digit"))
               .agg(F.count(F.lit(1)).alias("n")))
-    return benford_from_counts(spark, counts)
-
-
-def benford_digit_expr(value_col: str):
-    """First-significant-digit expression: NULL for rows without one
-    (NULL/zero/non-finite values), else 1..9 — shared by
-    :func:`benford` and the fused table-check pass. The clamp absorbs
-    the one-ulp log10 edge at exact powers of ten."""
-    v = F.abs(F.col(value_col).cast("double"))
-    valid = (v.isNotNull() & (v > 0)
-             & ~F.isnan(v) & (v != float("inf")))
-    d = F.least(F.lit(9), F.greatest(F.lit(1), F.floor(
-        v / F.pow(F.lit(10.0), F.floor(F.log10(v)))).cast("int")))
-    return F.when(valid, d)
-
-
-def benford_from_counts(spark, counts: DataFrame) -> DataFrame:
-    """The :func:`benford` relation from a precomputed per-digit count
-    relation ``(digit INT, n)`` — shared with the fused single-scan
-    table-check pass so both derive byte-identical statistics."""
     digits = spark.range(1, 10).select(F.col("id").cast("int")
                                        .alias("digit"))
     full = (digits.join(counts, "digit", "left")
@@ -685,6 +616,19 @@ def benford_from_counts(spark, counts: DataFrame) -> DataFrame:
     return (scored.drop("_raw")
             .crossJoin(F.broadcast(chi2))
             .orderBy("digit"))
+
+
+def benford_digit_expr(value_col: str):
+    """First-significant-digit expression: NULL for rows without one
+    (NULL/zero/non-finite values), else 1..9 — shared by
+    :func:`benford` and the grouped :func:`benford_violations`. The
+    clamp absorbs the one-ulp log10 edge at exact powers of ten."""
+    v = F.abs(F.col(value_col).cast("double"))
+    valid = (v.isNotNull() & (v > 0)
+             & ~F.isnan(v) & (v != float("inf")))
+    d = F.least(F.lit(9), F.greatest(F.lit(1), F.floor(
+        v / F.pow(F.lit(10.0), F.floor(F.log10(v)))).cast("int")))
+    return F.when(valid, d)
 
 
 def benford_violations(df: DataFrame, value_col: str, *,
@@ -712,58 +656,37 @@ def benford_violations(df: DataFrame, value_col: str, *,
     if max_mad <= 0:
         raise ValueError("max_mad must be > 0")
     if by is None:
-        return benford_gate_from_relation(
-            benford(df, value_col), value_col, max_mad=max_mad,
-            ruleset_name=ruleset_name, severity=severity)
-    spark = df.sparkSession
-    grp = F.col(by).cast("string").alias("_grp")
-    d = benford_digit_expr(value_col)
-    base = df.select(grp, d.alias("digit"))
-    counts = (base.where(F.col("digit").isNotNull())
-              .groupBy("_grp", "digit")
-              .agg(F.count(F.lit(1)).alias("n")))
-    digits = spark.range(1, 10).select(F.col("id").cast("int")
-                                       .alias("digit"))
-    # groups × 9 digits — a keyed relation (never collected), so group
-    # cardinality is unbounded; eqNullSafe keeps the NULL group real
-    lattice = base.select("_grp").distinct().crossJoin(F.broadcast(digits))
-    full = (lattice.join(
-        counts,
-        on=lattice["_grp"].eqNullSafe(counts["_grp"])
-        & (lattice["digit"] == counts["digit"]), how="left")
-        .select(lattice["_grp"], lattice["digit"],
-                F.coalesce(counts["n"], F.lit(0)).alias("n")))
-    w = Window.partitionBy("_grp")
-    e = F.round(F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit")), 6)
-    obs = F.round(F.try_divide(F.col("n"), F.sum("n").over(w)), 6)
-    mad = (full.withColumn("_dev", F.abs(obs - e))
-           .groupBy("_grp")
-           .agg(F.round(F.avg("_dev"), 6).alias("_mad")))
-    return _benford_rows(mad, F.coalesce(F.col("_grp"), F.lit("<null>")),
-                         value_col, by=by, max_mad=max_mad,
-                         ruleset_name=ruleset_name, severity=severity)
-
-
-def benford_gate_from_relation(b: DataFrame, value_col: str, *,
-                               max_mad: float = 0.015,
-                               ruleset_name: str = "engine",
-                               severity: str = "warning") -> DataFrame:
-    """The x-benford gate over a precomputed :func:`benford` relation —
-    shared with the fused table-check pass."""
-    mad = b.agg(F.round(F.avg(F.abs(F.col("observed") - F.col("expected"))),
-                        6).alias("_mad"))
-    return _benford_rows(mad, F.lit("all"), value_col, by=None,
-                         max_mad=max_mad, ruleset_name=ruleset_name,
-                         severity=severity)
-
-
-def _benford_rows(mad: DataFrame, rid, value_col: str, *, by,
-                  max_mad: float, ruleset_name: str,
-                  severity: str) -> DataFrame:
-    """Violation rows from a MAD relation (``_mad`` double, plus the
-    group column behind ``rid`` for the grouped form) — the shared tail
-    behind the global gate, the grouped gate, and the fused table-check
-    pass, so all emit byte-identical rows."""
+        b = benford(df, value_col)
+        mad = b.agg(F.round(F.avg(F.abs(F.col("observed")
+                                        - F.col("expected"))),
+                            6).alias("_mad"))
+        rid = F.lit("all")
+    else:
+        spark = df.sparkSession
+        grp = F.col(by).cast("string").alias("_grp")
+        d = benford_digit_expr(value_col)
+        base = df.select(grp, d.alias("digit"))
+        counts = (base.where(F.col("digit").isNotNull())
+                  .groupBy("_grp", "digit")
+                  .agg(F.count(F.lit(1)).alias("n")))
+        digits = spark.range(1, 10).select(F.col("id").cast("int")
+                                           .alias("digit"))
+        # groups × 9 digits — a keyed relation (never collected), so group
+        # cardinality is unbounded; eqNullSafe keeps the NULL group real
+        lattice = base.select("_grp").distinct().crossJoin(F.broadcast(digits))
+        full = (lattice.join(
+            counts,
+            on=lattice["_grp"].eqNullSafe(counts["_grp"])
+            & (lattice["digit"] == counts["digit"]), how="left")
+            .select(lattice["_grp"], lattice["digit"],
+                    F.coalesce(counts["n"], F.lit(0)).alias("n")))
+        w = Window.partitionBy("_grp")
+        e = F.round(F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit")), 6)
+        obs = F.round(F.try_divide(F.col("n"), F.sum("n").over(w)), 6)
+        mad = (full.withColumn("_dev", F.abs(obs - e))
+               .groupBy("_grp")
+               .agg(F.round(F.avg("_dev"), 6).alias("_mad")))
+        rid = F.coalesce(F.col("_grp"), F.lit("<null>"))
     # fail closed: an empty/all-invalid column (or group) has NULL
     # shares and a NULL MAD — no evidence of conformance is a finding,
     # not a pass (the x-freshness policy)
@@ -789,6 +712,7 @@ def _benford_rows(mad: DataFrame, rid, value_col: str, *, by,
         F.lit(None).cast("array<string>").alias("expected"),
         F.lit(severity).alias("severity"),
     )
+
 
 
 def mean_shift_scan(df: DataFrame, ts_col: str, value_col: str, *,

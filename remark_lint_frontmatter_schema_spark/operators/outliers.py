@@ -180,41 +180,6 @@ def volume_anomalies(df: DataFrame, ts_col: str, *, unit: str = "day",
             .select(F.col("row_id").alias("bucket"), "value", "z"))
 
 
-def volume_violations_from_buckets(buckets: DataFrame, ts_col: str, *,
-                                   unit: str = "day", k: float = 3.5,
-                                   ruleset_name: str = "engine",
-                                   severity: str = "warning") -> DataFrame:
-    """Violation rows from a precomputed per-bucket count relation with
-    columns ``(bucket TIMESTAMP, n_rows)`` — the shared tail behind
-    :func:`volume_violations` and the fused single-scan table-check pass
-    (operators/table_checks.py); the median/MAD outlier passes run on the
-    driver-scale bucket relation either way, so rows are byte-identical."""
-    bad = (outlier_scores(buckets, "n_rows", row_id="bucket", k=k)
-           .select(F.col("row_id").alias("bucket"), "value", "z"))
-    return bad.select(
-        F.col("bucket").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"volume:{ts_col}").alias("constraint_id"),
-        F.lit("x-volume").alias("keyword"),
-        F.lit(f"/{ts_col}").alias("instance_path"),
-        F.lit(f"#/x-volume/{ts_col}").alias("schema_path"),
-        F.concat(
-            F.lit(f"Must have typical {unit} row volume "
-                  f"(median/MAD |z| <= {k:g}): bucket has "),
-            F.col("value").cast("long").cast("string"),
-            F.lit(" rows"),
-            F.when(F.col("z").isNotNull(),
-                   F.concat(F.lit(" (z="),
-                            F.round("z", 2).cast("string"),
-                            F.lit(")"))).otherwise(F.lit(""))
-        ).alias("message"),
-        F.col("value").cast("long").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
-
-
 def volume_violations(df: DataFrame, ts_col: str, *, unit: str = "day",
                       k: float = 3.5, by: str | None = None,
                       ruleset_name: str = "engine",
@@ -229,29 +194,23 @@ def volume_violations(df: DataFrame, ts_col: str, *, unit: str = "day",
     (group, bucket) keys-only aggregate; the group value rides as
     ``partition_id`` (the x-outlier grouped convention) and NULL
     by-values are skipped (no stats to compare against)."""
-    if by is None:
-        t = F.col(ts_col)
-        buckets = (df.where(t.isNotNull())
-                     .groupBy(F.date_trunc(unit, t).alias("bucket"))
-                     .agg(F.count(F.lit(1)).alias("n_rows")))
-        return volume_violations_from_buckets(
-            buckets, ts_col, unit=unit, k=k, ruleset_name=ruleset_name,
-            severity=severity)
     if unit not in ("minute", "hour", "day", "week", "month"):
         raise ValueError(f"unsupported unit {unit!r}")
     t = F.col(ts_col)
-    buckets = (df.where(t.isNotNull())
-                 .groupBy(F.col(by).cast("string").alias("_grp"),
-                          F.date_trunc(unit, t).alias("bucket"))
+    keys = [F.date_trunc(unit, t).alias("bucket")]
+    if by is not None:
+        keys.insert(0, F.col(by).cast("string").alias("_grp"))
+    buckets = (df.where(t.isNotNull()).groupBy(*keys)
                  .agg(F.count(F.lit(1)).alias("n_rows")))
-    bad = (outlier_scores(buckets, "n_rows", row_id="bucket", k=k,
-                          group_col="_grp")
-           .select(F.col("row_id").alias("bucket"), "_grp", "value", "z"))
+    bad = outlier_scores(buckets, "n_rows", row_id="bucket", k=k,
+                         group_col="_grp" if by is not None else None)
     return bad.select(
-        F.col("bucket").cast("string").alias("row_id"),
-        F.col("_grp").alias("partition_id"),
+        F.col("row_id"),
+        (F.col("_grp") if by is not None else F.lit("all"))
+        .alias("partition_id"),
         F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"volume:{ts_col}:by={by}").alias("constraint_id"),
+        F.lit(f"volume:{ts_col}" + (f":by={by}" if by is not None else ""))
+        .alias("constraint_id"),
         F.lit("x-volume").alias("keyword"),
         F.lit(f"/{ts_col}").alias("instance_path"),
         F.lit(f"#/x-volume/{ts_col}").alias("schema_path"),

@@ -360,8 +360,22 @@ def missing_buckets(df: DataFrame, ts_col: str, *, unit: str = "day",
     n_span = _bucket_span_expr("_first", "_last", unit)
     if by is None:
         obs = src.select(bucket.alias("bucket")).distinct()
-        return missing_buckets_from_observed(obs, unit=unit,
-                                             max_buckets=max_buckets)
+        span = obs.agg(F.min("bucket").alias("_first"),
+                       F.max("bucket").alias("_last"))
+        probe = span.select("_first", "_last",
+                            n_span.alias("_n")).first()
+        if probe is not None and probe["_n"] is not None \
+                and probe["_n"] > max_buckets:
+            raise ValueError(
+                f"missing_buckets: span {probe['_first']} .. "
+                f"{probe['_last']} is ~{int(probe['_n'])} {unit} buckets "
+                f"(> max_buckets={max_buckets}) — almost certainly an "
+                "outlier timestamp; find it with x-outlier/column_stats "
+                "and filter, or raise max_buckets deliberately")
+        grid = span.where(F.col("_first").isNotNull()).select(
+            F.explode(F.expr(f"sequence(_first, _last, {step})"))
+             .alias("bucket"))
+        return grid.join(obs, "bucket", "left_anti").orderBy("bucket")
     obs = src.select(F.col(by).alias("grp"), bucket.alias("bucket")) \
              .distinct()
     span = obs.groupBy("grp").agg(F.min("bucket").alias("_first"),
@@ -384,46 +398,14 @@ def missing_buckets(df: DataFrame, ts_col: str, *, unit: str = "day",
             .orderBy(by, "bucket"))
 
 
-def missing_buckets_from_observed(obs: DataFrame, *,
-                                  unit: str = "day",
-                                  max_buckets: int = 100_000) -> DataFrame:
-    """Global-form calendar holes from a precomputed DISTINCT observed
-    bucket relation ``(bucket TIMESTAMP)`` — the shared tail behind
-    :func:`missing_buckets` and the fused single-scan table-check pass
-    (a keyed-count relation's group keys ARE the observed buckets).
-    Same span guard, same anti-join."""
-    step = {"day": "interval 1 day", "hour": "interval 1 hour",
-            "week": "interval 7 day", "month": "interval 1 month",
-            "minute": "interval 1 minute"}.get(unit)
-    if step is None:
-        raise ValueError(f"unsupported unit {unit!r}")
-    if max_buckets <= 0:
-        raise ValueError("max_buckets must be > 0")
-    n_span = _bucket_span_expr("_first", "_last", unit)
-    span = obs.agg(F.min("bucket").alias("_first"),
-                   F.max("bucket").alias("_last"))
-    probe = span.select("_first", "_last",
-                        n_span.alias("_n")).first()
-    if probe is not None and probe["_n"] is not None \
-            and probe["_n"] > max_buckets:
-        raise ValueError(
-            f"missing_buckets: span {probe['_first']} .. "
-            f"{probe['_last']} is ~{int(probe['_n'])} {unit} buckets "
-            f"(> max_buckets={max_buckets}) — almost certainly an "
-            "outlier timestamp; find it with x-outlier/column_stats "
-            "and filter, or raise max_buckets deliberately")
-    grid = span.where(F.col("_first").isNotNull()).select(
-        F.explode(F.expr(f"sequence(_first, _last, {step})"))
-         .alias("bucket"))
-    return grid.join(obs, "bucket", "left_anti").orderBy("bucket")
-
-
-def calendar_rows_from_missing(miss: DataFrame, ts_col: str, *,
-                               unit: str, by: str | None = None,
-                               ruleset_name: str = "engine",
-                               severity: str = "warning") -> DataFrame:
-    """Violation projection over a missing-bucket relation — shared by
-    :func:`calendar_violations` and the fused table-check pass."""
+def calendar_violations(df: DataFrame, ts_col: str, *,
+                        unit: str = "day", by: str | None = None,
+                        max_buckets: int = 100_000,
+                        ruleset_name: str = "engine",
+                        severity: str = "warning") -> DataFrame:
+    """Violation rows (x-calendar) — one per missing calendar bucket."""
+    miss = missing_buckets(df, ts_col, unit=unit, by=by,
+                           max_buckets=max_buckets)
     rid = (F.col(by).cast("string") if by is not None
            else F.lit("all"))
     return miss.select(
@@ -440,19 +422,6 @@ def calendar_rows_from_missing(miss: DataFrame, ts_col: str, *,
         F.lit(None).cast("array<string>").alias("expected"),
         F.lit(severity).alias("severity"),
     )
-
-
-def calendar_violations(df: DataFrame, ts_col: str, *,
-                        unit: str = "day", by: str | None = None,
-                        max_buckets: int = 100_000,
-                        ruleset_name: str = "engine",
-                        severity: str = "warning") -> DataFrame:
-    """Violation rows (x-calendar) — one per missing calendar bucket."""
-    miss = missing_buckets(df, ts_col, unit=unit, by=by,
-                           max_buckets=max_buckets)
-    return calendar_rows_from_missing(
-        miss, ts_col, unit=unit, by=by, ruleset_name=ruleset_name,
-        severity=severity)
 
 
 def freshness_violations(df: DataFrame, ts_col: str, *,
@@ -476,18 +445,6 @@ def freshness_violations(df: DataFrame, ts_col: str, *,
         agg = df.groupBy(F.col(by)).agg(
             F.max(F.col(ts_col)).alias("_newest"))
         rid = F.col(by).cast("string")
-    return freshness_rows_from_agg(
-        agg, rid, ts_col, max_age_seconds=max_age_seconds, as_of=as_of,
-        ruleset_name=ruleset_name, severity=severity)
-
-
-def freshness_rows_from_agg(agg: DataFrame, rid, ts_col: str, *,
-                            max_age_seconds: float, as_of=None,
-                            ruleset_name: str = "engine",
-                            severity: str = "warning") -> DataFrame:
-    """The x-freshness gate over a precomputed newest-row relation with
-    column ``_newest TIMESTAMP`` — shared by :func:`freshness_violations`
-    and the fused single-scan table-check pass."""
     as_of_c = (F.current_timestamp() if as_of is None
                else (F.lit(as_of).cast("timestamp")
                      if isinstance(as_of, str) else as_of))

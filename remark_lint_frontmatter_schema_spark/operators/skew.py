@@ -73,25 +73,15 @@ def skew_profile(df: DataFrame, key: str, *, top_k: int = 10,
     """
     if top_k <= 0:
         raise ValueError("top_k must be > 0")
-    counts = _persist(key_counts(df, key, n_salts=n_salts))
-    return skew_profile_from_counts(
-        counts.select(F.col(key).alias("_k"), "cnt"), key, top_k=top_k)
-
-
-def skew_profile_from_counts(counts: DataFrame, key: str, *,
-                             top_k: int = 10) -> DataFrame:
-    """The :func:`skew_profile` report from a precomputed per-key count
-    relation ``(_k, cnt)`` — shared with the fused single-scan
-    table-check pass. Tie-breaks at the top-k boundary order by ``_k``;
-    tied counts contribute identical sums either way, so the statistics
-    are representation-independent."""
-    if top_k <= 0:
-        raise ValueError("top_k must be > 0")
+    counts = _persist(key_counts(df, key, n_salts=n_salts)) \
+        .select(F.col(key).alias("_k"), "cnt")
     moments = counts.agg(
         F.sum("cnt").alias("n_rows"),
         F.count(F.lit(1)).alias("n_keys"),
         F.max("cnt").alias("max_count"),
         F.sum(F.col("cnt").cast("double") * F.log2("cnt")).alias("_clogc"))
+    # tie-breaks at the top-k boundary order by _k; tied counts add
+    # identical sums either way
     top = (counts.orderBy(F.col("cnt").desc(), F.col("_k").asc())
            .limit(top_k)
            .agg(F.sum("cnt").alias("_top_sum")))
@@ -198,9 +188,9 @@ def skew_profile_by(df: DataFrame, key: str, group_col: str, *,
     shuffle carries (group, key) pairs only; the per-group moments and
     the top-k boundary (a rank window PARTITIONED by group, never
     global) run on that keyed count relation, so group cardinality is
-    unbounded. Formulas and rounding are shared with
-    :func:`skew_profile_from_counts` so per-group numbers equal what
-    the global profile reports on that group's slice."""
+    unbounded. Formulas and rounding match :func:`skew_profile`, so
+    per-group numbers equal what the global profile reports on that
+    group's slice."""
     if top_k <= 0:
         raise ValueError("top_k must be > 0")
     grp = F.col(group_col).cast("string").alias("_grp")
@@ -286,7 +276,7 @@ def skew_gate_from_profile(prof: DataFrame, key: str, *,
                            severity: str = "warning") -> DataFrame:
     """The x-skew gate over a precomputed :func:`skew_profile` (or
     :func:`skew_profile_by`, with ``rid``/``by``) relation — shared
-    with the fused table-check pass."""
+    by the global and grouped :func:`skew_violations`."""
     if rid is None:
         rid = F.lit("all")
     bad = prof.where(F.col("max_share") > F.lit(float(max_share)))

@@ -234,13 +234,8 @@ def mask_profile(df: DataFrame, columns: list[str], *,
     if top_k <= 0:
         raise ValueError("top_k must be > 0")
 
-    def mask(c):
-        return F.regexp_replace(
-            F.regexp_replace(F.col(c).cast("string"), "[0-9]+", "9"),
-            "[A-Za-z]+", "A")
-
     pairs = df.select(F.explode(F.array(*[
-        F.struct(F.lit(c).alias("column"), mask(c).alias("mask"))
+        F.struct(F.lit(c).alias("column"), mask_expr(c).alias("mask"))
         for c in columns])).alias("p")).select("p.column", "p.mask")
     counts = pairs.groupBy("column", "mask").agg(
         F.count(F.lit(1)).alias("n"))
@@ -367,8 +362,7 @@ def correlation_violations(df: DataFrame, col_a: str, col_b: str, *,
 
 def mask_expr(column: str):
     """The mask-profile projection: digit runs -> 9, letter runs -> A
-    (shared by mask_profile, mask_violations and the fused table-check
-    pass)."""
+    (shared by mask_profile and mask_violations)."""
     return F.regexp_replace(
         F.regexp_replace(F.col(column).cast("string"), "[0-9]+", "9"),
         "[A-Za-z]+", "A")
@@ -387,9 +381,9 @@ def mask_violations(df: DataFrame, column: str, *, expect: str,
     excluded here (required/type own missingness — unlike the profile,
     a gate must not double-report).
 
-    The mask projection lives in :func:`mask_expr` and the global tail
-    in :func:`mask_violations_from_counts`, shared with the fused
-    single-scan table-check pass.
+    The mask projection lives in :func:`mask_expr`, shared with
+    :func:`mask_profile`. An all-NULL column fails closed via the NULL
+    aggregate sums.
 
     ``by`` checks conformance PER GROUP ("names match 'A#9' per
     country") — per-(group, mask) counts, a per-group window for the
@@ -402,9 +396,16 @@ def mask_violations(df: DataFrame, column: str, *, expect: str,
     if by is None:
         src = df.where(F.col(column).isNotNull()).select(m.alias("mask"))
         counts = src.groupBy("mask").agg(F.count(F.lit(1)).alias("n"))
-        return mask_violations_from_counts(
-            counts, column, expect=expect, min_share=min_share,
-            ruleset_name=ruleset_name, severity=severity)
+        stats = counts.agg(
+            F.sum("n").alias("_total"),
+            F.coalesce(F.sum(F.when(F.col("mask") == expect, F.col("n"))),
+                       F.lit(0)).alias("_ok"))
+        top_bad = (counts.where(F.col("mask") != expect)
+                   .orderBy(F.col("n").desc(), F.col("mask").asc())
+                   .limit(1)
+                   .select(F.col("mask").alias("_top_bad")))
+        joined = stats.join(F.broadcast(top_bad), F.lit(True), "left")
+        rid = F.lit("all")
     else:
         from pyspark.sql import Window
         grp = F.col(by).cast("string").alias("_grp")
@@ -434,38 +435,6 @@ def mask_violations(df: DataFrame, column: str, *, expect: str,
                              "left")
                        .drop("_tgrp"))
         rid = F.coalesce(F.col("_grp"), F.lit("<null>"))
-    return _mask_rows(joined, rid, column, by=by, expect=expect,
-                      min_share=min_share, ruleset_name=ruleset_name,
-                      severity=severity)
-
-
-def mask_violations_from_counts(counts: DataFrame, column: str, *,
-                                expect: str, min_share: float = 0.99,
-                                ruleset_name: str = "engine",
-                                severity: str = "warning") -> DataFrame:
-    """Global-form gate over a precomputed per-mask count relation
-    ``(mask STRING, n)`` — the shared tail behind the global
-    :func:`mask_violations` and the fused single-scan table-check pass
-    (operators/table_checks.py), so both emit byte-identical rows. An
-    EMPTY counts relation (all-NULL column) fails closed via the NULL
-    aggregate sums, like the direct path."""
-    stats = counts.agg(
-        F.sum("n").alias("_total"),
-        F.coalesce(F.sum(F.when(F.col("mask") == expect, F.col("n"))),
-                   F.lit(0)).alias("_ok"))
-    top_bad = (counts.where(F.col("mask") != expect)
-               .orderBy(F.col("n").desc(), F.col("mask").asc())
-               .limit(1)
-               .select(F.col("mask").alias("_top_bad")))
-    joined = stats.join(F.broadcast(top_bad), F.lit(True), "left")
-    return _mask_rows(joined, F.lit("all"), column, by=None,
-                      expect=expect, min_share=min_share,
-                      ruleset_name=ruleset_name, severity=severity)
-
-
-def _mask_rows(joined: DataFrame, rid, column: str, *, by,
-               expect: str, min_share: float, ruleset_name: str,
-               severity: str) -> DataFrame:
     share = F.round(F.try_divide(F.col("_ok"), F.col("_total")), 6)
     # fail closed: a column with NO non-NULL values has NULL _total and
     # no conformance evidence — that is a finding (the x-freshness
@@ -535,26 +504,11 @@ def quantile_violations(df: DataFrame, column: str, *,
              if approx else F.percentile(c, F.lit(float(q))))
     if by is None:
         agg = df.agg(F.round(qexpr, 6).alias("_q"))
+        rid = F.lit("all")
     else:
-        agg = df.groupBy(F.col(by).cast("string").alias("_grp"))                 .agg(F.round(qexpr, 6).alias("_q"))
-    return quantile_violations_from_agg(
-        agg, column, q=q, lo=lo, hi=hi, by=by,
-        ruleset_name=ruleset_name, severity=severity)
-
-
-def quantile_violations_from_agg(agg: DataFrame, column: str, *,
-                                 q: float, lo: float | None = None,
-                                 hi: float | None = None,
-                                 by: str | None = None,
-                                 ruleset_name: str = "engine",
-                                 severity: str = "warning") -> DataFrame:
-    """Band check over a precomputed quantile relation with column
-    ``_q`` (already rounded to 6; plus ``_grp`` for the grouped form) —
-    the shared tail behind :func:`quantile_violations` and the fused
-    single-scan table-check pass (operators/table_checks.py), so both
-    emit byte-identical rows."""
-    rid = (F.lit("all") if by is None
-           else F.coalesce(F.col("_grp"), F.lit("<null>")))
+        agg = df.groupBy(F.col(by).cast("string").alias("_grp")) \
+                .agg(F.round(qexpr, 6).alias("_q"))
+        rid = F.coalesce(F.col("_grp"), F.lit("<null>"))
     out_of_band = F.lit(False)
     if lo is not None:
         out_of_band = out_of_band | (F.col("_q") < float(lo))

@@ -1,49 +1,38 @@
 """Run a compiled ruleset's table-level declarations (x-unique / x-ref /
-x-drift / x-dedup) and union them with the row-level violations — the full
-north_star check set (expressions + codec UDFs + uniqueness + referential +
-drift + duplicate-content) driven by ONE declarative document.
+x-drift / x-dedup / ...) and union them with the row-level violations —
+the full north_star check set (expressions + codec UDFs + uniqueness +
+referential + drift + duplicate-content) driven by ONE declarative
+document.
 
 Row-level checks stay in the one-projection scan (operators/validate.py);
 each table check is its own relational pass (salted aggregate / broadcast
-anti-join) whose violation rows share the exact row-relation shape, so the
-union is a plain ``unionByName``.
+anti-join / window) whose violation rows share the exact row-relation
+shape, so the union is a plain ``unionByName``. Folding a check into the
+validation projection is deliberately NOT done — a groupBy/join there
+would force the whole row payload through the shuffle.
 
-Scan accounting at the 100 TB design point: row-validate + each
-join-shaped check (x-reconcile / x-dedup) re-reads the fact — but every
-extra pass is column-pruned to a single key column (verified in
-tests/test_plan_audits.py), so the extra cost is one column's bytes per
-declared table check, not the table. Fusing those into the row scan is
-deliberately NOT done — a groupBy/join fused into the validation
-projection would force the whole row payload through the shuffle.
+One strategy: independent, column-pruned passes, one per check. Each
+pass reads only the columns its own check names (ids, keys, timestamps;
+a test pins each parquet scan's ReadSchema) and leaves shuffle merging
+to map-side combine and AQE. Nothing is persisted here. Two
+alternatives were measured and deleted:
 
-The NARROW-footprint checks — the aggregation gates (x-unique /
-x-volume / x-quantile / x-mask / x-calendar / x-freshness / x-benford /
-x-skew, global and grouped), x-drift, x-corr, composite-key uniqueness,
-the window-shaped per-row checks (x-outlier / x-fd / x-gap /
-x-monotonic — their fact side is just (id, value[, by/order])), and
-the x-ref family's keys-only fact side — are different: each needs
-only a few key/timestamp columns. When a ruleset declares two or more,
-they SHARE ONE live fact read (:func:`table_check_violations`,
-``fused=True``): a persisted narrow projection of the union of their
-columns feeds every pass, and each check keeps its own standalone
-map-side-combined aggregation off the columnar cache. At the 100 TB
-design point every avoided pass is a remote re-read of its key
-columns; the cache holds ids, keys and timestamps only, never the row
-payload.
+* a tagged explode that ran every aggregation check through ONE shared
+  groupBy — it multiplies rows by the check count before the partial
+  aggregate, to merge shuffles that are already tiny after map-side
+  combine;
+* a persisted narrow projection shared by every narrow check (one live
+  fact read) — the cache build and its columnar reads cost more than the
+  pruned re-scans they save.
 
-Round-5 correction, measured not guessed (bench_fused_ab.py, x40
-stress input, 8-check ruleset): the round-4 tagged-EXPLODE fusion —
-one (tag, key, key2, value) struct per check per row through a single
-groupBy — additionally merged the checks' shuffles, but those shuffles
-were already tiny after map-side combine, while the explode multiplies
-rows by the check count BEFORE the partial aggregate. A/B/C: explode
-33.1 s, scan-shared cache 14.0 s, independent pruned re-scans 8.9 s on
-page-cached local IO (where re-scans are nearly free; at 100 TB the
-re-scans are the expensive leg, which is what the cache removes). The
-explode path stays available as ``fused="explode"``
-(:func:`_fused_agg_violations`) with byte-identical rows — every
-strategy projects violations through the SAME emitters the standalone
-operators use.
+Measured on an 8-check ruleset with byte-identical violation rows (all
+runs in BASELINE.md): x40 stress lineitem (24M rows, local[32])
+independent 8.9 s, shared cache 14.0 s, explode 24.2 s; sf0.1 lineitem
+on a 4-core host 4.4 s, 6.7 s and 14.1 s.
+
+Dispatch is one table, ``kind -> runner(df, column, params, ctx)``.
+Kinds that join another relation name it through one param
+(:data:`_DIM_PARAM`) and share one missing-dim guard.
 """
 
 from __future__ import annotations
@@ -54,12 +43,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.compiler import CompiledRuleset
-from .clusters import dedup_violations
-from .decontaminate import contamination_violations
-from .drift import drift_violations
-from .referential import referential_violations
-from .uniqueness import (uniqueness_violations,
-                         uniqueness_violations_from_counts)
 from .validate import ValidationResult, validate
 
 
@@ -70,275 +53,242 @@ class TableValidationResult:
     violations: DataFrame                # row ∪ table
 
 
-def _is_fusable(kind: str, params: dict) -> bool:
-    """EXPLODE-path membership (``fused="explode"`` only): the
-    aggregation-shaped checks that can reduce to one groupBy(tag, key,
-    key2) pass. x-drift qualifies: its histogram is a (side, bucket)
-    count riding the second key slot. Grouped forms (``by:``) cannot:
-    quantile's NULL group must survive as a real group (the shared
-    string-typed key cannot represent it without a sentinel collision),
-    and grouped volume scores buckets against per-group stats. The
-    DEFAULT strategy (scan sharing) has no such restriction — see
-    :func:`_scan_share_cols`."""
-    if kind == "unique":
-        return True
-    return (kind in ("volume", "quantile", "mask", "calendar",
-                     "freshness", "benford", "skew", "drift")
-            and not params.get("by"))
+@dataclass(frozen=True)
+class _Ctx:
+    ruleset_name: str
+    row_id: str
+    dims: dict
+
+    def kw(self, params: dict) -> dict:
+        """The ``ruleset_name``/``severity`` pair every runner passes."""
+        return {"ruleset_name": self.ruleset_name,
+                "severity": params.get("severity", "warning")}
 
 
-_REF_KINDS = ("ref", "ref_asof", "ref_interval")
+def _unique(df, column, p, ctx):
+    from .uniqueness import uniqueness_violations
+    return uniqueness_violations(df, column, **ctx.kw(p))
 
 
-def _shared_columns(fusable: list, refs: list, row_id: str) -> list[str]:
-    """Union of the columns the fused aggregate pass and the ref-family
-    joins project from the fact — the schema of the shared narrow
-    cache."""
-    cols: set[str] = set()
-    for kind, column, params in fusable:
-        cols.add(column)
-        if kind == "drift":
-            cols.add(params["partition_col"])
-    for kind, column, params in refs:
-        cols.update((column, row_id))
-        if kind in ("ref_asof", "ref_interval"):
-            cols.add(params["ts"])
-    return sorted(cols)
+def _unique_multi(df, column, p, ctx):
+    from .uniqueness import uniqueness_violations_multi
+    return uniqueness_violations_multi(df, p["keys"], **ctx.kw(p))
 
 
-def _fused_agg_violations(df: DataFrame, specs: list, *,
-                          ruleset_name: str) -> list[DataFrame]:
-    """One scan + one shuffle for every aggregation-shaped table check.
-
-    Each row explodes into one small ``(tag, gkey, val)`` struct per
-    check (strings/doubles only — the row payload never enters the
-    shuffle), a single groupBy(tag, gkey) computes per-key counts plus
-    every declared quantile, and the resulting driver-scale relation is
-    persisted so the per-check violation projections read it instead of
-    re-scanning the fact. Quantile tags get one seeded all-NULL row so
-    an empty table still fails closed (the standalone ``df.agg`` row).
-    """
-    from .dedup import _persist
-    entries, aggs = [], [F.count(F.lit(1)).alias("_n")]
-    seeds = []
-    for i, (kind, column, params) in enumerate(specs):
-        tag = str(i)
-        lval = F.lit(None).cast("long")
-        gkey2 = F.lit("")
-        if kind == "drift":
-            # the x-drift histogram is a (side, bucket) count — side
-            # rides gkey, the width_bucket index rides the second key
-            # slot (constant "" for every other kind, so their group
-            # cardinality is unchanged). NULL values and NULL sides
-            # collapse gkey to NULL and drop pre-shuffle, exactly the
-            # standalone histogram's filter + ignored-NULL-side rows
-            # (twin: drift.histogram — keep the bucket expr in sync).
-            bucket = F.coalesce(
-                F.width_bucket(F.col(column).cast("double"),
-                               F.lit(float(params["lo"])),
-                               F.lit(float(params["hi"])),
-                               F.lit(params.get("n_buckets", 25))),
-                F.lit(-1))  # NaN -> real below-range bucket
-            gkey = F.when(F.col(column).isNotNull(),
-                          F.col(params["partition_col"]).cast("string"))
-            gkey2 = bucket.cast("string")
-            val = F.lit(None).cast("double")
-        elif kind in ("unique", "skew"):
-            # Spark normalizes -0.0 to 0.0 (and groups NaNs) in native
-            # groupBy keys; the shared string key must match, so
-            # floating key columns add a typed +0.0 before the cast
-            # (-0.0 + 0.0 == 0.0; every other value, incl. NaN, is
-            # unchanged and the column's own type is preserved so the
-            # string rendering equals the standalone path's).
-            src = F.col(column)
-            dt = df.schema[column].dataType.simpleString()
-            if dt in ("float", "double"):
-                src = src + F.lit(0.0).cast(dt)
-            gkey = src.cast("string")
-            val = F.lit(None).cast("double")
-        elif kind == "volume":
-            gkey = F.date_trunc(params.get("unit", "day"),
-                                F.col(column)).cast("string")
-            val = F.lit(None).cast("double")
-        elif kind == "mask":
-            from .stats import mask_expr
-            gkey = F.when(F.col(column).isNotNull(), mask_expr(column))
-            val = F.lit(None).cast("double")
-        elif kind == "benford":
-            from .drift import benford_digit_expr
-            gkey = benford_digit_expr(column).cast("string")
-            val = F.lit(None).cast("double")
-        elif kind == "calendar":
-            gkey = F.date_trunc(params.get("unit", "day"),
-                                F.col(column)).cast("string")
-            val = F.lit(None).cast("double")
-        elif kind == "freshness":
-            # exact integer MICROseconds ride a dedicated LONG slot —
-            # a double slot loses integer exactness past 2^53 (~year
-            # 2255), so far-future sentinel timestamps (9999-12-31 ~
-            # 2.5e17 us) would reconstruct up to ~32 us off the
-            # standalone max(col); the long slot is exact for the full
-            # timestamp range.
-            gkey = F.lit("all")
-            val = F.lit(None).cast("double")
-            lval = F.unix_micros(F.col(column).cast("timestamp"))
-            aggs.append(F.max(F.when(F.col("tag") == tag,
-                                     F.col("lval"))).alias(f"_f{i}"))
-            seeds.append((tag, "all", "", None, None))
-        else:  # quantile (global)
-            gkey = F.lit("all")
-            val = F.col(column).cast("double")
-            q = float(params["q"])
-            acc = int(params.get("accuracy", 10000))
-            qexpr = (F.percentile_approx(F.col("val"), F.lit(q),
-                                         F.lit(acc))
-                     if params.get("approx", False)
-                     else F.percentile(F.col("val"), F.lit(q)))
-            aggs.append(F.round(qexpr, 6).alias(f"_q{i}"))
-            seeds.append((tag, "all", "", None, None))
-        entries.append(F.struct(F.lit(tag).alias("tag"),
-                                gkey.alias("gkey"),
-                                gkey2.alias("gkey2"), val.alias("val"),
-                                lval.alias("lval")))
-    exploded = (df.select(F.explode(F.array(*entries)).alias("_e"))
-                  .select("_e.*")
-                  .where(F.col("gkey").isNotNull()))
-    if seeds:
-        seed_df = df.sparkSession.createDataFrame(
-            seeds, schema="tag string, gkey string, gkey2 string, "
-                          "val double, lval long")
-        exploded = exploded.unionByName(seed_df)
-    counts = _persist(exploded.groupBy("tag", "gkey", "gkey2")
-                      .agg(*aggs))
-    out: list[DataFrame] = []
-    for i, (kind, column, params) in enumerate(specs):
-        sub = counts.where(F.col("tag") == str(i))
-        if kind == "unique":
-            out.append(uniqueness_violations_from_counts(
-                sub.select(F.col("gkey").alias("_k"),
-                           F.col("_n").alias("n_occurrences")),
-                column, ruleset_name=ruleset_name,
-                severity=params.get("severity", "warning")))
-        elif kind == "volume":
-            from .outliers import volume_violations_from_buckets
-            buckets = sub.select(
-                F.col("gkey").cast("timestamp").alias("bucket"),
-                F.col("_n").alias("n_rows"))
-            out.append(volume_violations_from_buckets(
-                buckets, column, unit=params.get("unit", "day"),
-                k=params.get("k", 3.5), ruleset_name=ruleset_name,
-                severity=params.get("severity", "warning")))
-        elif kind == "mask":
-            from .stats import mask_violations_from_counts
-            out.append(mask_violations_from_counts(
-                sub.select(F.col("gkey").alias("mask"),
-                           F.col("_n").alias("n")),
-                column, expect=params["expect"],
-                min_share=params["min_share"],
-                ruleset_name=ruleset_name,
-                severity=params.get("severity", "warning")))
-        elif kind == "benford":
-            from .drift import (benford_from_counts,
-                                benford_gate_from_relation)
-            rel = benford_from_counts(
-                df.sparkSession,
-                sub.select(F.col("gkey").cast("int").alias("digit"),
-                           F.col("_n").alias("n")))
-            out.append(benford_gate_from_relation(
-                rel, column, max_mad=params["max_mad"],
-                ruleset_name=ruleset_name,
-                severity=params.get("severity", "warning")))
-        elif kind == "skew":
-            from .skew import (skew_gate_from_profile,
-                               skew_profile_from_counts)
-            prof = skew_profile_from_counts(
-                sub.select(F.col("gkey").alias("_k"),
-                           F.col("_n").alias("cnt")),
-                column, top_k=params.get("top_k", 10))
-            out.append(skew_gate_from_profile(
-                prof, column, max_share=params["max_share"],
-                ruleset_name=ruleset_name,
-                severity=params.get("severity", "warning")))
-        elif kind == "drift":
-            from .drift import drift_violations_from_hist
-            hist = sub.select(
-                F.col("gkey").alias("side"),
-                F.col("gkey2").cast("long").alias("bucket"),
-                F.col("_n").alias("n"))
-            out.append(drift_violations_from_hist(
-                hist, column, ruleset_name=ruleset_name,
-                **{k: v for k, v in params.items() if k != "by"}))
-        elif kind == "freshness":
-            from .sequence import freshness_rows_from_agg
-            # cast back to the SOURCE column type: a DATE column's
-            # newest value must render as a date in `actual`, exactly
-            # as the direct max(col) aggregate would
-            agg = sub.select(
-                F.timestamp_micros(F.col(f"_f{i}"))
-                 .cast(df.schema[column].dataType)
-                 .alias("_newest"))
-            out.append(freshness_rows_from_agg(
-                agg, F.lit("all"), column,
-                max_age_seconds=params["max_age_seconds"],
-                as_of=params.get("as_of"),
-                ruleset_name=ruleset_name,
-                severity=params.get("severity", "warning")))
-        elif kind == "calendar":
-            from .sequence import (calendar_rows_from_missing,
-                                   missing_buckets_from_observed)
-            obs = sub.select(
-                F.col("gkey").cast("timestamp").alias("bucket"))
-            miss = missing_buckets_from_observed(
-                obs, unit=params.get("unit", "day"),
-                max_buckets=params.get("max_buckets", 100_000))
-            out.append(calendar_rows_from_missing(
-                miss, column, unit=params.get("unit", "day"),
-                ruleset_name=ruleset_name,
-                severity=params.get("severity", "warning")))
-        else:  # quantile (global)
-            from .stats import quantile_violations_from_agg
-            out.append(quantile_violations_from_agg(
-                sub.select(F.col(f"_q{i}").alias("_q")), column,
-                q=float(params["q"]), lo=params["lo"], hi=params["hi"],
-                ruleset_name=ruleset_name,
-                severity=params.get("severity", "warning")))
-    return out
+def _ref(df, column, p, ctx):
+    from .referential import referential_violations
+    return referential_violations(
+        df, column, ctx.dims[p["dim"]], p["key"], row_id=ctx.row_id,
+        use_bloom=p["bloom"], n_items_hint=p.get("n_items"), **ctx.kw(p))
 
 
-def _scan_share_cols(kind: str, column, params: dict,
-                     row_id: str) -> set[str] | None:
-    """The fact columns this check can run from when a shared narrow
-    cache exists — or None for kinds that keep their own pass (per-row
-    output over wide projections, joins against other facts, text/codec
-    gates over payload columns)."""
-    by = {params["by"]} if params.get("by") else set()
-    if kind in ("unique", "volume", "quantile", "mask", "calendar",
-                "freshness", "benford", "skew"):
-        return {column} | by
-    if kind == "corr":
-        return {column, params["with"]} | by
-    if kind == "drift":
-        return {column, params["partition_col"]} | by
-    if kind == "unique_multi":
-        return set(params["keys"])
-    # window-shaped narrow checks (round-5 continuation): per-row
-    # output, but the fact side is still just (id, value[, by/order])
-    if kind == "outlier":
-        return {column, params.get("id") or row_id} | by
-    if kind == "fd":
-        return ({column, params.get("id") or row_id}
-                | set(params["determined_by"]))
-    if kind == "gap":
-        return {column, params.get("id") or row_id} | by
-    if kind == "monotonic":
-        return ({column, params.get("id") or row_id,
-                 params["order_by"]} | by)
-    if kind in _REF_KINDS:
-        cols = {column, row_id}
-        if kind in ("ref_asof", "ref_interval"):
-            cols.add(params["ts"])
-        return cols
-    return None
+def _ref_asof(df, column, p, ctx):
+    from .asof import asof_ref_violations
+    return asof_ref_violations(
+        df, column, ctx.dims[p["dim"]], p["key"], ts_col=p["ts"],
+        dim_ts=p["dim_ts"], row_id=ctx.row_id,
+        tolerance=p.get("tolerance"),
+        direction=p.get("direction", "backward"), bucket=p.get("bucket"),
+        **ctx.kw(p))
+
+
+def _ref_interval(df, column, p, ctx):
+    from .intervals import interval_ref_violations
+    return interval_ref_violations(
+        df, column, ctx.dims[p["dim"]], p["key"], ts_col=p["ts"],
+        start_col=p["start"], end_col=p["end"], bucket=p["bucket"],
+        row_id=ctx.row_id, **ctx.kw(p))
+
+
+def _reconcile(df, column, p, ctx):
+    from .reconcile import reconcile_violations
+    return reconcile_violations(
+        ctx.dims[p["fact"]], df, key=p["key"], fact_key=p.get("fact_key"),
+        fact_value=p["fact_value"], dim_value=column,
+        agg=p.get("agg", "sum"), tolerance=p.get("tolerance", 0.0),
+        on_missing=p.get("on_missing", "violate"), **ctx.kw(p))
+
+
+def _decontaminate(df, column, p, ctx):
+    from .decontaminate import contamination_violations
+    return contamination_violations(
+        df, ctx.dims[p["bench"]], column, p["id"],
+        bench_text_col=p.get("bench_text_col"),
+        bench_id_col=p.get("bench_id_col"), n=p["n"],
+        min_shared=p["min_shared"], use_bloom=p.get("bloom", False),
+        n_items_hint=p.get("n_items"), **ctx.kw(p))
+
+
+def _mask(df, column, p, ctx):
+    from .stats import mask_violations
+    return mask_violations(df, column, expect=p["expect"],
+                           min_share=p["min_share"], by=p.get("by"),
+                           **ctx.kw(p))
+
+
+def _corr(df, column, p, ctx):
+    from .stats import correlation_violations
+    return correlation_violations(df, column, p["with"],
+                                  min_abs=p["min_abs"], by=p.get("by"),
+                                  **ctx.kw(p))
+
+
+def _quantile(df, column, p, ctx):
+    from .stats import quantile_violations
+    return quantile_violations(df, column, q=p["q"], lo=p["lo"],
+                               hi=p["hi"], by=p.get("by"),
+                               approx=p.get("approx", False), **ctx.kw(p))
+
+
+def _benford(df, column, p, ctx):
+    from .drift import benford_violations
+    return benford_violations(df, column, max_mad=p["max_mad"],
+                              by=p.get("by"), **ctx.kw(p))
+
+
+def _drift(df, column, p, ctx):
+    from .drift import drift_violations
+    return drift_violations(df, column, ruleset_name=ctx.ruleset_name, **p)
+
+
+def _calendar(df, column, p, ctx):
+    from .sequence import calendar_violations
+    return calendar_violations(df, column, unit=p.get("unit", "day"),
+                               by=p.get("by"),
+                               max_buckets=p.get("max_buckets", 100_000),
+                               **ctx.kw(p))
+
+
+def _freshness(df, column, p, ctx):
+    from .sequence import freshness_violations
+    return freshness_violations(df, column,
+                                max_age_seconds=p["max_age_seconds"],
+                                as_of=p.get("as_of"), by=p.get("by"),
+                                **ctx.kw(p))
+
+
+def _gap(df, column, p, ctx):
+    from .sequence import gap_violations
+    return gap_violations(df, column, row_id=p.get("id") or ctx.row_id,
+                          max_seconds=p["max_seconds"], by=p.get("by"),
+                          n_buckets=p["n_buckets"], **ctx.kw(p))
+
+
+def _monotonic(df, column, p, ctx):
+    from .sequence import monotonic_violations
+    return monotonic_violations(df, column, order_by=p["order_by"],
+                                row_id=p.get("id") or ctx.row_id,
+                                by=p.get("by"), direction=p["direction"],
+                                n_buckets=p["n_buckets"], **ctx.kw(p))
+
+
+def _skew(df, column, p, ctx):
+    from .skew import skew_violations
+    return skew_violations(df, column, max_share=p["max_share"],
+                           top_k=p.get("top_k", 10), by=p.get("by"),
+                           **ctx.kw(p))
+
+
+def _outlier(df, column, p, ctx):
+    from .outliers import outlier_violations
+    return outlier_violations(df, column, row_id=p["id"] or ctx.row_id,
+                              k=p["k"], group_col=p.get("by"),
+                              approx=p["approx"], **ctx.kw(p))
+
+
+def _volume(df, column, p, ctx):
+    from .outliers import volume_violations
+    return volume_violations(df, column, unit=p.get("unit", "day"),
+                             k=p.get("k", 3.5), by=p.get("by"),
+                             **ctx.kw(p))
+
+
+def _fd(df, column, p, ctx):
+    from .fd import fd_violations
+    return fd_violations(df, column, p["determined_by"],
+                         row_id=p.get("id") or ctx.row_id, **ctx.kw(p))
+
+
+def _readability(df, column, p, ctx):
+    from .text import readability_violations
+    return readability_violations(df, column, p["id"], lo=p["lo"],
+                                  hi=p["hi"], **ctx.kw(p))
+
+
+def _gibberish(df, column, p, ctx):
+    from .text import gibberish_violations
+    return gibberish_violations(df, column, p["id"],
+                                min_logp=p["min_logp"], **ctx.kw(p))
+
+
+def _gopher(df, column, p, ctx):
+    from .text import gopher_violations
+    return gopher_violations(df, column, p["id"], rules=p.get("rules"),
+                             **ctx.kw(p))
+
+
+def _c4(df, column, p, ctx):
+    from .text import c4_violations
+    return c4_violations(df, column, p["id"],
+                         min_words_per_line=p["min_words_per_line"],
+                         min_sentences=p["min_sentences"], **ctx.kw(p))
+
+
+def _lm_ppl(df, column, p, ctx):
+    from .lm import lm_ppl_violations
+    return lm_ppl_violations(df, column, p["id"], max_ppl=p["max_ppl"],
+                             n=p.get("n", 2), k=p.get("k", 0.5),
+                             **ctx.kw(p))
+
+
+def _dedup(df, column, p, ctx):
+    from .clusters import dedup_violations
+    return dedup_violations(df, column, p["id"], method=p["method"],
+                            block_col=p.get("block"), n=p["n"],
+                            threshold=p["threshold"],
+                            max_distance=p.get("max_distance", 3),
+                            **ctx.kw(p))
+
+
+def _dup_ngram(df, column, p, ctx):
+    from .dedup import dup_ngram_violations
+    return dup_ngram_violations(df, column, p["id"], n=p["n"],
+                                max_frac=p["max_frac"], **ctx.kw(p))
+
+
+def _leakage(df, column, p, ctx):
+    from .sampling import leakage_violations
+    return leakage_violations(df, column, p["group"], **ctx.kw(p))
+
+
+def _label_conflict(df, column, p, ctx):
+    from ..functions.audio import transcript_conflict_violations
+    clips = df.select(F.col(p["id"]).cast("string").alias("clip_id"),
+                      F.col(column).alias("bytes"), F.col(p["transcript"]))
+    return transcript_conflict_violations(
+        clips, transcript_col=p["transcript"],
+        max_distance=p["max_distance"],
+        grade_with_edit_sim=p.get("grade", False),
+        contradiction_below=p.get("contradiction_below", 0.5), **ctx.kw(p))
+
+
+_RUNNERS = {
+    "unique": _unique, "unique_multi": _unique_multi,
+    "ref": _ref, "ref_asof": _ref_asof, "ref_interval": _ref_interval,
+    "reconcile": _reconcile, "decontaminate": _decontaminate,
+    "mask": _mask, "corr": _corr, "quantile": _quantile,
+    "benford": _benford, "drift": _drift, "skew": _skew,
+    "calendar": _calendar, "freshness": _freshness, "gap": _gap,
+    "monotonic": _monotonic, "outlier": _outlier, "volume": _volume,
+    "fd": _fd, "readability": _readability, "gibberish": _gibberish,
+    "gopher": _gopher, "c4": _c4, "lm_ppl": _lm_ppl, "dedup": _dedup,
+    "dup_ngram": _dup_ngram, "leakage": _leakage,
+    "label_conflict": _label_conflict,
+}
+
+# kinds that join a relation passed in ``dims``: kind -> the param naming it
+_DIM_PARAM = {"ref": "dim", "ref_asof": "dim", "ref_interval": "dim",
+              "reconcile": "fact", "decontaminate": "bench"}
 
 
 def table_check_violations(
@@ -348,308 +298,33 @@ def table_check_violations(
     row_id: str,
     dims: dict[str, DataFrame] | None = None,
     on_missing_dim=None,
-    fused: bool | str = True,
 ) -> DataFrame | None:
     """Union of every declared table check's violation rows (None if the
-    ruleset declares none). The shared engine behind
-    :func:`validate_with_table_checks` and the routing layer.
+    ruleset declares none) — one independent, column-pruned pass per
+    check. The shared engine behind :func:`validate_with_table_checks`,
+    the routing layer, the CLI and streaming validation.
 
-    ``fused`` selects the scan strategy — rows are byte-identical under
-    all three (pinned by test); BASELINE.md carries the measured A/B/C
-    so the choice is a number, not a claim:
-
-    * ``True`` (default) — SCAN SHARING: when two or more checks can
-      run from a narrow column projection (the aggregation-shaped
-      gates incl. their grouped forms, x-drift, x-corr,
-      composite-key uniqueness, and the x-ref family's keys-only
-      side), ONE persisted projection of the union of their columns
-      feeds them all. One live fact read replaces one pruned re-scan
-      per check — at the 100 TB design point every avoided pass is a
-      remote re-read of its key columns, while each check keeps its
-      own standalone (map-side-combined) aggregation CPU profile off
-      the in-memory/local-disk columnar cache. The cache holds ids,
-      keys and timestamps only, never the row payload.
-    * ``"explode"`` — the round-4 tagged-explode fusion: the
-      aggregation-shaped kinds additionally share ONE shuffle via a
-      per-row (tag, key, key2, value) explode. Kept as a measured
-      alternative: the explode multiplies rows by the check count
-      before the partial aggregate, and the round-5 A/B on the x40
-      stress input showed that CPU cost dominating the shuffle-sharing
-      win beyond a couple of checks (33.1 s vs 14.0 s cache-shared vs
-      8.9 s standalone on page-cached local IO; bench_fused_ab.py) —
-      the shuffles it merges were already tiny after map-side combine.
-    * ``False`` — fully independent per-check passes (one pruned scan
-      each, no cache): the measurement baseline, and the fastest plan
-      when the fact re-scans are free (hot page cache, tiny inputs).
-
-    ``on_missing_dim`` — called with the dim name when an ``x-ref`` or
-    ``x-decontaminate`` declaration references a dim/benchmark not
-    provided in ``dims``; the check is skipped (the routing layer records
-    an error artifact, G2-style). Without the callback a missing dim
-    raises KeyError at plan time.
+    ``on_missing_dim`` — called with the dim name when an ``x-ref``,
+    ``x-reconcile`` or ``x-decontaminate`` declaration references a
+    dim/fact/benchmark not provided in ``dims``; the check is skipped
+    (the routing layer records an error artifact, G2-style). Without the
+    callback a missing dim raises KeyError at plan time. A kind with no
+    runner raises ValueError naming it — a declaration is never silently
+    dropped.
     """
-    dims = dims or {}
+    ctx = _Ctx(ruleset_name=compiled.name, row_id=row_id, dims=dims or {})
     extras: list[DataFrame] = []
-    explode_mode = fused == "explode"
-    fusable = [tc for tc in compiled.table_checks
-               if _is_fusable(tc[0], tc[2])] if explode_mode else []
-
-    def runnable(kind, params):
-        return (kind not in _REF_KINDS
-                or params["dim"] in dims or on_missing_dim is None)
-
-    share_cols: dict[int, set[str]] = {}
-    if fused:
-        for idx, (kind, column, params) in enumerate(
-                compiled.table_checks):
-            cols = _scan_share_cols(kind, column, params, row_id)
-            if cols is not None and runnable(kind, params):
-                share_cols[idx] = cols
-    base = df
-    cache_built = False
-    if fused and len(share_cols) >= 2:
-        from .dedup import _persist
-        base = _persist(df.select(
-            *sorted(set().union(*share_cols.values()))))
-        cache_built = True
-    do_explode = explode_mode and len(fusable) >= 2
-    if do_explode:
-        extras.extend(_fused_agg_violations(
-            base, fusable, ruleset_name=compiled.name))
-    for idx, (kind, column, params) in enumerate(compiled.table_checks):
-        if do_explode and _is_fusable(kind, params):
+    for kind, column, params in compiled.table_checks:
+        runner = _RUNNERS.get(kind)
+        if runner is None:
+            raise ValueError(f"unknown table-check kind {kind!r} "
+                             f"(ruleset {compiled.name!r})")
+        dim = params[_DIM_PARAM[kind]] if kind in _DIM_PARAM else None
+        if dim is not None and dim not in ctx.dims \
+                and on_missing_dim is not None:
+            on_missing_dim(dim)
             continue
-        # checks with a narrow column footprint read the shared cache
-        # when one was built (base is df otherwise); every other kind
-        # needs columns outside it
-        src = base if cache_built and idx in share_cols else df
-        if kind == "unique":
-            extras.append(uniqueness_violations(
-                src, column, ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "ref":
-            if params["dim"] not in dims and on_missing_dim is not None:
-                on_missing_dim(params["dim"])
-                continue
-            extras.append(referential_violations(
-                src, column, dims[params["dim"]], params["key"],
-                row_id=row_id, ruleset_name=compiled.name,
-                use_bloom=params["bloom"],
-                n_items_hint=params.get("n_items"),
-                severity=params.get("severity", "warning")))
-        elif kind == "ref_asof":
-            from .asof import asof_ref_violations
-            if params["dim"] not in dims and on_missing_dim is not None:
-                on_missing_dim(params["dim"])
-                continue
-            extras.append(asof_ref_violations(
-                src, column, dims[params["dim"]], params["key"],
-                ts_col=params["ts"], dim_ts=params["dim_ts"],
-                row_id=row_id, tolerance=params.get("tolerance"),
-                direction=params.get("direction", "backward"),
-                bucket=params.get("bucket"),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "ref_interval":
-            from .intervals import interval_ref_violations
-            if params["dim"] not in dims and on_missing_dim is not None:
-                on_missing_dim(params["dim"])
-                continue
-            extras.append(interval_ref_violations(
-                src, column, dims[params["dim"]], params["key"],
-                ts_col=params["ts"], start_col=params["start"],
-                end_col=params["end"], bucket=params["bucket"],
-                row_id=row_id, ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "unique_multi":
-            from .uniqueness import uniqueness_violations_multi
-            extras.append(uniqueness_violations_multi(
-                src, params["keys"], ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "mask":
-            from .stats import mask_violations
-            extras.append(mask_violations(
-                src, column, expect=params["expect"],
-                min_share=params["min_share"], by=params.get("by"),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "corr":
-            from .stats import correlation_violations
-            extras.append(correlation_violations(
-                src, column, params["with"], min_abs=params["min_abs"],
-                by=params.get("by"), ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "benford":
-            from .drift import benford_violations
-            extras.append(benford_violations(
-                src, column, max_mad=params["max_mad"],
-                by=params.get("by"), ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "calendar":
-            from .sequence import calendar_violations
-            extras.append(calendar_violations(
-                src, column, unit=params.get("unit", "day"),
-                by=params.get("by"),
-                max_buckets=params.get("max_buckets", 100_000),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "freshness":
-            from .sequence import freshness_violations
-            extras.append(freshness_violations(
-                src, column,
-                max_age_seconds=params["max_age_seconds"],
-                as_of=params.get("as_of"), by=params.get("by"),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "reconcile":
-            from .reconcile import reconcile_violations
-            if params["fact"] not in dims and on_missing_dim is not None:
-                on_missing_dim(params["fact"])
-                continue
-            extras.append(reconcile_violations(
-                dims[params["fact"]], df, key=params["key"],
-                fact_key=params.get("fact_key"),
-                fact_value=params["fact_value"], dim_value=column,
-                agg=params.get("agg", "sum"),
-                tolerance=params.get("tolerance", 0.0),
-                on_missing=params.get("on_missing", "violate"),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "skew":
-            from .skew import skew_violations
-            extras.append(skew_violations(
-                src, column, max_share=params["max_share"],
-                top_k=params.get("top_k", 10), by=params.get("by"),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "outlier":
-            from .outliers import outlier_violations
-            extras.append(outlier_violations(
-                src, column, row_id=params["id"] or row_id, k=params["k"],
-                group_col=params.get("by"), approx=params["approx"],
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "fd":
-            from .fd import fd_violations
-            extras.append(fd_violations(
-                src, column, params["determined_by"],
-                row_id=params.get("id") or row_id,
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "volume":
-            from .outliers import volume_violations
-            extras.append(volume_violations(
-                src, column, unit=params.get("unit", "day"),
-                k=params.get("k", 3.5), by=params.get("by"),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "quantile":
-            from .stats import quantile_violations
-            extras.append(quantile_violations(
-                src, column, q=params["q"], lo=params["lo"],
-                hi=params["hi"], by=params.get("by"),
-                approx=params.get("approx", False),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "readability":
-            from .text import readability_violations
-            extras.append(readability_violations(
-                df, column, params["id"], lo=params["lo"],
-                hi=params["hi"], ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "gibberish":
-            from .text import gibberish_violations
-            extras.append(gibberish_violations(
-                df, column, params["id"], min_logp=params["min_logp"],
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "lm_ppl":
-            from .lm import lm_ppl_violations
-            extras.append(lm_ppl_violations(
-                df, column, params["id"], max_ppl=params["max_ppl"],
-                n=params.get("n", 2), k=params.get("k", 0.5),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "gap":
-            from .sequence import gap_violations
-            extras.append(gap_violations(
-                src, column, row_id=params.get("id") or row_id,
-                max_seconds=params["max_seconds"], by=params.get("by"),
-                n_buckets=params["n_buckets"],
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "monotonic":
-            from .sequence import monotonic_violations
-            extras.append(monotonic_violations(
-                src, column, order_by=params["order_by"],
-                row_id=params.get("id") or row_id,
-                by=params.get("by"), direction=params["direction"],
-                n_buckets=params["n_buckets"],
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "drift":
-            extras.append(drift_violations(
-                src, column, ruleset_name=compiled.name, **params))
-        elif kind == "dedup":
-            extras.append(dedup_violations(
-                df, column, params["id"], method=params["method"],
-                ruleset_name=compiled.name, block_col=params.get("block"),
-                n=params["n"], threshold=params["threshold"],
-                max_distance=params.get("max_distance", 3),
-                severity=params.get("severity", "warning")))
-        elif kind == "dup_ngram":
-            from .dedup import dup_ngram_violations
-            extras.append(dup_ngram_violations(
-                df, column, params["id"], n=params["n"],
-                max_frac=params["max_frac"],
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "gopher":
-            from .text import gopher_violations
-            extras.append(gopher_violations(
-                df, column, params["id"], rules=params.get("rules"),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "leakage":
-            from .sampling import leakage_violations
-            extras.append(leakage_violations(
-                df, column, params["group"],
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "c4":
-            from .text import c4_violations
-            extras.append(c4_violations(
-                df, column, params["id"],
-                min_words_per_line=params["min_words_per_line"],
-                min_sentences=params["min_sentences"],
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "label_conflict":
-            from ..functions.audio import transcript_conflict_violations
-            extras.append(transcript_conflict_violations(
-                df.select(
-                    F.col(params["id"]).cast("string").alias("clip_id"),
-                    F.col(column).alias("bytes"),
-                    F.col(params["transcript"])),
-                transcript_col=params["transcript"],
-                max_distance=params["max_distance"],
-                grade_with_edit_sim=params.get("grade", False),
-                contradiction_below=params.get("contradiction_below", 0.5),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
-        elif kind == "decontaminate":
-            if params["bench"] not in dims and on_missing_dim is not None:
-                on_missing_dim(params["bench"])
-                continue
-            extras.append(contamination_violations(
-                df, dims[params["bench"]], column, params["id"],
-                bench_text_col=params.get("bench_text_col"),
-                bench_id_col=params.get("bench_id_col"),
-                n=params["n"], min_shared=params["min_shared"],
-                use_bloom=params.get("bloom", False),
-                n_items_hint=params.get("n_items"),
-                ruleset_name=compiled.name,
-                severity=params.get("severity", "warning")))
+        extras.append(runner(df, column, params, ctx))
     if not extras:
         return None
     table_v = extras[0]
@@ -666,12 +341,9 @@ def validate_with_table_checks(
     dims: dict[str, DataFrame] | None = None,
     partition_col: str | None = None,
     run_id: str = "run_0",
-    fused: bool | str = True,
 ) -> TableValidationResult:
-    """validate() plus every declared table check. ``fused`` selects
-    the table-check scan strategy (True = shared narrow cache,
-    "explode" = round-4 tagged explode, False = independent passes —
-    see :func:`table_check_violations`; rows byte-identical under all).
+    """validate() plus every declared table check
+    (:func:`table_check_violations`).
 
     ``dims`` maps the dim names referenced by ``x-ref`` declarations to
     DataFrames. A declaration naming a missing dim raises KeyError at plan
@@ -681,7 +353,7 @@ def validate_with_table_checks(
     row_res = validate(df, compiled, row_id=row_id,
                        partition_col=partition_col, run_id=run_id)
     table_v = table_check_violations(df, compiled, row_id=row_id,
-                                     dims=dims, fused=fused)
+                                     dims=dims)
     all_v = row_res.violations
     if table_v is not None:
         all_v = all_v.unionByName(

@@ -45,16 +45,15 @@ def duplicate_keys(df: DataFrame, key: str, *, n_salts: int = 32,
     return counts.where(F.col("n_occurrences") > 1)
 
 
-def uniqueness_violations_from_counts(counts: DataFrame, key: str, *,
-                                      ruleset_name: str = "engine",
-                                      severity: str = "warning"
-                                      ) -> DataFrame:
-    """Violation rows from a precomputed per-key count relation with
-    columns ``(_k STRING, n_occurrences)`` — the shared projection behind
-    :func:`uniqueness_violations` and the fused single-scan table-check
-    pass (operators/table_checks.py), so both emit byte-identical rows."""
-    return counts.where(F.col("n_occurrences") > 1).select(
-        F.col("_k").alias("row_id"),
+def uniqueness_violations(df: DataFrame, key: str, *,
+                          ruleset_name: str = "engine",
+                          n_salts: int = 32,
+                          severity: str = "warning") -> DataFrame:
+    """Violation rows for duplicated keys, one per duplicate key value
+    (violation shape mirrors operators/validate.py VIOLATION_FIELDS)."""
+    dups = duplicate_keys(df, key, n_salts=n_salts)
+    return dups.select(
+        F.col(key).cast("string").alias("row_id"),
         F.lit("all").alias("partition_id"),
         F.lit(ruleset_name).alias("ruleset_id"),
         F.lit(f"unique:{key}").alias("constraint_id"),
@@ -64,23 +63,10 @@ def uniqueness_violations_from_counts(counts: DataFrame, key: str, *,
         F.concat(F.lit(f"Must be unique: '{key}' occurs "),
                  F.col("n_occurrences").cast("string"),
                  F.lit(" times")).alias("message"),
-        F.col("_k").alias("actual"),
+        F.col(key).cast("string").alias("actual"),
         F.lit(None).cast("array<string>").alias("expected"),
         F.lit(severity).alias("severity"),
     )
-
-
-def uniqueness_violations(df: DataFrame, key: str, *,
-                          ruleset_name: str = "engine",
-                          n_salts: int = 32,
-                          severity: str = "warning") -> DataFrame:
-    """Violation rows for duplicated keys, one per duplicate key value
-    (violation shape mirrors operators/validate.py VIOLATION_FIELDS)."""
-    dups = duplicate_keys(df, key, n_salts=n_salts)
-    return uniqueness_violations_from_counts(
-        dups.select(F.col(key).cast("string").alias("_k"),
-                    "n_occurrences"),
-        key, ruleset_name=ruleset_name, severity=severity)
 
 
 def duplicate_keys_multi(df: DataFrame, keys: list[str], *,

@@ -72,13 +72,23 @@ def _read_manifest(spark, dir_path: str):
     """max_folded from a fold partition's manifest, or None (legacy
     pre-manifest sink / no fold yet)."""
     import json
-    fs, p, jvm = _fs(spark, f"{dir_path}/{_FOLD_MANIFEST}")
+    fs, p, _ = _fs(spark, f"{dir_path}/{_FOLD_MANIFEST}")
     if not fs.exists(p):
         return None
+    # Hadoop FS API plus the JDK only: the length from the file status,
+    # then one full read of that many bytes. InputStream.readNBytes is
+    # readFully into a fresh array; py4j copies a JVM byte[] into Python
+    # bytes, so an array handed in by the caller would never be filled.
+    n = fs.getFileStatus(p).getLen()
     stream = fs.open(p)
-    txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    stream.close()
-    return int(json.loads(txt)["max_folded"])
+    try:
+        raw = bytes(stream.readNBytes(n))
+    finally:
+        stream.close()
+    if len(raw) != n:
+        raise OSError(f"short read of {dir_path}/{_FOLD_MANIFEST}: "
+                      f"{len(raw)} of {n} bytes")
+    return int(json.loads(raw.decode("utf-8"))["max_folded"])
 
 
 def _batch_ids(spark, out_path: str) -> list[int]:

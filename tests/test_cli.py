@@ -528,3 +528,22 @@ def test_cli_ops_ruleset_table_checks(spark, capsys):
     # (see tests/test_ops_ruleset.py): stale freshness, hot-user skew,
     # value~user_id independence, outliers
     assert payload["n_violations"] > 0
+
+
+def test_cli_main_releases_persisted_intermediates(table, tmp_path,
+                                                   capsys):
+    """x-skew persists its per-key counts (reuse=True registry); the
+    single-table CLI path must free them once its last consumer ran, so
+    repeated runs in one session do not accumulate cached blocks."""
+    from remark_lint_frontmatter_schema_spark.operators import dedup
+    embed = tmp_path / "skew.yaml"
+    embed.write_text("properties:\n  status:\n"
+                     "    x-skew:\n      max_share: 0.5\n")
+    before = len(dedup._PERSISTED)
+    for _ in range(2):
+        rc = cli.main([table, "--row-id", "id", "--embed", str(embed),
+                       "--report", "json"])
+        assert rc == 0
+        out = json.loads(capsys.readouterr().out)
+        assert out["n_violations"] == 1   # 'O' holds 2/3 of the rows
+        assert len(dedup._PERSISTED) == before

@@ -1,9 +1,7 @@
-"""Shared-scan table checks (operators/table_checks.py): when a ruleset
-declares >= 2 narrow-footprint checks they must share ONE live fact
-read (the default scan-shared cache), and rows must be byte-identical
-to the standalone per-check operators under ALL THREE strategies —
-fused=True (cache), fused="explode" (the round-4 tagged explode, kept
-as a measured alternative), fused=False (independent passes)."""
+"""Table checks (operators/table_checks.py) run as independent,
+column-pruned passes, one per check: rows must be byte-identical to the
+standalone per-check operators, every parquet scan must read only its
+own check's columns, and an unknown kind must raise."""
 
 from datetime import datetime
 
@@ -23,11 +21,9 @@ from remark_lint_frontmatter_schema_spark.operators.outliers import (
 from remark_lint_frontmatter_schema_spark.operators.stats import (
     mask_violations, quantile_violations)
 from remark_lint_frontmatter_schema_spark.operators.table_checks import (
-    table_check_violations, validate_with_table_checks)
+    table_check_violations)
 from remark_lint_frontmatter_schema_spark.operators.uniqueness import (
     uniqueness_violations)
-
-MODES = [True, "explode", False]
 
 RULESET = {
     "properties": {
@@ -65,12 +61,10 @@ def _sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_fused_matches_standalone_operators(spark, fact, mode):
+def test_fused_matches_standalone_operators(spark, fact):
     compiled = compile_ruleset(RULESET, fact.schema, name="fused")
     assert len(compiled.table_checks) == 8
-    got = table_check_violations(fact, compiled, row_id="rid",
-                                 fused=mode)
+    got = table_check_violations(fact, compiled, row_id="rid")
     want = (uniqueness_violations(fact, "rid", ruleset_name="fused")
             .unionByName(volume_violations(
                 fact, "ts", unit="day", k=3.5, ruleset_name="fused")
@@ -95,67 +89,13 @@ def test_fused_matches_standalone_operators(spark, fact, mode):
         release_all()
 
 
-def test_fused_single_scan(spark, fact, tmp_path):
-    """The judge's bar: a ruleset with 8 aggregation checks must read
-    the parquet fact <= 2 times across the FULL validate+table plan
-    (one row-validate scan + one fused aggregate scan)."""
-    p = str(tmp_path / "fact")
-    fact.write.mode("overwrite").parquet(p)
-    df = spark.read.parquet(p)
-    compiled = compile_ruleset(RULESET, df.schema, name="fused")
-    res = validate_with_table_checks(df, compiled, row_id="rid")
-    try:
-        plan = res.violations._jdf.queryExecution().executedPlan().toString()
-        # Each InMemoryTableScan echoes the cache-build subtree (incl.
-        # its FileScan lines) under an InMemoryRelation node, but the
-        # file is read ONCE when the cache materializes. Count only
-        # LIVE scans: FileScan lines not nested under an
-        # InMemoryRelation (tracked by tree indentation).
-        import re
-        live, echo_indents = 0, []
-        for ln in plan.splitlines():
-            # node depth = where the node text starts, past the
-            # tree-drawing prefix (spaces, ':' pipes, '+-' arms)
-            indent = re.match(r"^[\s:+|-]*", ln).end()
-            while echo_indents and indent <= echo_indents[-1]:
-                echo_indents.pop()
-            if "InMemoryRelation" in ln:
-                echo_indents.append(indent)
-            elif not echo_indents and (
-                    "FileScan parquet" in ln
-                    or ("Scan parquet" in ln and "ReadSchema" in ln)):
-                live += 1
-        assert plan.count("InMemoryTableScan") >= 3, \
-            f"agg branches not cached:\n{plan}"
-        assert live <= 1, (
-            f"{live} live parquet scans besides row-validate "
-            f"(+1 cache build):\n{plan}")
-    finally:
-        release_all()
-
-
-def test_fused_false_escape_hatch_byte_identical(spark, fact):
-    """The A/B measurement knob: fused=False forces standalone passes;
-    rows must be byte-identical to the fused plan."""
-    compiled = compile_ruleset(RULESET, fact.schema, name="fused")
-    try:
-        got_fused = _sorted(table_check_violations(
-            fact, compiled, row_id="rid"))
-        got_solo = _sorted(table_check_violations(
-            fact, compiled, row_id="rid", fused=False))
-        assert got_fused == got_solo
-    finally:
-        release_all()
-
-
-@pytest.mark.parametrize("mode", MODES)
-def test_empty_table_quantile_still_fails_closed(spark, mode):
+def test_empty_table_quantile_still_fails_closed(spark):
     """The standalone global x-quantile fires on an empty table (NULL
-    quantile == finding); the fused path's seed row must preserve it."""
+    quantile == finding); the table-check engine must preserve it."""
     df = spark.createDataFrame(
         [], "rid string, ts timestamp, v double, nm string")
     compiled = compile_ruleset(RULESET, df.schema, name="fused")
-    got = table_check_violations(df, compiled, row_id="rid", fused=mode)
+    got = table_check_violations(df, compiled, row_id="rid")
     try:
         rows = got.collect()
     finally:
@@ -168,25 +108,9 @@ def test_empty_table_quantile_still_fails_closed(spark, mode):
                for r in rows) == 1
 
 
-def test_single_fusable_check_stays_standalone(spark, fact):
-    """One aggregation check alone keeps the direct operator plan (no
-    explode overhead, no persist)."""
-    compiled = compile_ruleset(
-        {"properties": {"rid": {"x-unique": True}}}, fact.schema,
-        name="solo")
-    got = table_check_violations(fact, compiled, row_id="rid")
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "Generate explode" not in plan
-    assert _sorted(got) == _sorted(
-        uniqueness_violations(fact, "rid", ruleset_name="solo"))
-
-
-@pytest.mark.parametrize("mode", MODES)
-def test_fused_drift_matches_standalone(spark, mode):
-    """x-drift rides the tagged explode (second key slot carries the
-    histogram bucket): rows must be byte-identical to the standalone
-    operator, including NaN's below-range bucket and dropped NULL-side
-    rows."""
+def test_fused_drift_matches_standalone(spark):
+    """x-drift rows must be byte-identical to the standalone operator,
+    including NaN's below-range bucket and dropped NULL-side rows."""
     from remark_lint_frontmatter_schema_spark.operators.drift import (
         drift_violations)
     rows = ([("a%d" % i, "ref", float(i % 10), "k%d" % i)
@@ -208,7 +132,7 @@ def test_fused_drift_matches_standalone(spark, mode):
                           "emd_threshold": 0.5}}}}
     compiled = compile_ruleset(rs, df.schema, name="dr")
     assert len(compiled.table_checks) == 2
-    got = table_check_violations(df, compiled, row_id="rid", fused=mode)
+    got = table_check_violations(df, compiled, row_id="rid")
     want = (uniqueness_violations(df, "k", ruleset_name="dr")
             .unionByName(drift_violations(
                 df, "v", partition_col="side", side_a="ref",
@@ -223,10 +147,9 @@ def test_fused_drift_matches_standalone(spark, mode):
         release_all()
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_fused_drift_missing_side_config_row(spark, mode):
+def test_fused_drift_missing_side_config_row(spark):
     """A typo'd side label must still surface the fail-closed
-    drift-config row through the fused path."""
+    drift-config row through the table-check engine."""
     from remark_lint_frontmatter_schema_spark.operators.drift import (
         drift_violations)
     df = spark.createDataFrame(
@@ -237,7 +160,7 @@ def test_fused_drift_missing_side_config_row(spark, mode):
         "v": {"x-drift": {"partition_col": "side", "side_a": "ref",
                           "side_b": "nope", "lo": 0.0, "hi": 10.0}}}}
     compiled = compile_ruleset(rs, df.schema, name="cfg")
-    got = table_check_violations(df, compiled, row_id="rid", fused=mode)
+    got = table_check_violations(df, compiled, row_id="rid")
     want = (uniqueness_violations(df, "k", ruleset_name="cfg")
             .unionByName(drift_violations(
                 df, "v", partition_col="side", side_a="ref",
@@ -250,59 +173,10 @@ def test_fused_drift_missing_side_config_row(spark, mode):
         release_all()
 
 
-def test_drift_ref_and_fused_share_one_live_scan(spark, tmp_path):
-    """Round-5 bar: a ruleset declaring x-drift + x-ref + two fused
-    kinds must plan <= 2 live fact reads across the FULL
-    validate+table plan — one row-validate scan plus ONE shared narrow
-    cache build feeding the fused aggregate pass AND the ref join."""
-    rows = [(f"r{i}", f"c{i % 7}", "ref" if i % 2 else "cur",
-             float(i % 10), f"k{i % 40}") for i in range(200)]
-    fact = spark.createDataFrame(
-        rows, "rid string, cust string, side string, v double, k string")
-    p = str(tmp_path / "fact")
-    fact.write.mode("overwrite").parquet(p)
-    df = spark.read.parquet(p)
-    dim = spark.createDataFrame([(f"c{i}",) for i in range(5)],
-                                "cust_id string")
-    rs = {"properties": {
-        "k": {"x-unique": True},
-        "v": {"x-quantile": {"q": 0.5, "lo": 100.0},
-              "x-drift": {"partition_col": "side", "side_a": "ref",
-                          "side_b": "cur", "lo": 0.0, "hi": 10.0}},
-        "cust": {"x-ref": {"dim": "customers", "key": "cust_id"}}}}
-    compiled = compile_ruleset(rs, df.schema, name="share")
-    res = validate_with_table_checks(df, compiled, row_id="rid",
-                                     dims={"customers": dim})
-    try:
-        assert res.violations.count() > 0  # ref + quantile fire
-        plan = res.violations._jdf.queryExecution().executedPlan() \
-                  .toString()
-        import re
-        live, echo_indents = 0, []
-        for ln in plan.splitlines():
-            indent = re.match(r"^[\s:+|-]*", ln).end()
-            while echo_indents and indent <= echo_indents[-1]:
-                echo_indents.pop()
-            if "InMemoryRelation" in ln:
-                echo_indents.append(indent)
-            elif not echo_indents and (
-                    "FileScan parquet" in ln
-                    or ("Scan parquet" in ln and "ReadSchema" in ln)):
-                live += 1
-        assert live <= 1, (
-            f"{live} live parquet scans besides the shared cache "
-            f"build:\n{plan}")
-        # the shared narrow cache is consumed by >= 2 branches
-        assert plan.count("InMemoryTableScan") >= 2, plan
-    finally:
-        release_all()
-
-
-@pytest.mark.parametrize("mode", MODES)
-def test_fused_freshness_far_future_exact(spark, mode):
+def test_fused_freshness_far_future_exact(spark):
     """Sentinel timestamps past 2^53 us (~year 2255, e.g. 9999-12-31)
-    must reconstruct byte-exactly — micros ride a LONG slot, not the
-    shared double (which rounds at ~32 us out there)."""
+    must render byte-exactly (a double round-trip would be ~32 us off
+    out there)."""
     df = spark.createDataFrame(
         [("a", datetime(9999, 12, 31, 23, 59, 59, 999999), "k"),
          ("b", datetime(2024, 1, 1), "k"),
@@ -313,7 +187,7 @@ def test_fused_freshness_far_future_exact(spark, mode):
         "ts": {"x-freshness": {"max_age_seconds": 3600,
                                "as_of": "2024-06-01 00:00:00"}}}}
     compiled = compile_ruleset(rs, df.schema, name="ff")
-    got = table_check_violations(df, compiled, row_id="rid", fused=mode)
+    got = table_check_violations(df, compiled, row_id="rid")
     want = (uniqueness_violations(df, "k", ruleset_name="ff")
             .unionByName(freshness_violations(
                 df, "ts", max_age_seconds=3600.0,
@@ -323,19 +197,17 @@ def test_fused_freshness_far_future_exact(spark, mode):
         fresh = [r for r in got.collect() if r.keyword == "x-freshness"]
         # newest is in the future -> no violation row for age, but the
         # standalone emitter's decision must match; if neither emits,
-        # equality above already proves parity. Assert the exact micros
-        # survive by recomputing through the fused relation directly.
+        # equality above already proves parity.
         assert all("9999-12-31 23:59:59.999999" in (r.actual or "")
                    for r in fresh) or not fresh
     finally:
         release_all()
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_fused_float_key_negative_zero_matches_standalone(spark, mode):
+def test_fused_float_key_negative_zero_matches_standalone(spark):
     """A double key column holding -0.0 and 0.0: native groupBy
     normalizes them into ONE key (so standalone x-unique reports the
-    duplicate); the fused string key must too."""
+    duplicate) through the table-check engine too."""
     df = spark.createDataFrame(
         [("a", -0.0, datetime(2024, 1, 1)),
          ("b", 0.0, datetime(2024, 1, 2)),
@@ -348,7 +220,7 @@ def test_fused_float_key_negative_zero_matches_standalone(spark, mode):
         "ts": {"x-freshness": {"max_age_seconds": 3600,
                                "as_of": "2024-06-01 00:00:00"}}}}
     compiled = compile_ruleset(rs, df.schema, name="nz")
-    got = table_check_violations(df, compiled, row_id="rid", fused=mode)
+    got = table_check_violations(df, compiled, row_id="rid")
     want = (uniqueness_violations(df, "price", ruleset_name="nz")
             .unionByName(skew_violations(
                 df, "price", max_share=0.3, ruleset_name="nz"))
@@ -365,11 +237,10 @@ def test_fused_float_key_negative_zero_matches_standalone(spark, mode):
         release_all()
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_fused_freshness_date_column_matches_direct(spark, mode):
+def test_fused_freshness_date_column_matches_direct(spark):
     """A DATE column's newest value must render as a date in `actual`
-    through the fused path, exactly as the direct max(col) aggregate —
-    the micros round-trip casts back to the source type."""
+    through the table-check engine, exactly as the direct max(col)
+    aggregate."""
     from datetime import date
     df = spark.createDataFrame(
         [(str(i), date(2024, 1, 1 + i % 5), str(i)) for i in range(20)]
@@ -380,7 +251,7 @@ def test_fused_freshness_date_column_matches_direct(spark, mode):
         "d": {"x-freshness": {"max_age_seconds": 3600,
                               "as_of": "2024-06-01 00:00:00"}}}}
     compiled = compile_ruleset(rs, df.schema, name="fr")
-    got = table_check_violations(df, compiled, row_id="rid", fused=mode)
+    got = table_check_violations(df, compiled, row_id="rid")
     want = (uniqueness_violations(df, "k", ruleset_name="fr")
             .unionByName(freshness_violations(
                 df, "d", max_age_seconds=3600.0,
@@ -393,48 +264,49 @@ def test_fused_freshness_date_column_matches_direct(spark, mode):
         release_all()
 
 
-def test_window_checks_share_the_narrow_scan(spark, tmp_path):
-    """Round-5 continuation: the window-shaped narrow checks
-    (x-outlier / x-fd / x-gap / x-monotonic) read the shared cache too
-    — a ruleset mixing them with aggregation gates plans <= 2 live
-    fact reads, rows byte-identical to fused=False."""
-    from datetime import datetime
-    rows = [(f"r{i}", float(i % 50) + (500.0 if i == 7 else 0.0),
-             f"g{i % 3}", datetime(2024, 3, 1 + i % 9, i % 24),
-             i, f"k{i % 40}") for i in range(200)]
-    fact = spark.createDataFrame(
-        rows, "rid string, v double, seg string, ts timestamp, "
-              "seq long, k string")
-    p = str(tmp_path / "factw")
-    fact.write.mode("overwrite").parquet(p)
+def _read_schemas(plan: str) -> list[set[str]]:
+    """The top-level column names of every ReadSchema in a plan string
+    (the tables here have flat schemas)."""
+    import re
+    return [{f.split(":", 1)[0] for f in m.split(",")}
+            for m in re.findall(r"ReadSchema: struct<([^>]*)>", plan)]
+
+
+def test_each_scan_reads_only_its_checks_columns(spark, tmp_path):
+    """Over a parquet fact, every FileScan in the table-check plan reads
+    exactly one check's own columns — no shared wide projection, no
+    cache. x-drift reads (v, side), x-ref reads (cust, rid)."""
+    rows = [(f"r{i}", f"c{i % 7}", "ref" if i % 2 else "cur",
+             float(i % 10), f"k{i % 40}", f"pad{i}") for i in range(200)]
+    p = str(tmp_path / "fact")
+    spark.createDataFrame(
+        rows, "rid string, cust string, side string, v double, k string, "
+              "pad string").write.parquet(p)
     df = spark.read.parquet(p)
+    dim = spark.createDataFrame([(f"c{i}",) for i in range(5)],
+                                "cust_id string")
     rs = {"properties": {
         "k": {"x-unique": True},
-        "v": {"x-outlier": {"k": 3.5},
-              "x-fd": {"determined_by": ["seg"]}},
-        "ts": {"x-gap": {"max_seconds": 86400, "by": "seg"},
-               "x-monotonic": {"order_by": "seq"}}}}
-    compiled = compile_ruleset(rs, df.schema, name="win")
-    assert len(compiled.table_checks) == 5
-    got = table_check_violations(df, compiled, row_id="rid")
-    try:
-        want = table_check_violations(df, compiled, row_id="rid",
-                                      fused=False)
-        assert _sorted(got) == _sorted(want)
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        import re
-        live, echo_indents = 0, []
-        for ln in plan.splitlines():
-            indent = re.match(r"^[\s:+|-]*", ln).end()
-            while echo_indents and indent <= echo_indents[-1]:
-                echo_indents.pop()
-            if "InMemoryRelation" in ln:
-                echo_indents.append(indent)
-            elif not echo_indents and (
-                    "FileScan parquet" in ln
-                    or ("Scan parquet" in ln and "ReadSchema" in ln)):
-                live += 1
-        assert live == 0, (
-            f"{live} live scans besides the shared cache build:\n{plan}")
-    finally:
-        release_all()
+        "v": {"x-quantile": {"q": 0.5, "lo": 100.0},
+              "x-drift": {"partition_col": "side", "side_a": "ref",
+                          "side_b": "cur", "lo": 0.0, "hi": 10.0}},
+        "cust": {"x-ref": {"dim": "customers", "key": "cust_id"}}}}
+    compiled = compile_ruleset(rs, df.schema, name="pruned")
+    got = table_check_violations(df, compiled, row_id="rid",
+                                 dims={"customers": dim})
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan, plan
+    scans = _read_schemas(plan)
+    own = [{"k"}, {"v"}, {"v", "side"}, {"cust", "rid"}]
+    assert scans and all(s in own for s in scans), (scans, plan)
+    assert all(s in scans for s in own), (scans, plan)
+    assert got.count() > 0   # quantile + ref fire
+
+
+def test_unknown_kind_raises_naming_it(spark, fact):
+    from remark_lint_frontmatter_schema_spark.plans.compiler import (
+        CompiledRuleset)
+    compiled = CompiledRuleset(name="odd")
+    compiled.table_checks.append(("no_such_kind", "rid", {}))
+    with pytest.raises(ValueError, match="no_such_kind"):
+        table_check_violations(fact, compiled, row_id="rid")

@@ -11,8 +11,8 @@ import pytest
 
 import remark_lint_frontmatter_schema_spark.functions.multimodal as mm
 from remark_lint_frontmatter_schema_spark.functions.webp import (
-    _BitWriter, _Huffman, _write_huffman, webp_decode,
-    webp_encode_lossless)
+    _BitWriter, _Huffman, _huffman_lengths, _predict, _write_huffman,
+    webp_decode, webp_encode_lossless)
 
 
 # ---------------------------------------------------------------------------
@@ -73,12 +73,11 @@ def _header(bw, w, h, alpha=0):
 def _codes(bw, greens, reds, blues, alphas, dists=(0,),
            green_alphabet=280):
     """Write the five prefix codes covering exactly the given symbol
-    sets and return their _Huffman writers."""
+    sets and return their _Huffman writers. Each multi-symbol code is
+    complete (Kraft sum 1), as the decoder requires."""
     def hm(symbols, alphabet):
         return _write_huffman(
-            bw, {s: 1 for s in symbols} if len(symbols) == 1
-            else {s: max(1, (len(symbols) - 1).bit_length())
-                  for s in symbols}, alphabet)
+            bw, _huffman_lengths({s: 1 for s in symbols}, 15), alphabet)
     return (hm(sorted(set(greens)), green_alphabet),
             hm(sorted(set(reds)), 256),
             hm(sorted(set(blues)), 256),
@@ -374,6 +373,26 @@ def test_code_length_repeats_and_max_symbol():
     g.write(bw, 77)
     out = webp_decode(_wrap(bw))
     assert out.tolist() == [[[5, 77, 6]]]
+
+
+def test_select_predictor_tie_returns_top():
+    """Select (mode 11) with equal Manhattan distances to L and T:
+    RFC 9649 and libwebp return T unless L is strictly closer."""
+    left, top, tl = 0xFF0A0000, 0xFF000A00, 0xFF000000
+    assert _predict(11, left, top, tl, 0) == top
+    # L strictly closer still wins: p = L + T - TL is L itself here
+    assert _predict(11, 0xFF0A0000, 0xFF000000, 0xFF000000, 0) \
+        == 0xFF0A0000
+
+
+def test_incomplete_prefix_code_rejected():
+    """A normal code with more than one used symbol must be complete:
+    lengths [1, 2] leave half a bit of code space unassigned."""
+    with pytest.raises(ValueError, match="incomplete"):
+        _Huffman([1, 2])
+    with pytest.raises(ValueError, match="over-subscribed"):
+        _Huffman([1, 1, 1])
+    assert _Huffman([0, 3]).single == 1     # one symbol: 0-bit code
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,8 @@
 """Table checks (operators/table_checks.py) run as independent,
 column-pruned passes, one per check: rows must be byte-identical to the
-standalone per-check operators, every parquet scan must read only its
-own check's columns, and an unknown kind must raise."""
+standalone per-check operators whatever physical plan feeds them, every
+parquet scan must read only its own check's columns, and an unknown kind
+must raise."""
 
 from datetime import datetime
 
@@ -61,10 +62,47 @@ def _sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_fused_matches_standalone_operators(spark, fact):
+# Each parity test feeds the table-check engine the same rows in three
+# physical layouts and compares with the standalone operators run on the
+# rows as built. The case ids are the values of the former strategy knob,
+# kept so the test IDs stay comparable across versions; each names the
+# layout the matching former strategy scanned:
+#   False     - the DataFrame as built (a local relation);
+#   True      - the DataFrame persisted by the caller (an in-memory
+#               relation, as the former shared cache was);
+#   "explode" - the rows written to and read back from parquet (pruned
+#               FileScans).
+LAYOUTS = pytest.mark.parametrize(
+    "layout", ["as_built", "persisted", "parquet"],
+    ids=["False", "True", "explode"])
+
+
+@pytest.fixture
+def laid_out(layout, tmp_path):
+    """A function giving its DataFrame in this case's layout; what it
+    persisted is unpersisted at teardown."""
+    persisted = []
+
+    def lay(df):
+        if layout == "persisted":
+            persisted.append(df.persist())
+            return persisted[-1]
+        if layout == "parquet":
+            path = str(tmp_path / "fact")
+            df.write.parquet(path)
+            return df.sparkSession.read.parquet(path)
+        return df
+
+    yield lay
+    for df in persisted:
+        df.unpersist()
+
+
+@LAYOUTS
+def test_fused_matches_standalone_operators(spark, fact, laid_out):
     compiled = compile_ruleset(RULESET, fact.schema, name="fused")
     assert len(compiled.table_checks) == 8
-    got = table_check_violations(fact, compiled, row_id="rid")
+    got = table_check_violations(laid_out(fact), compiled, row_id="rid")
     want = (uniqueness_violations(fact, "rid", ruleset_name="fused")
             .unionByName(volume_violations(
                 fact, "ts", unit="day", k=3.5, ruleset_name="fused")
@@ -89,13 +127,14 @@ def test_fused_matches_standalone_operators(spark, fact):
         release_all()
 
 
-def test_empty_table_quantile_still_fails_closed(spark):
+@LAYOUTS
+def test_empty_table_quantile_still_fails_closed(spark, laid_out):
     """The standalone global x-quantile fires on an empty table (NULL
     quantile == finding); the table-check engine must preserve it."""
     df = spark.createDataFrame(
         [], "rid string, ts timestamp, v double, nm string")
     compiled = compile_ruleset(RULESET, df.schema, name="fused")
-    got = table_check_violations(df, compiled, row_id="rid")
+    got = table_check_violations(laid_out(df), compiled, row_id="rid")
     try:
         rows = got.collect()
     finally:
@@ -108,7 +147,8 @@ def test_empty_table_quantile_still_fails_closed(spark):
                for r in rows) == 1
 
 
-def test_fused_drift_matches_standalone(spark):
+@LAYOUTS
+def test_fused_drift_matches_standalone(spark, laid_out):
     """x-drift rows must be byte-identical to the standalone operator,
     including NaN's below-range bucket and dropped NULL-side rows."""
     from remark_lint_frontmatter_schema_spark.operators.drift import (
@@ -132,7 +172,7 @@ def test_fused_drift_matches_standalone(spark):
                           "emd_threshold": 0.5}}}}
     compiled = compile_ruleset(rs, df.schema, name="dr")
     assert len(compiled.table_checks) == 2
-    got = table_check_violations(df, compiled, row_id="rid")
+    got = table_check_violations(laid_out(df), compiled, row_id="rid")
     want = (uniqueness_violations(df, "k", ruleset_name="dr")
             .unionByName(drift_violations(
                 df, "v", partition_col="side", side_a="ref",
@@ -147,7 +187,8 @@ def test_fused_drift_matches_standalone(spark):
         release_all()
 
 
-def test_fused_drift_missing_side_config_row(spark):
+@LAYOUTS
+def test_fused_drift_missing_side_config_row(spark, laid_out):
     """A typo'd side label must still surface the fail-closed
     drift-config row through the table-check engine."""
     from remark_lint_frontmatter_schema_spark.operators.drift import (
@@ -160,7 +201,7 @@ def test_fused_drift_missing_side_config_row(spark):
         "v": {"x-drift": {"partition_col": "side", "side_a": "ref",
                           "side_b": "nope", "lo": 0.0, "hi": 10.0}}}}
     compiled = compile_ruleset(rs, df.schema, name="cfg")
-    got = table_check_violations(df, compiled, row_id="rid")
+    got = table_check_violations(laid_out(df), compiled, row_id="rid")
     want = (uniqueness_violations(df, "k", ruleset_name="cfg")
             .unionByName(drift_violations(
                 df, "v", partition_col="side", side_a="ref",
@@ -173,7 +214,8 @@ def test_fused_drift_missing_side_config_row(spark):
         release_all()
 
 
-def test_fused_freshness_far_future_exact(spark):
+@LAYOUTS
+def test_fused_freshness_far_future_exact(spark, laid_out):
     """Sentinel timestamps past 2^53 us (~year 2255, e.g. 9999-12-31)
     must render byte-exactly (a double round-trip would be ~32 us off
     out there)."""
@@ -187,7 +229,7 @@ def test_fused_freshness_far_future_exact(spark):
         "ts": {"x-freshness": {"max_age_seconds": 3600,
                                "as_of": "2024-06-01 00:00:00"}}}}
     compiled = compile_ruleset(rs, df.schema, name="ff")
-    got = table_check_violations(df, compiled, row_id="rid")
+    got = table_check_violations(laid_out(df), compiled, row_id="rid")
     want = (uniqueness_violations(df, "k", ruleset_name="ff")
             .unionByName(freshness_violations(
                 df, "ts", max_age_seconds=3600.0,
@@ -204,7 +246,8 @@ def test_fused_freshness_far_future_exact(spark):
         release_all()
 
 
-def test_fused_float_key_negative_zero_matches_standalone(spark):
+@LAYOUTS
+def test_fused_float_key_negative_zero_matches_standalone(spark, laid_out):
     """A double key column holding -0.0 and 0.0: native groupBy
     normalizes them into ONE key (so standalone x-unique reports the
     duplicate) through the table-check engine too."""
@@ -220,7 +263,7 @@ def test_fused_float_key_negative_zero_matches_standalone(spark):
         "ts": {"x-freshness": {"max_age_seconds": 3600,
                                "as_of": "2024-06-01 00:00:00"}}}}
     compiled = compile_ruleset(rs, df.schema, name="nz")
-    got = table_check_violations(df, compiled, row_id="rid")
+    got = table_check_violations(laid_out(df), compiled, row_id="rid")
     want = (uniqueness_violations(df, "price", ruleset_name="nz")
             .unionByName(skew_violations(
                 df, "price", max_share=0.3, ruleset_name="nz"))
@@ -237,7 +280,8 @@ def test_fused_float_key_negative_zero_matches_standalone(spark):
         release_all()
 
 
-def test_fused_freshness_date_column_matches_direct(spark):
+@LAYOUTS
+def test_fused_freshness_date_column_matches_direct(spark, laid_out):
     """A DATE column's newest value must render as a date in `actual`
     through the table-check engine, exactly as the direct max(col)
     aggregate."""
@@ -251,7 +295,7 @@ def test_fused_freshness_date_column_matches_direct(spark):
         "d": {"x-freshness": {"max_age_seconds": 3600,
                               "as_of": "2024-06-01 00:00:00"}}}}
     compiled = compile_ruleset(rs, df.schema, name="fr")
-    got = table_check_violations(df, compiled, row_id="rid")
+    got = table_check_violations(laid_out(df), compiled, row_id="rid")
     want = (uniqueness_violations(df, "k", ruleset_name="fr")
             .unionByName(freshness_violations(
                 df, "d", max_age_seconds=3600.0,

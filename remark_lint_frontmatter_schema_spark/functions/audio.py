@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import operator
 import struct
 from functools import lru_cache
 
@@ -116,25 +117,39 @@ def synth_wav(i: int, sr_hz: int, audio_ms: int) -> bytes:
 _FLAC_BLOCK = 4096
 
 
-def _crc8(data: bytes) -> int:
-    """CRC-8, poly 0x07, init 0 (FLAC frame-header CRC)."""
+def _crc_table(poly: int, width: int) -> list:
+    """256-entry table of a non-reflected CRC (MSB-first, init 0)."""
+    top, mask = 1 << (width - 1), (1 << width) - 1
+    table = []
+    for byte in range(256):
+        r = byte << (width - 8)
+        for _ in range(8):
+            r = ((r << 1) ^ poly) & mask if r & top else (r << 1) & mask
+        table.append(r)
+    return table
+
+
+def _crc_msb(data: bytes, table: list, width: int) -> int:
+    """Table-driven CRC over ``data``: one lookup per byte."""
+    shift, mask = width - 8, (1 << width) - 1
     crc = 0
     for byte in data:
-        crc ^= byte
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else (crc << 1) & 0xFF
+        crc = ((crc << 8) & mask) ^ table[(crc >> shift) ^ byte]
     return crc
+
+
+_CRC8_TABLE = _crc_table(0x07, 8)
+_CRC16_TABLE = _crc_table(0x8005, 16)
+
+
+def _crc8(data: bytes) -> int:
+    """CRC-8, poly 0x07, init 0 (FLAC frame-header CRC)."""
+    return _crc_msb(data, _CRC8_TABLE, 8)
 
 
 def _crc16(data: bytes) -> int:
     """CRC-16, poly 0x8005, init 0 (FLAC frame CRC)."""
-    crc = 0
-    for byte in data:
-        crc ^= byte << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005) & 0xFFFF if crc & 0x8000 \
-                else (crc << 1) & 0xFFFF
-    return crc
+    return _crc_msb(data, _CRC16_TABLE, 16)
 
 
 def _utf8_code(n: int) -> bytes:
@@ -403,16 +418,30 @@ def flac_encode(samples: np.ndarray, sr_hz: int, *, method: str = "auto",
     return b"".join(out)
 
 
+# bits per Rice lookup window: streams up to 32 KiB past their first
+# residual get one window; longer ones re-window as the cursor moves, so
+# table memory stays bounded
+_RICE_WINDOW = 1 << 18
+
+
 class _BitReader:
-    """MSB-first bit cursor over a byte string (numpy unpackbits). Unary
-    codes resolve via a sorted one-positions index (searchsorted), so
-    Rice decoding costs O(log n) per terminator, not a linear scan."""
+    """MSB-first bit cursor over a byte string (numpy unpackbits).
+
+    Header fields and raw runs (VERBATIM, escaped partitions) read from
+    the unpacked bit array with numpy. Rice residuals read through two
+    list tables over a window of the stream: the next set bit at or after
+    each position, and the value of the k bits starting at each position
+    (one per Rice parameter k). Both are built once per window, so a
+    residual costs two list lookups instead of numpy calls per bit field.
+    """
 
     def __init__(self, data: bytes):
         self.raw = data
         self.bits = np.unpackbits(np.frombuffer(data, np.uint8))
-        self.ones = np.flatnonzero(self.bits).astype(np.int64)
         self.pos = 0
+        self._base = 0
+        self._nxt: list = []   # window length L + 1; L means "no set bit"
+        self._val: dict = {}   # k -> value of the k bits at each position
 
     def read(self, n: int) -> int:
         if n == 0:
@@ -428,14 +457,69 @@ class _BitReader:
         v = self.read(n)
         return v - (1 << n) if n and v >= (1 << (n - 1)) else v
 
+    def read_signed_run(self, cnt: int, n: int) -> np.ndarray:
+        """``cnt`` consecutive n-bit two's-complement values."""
+        end = self.pos + cnt * n
+        if end > len(self.bits):
+            raise ValueError("truncated subframe data")
+        if n == 0:
+            return np.zeros(cnt, np.int64)
+        v = self.bits[self.pos:end].reshape(cnt, n) @ _POW2_DESC[32 - n:]
+        self.pos = end
+        return np.where(v >= 1 << (n - 1), v - (1 << n), v)
+
     def read_unary(self) -> int:
-        i = int(np.searchsorted(self.ones, self.pos))
-        if i >= len(self.ones):
+        # argmax over a bool view stops at the first set bit
+        rest = self.bits[self.pos:].view(bool)
+        q = int(rest.argmax()) if len(rest) else 0
+        if not len(rest) or not rest[q]:
             raise ValueError("truncated unary code")
-        t = int(self.ones[i])
-        q = t - self.pos
-        self.pos = t + 1
+        self.pos += q + 1
         return q
+
+    def _window(self, start: int, n: int) -> None:
+        w = self.bits[start:start + n]
+        m = len(w)
+        nxt = np.minimum.accumulate(np.where(w, np.arange(m), m)[::-1])
+        self._base, self._nxt, self._val = start, nxt[::-1].tolist() + [m], {}
+
+    def _values(self, k: int) -> list:
+        val = self._val.get(k)
+        if val is None:
+            w = self.bits[self._base:self._base + len(self._nxt) - 1] \
+                .astype(np.int64)
+            m = max(len(w) - k + 1, 0)
+            v = np.zeros(m, np.int64)
+            for j in range(k):
+                v = (v << 1) | w[j:j + m]
+            val = self._val[k] = v.tolist()
+        return val
+
+    def read_rice(self, cnt: int, k: int) -> np.ndarray:
+        """``cnt`` Rice codes with parameter ``k`` -> signed residuals."""
+        if not self._base <= self.pos < self._base + len(self._nxt):
+            self._window(self.pos, _RICE_WINDOW)
+        while True:
+            nxt, val = self._nxt, self._values(k)
+            p = self.pos - self._base
+            us = []
+            try:
+                for _ in range(cnt):
+                    t = nxt[p]
+                    us.append(((t - p) << k) | val[t + 1])
+                    p = t + 1 + k
+                break
+            except IndexError:
+                # a code runs past the window: at the stream's end that
+                # is truncation, otherwise re-window from this partition
+                m = len(nxt) - 1
+                if self._base + m >= len(self.bits):
+                    raise ValueError("truncated unary code" if nxt[p] == m
+                                     else "truncated subframe data") from None
+                self._window(self.pos, 2 * m)
+        self.pos = self._base + p
+        u = np.array(us, np.int64)
+        return (u >> 1) ^ -(u & 1)
 
 
 def _read_residual(br: _BitReader, bs: int, order: int) -> np.ndarray:
@@ -452,17 +536,10 @@ def _read_residual(br: _BitReader, bs: int, order: int) -> np.ndarray:
         if cnt < 0:
             raise ValueError("invalid Rice partition order")
         k = br.read(pbits)
-        vals = np.empty(cnt, np.int64)
         if k == esc:
-            raw = br.read(5)
-            for i in range(cnt):
-                vals[i] = br.read_signed(raw)
+            out.append(br.read_signed_run(cnt, br.read(5)))
         else:
-            for i in range(cnt):
-                q = br.read_unary()
-                u = (q << k) | br.read(k)
-                vals[i] = (u >> 1) ^ -(u & 1)
-        out.append(vals)
+            out.append(br.read_rice(cnt, k))
     return np.concatenate(out) if out else np.empty(0, np.int64)
 
 
@@ -480,13 +557,19 @@ def _restore_fixed(warm: np.ndarray, res: np.ndarray,
 
 
 def _restore_lpc(warm, res, qlp, shift: int) -> np.ndarray:
-    xs = [int(v) for v in warm]
+    """Run the LPC predictor over the residuals. Each prediction is one
+    dot product of the reversed coefficients with a slice of the last
+    ``order`` samples. A sample outside the 16-bit range fails the frame
+    at once: corrupted coefficients would otherwise grow the samples
+    past int64."""
+    xs = list(warm)
+    rq = qlp[::-1]
     order = len(qlp)
-    for r in res:
-        p = 0
-        for j in range(order):
-            p += qlp[j] * xs[-1 - j]
-        xs.append(int(r) + (p >> shift))
+    for i, r in enumerate(res.tolist()):
+        v = r + (sum(map(operator.mul, rq, xs[i:i + order])) >> shift)
+        if not -32768 <= v <= 32767:
+            raise ValueError("decoded samples out of 16-bit range")
+        xs.append(v)
     return np.array(xs, np.int64)
 
 
@@ -515,27 +598,25 @@ def _decode_subframe(br: _BitReader, bs: int, bps: int) -> np.ndarray:
             x = np.frombuffer(raw, dtype=">i2").astype(np.int64)
             br.pos += 16 * bs
         else:
-            x = np.fromiter((br.read_signed(ebps) for _ in range(bs)),
-                            np.int64, bs)
+            x = br.read_signed_run(bs, ebps)
     elif 0b001000 <= stype <= 0b001100:         # FIXED order 0-4
         order = stype - 0b001000
         if order > bs:
             raise ValueError("predictor order exceeds blocksize")
-        warm = np.fromiter((br.read_signed(ebps) for _ in range(order)),
-                           np.int64, order)
+        warm = br.read_signed_run(order, ebps)
         x = _restore_fixed(warm, _read_residual(br, bs, order), order)
     elif stype >= 0b100000:                     # LPC order 1-32
         order = stype - 0b100000 + 1
         if order > bs:
             raise ValueError("predictor order exceeds blocksize")
-        warm = [br.read_signed(ebps) for _ in range(order)]
+        warm = br.read_signed_run(order, ebps).tolist()
         prec = br.read(4) + 1
         if prec == 16:
             raise ValueError("invalid qlp precision code")
         shift = br.read_signed(5)
         if shift < 0:
             raise ValueError("negative qlp shift")
-        qlp = [br.read_signed(prec) for _ in range(order)]
+        qlp = br.read_signed_run(order, prec).tolist()
         x = _restore_lpc(warm, _read_residual(br, bs, order), qlp, shift)
     else:
         raise ValueError(f"reserved subframe type {stype:#08b}")
@@ -662,26 +743,13 @@ def flac_stub_bytes(i: int, sr_hz: int = 16000, audio_ms: int = 8) -> bytes:
 # container validation / metadata consistency checks run for real.
 # ---------------------------------------------------------------------------
 
-_OGG_CRC_TABLE = None
+_OGG_CRC_TABLE = _crc_table(0x04C11DB7, 32)
 
 
 def _ogg_crc(data: bytes) -> int:
     """Ogg page CRC-32: poly 0x04C11DB7, init 0, not reflected, no
     final xor (RFC 3533 A.2) — NOT the zlib CRC."""
-    global _OGG_CRC_TABLE
-    if _OGG_CRC_TABLE is None:
-        table = []
-        for byte in range(256):
-            r = byte << 24
-            for _ in range(8):
-                r = ((r << 1) ^ 0x04C11DB7 if r & 0x80000000 else r << 1) \
-                    & 0xFFFFFFFF
-            table.append(r)
-        _OGG_CRC_TABLE = table
-    crc = 0
-    for byte in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _OGG_CRC_TABLE[(crc >> 24) ^ byte]
-    return crc
+    return _crc_msb(data, _OGG_CRC_TABLE, 32)
 
 
 def _ogg_page(header_type: int, granule: int, serial: int, seq: int,
@@ -1752,11 +1820,14 @@ def codec_header_ok_col(bytes_col="bytes", codec_col="codec",
     transfer volume, and the difference between a stage that anti-scales
     (measured 15s@4 cores -> 22s@16) and one that scales.
 
+    This is the ``codec_header`` entry of :func:`register_audio_checks`;
+    the fully-JVM :func:`codec_header_ok_expr` is ``codec_header_jvm``.
+
     Caveat for ``codec='mp3'``: an ID3v2 tag longer than ``prefix_len-4``
     pushes the first frame header past the slice and the row fails the
-    check; raise ``prefix_len`` for ID3-heavy corpora, or prefer the
-    fully-JVM :func:`codec_header_ok_expr` (the DSL default), which reads
-    dynamic offsets with no prefix at all."""
+    check; raise ``prefix_len`` for ID3-heavy corpora, or prefer
+    ``codec_header_jvm``, which reads dynamic offsets with no prefix at
+    all."""
     prefix = F.substring(F.col(bytes_col) if isinstance(bytes_col, str)
                          else bytes_col, 1, prefix_len)
     return codec_header_ok(prefix,
@@ -1812,10 +1883,14 @@ def register_audio_checks() -> dict:
     """Named vectorized checks for the DSL's ``x-spark-check`` extension
     point (the reference's custom-Ajv-keyword analog, index.ts:49).
 
-    ``codec_header`` runs inside the same one-projection violations pass —
-    an ArrowEvalPython stage appears in the plan only when a ruleset
-    actually references it (binary checks stay behind this flag so
-    expression-only runs remain fully JVM codegen)."""
+    ``wav_riff_magic``, ``codec_header_jvm`` and ``canonical_wav`` are
+    pure-JVM expressions: they stay inline in the one-projection checks
+    pass. Every other entry is a pandas UDF. The compiler stages those
+    below the checks projection (``CompiledRuleset.staged``), so each
+    crosses to Python once per row, and an ArrowEvalPython stage appears
+    in the plan only when a ruleset references one. ``codec_header`` is
+    the Arrow prefix-UDF form (:func:`codec_header_ok_col`);
+    ``codec_header_jvm`` gives the same results with no Python."""
     return {
         "wav_riff_magic": lambda col: F.substring(col, 1, 4) == F.lit(b"RIFF"),
         "codec_header": lambda col: codec_header_ok_col(col, "codec", "sr_hz"),

@@ -43,7 +43,9 @@ def stage_columns(df, compiled: CompiledRuleset):
     Variant expressions are CodegenFallback — a checks projection that
     inlines them re-walks the variant binary once per keyword in
     interpreted mode. The compiler stages each variant node's value/tag/
-    string/double views once (plans/compiler.py); every consumer of
+    string/double views once, and each ``x-spark-check`` whose Column
+    calls a Python UDF, so the check crosses to Python once per row
+    (plans/compiler.py); every consumer of
     ``compiled.checks`` / the ``*_expr`` builders MUST apply this first.
     Entries may reference earlier entries, hence the sequential selects
     (CollapseProject keeps multi-referenced non-cheap aliases in place).
@@ -139,7 +141,11 @@ def violations_array(compiled: CompiledRuleset) -> Column:
     surface, but the violations/verdicts hot paths avoid it (see
     :func:`_raw_violations_array`).
     """
-    return F.filter(_raw_violations_array(compiled), lambda x: x.isNotNull())
+    return _compact(_raw_violations_array(compiled))
+
+
+def _compact(raw_arr: Column) -> Column:
+    return F.filter(raw_arr, lambda x: x.isNotNull())
 
 
 @dataclass
@@ -175,7 +181,10 @@ def validate(
 
     all_errors = compiled.options.get("all_errors", True)
     nv = n_violations_expr(compiled)
-    ann_arr = violations_array(compiled)
+    # one Column for the raw array: both surfaces below reuse it instead of
+    # rebuilding every check's struct through py4j
+    raw_arr = _raw_violations_array(compiled)
+    ann_arr = _compact(raw_arr)
     if not all_errors:
         # the annotated surface honors the option too: one struct per row
         ann_arr = F.slice(ann_arr, 1, 1)
@@ -193,19 +202,21 @@ def validate(
     if all_errors:
         # reference default (allErrors:true, index.ts:312): every failing
         # keyword emits a row
-        exploded = F.explode(_raw_violations_array(compiled)).alias("v")
+        exploded = F.explode(raw_arr).alias("v")
     else:
-        # Ajv's non-allErrors mode: first violation per row only. The HOF
-        # compaction is acceptable here — it runs on violating rows only.
-        exploded = F.explode(
-            F.slice(violations_array(compiled), 1, 1)).alias("v")
+        # Ajv's non-allErrors mode: first violation per row only (ann_arr
+        # is already sliced). The HOF compaction is acceptable here — it
+        # runs on violating rows only.
+        exploded = F.explode(ann_arr).alias("v")
     # The nv>0 prefilter skips array construction on passing rows — but
     # ONLY for unstaged rulesets: filter pushdown substitutes Project
-    # aliases unconditionally (unlike CollapseProject), so with staged
-    # variant views the whole interpreted expression would be inlined into
-    # the scan's DataFilters — evaluated on the (possibly single-split)
-    # scan task BEFORE any repartition, then re-evaluated above for the
-    # explode. Without the prefilter the explode emits one NULL slot per
+    # aliases unconditionally (unlike CollapseProject), so a staged
+    # expression would be inlined into the filter and evaluated twice:
+    # once under the filter, once above it for the explode. For staged
+    # variant views that is the interpreted variant walk, pushed into the
+    # scan's DataFilters on the (possibly single-split) scan task; for
+    # staged Python-crossing x-spark-checks it is a second ArrowEvalPython
+    # stage. Without the prefilter the explode emits one NULL slot per
     # passing check and the post-Generate filter drops them — map-only,
     # parallel, each slot a staged-attribute reference.
     viol_src = work.where(nv > 0) if not compiled.staged else work

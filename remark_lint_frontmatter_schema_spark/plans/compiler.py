@@ -131,7 +131,9 @@ class CompiledRuleset:
     # (name, Column) pairs to project BELOW the checks projection (see
     # operators.validate.stage_columns): variant expressions are
     # CodegenFallback — interpreted — so tag/string/double views of each
-    # variant node are computed once here instead of once per keyword
+    # variant node are computed once here instead of once per keyword;
+    # x-spark-checks that call a Python UDF are staged too, so each
+    # crosses to Python once per row instead of once per consumer
     staged: list = field(default_factory=list)
     ruleset_hash: str = ""
     options: dict = field(default_factory=dict)          # ajvOptions analog
@@ -2008,7 +2010,29 @@ def _compile_keywords(schema: dict, ctx: _Ctx, *,
             ctx.out.unknown.append((ctx.instance_path, f"x-spark-check:{name}"))
         else:
             msg = _reason(f'must pass check "{name}"', ctx, "x-spark-check")
-            _add(ctx, "x-spark-check", _present(ctx) & ~fn(ctx.col), msg)
+            ok = fn(ctx.col)
+            if ctx.stage is not None and _calls_python(ok):
+                # inline, every consumer of the predicate (the violations
+                # prefilter and the explode) gets its own Python crossing;
+                # staged, the check crosses once per row
+                ok = ctx.stage(f"{ctx.instance_path}.check", ok)
+            _add(ctx, "x-spark-check", _present(ctx) & ~ok, msg)
+
+
+def _calls_python(col: Column) -> bool:
+    """True iff ``col`` evaluates a Python UDF. Decided on the JVM
+    expression tree (its PYTHON_UDF pattern bit), so no Spark job runs.
+    A Column this cannot inspect counts as JVM-only and stays inline."""
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+    jvm = SparkContext._jvm
+    try:
+        conv = getattr(getattr(jvm.org.apache.spark.sql.classic,
+                               "ColumnNodeToExpressionConverter$"), "MODULE$")
+        return bool(conv.apply(col._jc.node()).containsPattern(
+            jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PYTHON_UDF()))
+    except (AttributeError, Py4JError):
+        return False
 
 
 def _embedding_checks(ctx: _Ctx, p: dict) -> None:

@@ -340,7 +340,8 @@ def route_and_validate_single_pass(
         # staged names are unique per ruleset (the registrar prefixes the
         # route name), so the fused relation carries every route's staged
         # columns side by side; rows routed elsewhere compute them too —
-        # wasted-but-safe (variant views of any value are total)
+        # wasted-but-safe (variant views of any value are total, and
+        # Spark runs an extracted Python UDF on every input row anyway)
         merged.staged.extend(compiled.staged)
         route_nv.append((name, pred, n_violations_expr(compiled),
                          n_blocking_expr(compiled, ("error",)),
@@ -352,8 +353,8 @@ def route_and_validate_single_pass(
     part = (F.col(partition_col).cast("string") if partition_col
             else F.lit("all")).alias("partition_id")
     # no nv>0 prefilter when staged columns exist: filter pushdown would
-    # inline the staged variant views into the scan (see
-    # operators/validate.py violations branch)
+    # inline the staged expressions into the filter and evaluate them
+    # twice (see operators/validate.py violations branch)
     viol_src = df.where(nv > 0) if not merged.staged else df
     violations = (
         viol_src

@@ -2,7 +2,6 @@
 and equivalence of the three header-check implementations."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from remark_lint_frontmatter_schema_spark import compile_ruleset, validate
 from remark_lint_frontmatter_schema_spark.functions import audio
@@ -57,17 +56,66 @@ def test_header_check_via_dsl(clips):
                        None}  # None: dup-id rows aliased onto neighbors
 
 
+def _arrow_stages(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString() \
+        .count("ArrowEvalPython")
+
+
 def test_expression_only_plan_has_no_python_stage(clips):
     ruleset = {"properties": {"codec": {"enum": ["pcm_s16le", "flac", "opus"]}}}
     compiled = compile_ruleset(ruleset, clips.schema, name="expr")
     res = validate(clips, compiled, row_id="clip_id")
-    plan = res.violations._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan
-    # ...and the binary ruleset does add exactly one Arrow stage
+    assert _arrow_stages(res.violations) == 0
+    # ...and the binary ruleset adds exactly one Arrow stage to each plan:
+    # the staged check crosses to Python once per row
     compiled_b = compile_ruleset(
         {"properties": {"bytes": {"x-spark-check": "codec_header"}}},
         clips.schema, name="bin", extra_checks=audio.register_audio_checks())
+    assert len(compiled_b.staged) == 1
     res_b = validate(clips, compiled_b, row_id="clip_id")
-    plan_b = res_b.violations._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan_b
-    _ = F
+    assert _arrow_stages(res_b.violations) == 1
+    assert _arrow_stages(res_b.verdicts) == 1
+
+
+def _filters(df) -> int:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum("Filter " in line for line in plan.splitlines())
+
+
+def test_jvm_check_is_not_staged_and_keeps_prefilter(clips):
+    checks = audio.register_audio_checks()
+    jvm = compile_ruleset(
+        {"properties": {"bytes": {"x-spark-check": "codec_header_jvm"}}},
+        clips.schema, name="jvm", extra_checks=checks)
+    assert jvm.staged == []
+    res = validate(clips, jvm, row_id="clip_id")
+    assert _arrow_stages(res.violations) == 0
+    # the nv > 0 prefilter under the explode plus the NULL-slot filter
+    # above it; a staged ruleset has only the latter
+    assert _filters(res.violations) == 2
+    py = compile_ruleset(
+        {"properties": {"bytes": {"x-spark-check": "codec_header"}}},
+        clips.schema, name="py", extra_checks=checks)
+    assert _filters(validate(clips, py, row_id="clip_id").violations) == 1
+
+
+def test_staged_python_checks_flag_the_rows_the_udfs_flag(spark):
+    df = fixtures.generate_clips(spark, 300, audio_ms=8, num_partitions=3)
+    compiled = compile_ruleset(
+        {"properties": {"bytes": {"allOf": [
+            {"x-spark-check": "codec_header"},
+            {"x-spark-check": "not_clipped"}]}}},
+        df.schema, name="pay", extra_checks=audio.register_audio_checks())
+    assert len(compiled.staged) == 2
+    got = sorted((r.row_id, r.constraint_id) for r in validate(
+        df, compiled, row_id="clip_id").violations.collect())
+    want = []
+    for r in df.where("bytes is not null").select(
+            "clip_id", audio.codec_header_ok_col().alias("header"),
+            audio.is_not_clipped("bytes").alias("not_clipped")).collect():
+        if r.header is False:
+            want.append((r.clip_id, "pay:/bytes:x-spark-check"))
+        if r.not_clipped is False:
+            want.append((r.clip_id, "pay:/bytes:x-spark-check#2"))
+    assert want
+    assert got == sorted(want)

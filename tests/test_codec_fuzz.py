@@ -1,5 +1,6 @@
 """Property-based codec fuzz (hypothesis): FLAC roundtrip losslessness
-over arbitrary int16 signals/rates/methods/partition orders, Ogg/Opus
+over arbitrary int16 signals/rates/methods/partition orders, FLAC
+totality under single-byte flips of valid streams, Ogg/Opus
 metadata roundtrip over arbitrary (sr, duration), and decoder totality
 over arbitrary garbage bytes (raise-or-decode, never wrong samples or a
 foreign exception type)."""
@@ -23,6 +24,28 @@ def test_flac_roundtrip_lossless_property(data, sr, method, po):
     dsr, y = audio.flac_decode(b)
     assert dsr == sr
     assert np.array_equal(x, y)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    seed=st.integers(0, 50),
+    n=st.integers(16, 1200),
+    sr=st.sampled_from([8000, 16000, 48000]),
+    # half the draws land in the first frame's header, warm-up samples
+    # and predictor coefficients, where a flip changes the most structure
+    at=st.one_of(st.integers(42, 110), st.integers(0, 10 ** 6)),
+    flip=st.integers(1, 255),
+)
+def test_flac_single_byte_flip_decodes_or_raises(seed, n, sr, at, flip):
+    """Any single-byte flip of a valid stream either decodes or raises
+    ValueError/NotImplementedError — never OverflowError, IndexError or
+    another type a per-row ``except ValueError`` would not catch."""
+    b = bytearray(audio.flac_encode(audio.synth_pcm16(seed, sr, n), sr))
+    b[at % len(b)] ^= flip
+    try:
+        audio.flac_decode(bytes(b))
+    except (ValueError, NotImplementedError):
+        pass
 
 
 @settings(max_examples=40, deadline=None)

@@ -139,6 +139,98 @@ def test_reserved_subframe_type_refused_not_misdecoded():
         audio.flac_decode(bytes(b))
 
 
+def _crc_bitwise(data: bytes, poly: int, width: int) -> int:
+    crc, top, mask = 0, 1 << (width - 1), (1 << width) - 1
+    for byte in data:
+        crc ^= byte << (width - 8)
+        for _ in range(8):
+            crc = ((crc << 1) ^ poly) & mask if crc & top else (crc << 1) & mask
+    return crc
+
+
+def test_crc_tables_match_bitwise_reference():
+    """The table-driven CRCs equal the bit-at-a-time definition, and hit
+    the published check values of CRC-8/SMBUS and CRC-16/UMTS."""
+    assert audio._crc8(b"123456789") == 0xF4
+    assert audio._crc16(b"123456789") == 0xFEE8
+    rng = np.random.default_rng(1)
+    for n in (0, 1, 7, 300):
+        data = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
+        assert audio._crc8(data) == _crc_bitwise(data, 0x07, 8)
+        assert audio._crc16(data) == _crc_bitwise(data, 0x8005, 16)
+        assert audio._ogg_crc(data) == _crc_bitwise(data, 0x04C11DB7, 32)
+
+
+def _rice_bitwise(bits, pos: int, cnt: int, k: int):
+    """Rice codes read one bit at a time (IndexError past the end)."""
+    out = []
+    for _ in range(cnt):
+        q = 0
+        while not bits[pos]:
+            q, pos = q + 1, pos + 1
+        pos += 1
+        u = 0
+        for _ in range(k):
+            u, pos = (u << 1) | int(bits[pos]), pos + 1
+        u |= q << k
+        out.append((u >> 1) ^ -(u & 1))
+    return out, pos
+
+
+@pytest.mark.parametrize("window", [5, 64, audio._RICE_WINDOW])
+def test_read_rice_matches_bitwise_reference(monkeypatch, window):
+    """Table-driven Rice reads equal a bit-at-a-time reader on random
+    dense and sparse bit strings, across re-windowing, and raise
+    ValueError exactly where the reference runs off the end."""
+    monkeypatch.setattr(audio, "_RICE_WINDOW", window)
+    rng = np.random.default_rng(window)
+    for k in (0, 1, 3, 7, 14, 30):
+        for density in (0.9, 0.1):
+            raw = rng.integers(0, 256, 64) * (rng.random(64) < density)
+            data = raw.astype(np.uint8).tobytes()
+            bits = np.unpackbits(np.frombuffer(data, np.uint8))
+            start, cnt = int(rng.integers(0, 16)), int(rng.integers(1, 40))
+            br = audio._BitReader(data)
+            br.pos = start
+            try:
+                want, end = _rice_bitwise(bits, start, cnt, k)
+            except IndexError:
+                with pytest.raises(ValueError, match="truncated"):
+                    br.read_rice(cnt, k)
+                continue
+            assert br.read_rice(cnt, k).tolist() == want
+            assert br.pos == end
+
+
+def test_corrupted_lpc_data_raises_valueerror():
+    """A flipped byte in an LPC subframe can drive the predictor far past
+    int64. The decoder must reject the stream with ValueError, the error
+    ``decode_payload_any`` callers catch; an OverflowError would fail the
+    whole Arrow task instead of one row."""
+    good = audio.flac_encode(audio.synth_pcm16(0, 48000, 384), 48000)
+    assert _first_subframe_type(good) >= 0b100000
+    bad = bytearray(good)
+    bad[75] ^= 0x5A
+    with pytest.raises(ValueError, match="out of 16-bit range"):
+        audio.flac_decode(bytes(bad))
+
+
+@pytest.mark.parametrize("window", [7, 100, 4096])
+def test_rice_tables_rewindow_without_changing_samples(monkeypatch, window):
+    """Rice lookup tables cover a bounded window of the stream, and a code
+    that runs past it re-windows from its partition's start. Tiny windows
+    force that path on most partitions; samples and truncation errors
+    stay the same."""
+    monkeypatch.setattr(audio, "_RICE_WINDOW", window)
+    sine = (10000 * np.sin(2 * np.pi * 440 * np.arange(9000) / 16000)
+            ).astype(np.int16)
+    for po in (0, 3):
+        b = audio.flac_encode(sine, 16000, partition_order=po)
+        assert np.array_equal(audio.flac_decode(b)[1], sine)
+        with pytest.raises(ValueError):
+            audio.flac_decode(b[:len(b) // 2])
+
+
 def test_wasted_bits_decode():
     """Hand-built frame with the wasted-bits flag: a CONSTANT subframe
     whose value is stored at 16-2 bits and shifted left 2 on decode —

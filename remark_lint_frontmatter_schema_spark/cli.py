@@ -91,10 +91,6 @@ def build_parser() -> argparse.ArgumentParser:
                          "--ruleset-col values (default: config dir, then "
                          "the input's dir — the reference's two-step "
                          "$schema resolution, index.ts:227-238)")
-    ap.add_argument("--single-pass", action="store_true",
-                    help="fuse all routed rulesets into one scan "
-                         "(route_and_validate_single_pass); identical "
-                         "output, R scans -> 1. No effect with --embed.")
     ap.add_argument("--fix-out",
                     help="repair mode (remark's --output rewrite, the "
                          "lint -> fix -> re-lint loop; requires --embed): "
@@ -316,7 +312,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from .session import get_spark
     from .plans.bundler import bundle
-    from .plans.routing import route_and_validate
+    from .plans.routing import RoutedPass, RoutingReport, route_and_validate
     from . import sinks
 
     spark = get_spark(**({"master": args.master} if args.master else {}))
@@ -326,8 +322,8 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.dim and (args.induce_out or args.ingest_out
                      or args.resume_manifest or args.prune_stats):
-        print("--dim is only supported on the default, --single-pass and "
-              "--workspace validation paths", file=sys.stderr)
+        print("--dim is only supported on the default and --workspace "
+              "validation paths", file=sys.stderr)
         return 2
 
     if args.induce_out:
@@ -485,39 +481,14 @@ def main(argv: list[str] | None = None) -> int:
             spark, table_for_scan, embed, row_id=args.row_id,
             name=os.path.splitext(os.path.basename(args.embed))[0],
             partition_col=args.partition_col, run_id=val_run_id)
-        violations = pruned["result"].violations
-        verdicts = pruned["result"].verdicts
         summ = pruned["report"].summary()
         print(f"footer-stats pruning: skipped "
               f"{len(pruned['skipped_files'])}/{summ['n_files']} files "
               f"({pruned['rows_skipped']} rows proven clean by metadata)",
               file=sys.stderr)
-
-        class _PrunedReport:
-            errors = []
-            passes = [type("P", (), {
-                "ruleset_name": os.path.splitext(
-                    os.path.basename(args.embed))[0],
-                "source": "embed+footer-stats"})()]
-
-        report = _PrunedReport()
-    elif args.single_pass and embed is None:
-        from .plans.routing import route_and_validate_single_pass
-
-        fused = route_and_validate_single_pass(
-            df, row_id=args.row_id, registry=registry,
-            ruleset_col=ruleset_col, patterns=patterns,
-            partition_col=args.partition_col, run_id=val_run_id,
-            schema_dirs=schema_dirs, dims=_parse_dims(args, spark),
-            extra_checks=_builtin_checks())
-        violations, verdicts = fused["violations"], fused["verdicts"]
-
-        class _FusedReport:
-            errors = fused["errors"]
-            passes = [type("P", (), {"ruleset_name": n, "source": "fused"})()
-                      for n in fused["routed"]]
-
-        report = _FusedReport()
+        res = pruned["result"]
+        report = RoutingReport(passes=[RoutedPass(
+            res.compiled.name, res.compiled, "embed+footer-stats", res)])
     else:
         report = route_and_validate(
             df, row_id=args.row_id, registry=registry, embed=embed,
@@ -525,7 +496,7 @@ def main(argv: list[str] | None = None) -> int:
             partition_col=args.partition_col, run_id=val_run_id,
             schema_dirs=schema_dirs, dims=_parse_dims(args, spark),
             extra_checks=_builtin_checks())
-        violations, verdicts = report.violations, report.verdicts
+    violations, verdicts = report.violations, report.verdicts
 
     # The violations relation can be consumed up to three times (count,
     # sink write, report render) — persist it once instead of re-running

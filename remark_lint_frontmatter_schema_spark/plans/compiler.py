@@ -2843,8 +2843,10 @@ def compile_ruleset(
     schema = unroll_dynamic_refs(schema, _schema_depth(df_schema) + 1)
     stage = None
     if options.get("stage_variant", True):
-        # short name-hash suffix: sanitized/truncated names of two routed
-        # rulesets must never collide in the fused relation's columns
+        # short name-hash suffix: two rulesets whose sanitized/truncated
+        # names agree still get distinct staged column names, so a staged
+        # column in a plan holding several routes' passes names one
+        # ruleset's expression only
         prefix = (re.sub(r"\W+", "_", name)[:24] + "_"
                   + hashlib.sha256(name.encode()).hexdigest()[:4])
 

@@ -114,13 +114,12 @@ def _resolve_routes(df: DataFrame, *, registry: dict,
                     ruleset_col: str | None, patterns: dict | None,
                     partition_col: str | None, schema_dirs, fetch,
                     errors: list) -> list:
-    """Shared route resolution for both routing executors: returns
-    ``[(name, doc, source, pred, schema_file)]`` with load failures
-    recorded into ``errors``. Column routes resolve registry-first, then
-    the path-valued two-step probe; pattern routes apply only where no
-    local association exists (index.ts:250 hasLocalAssoc guard).
-    Extracting this keeps the per-pass and fused executors structurally
-    identical instead of test-pinned copies."""
+    """Route resolution shared by ``route_and_validate`` and
+    ``operators.repair``: returns ``[(name, doc, source, pred,
+    schema_file)]`` with load failures recorded into ``errors``. Column
+    routes resolve registry-first, then the path-valued two-step probe;
+    pattern routes apply only where no local association exists
+    (index.ts:250 hasLocalAssoc guard)."""
     routes: list = []
     routed_pred = F.lit(False)
 
@@ -258,155 +257,3 @@ def route_and_validate(
 
     return report
 
-
-def route_and_validate_single_pass(
-    df: DataFrame,
-    *,
-    row_id: str,
-    registry: dict | None = None,
-    ruleset_col: str | None = None,
-    patterns: dict | None = None,
-    partition_col: str | None = None,
-    run_id: str = "run_0",
-    extra_checks: dict | None = None,
-    schema_dirs: tuple = (),
-    fetch=None,
-    dims: dict | None = None,
-):
-    """Fused routing: ALL routed rulesets evaluated in ONE scan.
-
-    ``route_and_validate`` runs one filtered pass per routed ruleset —
-    correct, but R rulesets cost R scans of the fact table. At the 10^12-row
-    design point that multiplier is the whole bill, so this variant guards
-    every compiled check with its route's applicability predicate
-    (``pred & violated``) and evaluates the union of all rulesets' checks in
-    a single projection. Route resolution is the SHARED ``_resolve_routes``
-    (identical precedence, errors, schema-file provenance as multi-pass).
-
-    Per-violation ruleset attribution comes from the check's own
-    constraint-id prefix (``{name}:{path}:{kw}``), so it stays correct even
-    when routes OVERLAP (two glob patterns matching one partition — each
-    route's violations carry its own name, exactly like multi-pass).
-    Verdicts aggregate per (partition, ruleset) from a per-route
-    applicability explode — one scan, explode factor = n_routes (small).
-    Route names must not contain ':' (enforced) for the prefix split.
-    ``embed`` has no routing predicate and therefore no fusion benefit —
-    use ``route_and_validate``.
-
-    Returns a dict: ``{"violations": DF, "verdicts": DF, "errors": [...],
-    "routed": [names]}``.
-    """
-    from dataclasses import replace as _dc_replace
-
-    from ..operators.validate import (VIOLATION_FIELDS,
-                                      _raw_violations_array,
-                                      n_blocking_expr,
-                                      n_violations_expr)
-
-    registry = registry or {}
-    errors: list = []
-    routes: list = []  # (name, compiled, pred)
-
-    for name, doc, _source, pred, sf in _resolve_routes(
-            df, registry=registry, ruleset_col=ruleset_col,
-            patterns=patterns, partition_col=partition_col,
-            schema_dirs=schema_dirs, fetch=fetch, errors=errors):
-        if ":" in name:
-            raise ValueError(
-                f"route name {name!r} contains ':' — fused attribution "
-                "splits on the constraint-id prefix; use "
-                "route_and_validate for such names")
-        try:
-            compiled = compile_ruleset(
-                doc, df.schema, name=name, schema_file=sf,
-                extra_checks=extra_checks,
-                exclude_columns=(ruleset_col,) if ruleset_col else ())
-        except (RulesetCompileError, RulesetLoadError) as exc:
-            errors.append((name, "compile", str(exc)))
-            continue
-        routes.append((name, compiled, pred))
-
-    if not routes:
-        return {"violations": None, "verdicts": None, "errors": errors,
-                "routed": []}
-
-    # fuse: every check guarded by its route's predicate; one projection
-    merged = CompiledRuleset(name="fused")
-    route_nv = []  # (name, pred, per-route violation count expr)
-    for name, compiled, pred in routes:
-        for c in compiled.checks:
-            merged.checks.append(_dc_replace(
-                c, violated=pred & F.coalesce(c.violated, F.lit(False))))
-        # staged names are unique per ruleset (the registrar prefixes the
-        # route name), so the fused relation carries every route's staged
-        # columns side by side; rows routed elsewhere compute them too —
-        # wasted-but-safe (variant views of any value are total, and
-        # Spark runs an extracted Python UDF on every input row anyway)
-        merged.staged.extend(compiled.staged)
-        route_nv.append((name, pred, n_violations_expr(compiled),
-                         n_blocking_expr(compiled, ("error",)),
-                         n_blocking_expr(compiled, ("warning",))))
-
-    from ..operators.validate import stage_columns
-    df = stage_columns(df, merged)
-    nv = n_violations_expr(merged)
-    part = (F.col(partition_col).cast("string") if partition_col
-            else F.lit("all")).alias("partition_id")
-    # no nv>0 prefilter when staged columns exist: filter pushdown would
-    # inline the staged expressions into the filter and evaluate them
-    # twice (see operators/validate.py violations branch)
-    viol_src = df.where(nv > 0) if not merged.staged else df
-    violations = (
-        viol_src
-          .select(F.col(row_id).cast("string").alias("row_id"), part,
-                  F.explode(_raw_violations_array(merged)).alias("v"))
-          .where(F.col("v").isNotNull())
-          .select("row_id", "partition_id",
-                  # attribution from the emitting check itself — correct
-                  # under overlapping routes, unlike a per-row CASE
-                  F.substring_index(F.col("v.constraint_id"), ":", 1)
-                   .alias("ruleset_id"),
-                  *[F.col(f"v.{f}").alias(f) for f in VIOLATION_FIELDS])
-    )
-    # per-route applicability explode: a row under k overlapping routes
-    # contributes one verdict row per route, matching multi-pass exactly
-    route_entries = F.array(*[
-        F.struct(F.lit(name).alias("rid"),
-                 F.coalesce(pred, F.lit(False)).alias("applies"),
-                 rnv.alias("nv"), rne.alias("ne"), rnw.alias("nw"))
-        for name, pred, rnv, rne, rnw in route_nv
-    ])
-    # column set and order mirror operators.validate verdicts exactly —
-    # both relations land in the same append-mode verdict sinks, and a
-    # schema fork there makes spark.read's sampled-footer inference
-    # nondeterministic
-    verdicts = (
-        df.select(part, F.explode(route_entries).alias("r"))
-          .where(F.col("r.applies"))
-          .groupBy("partition_id", F.col("r.rid").alias("ruleset_id"))
-          .agg(F.count(F.lit(1)).alias("n_rows"),
-               F.sum(F.col("r.nv").cast("long")).alias("n_violations"),
-               F.sum((F.col("r.nv") > 0).cast("long")).alias("n_failed_rows"),
-               F.sum(F.col("r.ne").cast("long")).alias("n_errors"),
-               F.sum(F.col("r.nw").cast("long")).alias("n_warnings"))
-          .withColumn("passed", F.col("n_failed_rows") == 0)
-          .withColumn("run_id", F.lit(run_id))
-    )
-    # table-level declarations cannot fuse into the row projection (each is
-    # its own aggregate/join pass) but must not silently drop: run them
-    # scoped to their route's predicate and union into the violations
-    for name, compiled, pred in routes:
-        if not compiled.table_checks:
-            continue
-        from ..operators.table_checks import table_check_violations
-        tv = table_check_violations(
-            df.where(pred), compiled, row_id=row_id, dims=dims,
-            on_missing_dim=lambda d, _n=name: errors.append(
-                (_n, "table-check",
-                 f"dim {d!r} not provided to "
-                 "route_and_validate_single_pass")))
-        if tv is not None:
-            violations = violations.unionByName(
-                tv.select(*violations.columns))
-    return {"violations": violations, "verdicts": verdicts,
-            "errors": errors, "routed": [n for n, _c, _p in routes]}

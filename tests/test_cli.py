@@ -78,23 +78,6 @@ def test_find_config_walks_up(tmp_path):
     assert cli.find_config(str(deep)) == str(tmp_path / cli.CONFIG_BASENAME)
 
 
-def test_cli_single_pass_matches_default(table, config_dir, capsys):
-    rc = cli.main([table, "--row-id", "id", "--report", "json"])
-    base = json.loads(capsys.readouterr().out)
-    rc2 = cli.main([table, "--row-id", "id", "--report", "json",
-                    "--single-pass"])
-    fused = json.loads(capsys.readouterr().out)
-    assert rc == rc2 == 0
-    assert fused["n_violations"] == base["n_violations"] == 2
-    assert fused["passes"] == [{"ruleset": "clip", "source": "fused"}]
-    assert not fused["errors"]
-    v_base = {(v["partition_id"], v["ruleset_id"], v["n_violations"])
-              for v in base["verdicts"]}
-    v_fused = {(v["partition_id"], v["ruleset_id"], v["n_violations"])
-               for v in fused["verdicts"]}
-    assert v_fused == v_base
-
-
 def test_cli_ingest_mode(spark, tmp_path, capsys):
     from pyspark.sql import functions as F
     from remark_lint_frontmatter_schema_spark.functions import audio

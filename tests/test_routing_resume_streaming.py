@@ -348,46 +348,6 @@ def test_path_valued_schema_routing(spark, tmp_path):
                for name, stage, _ in rep.errors)
 
 
-def test_single_pass_routing_matches_multi_pass(clips):
-    """Fused routing (all rulesets' checks guarded into ONE projection /
-    one scan) must produce exactly the multi-pass violations and
-    per-(partition, ruleset) verdicts."""
-    from remark_lint_frontmatter_schema_spark.plans.routing import (
-        route_and_validate_single_pass)
-    multi = route_and_validate(clips, row_id="clip_id", registry=REGISTRY,
-                               ruleset_col="ruleset_id",
-                               partition_col="part_date")
-    fused = route_and_validate_single_pass(
-        clips, row_id="clip_id", registry=REGISTRY,
-        ruleset_col="ruleset_id", partition_col="part_date")
-    assert sorted(fused["routed"]) == sorted(
-        p.ruleset_name for p in multi.passes)
-    assert fused["errors"] == multi.errors
-
-    def viol_set(df):
-        return {(r.row_id, r.ruleset_id, r.constraint_id, r.message,
-                 r.actual) for r in df.collect()}
-
-    assert viol_set(fused["violations"]) == viol_set(multi.violations)
-
-    def verdict_set(df):
-        return {(r.partition_id, r.ruleset_id, r.n_rows, r.n_violations,
-                 r.n_failed_rows, r.n_errors, r.n_warnings, r.passed)
-                for r in df.collect()}
-
-    assert verdict_set(fused["verdicts"]) == verdict_set(multi.verdicts)
-    # schema parity is part of the contract: both relations land in the
-    # same append-mode verdict sinks, where a column fork makes read-back
-    # schema inference nondeterministic
-    assert fused["verdicts"].columns == multi.verdicts.columns
-    # and it is genuinely one scan: a single FileScan/LocalTableScan in
-    # the fused violations plan vs one per routed ruleset in multi-pass
-    fused_plan = fused["violations"]._jdf.queryExecution() \
-        .optimizedPlan().toString()
-    n_scans = fused_plan.count("Relation") + fused_plan.count("LogicalRDD")
-    assert n_scans == 1, fused_plan
-
-
 def test_path_routing_rejects_escape_and_absolute(spark, tmp_path):
     """Path-valued ruleset values are DATA: absolute paths and ../
     escapes must not resolve to driver files outside schema_dirs."""
@@ -410,63 +370,31 @@ def test_path_routing_rejects_escape_and_absolute(spark, tmp_path):
     assert os.path.exists(outside)  # (file was there; refusal was policy)
 
 
-def test_single_pass_matches_multi_pass_with_patterns(spark, tmp_path):
-    """Fused routing equivalence must hold on the PATTERN route too,
-    including the schema_file embedded in messages."""
-    from remark_lint_frontmatter_schema_spark.plans.routing import (
-        route_and_validate_single_pass)
-    sch = tmp_path / "part.yaml"
-    sch.write_text("properties:\n  v:\n    maximum: 10\n")
-    df = spark.createDataFrame(
-        [("r1", 50, "p1", None), ("r2", 5, "p2", None),
-         ("r3", 50, "p1", "inline")],
-        ["rid", "v", "part", "ruleset_id"])
-    reg = {"pat": str(sch),
-           "inline": {"properties": {"v": {"minimum": 100}}}}
-    kw = dict(row_id="rid", registry=reg, ruleset_col="ruleset_id",
-              patterns={"pat": ["p*"]}, partition_col="part")
-    multi = route_and_validate(df, **kw)
-    fused = route_and_validate_single_pass(df, **kw)
-    mv = {(r.row_id, r.ruleset_id, r.constraint_id, r.message)
-          for r in multi.violations.collect()}
-    fv = {(r.row_id, r.ruleset_id, r.constraint_id, r.message)
-          for r in fused["violations"].collect()}
-    assert mv == fv and mv  # non-trivial and identical incl. messages
-
-
-def test_single_pass_matches_multi_pass_overlapping_patterns(spark):
-    """Two glob patterns matching the SAME partition: multi-pass validates
-    those rows under both rulesets; fused must attribute each violation to
-    its own route and emit both verdict groups (was unpinned before —
-    per-row CASE attribution collapsed them onto the first route)."""
-    from remark_lint_frontmatter_schema_spark.plans.routing import (
-        route_and_validate_single_pass)
+def test_overlapping_patterns_validate_shared_partition_under_both(spark):
+    """Two glob patterns matching the SAME partition: its rows are
+    validated under both rulesets, each violation carries its own route's
+    ruleset_id, and both verdict groups are emitted."""
     df = spark.createDataFrame(
         [("r1", 50, "p1"), ("r2", 5, "p1"), ("r3", 50, "p2")],
         ["rid", "v", "part"])
     reg = {"a": {"properties": {"v": {"maximum": 10}}},
            "b": {"properties": {"v": {"minimum": 100}}}}
-    kw = dict(row_id="rid", registry=reg,
-              patterns={"a": ["p*"], "b": ["p1"]}, partition_col="part")
-    multi = route_and_validate(df, **kw)
-    fused = route_and_validate_single_pass(df, **kw)
-    mv = {(r.row_id, r.ruleset_id, r.constraint_id)
-          for r in multi.violations.collect()}
-    fv = {(r.row_id, r.ruleset_id, r.constraint_id)
-          for r in fused["violations"].collect()}
-    assert mv == fv
-    # both routes produced violations on the shared partition
-    assert {rid for _r, rid, _c in fv} == {"a@pattern", "b@pattern"}
-
-    def vset(rows):
-        return {(r.partition_id, r.ruleset_id, r.n_rows, r.n_violations,
-                 r.n_failed_rows, r.passed) for r in rows}
-
-    assert vset(fused["verdicts"].collect()) == vset(
-        multi.verdicts.collect())
-    # p1 rows are counted under BOTH rulesets' verdicts
-    assert {(p, rid) for p, rid, *_ in vset(fused["verdicts"].collect())} \
-        >= {("p1", "a@pattern"), ("p1", "b@pattern"), ("p2", "a@pattern")}
+    rep = route_and_validate(df, row_id="rid", registry=reg,
+                             patterns={"a": ["p*"], "b": ["p1"]},
+                             partition_col="part")
+    assert not rep.errors
+    viol = {(r.row_id, r.ruleset_id, r.keyword)
+            for r in rep.violations.collect()}
+    assert viol == {("r1", "a@pattern", "maximum"),
+                    ("r3", "a@pattern", "maximum"),
+                    ("r1", "b@pattern", "minimum"),
+                    ("r2", "b@pattern", "minimum")}
+    verdicts = {(r.partition_id, r.ruleset_id, r.n_rows, r.n_violations,
+                 r.n_failed_rows, r.passed)
+                for r in rep.verdicts.collect()}
+    assert verdicts == {("p1", "a@pattern", 2, 1, 1, False),
+                        ("p1", "b@pattern", 2, 2, 2, False),
+                        ("p2", "a@pattern", 1, 1, 1, False)}
 
 
 def test_routed_table_checks_run_and_scope(spark):
@@ -503,22 +431,6 @@ def test_routed_missing_ref_dim_is_artifact_not_crash(spark):
     assert any(stage == "table-check" and "dim_table" in msg
                for _n, stage, msg in rep.errors)
     rep.violations.count()  # plan still materializes
-
-
-def test_fused_routing_runs_table_checks(spark):
-    from remark_lint_frontmatter_schema_spark.plans.routing import (
-        route_and_validate_single_pass)
-    df = spark.createDataFrame(
-        [("a", "rs", "same text body here"),
-         ("b", "rs", "same text body here"),
-         ("x", None, "same text body here")],
-        "doc_id string, ruleset_id string, text string")
-    reg = {"rs": {"type": "object", "properties": {
-        "text": {"type": "string", "x-dedup": {"id": "doc_id"}}}}}
-    fused = route_and_validate_single_pass(
-        df, row_id="doc_id", registry=reg, ruleset_col="ruleset_id")
-    rows = fused["violations"].collect()
-    assert {r.row_id for r in rows if r.keyword == "dedup"} == {"b"}
 
 
 def test_streaming_ingest_builds_canonical_corpus(spark, clips, tmp_path):

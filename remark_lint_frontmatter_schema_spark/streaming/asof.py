@@ -11,12 +11,9 @@ refreshing dim — e.g. a lambda re-reading an Iceberg snapshot — or a
 DataFrame for a frozen one), which is exactly the semantics of
 slowly-changing enrichment: rows in batch N see the dim as of batch N.
 
-Exactly-once sinks: foreachBatch is at-least-once — a batch that fails
-mid-write replays on restart — so every write here is the idempotent
-batch-replace pattern (rows stamped with the batch id, dynamic
-partition overwrite keyed on it; the ``streaming/windowed.py``
-convention): a replayed batch REPLACES its own partition instead of
-appending duplicates.
+Both runners replace their own batch partition, so a replayed batch
+rewrites itself instead of appending duplicates (replay guarantees:
+``streaming/__init__.py``).
 
 Violations mode (``ref_asof_stream``) emits x-ref-asof-shaped violation
 rows for events with no dim row in force instead of enriched rows — the
@@ -33,56 +30,15 @@ from __future__ import annotations
 from typing import Callable, Union
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join, asof_ref_violations
+from . import _drain, _file_stream, _write_batch_idempotent
 
 DimLike = Union[DataFrame, Callable[[], DataFrame]]
 
 
 def _dim_df(dim: DimLike) -> DataFrame:
     return dim() if callable(dim) else dim
-
-
-def _run_foreach_batch(spark: SparkSession, input_path: str, input_schema,
-                       process, checkpoint: str,
-                       trigger_available_now: bool,
-                       max_files_per_trigger: int):
-    """Shared scaffold: file-source stream -> foreachBatch(process)."""
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
-    writer = (stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _write_batch_idempotent(df: DataFrame, batch_id: int, sink: str,
-                            batch_col: str) -> None:
-    """Stamp rows with the batch id and dynamically overwrite that one
-    partition — a replayed batch replaces itself, never duplicates.
-
-    Empty-replay gap: dynamic overwrite only replaces partitions PRESENT
-    in the new output, so a replayed batch whose recomputed result is
-    empty (possible with a refreshing ``dim`` callable when the prior
-    attempt committed rows but the checkpoint offset did not) would leave
-    the stale partition in place — delete the batch's partition path
-    explicitly in that case."""
-    if df.isEmpty():
-        spark = df.sparkSession
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(
-            f"{sink}/{batch_col}={int(batch_id)}")
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(path, True)
-        return
-    (df.withColumn(batch_col, F.lit(int(batch_id)))
-       .write.mode("overwrite")
-       .option("partitionOverwriteMode", "dynamic")
-       .partitionBy(batch_col)
-       .parquet(sink))
 
 
 def enrich_stream_asof(
@@ -99,12 +55,11 @@ def enrich_stream_asof(
     direction: str = "backward",
     sink: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
     max_files_per_trigger: int = 16,
 ):
-    """Start (and with availableNow, drain) an enrichment stream: each
-    micro-batch as-of joined against ``dim``, written to ``sink``
-    partitioned by ``_batch`` (idempotent replay — see module doc).
+    """Start and drain an enrichment stream: each micro-batch as-of
+    joined against ``dim``, written to ``sink`` partitioned by ``_batch``
+    (replay-safe — see module doc).
 
     Per batch the join is ONE shuffle on the key (micro-batches are
     bounded, so the per-key window is small by construction — batch
@@ -116,9 +71,9 @@ def enrich_stream_asof(
                         tolerance=tolerance, direction=direction)
         _write_batch_idempotent(out, batch_id, sink, "_batch")
 
-    return _run_foreach_batch(spark, input_path, input_schema, process,
-                              checkpoint, trigger_available_now,
-                              max_files_per_trigger)
+    return _drain(_file_stream(spark, input_path, input_schema,
+                               max_files_per_trigger),
+                  checkpoint=checkpoint, process=process)
 
 
 def ref_asof_stream(
@@ -138,14 +93,13 @@ def ref_asof_stream(
     checkpoint: str,
     ruleset_name: str = "engine",
     severity: str = "warning",
-    trigger_available_now: bool = True,
     max_files_per_trigger: int = 16,
 ):
     """Streaming x-ref-asof: per micro-batch, events with no dim row in
     force at their timestamp become violation rows. Batch provenance
     rides in ``partition_id`` = ``batch_<id>`` (the validate_stream
-    convention) AND the sink is partitioned by it with dynamic
-    overwrite, so a replayed batch replaces its own rows."""
+    convention) AND the sink is partitioned by it, so a replayed batch
+    replaces its own rows."""
 
     def process(batch_df, batch_id: int):
         v = asof_ref_violations(
@@ -153,12 +107,9 @@ def ref_asof_stream(
             dim_ts=dim_ts, row_id=row_id, tolerance=tolerance,
             direction=direction, ruleset_name=ruleset_name,
             severity=severity)
-        (v.withColumn("partition_id", F.lit(f"batch_{batch_id}"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("partition_id")
-          .parquet(violations_sink))
+        _write_batch_idempotent(v, f"batch_{batch_id}", violations_sink,
+                                "partition_id")
 
-    return _run_foreach_batch(spark, input_path, input_schema, process,
-                              checkpoint, trigger_available_now,
-                              max_files_per_trigger)
+    return _drain(_file_stream(spark, input_path, input_schema,
+                               max_files_per_trigger),
+                  checkpoint=checkpoint, process=process)

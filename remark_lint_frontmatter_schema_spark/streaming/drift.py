@@ -11,8 +11,8 @@ Scale shape: the baseline is a histogram relation (n_buckets rows) saved
 as parquet with a JSON meta sidecar; at stream time it is collected ONCE
 to the driver (tiny) and re-created per batch. Each micro-batch pays one
 hash-aggregate over its own rows (map-side combined) plus driver-scale
-statistics — no state store, no stream-stream join, and the checkpoint
-makes the whole loop exactly-once at batch granularity.
+statistics — no state store, no stream-stream join. The sinks append
+(replay guarantees: ``streaming/__init__.py``).
 """
 
 from __future__ import annotations
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.drift import histogram, ks_statistic, psi
+from . import _drain, _file_stream
 
 _BASELINE_SIDE = "baseline"
 _CURRENT_SIDE = "current"
@@ -77,7 +78,6 @@ def drift_stream(
     ruleset_name: str = "engine",
     severity: str = "warning",
     max_files_per_trigger: int = 4,
-    trigger_available_now: bool = True,
 ):
     """File-source stream -> per-micro-batch drift vs the saved baseline.
 
@@ -89,9 +89,9 @@ def drift_stream(
     half-full trigger must not page anyone. A NULL statistic (empty batch
     after the non-NULL filter) is likewise history-only.
 
-    The checkpoint gives exactly-once batch processing: a rerun over the
-    same directory resumes after the last committed batch, so alerts are
-    never duplicated (pinned by the resume test).
+    A rerun resumes after the last committed batch and adds no rows
+    (pinned by the resume test); a replayed batch appends its rows again
+    under the same ``batch_id`` (see ``streaming/__init__.py``).
     """
     base_rows, meta = load_baseline(spark, baseline_path)
     if meta["value_col"] != value_col:
@@ -99,10 +99,6 @@ def drift_stream(
             f"baseline at {baseline_path} was built for column "
             f"{meta['value_col']!r}, not {value_col!r}")
     lo, hi, n_buckets = meta["lo"], meta["hi"], meta["n_buckets"]
-
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
 
     def process_batch(batch_df, batch_id: int):
         n = batch_df.count()
@@ -130,8 +126,6 @@ def drift_stream(
                   ruleset_name)], _ALERT_DDL
             ).write.mode("append").parquet(os.path.join(out_path, "alerts"))
 
-    writer = (stream.writeStream.foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(_file_stream(spark, input_path, input_schema,
+                               max_files_per_trigger),
+                  checkpoint=checkpoint, process=process_batch)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from . import _drain, _file_stream
+
 
 def funnel_stream(stream_df: DataFrame, steps: list, *,
                   user_col: str = "user_id", ts_col: str = "ts",
@@ -107,12 +109,8 @@ def run_funnel_stream(spark, input_path: str, input_schema, steps: list, *,
     """Drain a file-source stream through the funnel into a memory sink
     (append of progress rows; the last row per user is the current
     chain). Returns the query."""
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
-    writer = (funnel_stream(stream, steps, within_ms=within_ms)
-              .writeStream.format("memory").queryName(query_name)
-              .outputMode("update").trigger(availableNow=True))
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    stream = _file_stream(spark, input_path, input_schema,
+                          max_files_per_trigger)
+    return _drain(funnel_stream(stream, steps, within_ms=within_ms),
+                  checkpoint=checkpoint, query_name=query_name,
+                  output_mode="update")

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from . import _drain, _file_stream
+
 
 def gap_monitor(stream_df: DataFrame, ts_col: str, *, by: str,
                 max_seconds: float) -> DataFrame:
@@ -90,12 +92,8 @@ def run_gap_stream(spark, input_path: str, input_schema, ts_col: str, *,
                    max_files_per_trigger: int = 1):
     """Drain a file-source stream through the gap monitor into a memory
     sink (append mode — each gap emits exactly once). Returns the query."""
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
-    writer = (gap_monitor(stream, ts_col, by=by, max_seconds=max_seconds)
-              .writeStream.format("memory").queryName(query_name)
-              .outputMode("append").trigger(availableNow=True))
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    stream = _file_stream(spark, input_path, input_schema,
+                          max_files_per_trigger)
+    return _drain(gap_monitor(stream, ts_col, by=by,
+                              max_seconds=max_seconds),
+                  checkpoint=checkpoint, query_name=query_name)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import _drain, _file_stream
+
 
 def running_key_counts(stream_df: DataFrame, key_col: str) -> DataFrame:
     """Streaming per-key running counts (NULL keys dropped, key cast to
@@ -45,16 +47,13 @@ def heavy_hitters_stream(spark, input_path: str, input_schema,
     (key, count_min) — count_min is exact here (no pruning; the sketch
     bounds only matter for the batch operator), named identically so
     downstream consumers can swap the two sources. Returns the started
-    query; availableNow-triggered, so ``awaitTermination()`` drains all
-    currently-visible files and a rerun with the same checkpoint only
-    processes new ones (the overwrite sink makes replays idempotent).
+    query (drain and replay: ``streaming/__init__.py``).
     """
     if top_k <= 0:
         raise ValueError("top_k must be > 0")
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
-    counts = running_key_counts(stream, key_col)
+    counts = running_key_counts(
+        _file_stream(spark, input_path, input_schema,
+                     max_files_per_trigger), key_col)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         top = (batch_df
@@ -62,8 +61,5 @@ def heavy_hitters_stream(spark, input_path: str, input_schema,
                .limit(top_k))
         top.write.mode("overwrite").parquet(out_path)
 
-    return (counts.writeStream.foreachBatch(write)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _drain(counts, checkpoint=checkpoint, process=write,
+                  output_mode="complete")

@@ -4,9 +4,8 @@ The reference is a batch linter; this is the Structured-Streaming wrapper
 that runs the SAME compiled ruleset over newly-arrived files via
 ``foreachBatch`` — the streaming analog of re-linting only changed files.
 Watermarks/session windows are deliberately out of scope (no reference
-semantics require them); exactly-once violation appends come from the
-checkpointed sink. In production the source is Iceberg incremental reads;
-here it is a file-source directory of parquet.
+semantics require them). All three runners append: a replayed batch is
+appended again under the same ``batch_<id>`` (``streaming/__init__.py``).
 """
 
 from __future__ import annotations
@@ -15,6 +14,7 @@ from pyspark.sql import SparkSession
 
 from ..operators.validate import validate
 from ..plans.compiler import CompiledRuleset
+from . import _drain, _file_stream
 
 
 def validate_stream(
@@ -29,34 +29,30 @@ def validate_stream(
     verdicts_sink: str,
     checkpoint: str,
     dims: dict | None = None,
-    table_checks: bool = True,
-    trigger_available_now: bool = True,
 ):
-    """Start (and with availableNow, drain) a validation stream.
+    """Start and drain a validation stream.
 
     Each micro-batch runs the identical one-projection plan; per-batch
-    verdicts are appended with the batch id as run_id so late batches are
-    attributable — corrupt rows become violation rows, never stream
-    failures (the reference's parse-failure guard, index.ts:240-245).
+    verdicts are appended with the batch id as run_id so late (and
+    replayed) batches are attributable — corrupt rows become violation
+    rows, never stream failures (the reference's parse-failure guard,
+    index.ts:240-245).
 
-    ``table_checks``: a ruleset declaring table-level checks runs the
-    SAME engine per micro-batch — including the scan-shared narrow
-    cache (operators/table_checks.py): the batch's narrow-footprint
-    checks all read one batch-local projection instead of one pass
-    per check. Scope is the micro-batch (uniqueness/quantile/drift
-    within the arriving slice — the streaming reading of the
-    reference's per-file lint scope); cross-batch state belongs to the
-    dedicated stateful modules (streaming/neardup, drift, volume, …).
-    ``dims`` supplies the static dim tables x-ref declarations join
-    against; a declared-but-missing dim skips its check per batch (the
-    routing layer's G2 policy). Batch-local cache blocks are freed
-    after the batch's writes so a long-lived stream never accumulates
-    storage.
+    A ruleset declaring table-level checks runs them per micro-batch
+    through the batch engine (operators/table_checks.py): each check is
+    its own column-pruned pass over the batch. Scope is the micro-batch
+    (uniqueness/quantile/drift within the arriving slice — the streaming
+    reading of the reference's per-file lint scope); cross-batch state
+    belongs to the dedicated stateful modules (streaming/neardup, drift,
+    volume, …). ``dims`` supplies the static dim tables x-ref
+    declarations join against; a declared-but-missing dim skips its
+    check per batch (the routing layer's G2 policy).
+
+    Some table checks reach operators that register a persisted
+    intermediate in ``operators.dedup._PERSISTED`` (x-ref-asof's as-of
+    join caches its dim side); what a batch registered is freed after
+    its writes, so a long-lived stream never accumulates storage.
     """
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", "16")
-              .parquet(input_path))
-
     def process_batch(batch_df, batch_id: int):
         from ..operators.dedup import _PERSISTED
         mark = len(_PERSISTED)
@@ -64,7 +60,7 @@ def validate_stream(
                        partition_col=partition_col,
                        run_id=f"batch_{batch_id}")
         v = res.violations
-        if table_checks and compiled.table_checks:
+        if compiled.table_checks:
             from ..operators.table_checks import table_check_violations
             tv = table_check_violations(
                 batch_df, compiled, row_id=row_id, dims=dims,
@@ -77,11 +73,8 @@ def validate_stream(
             d.unpersist()
         del _PERSISTED[mark:]
 
-    writer = (stream.writeStream.foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(_file_stream(spark, input_path, input_schema, 16),
+                  checkpoint=checkpoint, process=process_batch)
 
 
 def ingest_stream(
@@ -97,19 +90,17 @@ def ingest_stream(
     normalize_db: float | None = None,
     passthrough: tuple = ("transcript",),
     max_files_per_trigger: int = 16,
-    trigger_available_now: bool = True,
 ):
     """Streaming twin of ``operators.ingest.ingest_corpus``: each
     micro-batch is gated by ``sinks.write_split`` (quarantine
     self-describing under ``{out_path}/split``) and its accepted rows are
     canonicalized into ``{out_path}/corpus`` — continuous corpus
-    construction from a landing directory (production: Iceberg
-    incremental reads, same foreachBatch body).
+    construction from a landing directory.
 
-    Exactly-once at the batch level comes from the stream checkpoint: a
-    replayed batch re-appends under the same ``batch_N`` run_id, so
-    readers that dedupe on (run_id, clip_id) — or the downstream exact
-    dedup pass — see one copy. Batch-local, shuffle-free, payloads never
+    The checkpoint skips committed batches; a replayed batch re-appends
+    under the same ``batch_N`` run_id (replay guarantees:
+    ``streaming/__init__.py``), so readers that dedupe on (run_id,
+    clip_id) — or the downstream exact dedup pass — see one copy. Batch-local, shuffle-free, payloads never
     leave their map stage; the per-partition lineage manifest remains the
     batch-mode resume tool (the checkpoint IS the stream's lineage)."""
     from pyspark.sql import functions as F
@@ -117,10 +108,6 @@ def ingest_stream(
     from .. import sinks
     from ..functions.audio import canonicalize_clips
     from ..operators.validate import n_blocking_expr
-
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
 
     def process_batch(batch_df, batch_id: int):
         run_id = f"batch_{batch_id}"
@@ -143,11 +130,9 @@ def ingest_stream(
          .write.mode("append").partitionBy("run_id")
          .parquet(f"{out_path}/corpus"))
 
-    writer = (stream.writeStream.foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(_file_stream(spark, input_path, input_schema,
+                               max_files_per_trigger),
+                  checkpoint=checkpoint, process=process_batch)
 
 
 def repair_stream(
@@ -162,38 +147,26 @@ def repair_stream(
     checkpoint: str,
     name: str = "ruleset",
     max_files_per_trigger: int = 16,
-    trigger_available_now: bool = True,
 ):
     """Streaming twin of the CLI's ``--fix-out`` mode: each micro-batch
     runs the one-projection repair pass (operators/repair.py), appends
     the repaired rows partitioned by ``run_id = batch_N`` and the repair
-    log alongside — continuous lint -> fix over a landing directory
-    (production: Iceberg incremental reads, same foreachBatch body).
+    log alongside — continuous lint -> fix over a landing directory.
 
-    Exactly-once at the batch level comes from the stream checkpoint, as
-    in :func:`ingest_stream`: a replayed batch re-appends under the same
-    ``batch_N`` partition, so (run_id, row_id) dedup sees one copy. The
+    As in :func:`ingest_stream`, a replayed batch re-appends under the
+    same ``batch_N`` partition, so (run_id, row_id) dedup sees one copy. The
     repair projection is batch-local and shuffle-free."""
     from pyspark.sql import functions as F
 
     from ..operators.repair import repair
 
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
-
     def process_batch(batch_df, batch_id: int):
         run_id = f"batch_{batch_id}"
         res = repair(batch_df, ruleset, row_id=row_id, name=name)
-        (res.repaired.withColumn("run_id", F.lit(run_id))
-         .write.mode("append").partitionBy("run_id")
-         .parquet(repaired_sink))
-        (res.log.withColumn("run_id", F.lit(run_id))
-         .write.mode("append").partitionBy("run_id")
-         .parquet(log_sink))
+        for df, sink in ((res.repaired, repaired_sink), (res.log, log_sink)):
+            (df.withColumn("run_id", F.lit(run_id))
+             .write.mode("append").partitionBy("run_id").parquet(sink))
 
-    writer = (stream.writeStream.foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(_file_stream(spark, input_path, input_schema,
+                               max_files_per_trigger),
+                  checkpoint=checkpoint, process=process_batch)

@@ -15,11 +15,10 @@ DROPPED — it neither emits a transition nor rewinds the mark (counting
 it would fabricate an out-of-order transition the batch operator, which
 sorts globally, would never produce).
 
-Sink: each batch's (src, dst) partial counts overwrite their own
-``_batch=<id>`` partition (the idempotent-foreachBatch recipe of
-``streaming/windowed.py``) — counts are additive, so the running matrix
-is one sum over the accumulated partials, normalized exactly like the
-batch form.
+Sink: each batch's (src, dst) partial counts replace their own
+``_batch=<id>`` partition (replay guarantees: ``streaming/__init__.py``)
+— counts are additive, so the running matrix is one sum over the
+accumulated partials, normalized exactly like the batch form.
 """
 
 from __future__ import annotations
@@ -29,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+from . import _drain, _file_stream, _write_batch_idempotent
 
 
 def transition_pairs(stream_df: DataFrame, key_col: str, state_col: str,
@@ -96,26 +97,17 @@ def run_transition_stream(spark, input_path: str, input_schema,
                           out_path: str, checkpoint: str,
                           max_files_per_trigger: int = 1):
     """File-source stream -> per-batch (src, dst, n) partials at
-    ``out_path`` (``_batch``-partitioned dynamic overwrite, replay-safe).
-    availableNow-triggered: drains visible files then stops; a rerun
-    with the same checkpoint processes only new files."""
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
-    pairs = transition_pairs(stream, key_col, state_col, order_col)
+    ``out_path`` (``_batch``-partitioned, replay-safe)."""
+    pairs = transition_pairs(
+        _file_stream(spark, input_path, input_schema, max_files_per_trigger),
+        key_col, state_col, order_col)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.groupBy("src", "dst")
-         .agg(F.count(F.lit(1)).alias("n"))
-         .withColumn("_batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch")
-         .parquet(out_path))
+        _write_batch_idempotent(
+            batch_df.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n")),
+            batch_id, out_path, "_batch")
 
-    return (pairs.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _drain(pairs, checkpoint=checkpoint, process=process_batch)
 
 
 def matrix_from_sink(spark, out_path: str) -> DataFrame:

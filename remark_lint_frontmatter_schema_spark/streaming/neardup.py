@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..operators.dedup import band_hashes, minhash_signature_staged
+from . import _drain, _file_stream
 
 _PAIRS_SCHEMA = ("band int, bhash long, id string, dup_of string, "
                  "n_prior long")
@@ -121,19 +122,10 @@ def run_neardup_stream(spark, input_path: str, input_schema, *,
     ``sink_path``, a memory sink for bounded drains — read
     ``spark.table(query_name)`` after ``awaitTermination``.
     """
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
+    stream = _file_stream(spark, input_path, input_schema,
+                          max_files_per_trigger)
     cands = neardup_candidates(stream, text_col, id_col,
                                n_hashes=n_hashes, bands=bands,
                                shingle_n=shingle_n)
-    if sink_path:
-        writer = (cands.writeStream.format("parquet")
-                  .option("path", sink_path).queryName(query_name)
-                  .outputMode("append").trigger(availableNow=True))
-    else:
-        writer = (cands.writeStream.format("memory").queryName(query_name)
-                  .outputMode("append").trigger(availableNow=True))
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _drain(cands, checkpoint=checkpoint, query_name=query_name,
+                  sink_path=sink_path)

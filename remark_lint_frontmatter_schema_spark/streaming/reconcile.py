@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.reconcile import _AGGS, report_from_aggregate
+from . import _drain, _file_stream
 
 
 def running_fact_aggregate(stream_df: DataFrame, *, fact_key: str,
@@ -51,9 +52,8 @@ def reconcile_stream(spark, input_path: str, input_schema, *,
     diff, status — the batch report schema). Returns the started
     availableNow query; rerun with the same checkpoint to process only
     new files, with the running aggregate resuming from state."""
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
+    stream = _file_stream(spark, input_path, input_schema,
+                          max_files_per_trigger)
     agged = running_fact_aggregate(stream, fact_key=fact_key,
                                    fact_value=fact_value, agg=agg)
 
@@ -63,8 +63,5 @@ def reconcile_stream(spark, input_path: str, input_schema, *,
                                     tolerance=tolerance)
         rep.write.mode("overwrite").parquet(out_path)
 
-    return (agged.writeStream.foreachBatch(write)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _drain(agged, checkpoint=checkpoint, process=write,
+                  output_mode="complete")

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from . import _drain, _file_stream
+
 
 def first_seen(stream_df: DataFrame, key_col: str) -> DataFrame:
     """Streaming DataFrame -> first row per key ever observed.
@@ -53,12 +55,7 @@ def run_first_seen_stream(spark, input_path: str, input_schema, key_col: str,
                           max_files_per_trigger: int = 1):
     """Drain a file-source stream through the stateful dedup into a memory
     sink (append mode — each key's single emission). Returns the query."""
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
-    writer = (first_seen(stream, key_col)
-              .writeStream.format("memory").queryName(query_name)
-              .outputMode("append").trigger(availableNow=True))
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    stream = _file_stream(spark, input_path, input_schema,
+                          max_files_per_trigger)
+    return _drain(first_seen(stream, key_col), checkpoint=checkpoint,
+                  query_name=query_name)

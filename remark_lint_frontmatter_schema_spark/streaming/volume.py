@@ -3,8 +3,8 @@
 
 Bucket row-counts are additive, so each micro-batch appends its own
 (bucket, n) partials — the exact mechanism of ``streaming/windowed.py``
-histogram partials (``_batch``-partitioned dynamic overwrite, so a
-replayed batch rewrites rather than double-counts) — and the
+histogram partials (``_batch``-partitioned, so a replayed batch
+rewrites rather than double-counts) — and the
 median/MAD anomaly scan runs at READ time over the summed partials,
 identical numerics to the batch operator on the same rows (pinned by
 test). Late rows are not special here: a late event increments its own
@@ -18,45 +18,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import _drain, _file_stream, _fs, _write_batch_idempotent
+
 
 def run_volume_stream(spark, input_path: str, input_schema, ts_col: str, *,
                       unit: str = "hour", out_path: str, checkpoint: str,
                       max_files_per_trigger: int = 1):
     """File-source stream -> per-batch (bucket, n) count partials at
-    ``out_path``. availableNow-triggered: drains visible files then
-    stops; a rerun with the same checkpoint processes only new files."""
+    ``out_path`` (``_batch``-partitioned, replay-safe)."""
     if unit not in ("minute", "hour", "day", "week", "month"):
         raise ValueError(f"unsupported unit {unit!r}")
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_path))
     t = F.col(ts_col)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.where(t.isNotNull())
-         .groupBy(F.date_trunc(unit, t).alias("bucket"))
-         .agg(F.count(F.lit(1)).alias("n"))
-         .withColumn("_batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch")
-         .parquet(out_path))
+        _write_batch_idempotent(
+            batch_df.where(t.isNotNull())
+            .groupBy(F.date_trunc(unit, t).alias("bucket"))
+            .agg(F.count(F.lit(1)).alias("n")),
+            batch_id, out_path, "_batch")
 
-    return (stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _drain(_file_stream(spark, input_path, input_schema,
+                               max_files_per_trigger),
+                  checkpoint=checkpoint, process=process_batch)
 
 
 _FOLD_MANIFEST = "_folded.json"      # inside the folded partition
 _FOLD_TMP = ".fold_tmp"              # hidden staging dir (dot = invisible
 #                                      to Spark listings), swapped in by
 #                                      a single filesystem rename
-
-
-def _fs(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
 
 
 def _write_manifest(spark, dir_path: str, max_folded: int) -> None:

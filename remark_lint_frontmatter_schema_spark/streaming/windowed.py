@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..operators.drift import psi_vs_previous_window, windowed_histogram
 from ..operators.validate import n_violations_expr, stage_columns
 from ..plans.compiler import CompiledRuleset
+from . import _drain, _file_stream, _write_batch_idempotent
 
 
 def windowed_verdict_counts(
@@ -82,17 +83,12 @@ def run_windowed_stream(
     window's state forever (watermark inert) and is only acceptable for
     bounded drains like this one.
     """
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", "4")
-              .parquet(input_path))
     agg = windowed_verdict_counts(
-        stream, compiled, event_time_col=event_time_col,
+        _file_stream(spark, input_path, input_schema, 4), compiled,
+        event_time_col=event_time_col,
         window_duration=window_duration, watermark_delay=watermark_delay)
-    writer = (agg.writeStream.format("memory").queryName(query_name)
-              .outputMode(output_mode).trigger(availableNow=True))
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _drain(agg, checkpoint=checkpoint, query_name=query_name,
+                  output_mode=output_mode)
 
 
 def run_drift_stream(
@@ -116,33 +112,19 @@ def run_drift_stream(
     a plain sum at read time. State is bounded by the histogram size, not
     the row count.
 
-    Idempotence: foreachBatch is at-least-once (a batch that wrote but
-    crashed before the checkpoint commit re-runs on restart), so a plain
-    append would double-count the retried batch's partials forever. Each
-    batch therefore OVERWRITES its own ``_batch=<id>`` partition (dynamic
-    partition overwrite) — a retry replaces its previous output instead of
-    duplicating it, which is the standard idempotent-foreachBatch recipe.
-
-    Returns the started query (availableNow trigger — drain then stop).
-    Read the monitor with :func:`drift_psi_from_sink`.
+    Each batch replaces its own ``_batch=<id>`` partition, so a replayed
+    batch cannot double-count its partials (``streaming/__init__.py``).
+    Returns the started query; read the monitor with
+    :func:`drift_psi_from_sink`.
     """
-    stream = (spark.readStream.schema(input_schema)
-              .option("maxFilesPerTrigger", "4")
-              .parquet(input_path))
-
     def process_batch(batch_df, batch_id: int):
         h = windowed_histogram(batch_df, value_col, time_col, lo=lo, hi=hi,
                                n_buckets=n_buckets,
                                window_duration=window_duration)
-        (h.withColumn("_batch", F.lit(int(batch_id)))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch")
-          .parquet(hist_sink))
+        _write_batch_idempotent(h, batch_id, hist_sink, "_batch")
 
-    return (stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _drain(_file_stream(spark, input_path, input_schema, 4),
+                  checkpoint=checkpoint, process=process_batch)
 
 
 def drift_psi_from_sink(spark, hist_sink: str, *,

@@ -113,3 +113,43 @@ def test_empty_replay_clears_stale_batch_partition(spark, tmp_path):
     empty = full.where("1 = 0")
     _write_batch_idempotent(empty, 7, sink, "_batch")
     assert not os.path.exists(os.path.join(sink, "_batch=7"))
+
+
+def test_ref_asof_replay_with_empty_result_clears_stale_violations(
+        spark, tmp_path):
+    """A batch that wrote its violations but crashed before its checkpoint
+    commit replays on restart; when the refreshed dim now covers every
+    event, the replay's result is empty and must still replace the stale
+    ``partition_id=batch_0`` rows, leaving a readable, empty sink."""
+    import os
+    src = str(tmp_path / "src")
+    spark.createDataFrame([("e1", "u1", 3.0), ("e2", "u1", 7.0)],
+                          "eid string, uid string, ts double") \
+        .coalesce(1).write.parquet(src)
+    schema = "eid string, uid string, ts double"
+    sink, ckpt = str(tmp_path / "viol"), str(tmp_path / "ckpt")
+    dim_rows = [("u9", 0.0)]     # covers nothing: both events dangle
+
+    def dim():
+        return spark.createDataFrame(dim_rows, "uid string, ts double")
+
+    def run():
+        ref_asof_stream(
+            spark, src, schema, dim, fact_key="uid", dim_key="uid",
+            ts_col="ts", dim_ts="ts", row_id="eid",
+            violations_sink=sink, checkpoint=ckpt).awaitTermination()
+
+    run()
+    got = {(r["row_id"], r["partition_id"])
+           for r in spark.read.parquet(sink).collect()}
+    assert got == {("e1", "batch_0"), ("e2", "batch_0")}
+    # crash after the write, before the commit: batch 0 is uncommitted
+    for name in ("0", ".0.crc"):
+        p = os.path.join(ckpt, "commits", name)
+        if os.path.exists(p):
+            os.remove(p)
+    dim_rows[:] = [("u1", 0.0)]  # the refreshed dim covers both events
+    run()
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))  # replayed
+    assert spark.read.schema("row_id string, partition_id string") \
+        .parquet(sink).count() == 0

@@ -1907,11 +1907,6 @@ def register_audio_checks() -> dict:
     }
 
 
-def decode_stats_schema() -> str:
-    return ("clip_id string, decode_ok boolean, sr_hz_payload int, "
-            "n_samples long, rms double")
-
-
 def decode_stats_map_in_pandas(iterator):
     """mapInPandas decoder: per-batch loop over binary payloads (binary
     container parsing is inherently per-value, but it stays inside one Arrow

@@ -206,18 +206,6 @@ def encoding_scan(df: DataFrame, text_col: str, id_col: str,
     return out.withColumn("has_mojibake", flag)
 
 
-def rolling_hash(col, *, window: int = 8, mod: int = (1 << 31) - 1) -> Column:
-    """Content-defined rolling fingerprint set: polynomial hash of each
-    ``window``-gram, keep the minimum (a 1-element winnowing sketch) —
-    JVM-side via transform over character shingles."""
-    c = F.col(col) if isinstance(col, str) else col
-    n_sh = F.greatest(F.length(c) - window + 1, F.lit(0))
-    shingles = F.transform(F.sequence(F.lit(1), n_sh),
-                           lambda i: c.substr(i, F.lit(window)))
-    hashes = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(mod)))
-    return F.when(n_sh > 0, F.array_min(hashes)).otherwise(F.lit(None))
-
-
 def dup_line_fraction(col) -> Column:
     """Fraction of non-unique lines (Gopher-style repetition filter):
     1 - distinct/total over newline-split lines; 0 for empty/NULL text."""
@@ -236,21 +224,6 @@ def dup_word_fraction(col) -> Column:
     return F.when(n > 0,
                   1.0 - F.size(F.array_distinct(toks)) / n) \
             .otherwise(F.lit(0.0))
-
-
-def top_word_fraction(col) -> Column:
-    """Share of the single most frequent token (lowercased) — the
-    degenerate-repetition signal ("buy buy buy ..."). Expression-only:
-    count occurrences of each DISTINCT token via a filter probe —
-    O(n_tokens * n_distinct) comparisons per document, fine for
-    document-sized inputs (hundreds of tokens) and still a pure map; 0
-    for empty/NULL text."""
-    toksl = F.transform(tokens(col), lambda t: F.lower(t))
-    n = F.size(toksl)
-    top = F.array_max(F.transform(F.array_distinct(toksl),
-                                  lambda w: F.size(
-                                      F.filter(toksl, lambda x: x == w))))
-    return F.when(n > 0, top / n).otherwise(F.lit(0.0))
 
 
 def repetition_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

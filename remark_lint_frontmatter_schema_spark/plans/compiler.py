@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 from .bundler import RulesetCompileError, resolve_internal_ref
 from . import variant as _vr
 from ..functions import content as _content
+from ..operators.table_checks import NUMERIC, ROOT, STRING, TABLE_CHECKS
 from ..functions.formats import (FORMAT_ALWAYS_OK, FORMAT_FINITE,
                                  FORMAT_NUMERIC_RANGE, FORMAT_REGEX,
                                  FORMAT_UDF_CHECKERS)
@@ -65,40 +66,27 @@ _KNOWN_KEYWORDS = {
     # annotation-only keywords (Ajv collects, never validates): known so
     # strict mode doesn't false-flag documented schemas
     "$comment", "readOnly", "writeOnly", "deprecated",
-    "contentEncoding", "contentMediaType",
     "maxItems", "minItems",
     "uniqueItems", "contains", "minContains", "maxContains",
     "minProperties", "maxProperties", "dependentRequired", "dependencies",
     "dependentSchemas", "unevaluatedProperties", "unevaluatedItems",
     "if", "then", "else", "propertyNames",
     # engine extension points (reference analog: custom Ajv keywords via
-    # ajvOptions, index.ts:49): named vectorized pandas-UDF check, plus
-    # table-level declarations (uniqueness / referential / drift) that
-    # compile into CompiledRuleset.table_checks and run as separate
-    # relational passes
-    "x-spark-check", "x-unique", "x-ref", "x-ref-asof", "x-ref-interval",
-    "x-drift", "x-severity",
-    "x-dedup", "x-langid", "x-rate", "x-decontaminate", "x-label-conflict",
+    # ajvOptions, index.ts:49): named vectorized pandas-UDF check and the
+    # row-level x- keywords; the table-level declarations are added below
+    # from operators/table_checks.py
+    "x-spark-check", "x-severity", "x-langid", "x-rate",
     "x-repair",  # per-property opt-out consumed by operators/repair.py
-    "x-outlier",
-    "x-skew", "x-reconcile", "x-calendar", "x-freshness", "x-benford",
-    "x-corr", "x-mask",
-    "x-monotonic",
-    "x-dup-ngram",
-    "x-gopher",
-    "x-c4",
-    "x-leakage",
-    "x-embedding",
-    "x-fd",
-    "x-gap",
-    "x-gibberish",
-    "x-lm-ppl",
-    "x-finite",
-    "x-encoding",
-    "x-readability",
-    "x-quantile",
-    "x-volume",
+    "x-embedding", "x-finite", "x-encoding",
 }
+# table-level declarations (uniqueness / referential / drift / ...): each
+# kind is declared once in operators/table_checks.py, compiles into
+# CompiledRuleset.table_checks and runs as a separate relational pass.
+# keyword -> its declarations (x-unique has two forms)
+_TABLE_KEYWORDS: dict = {}
+for _spec in TABLE_CHECKS.values():
+    _TABLE_KEYWORDS.setdefault(_spec.keyword, []).append(_spec)
+_KNOWN_KEYWORDS |= set(_TABLE_KEYWORDS)
 
 
 @dataclass(frozen=True)
@@ -462,191 +450,8 @@ _KEYWORD_SHAPE = {
     "then": lambda v: isinstance(v, dict),
     "else": lambda v: isinstance(v, dict),
     "propertyNames": lambda v: isinstance(v, dict),
-    "x-unique": lambda v: isinstance(v, bool) or (
-        isinstance(v, list) and len(v) >= 2
-        and all(isinstance(k, str) for k in v)
-        and len(set(v)) == len(v)),
-    "x-outlier": lambda v: isinstance(v, dict)
-    and (v.get("id") is None or isinstance(v["id"], str))
-    and (v.get("k") is None
-         or (isinstance(v["k"], _NUM) and not isinstance(v["k"], bool)
-             and v["k"] > 0))
-    and (v.get("approx") is None or isinstance(v["approx"], bool))
-    and (v.get("by") is None or isinstance(v["by"], str)),
-    "x-skew": lambda v: isinstance(v, dict)
-    and isinstance(v.get("max_share"), _NUM)
-    and not isinstance(v.get("max_share"), bool)
-    and 0 < v["max_share"] <= 1
-    and (v.get("top_k") is None
-         or (isinstance(v["top_k"], int) and not isinstance(v["top_k"], bool)
-             and v["top_k"] > 0))
-    and (v.get("by") is None or isinstance(v["by"], str)),
-    "x-mask": lambda v: isinstance(v, dict)
-    and isinstance(v.get("expect"), str) and v["expect"] != ""
-    and (v.get("min_share") is None
-         or (isinstance(v["min_share"], _NUM)
-             and not isinstance(v["min_share"], bool)
-             and 0 < v["min_share"] <= 1))
-    and (v.get("by") is None or isinstance(v["by"], str)),
-    "x-corr": lambda v: isinstance(v, dict)
-    and isinstance(v.get("with"), str)
-    and isinstance(v.get("min_abs"), _NUM)
-    and not isinstance(v.get("min_abs"), bool)
-    and 0 < v["min_abs"] <= 1
-    and (v.get("by") is None or isinstance(v["by"], str)),
-    "x-benford": lambda v: isinstance(v, dict)
-    and (v.get("max_mad") is None
-         or (isinstance(v["max_mad"], _NUM)
-             and not isinstance(v["max_mad"], bool) and v["max_mad"] > 0))
-    and (v.get("by") is None or isinstance(v["by"], str)),
-    "x-calendar": lambda v: isinstance(v, dict)
-    and v.get("unit", "day") in ("minute", "hour", "day", "week", "month")
-    and (v.get("by") is None or isinstance(v["by"], str))
-    and (v.get("max_buckets") is None
-         or (isinstance(v["max_buckets"], int)
-             and not isinstance(v["max_buckets"], bool)
-             and v["max_buckets"] > 0)),
-    "x-freshness": lambda v: isinstance(v, dict)
-    and isinstance(v.get("max_age_seconds"), _NUM)
-    and not isinstance(v.get("max_age_seconds"), bool)
-    and v["max_age_seconds"] > 0
-    and (v.get("as_of") is None or isinstance(v["as_of"], str))
-    and (v.get("by") is None or isinstance(v["by"], str)),
-    "x-reconcile": lambda v: isinstance(v, dict)
-    and isinstance(v.get("fact"), str)
-    and isinstance(v.get("key"), str)
-    and isinstance(v.get("fact_value"), str)
-    and (v.get("fact_key") is None or isinstance(v["fact_key"], str))
-    and v.get("agg", "sum") in ("sum", "count", "avg", "min", "max")
-    and (v.get("tolerance") is None
-         or (isinstance(v["tolerance"], _NUM)
-             and not isinstance(v["tolerance"], bool)
-             and v["tolerance"] >= 0))
-    and v.get("on_missing", "violate") in ("violate", "ignore"),
     "x-severity": lambda v: v in ("error", "warning", "info"),
-    "x-monotonic": lambda v: isinstance(v, dict)
-    and isinstance(v.get("order_by"), str)
-    and (v.get("by") is None or isinstance(v["by"], str))
-    and (v.get("id") is None or isinstance(v["id"], str))
-    # explicit null (YAML `direction:`) means "use the default"
-    and (v.get("direction") is None or v["direction"] in (
-        "non-decreasing", "increasing", "non-increasing", "decreasing"))
-    and (v.get("n_buckets") is None
-         or (isinstance(v["n_buckets"], int)
-             and not isinstance(v["n_buckets"], bool)
-             and v["n_buckets"] > 0)),
     "x-finite": lambda v: isinstance(v, bool),
-    "x-gibberish": lambda v: isinstance(v, dict)
-    and isinstance(v.get("id"), str)
-    and isinstance(v.get("min_logp"), _NUM)
-    and not isinstance(v["min_logp"], bool),
-    "x-readability": lambda v: isinstance(v, dict)
-    and isinstance(v.get("id"), str)
-    and ("lo" in v or "hi" in v)
-    and all(isinstance(v[b], _NUM) and not isinstance(v[b], bool)
-            for b in ("lo", "hi") if b in v)
-    and (("lo" not in v or "hi" not in v) or v["lo"] <= v["hi"]),
-    "x-volume": lambda v: isinstance(v, dict)
-    and v.get("unit", "day") in ("minute", "hour", "day", "week", "month")
-    and (v.get("k") is None
-         or (isinstance(v["k"], _NUM) and not isinstance(v["k"], bool)
-             and v["k"] > 0))
-    and (v.get("by") is None or isinstance(v["by"], str)),
-    "x-quantile": lambda v: isinstance(v, dict)
-    and isinstance(v.get("q"), _NUM) and not isinstance(v["q"], bool)
-    and 0 <= v["q"] <= 1
-    and ("lo" in v or "hi" in v)
-    and all(isinstance(v[b], _NUM) and not isinstance(v[b], bool)
-            for b in ("lo", "hi") if b in v)
-    and (("lo" not in v or "hi" not in v) or v["lo"] <= v["hi"])
-    and (v.get("by") is None or isinstance(v["by"], str))
-    and isinstance(v.get("approx", False), bool),
-    "x-lm-ppl": lambda v: isinstance(v, dict)
-    and isinstance(v.get("id"), str)
-    and isinstance(v.get("max_ppl"), _NUM)
-    and not isinstance(v["max_ppl"], bool) and v["max_ppl"] > 0
-    and (v.get("n") is None
-         or (isinstance(v["n"], int) and not isinstance(v["n"], bool)
-             and v["n"] >= 2))
-    and (v.get("k") is None
-         or (isinstance(v["k"], _NUM) and not isinstance(v["k"], bool)
-             and v["k"] > 0)),
-    "x-gap": lambda v: isinstance(v, dict)
-    and isinstance(v.get("max_seconds"), _NUM)
-    and not isinstance(v["max_seconds"], bool) and v["max_seconds"] > 0
-    and (v.get("by") is None or isinstance(v["by"], str))
-    and (v.get("id") is None or isinstance(v["id"], str))
-    and (v.get("n_buckets") is None
-         or (isinstance(v["n_buckets"], int)
-             and not isinstance(v["n_buckets"], bool)
-             and v["n_buckets"] > 0)),
-    "x-fd": lambda v: isinstance(v, dict)
-    and isinstance(v.get("determined_by"), list)
-    and len(v["determined_by"]) > 0
-    and all(isinstance(c, str) for c in v["determined_by"])
-    and (v.get("id") is None or isinstance(v["id"], str)),
-    "x-ref": lambda v: isinstance(v, dict) and isinstance(v.get("dim"), str)
-    and isinstance(v.get("key"), str)
-    and (v.get("n_items") is None
-         or (isinstance(v["n_items"], int) and not isinstance(v["n_items"], bool)
-             and v["n_items"] > 0)),
-    "x-ref-interval": lambda v: isinstance(v, dict)
-    and isinstance(v.get("dim"), str) and isinstance(v.get("key"), str)
-    and isinstance(v.get("ts"), str) and isinstance(v.get("start"), str)
-    and isinstance(v.get("end"), str)
-    and isinstance(v.get("bucket"), (int, float))
-    and not isinstance(v["bucket"], bool) and v["bucket"] > 0,
-    "x-ref-asof": lambda v: isinstance(v, dict)
-    and isinstance(v.get("dim"), str) and isinstance(v.get("key"), str)
-    and isinstance(v.get("ts"), str) and isinstance(v.get("dim_ts"), str)
-    and (v.get("tolerance") is None
-         or (isinstance(v["tolerance"], (int, float))
-             and not isinstance(v["tolerance"], bool)
-             and v["tolerance"] > 0))
-    and v.get("direction", "backward") in ("backward", "forward")
-    and (v.get("bucket") is None
-         or (isinstance(v["bucket"], (int, float))
-             and not isinstance(v["bucket"], bool) and v["bucket"] > 0)),
-    "x-dup-ngram": lambda v: isinstance(v, dict)
-    and isinstance(v.get("id"), str)
-    and (v.get("n") is None
-         or (isinstance(v["n"], int) and not isinstance(v["n"], bool)
-             and v["n"] > 0))
-    and (v.get("max_frac") is None
-         or (isinstance(v["max_frac"], _NUM)
-             and not isinstance(v["max_frac"], bool)
-             and 0 <= v["max_frac"] < 1)),
-    "x-leakage": lambda v: isinstance(v, dict)
-    and isinstance(v.get("group"), str),
-    "x-c4": lambda v: isinstance(v, dict)
-    and isinstance(v.get("id"), str)
-    and all(v.get(k) is None
-            or (isinstance(v[k], int) and not isinstance(v[k], bool)
-                and v[k] > 0)
-            for k in ("min_words_per_line", "min_sentences")),
-    "x-gopher": lambda v: isinstance(v, dict)
-    and isinstance(v.get("id"), str)
-    and (v.get("rules") is None
-         or (isinstance(v["rules"], list) and len(v["rules"]) > 0
-             and all(isinstance(r, str) for r in v["rules"])
-             and set(v["rules"]) <= {
-                 "word_count", "mean_word_len", "symbol_ratio",
-                 "bullet_lines", "ellipsis_lines", "alpha_words",
-                 "stopwords"})),
-    "x-dedup": lambda v: isinstance(v, dict)
-    and isinstance(v.get("id"), str)
-    and v.get("method", "exact") in ("exact", "jaccard", "acoustic", "url")
-    and (v.get("block") is None or isinstance(v["block"], str))
-    and (v.get("threshold") is None
-         or (isinstance(v["threshold"], _NUM)
-             and not isinstance(v["threshold"], bool)))
-    and (v.get("n") is None
-         or (isinstance(v["n"], int) and not isinstance(v["n"], bool)
-             and v["n"] > 0))
-    and (v.get("max_distance") is None
-         or (isinstance(v["max_distance"], int)
-             and not isinstance(v["max_distance"], bool)
-             and 0 <= v["max_distance"] <= 7)),
     "x-langid": lambda v: isinstance(v, dict)
     and isinstance(v.get("declared"), str)
     and (v.get("min_tokens") is None
@@ -668,44 +473,10 @@ _KEYWORD_SHAPE = {
             for k in ("lo", "hi"))
     and (v.get("lo") is None or v.get("hi") is None
          or float(v["lo"]) < float(v["hi"])),
-    "x-decontaminate": lambda v: isinstance(v, dict)
-    and isinstance(v.get("id"), str)
-    and isinstance(v.get("bench"), str)
-    and (v.get("bloom") is None or isinstance(v["bloom"], bool))
-    and all(v.get(k) is None
-            or (isinstance(v[k], int) and not isinstance(v[k], bool)
-                and v[k] > 0)
-            for k in ("n", "min_shared", "n_items")),
-    "x-label-conflict": lambda v: isinstance(v, dict)
-    and isinstance(v.get("id"), str)
-    and isinstance(v.get("transcript"), str)
-    and (v.get("max_distance") is None
-         or (isinstance(v["max_distance"], int)
-             and not isinstance(v["max_distance"], bool)
-             and 0 <= v["max_distance"] <= 7))
-    and isinstance(v.get("grade", False), bool)
-    and (v.get("contradiction_below") is None
-         or (isinstance(v["contradiction_below"], (int, float))
-             and not isinstance(v["contradiction_below"], bool)
-             and 0 <= v["contradiction_below"] <= 1)),
-    "x-drift": lambda v: isinstance(v, dict)
-    and isinstance(v.get("partition_col"), str)
-    and v.get("side_a") is not None and v.get("side_b") is not None
-    and isinstance(v.get("lo"), _NUM) and not isinstance(v.get("lo"), bool)
-    and isinstance(v.get("hi"), _NUM) and not isinstance(v.get("hi"), bool)
-    # optional knobs must coerce cleanly — a bad type must fail compile
-    # (G2 artifact), not raise a raw ValueError mid-routing
-    and all(v.get(k) is None
-            or (isinstance(v[k], _NUM) and not isinstance(v[k], bool))
-            for k in ("n_buckets", "ks_threshold", "psi_threshold",
-                      "emd_threshold", "jsd_threshold", "cvm_threshold"))
-    # per-segment form carries ks/psi only (emd/jsd/cvm are global)
-    and (v.get("by") is None
-         or (isinstance(v["by"], str)
-             and all(v.get(k) is None for k in
-                     ("emd_threshold", "jsd_threshold",
-                      "cvm_threshold")))),
 }
+_KEYWORD_SHAPE.update({
+    kw: (lambda v, specs=tuple(specs): any(s.shape_ok(v) for s in specs))
+    for kw, specs in _TABLE_KEYWORDS.items()})
 
 
 def _shape_walk(schema: dict, path: str = "#") -> None:
@@ -783,18 +554,13 @@ _VARIANT_PASSTHROUGH_KWS = frozenset((
     "x-spark-check"))
 # known keywords with no variant compile: surfaced in `unknown` (strict
 # mode flags them), never a silent vacuous pass. uniqueItems needs value
-# equality and Catalyst defines no ordering on VARIANT; content keywords
-# and the relational x- declarations are typed-column operators.
+# equality and Catalyst defines no ordering on VARIANT; content keywords,
+# these row x- keywords and every relational table-check declaration are
+# typed-column operators.
 _VARIANT_UNSUPPORTED_KWS = frozenset((
     "uniqueItems", "contentEncoding", "contentMediaType", "contentSchema",
-    "x-unique", "x-ref", "x-ref-asof", "x-ref-interval", "x-drift",
-    "x-dedup", "x-langid",
-    "x-rate", "x-encoding", "x-decontaminate", "x-label-conflict", "x-repair", "x-outlier",
-    "x-skew", "x-reconcile", "x-calendar", "x-freshness", "x-benford",
-    "x-corr", "x-mask",
-    "x-monotonic", "x-dup-ngram", "x-gopher", "x-c4", "x-leakage", "x-embedding",
-    "x-fd", "x-gap", "x-gibberish", "x-lm-ppl", "x-readability",
-    "x-quantile", "x-volume"))
+    "x-langid", "x-rate", "x-encoding", "x-repair", "x-embedding",
+    *_TABLE_KEYWORDS))
 
 
 def _compile_variant_node(schema: dict, ctx: _Ctx) -> None:
@@ -1391,527 +1157,8 @@ def _compile_keywords(schema: dict, ctx: _Ctx, *,
     if "propertyNames" in schema:
         _property_names(ctx, schema["propertyNames"])
 
-    # table-level declarations: only meaningful on top-level columns
-    # (instance_path "/col") — aggregates/joins have no analog for nested
-    # struct fields, so deeper uses surface as unknown keywords
-    is_top = ctx.instance_path.count("/") == 1 and ctx.col is not None
-    if schema.get("x-unique") is True and not ctx.silent:
-        if is_top:
-            ctx.out.table_checks.append(
-                ("unique", ctx.instance_path[1:],
-                 {"severity": ctx.severity}))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-unique"))
-
-    if isinstance(schema.get("x-unique"), list) and not ctx.silent:
-        # composite-key form: only meaningful at the ROOT (the key is a
-        # tuple of top-level columns, it belongs to no single property);
-        # columns missing from the bound schema fall to unknown so a
-        # typo'd key never silently passes
-        cols = schema["x-unique"]
-        if ctx.instance_path == "" and all(
-                c in ctx.df_schema.fieldNames() for c in cols):
-            ctx.out.table_checks.append(
-                ("unique_multi", "", {"keys": list(cols),
-                                      "severity": ctx.severity}))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-unique"))
-
-    if "x-ref" in schema and not ctx.silent:
-        if is_top:
-            p = schema["x-ref"]
-            ctx.out.table_checks.append(
-                ("ref", ctx.instance_path[1:],
-                 {"dim": p["dim"], "key": p["key"],
-                  "bloom": bool(p.get("bloom", False)),
-                  # optional dim row-count: sizes the Bloom bitmap without
-                  # an extra dim scan (referential.build_bloom)
-                  "n_items": p.get("n_items"),
-                  "severity": ctx.severity}))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-ref"))
-
-    if "x-ref-asof" in schema and not ctx.silent:
-        # TEMPORAL referential (operators/asof.py asof_ref_violations):
-        # a dim row with this key must be IN FORCE at the fact row's
-        # timestamp — relational pass like x-ref, top-level columns only
-        if is_top:
-            p = schema["x-ref-asof"]
-            ctx.out.table_checks.append(
-                ("ref_asof", ctx.instance_path[1:], {
-                    "dim": p["dim"], "key": p["key"], "ts": p["ts"],
-                    "dim_ts": p["dim_ts"],
-                    "tolerance": p.get("tolerance"),
-                    "direction": p.get("direction", "backward"),
-                    "bucket": p.get("bucket"),
-                    "severity": ctx.severity}))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-ref-asof"))
-
-    if "x-ref-interval" in schema and not ctx.silent:
-        # INTERVAL referential (operators/intervals.py
-        # interval_ref_violations): the row's timestamp must fall inside
-        # a dim interval of its key — relational pass, top-level only
-        if is_top:
-            p = schema["x-ref-interval"]
-            ctx.out.table_checks.append(
-                ("ref_interval", ctx.instance_path[1:], {
-                    "dim": p["dim"], "key": p["key"], "ts": p["ts"],
-                    "start": p["start"], "end": p["end"],
-                    "bucket": float(p["bucket"]),
-                    "severity": ctx.severity}))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-ref-interval"))
-
-    if "x-outlier" in schema and not ctx.silent:
-        # robust distributional outlier (median/MAD modified z-score,
-        # operators/outliers.py) — a relational pass like x-drift, so
-        # top-level NUMERIC columns only: a non-numeric column would
-        # cast-to-double to all-NULL and vacuously pass, so it falls to
-        # unknown instead (strict mode flags it)
-        if is_top and isinstance(ctx.dtype, _NUMERIC):
-            p = schema["x-outlier"]
-            ctx.out.table_checks.append(
-                ("outlier", ctx.instance_path[1:], {
-                    # id defaults to the caller's row_id at run time;
-                    # explicit-null k (YAML `k:`) takes the default too
-                    "id": p.get("id"),
-                    "k": float(p["k"]) if p.get("k") is not None else 3.5,
-                    "by": p.get("by"),
-                    "approx": bool(p.get("approx", False)),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-outlier"))
-
-    if "x-skew" in schema and not ctx.silent:
-        # key-distribution skew lint (operators/skew.py skew_violations):
-        # fires when the hottest value of this column holds more than
-        # max_share of all rows — the declarative "salt before you
-        # shuffle on this" warning. A relational pass over the whole
-        # column like x-unique, so top-level columns only (skew of a
-        # nested field isn't a shuffle key)
-        if is_top:
-            p = schema["x-skew"]
-            ctx.out.table_checks.append(
-                ("skew", ctx.instance_path[1:], {
-                    "max_share": float(p["max_share"]),
-                    "top_k": int(p.get("top_k", 10)),
-                    # per-segment form ("skew per tenant"): a violation
-                    # row per group whose hottest key crosses max_share
-                    "by": p.get("by"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-skew"))
-
-    if "x-reconcile" in schema and not ctx.silent:
-        # aggregate reconciliation (operators/reconcile.py): this
-        # column's stored per-key value must equal the aggregate
-        # recomputed from the fact table named in `fact` (resolved from
-        # the dims mapping, x-ref's plumbing). Numeric top-level columns
-        # only — a non-numeric stored aggregate casts to all-NULL and
-        # would vacuously mismatch, so it falls to unknown instead
-        if is_top and isinstance(ctx.dtype, _NUMERIC):
-            p = schema["x-reconcile"]
-            ctx.out.table_checks.append(
-                ("reconcile", ctx.instance_path[1:], {
-                    "fact": p["fact"],
-                    "key": p["key"],
-                    "fact_key": p.get("fact_key"),
-                    "fact_value": p["fact_value"],
-                    "agg": p.get("agg", "sum"),
-                    "tolerance": float(p.get("tolerance", 0.0)),
-                    "on_missing": p.get("on_missing", "violate"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-reconcile"))
-
-    if "x-monotonic" in schema and not ctx.silent:
-        # adjacent-pair ordering constraint (operators/sequence.py): the
-        # column must be monotone over an order key, optionally per group
-        # — a relational (window) pass like x-drift, so top-level only;
-        # JSON Schema has no row-relating keyword (the reference validates
-        # one document at a time, index.ts:201-320)
-        if is_top:
-            p = schema["x-monotonic"]
-            ctx.out.table_checks.append(
-                ("monotonic", ctx.instance_path[1:], {
-                    "order_by": p["order_by"],
-                    "by": p.get("by"),
-                    "direction": p.get("direction") or "non-decreasing",
-                    "n_buckets": int(p.get("n_buckets") or 64),
-                    "id": p.get("id"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-monotonic"))
-
-    if "x-volume" in schema and not ctx.silent:
-        # ingest-volume anomaly gate (operators/outliers.py
-        # volume_violations): time buckets with outlier row counts —
-        # x-calendar's thin/flooded companion; top-level only
-        if is_top:
-            p = schema["x-volume"]
-            ctx.out.table_checks.append(
-                ("volume", ctx.instance_path[1:], {
-                    "unit": p.get("unit", "day"),
-                    # `or`, not a default-arg get: an explicit `k: null`
-                    # passes the shape validator and must fall back, not
-                    # crash float(None) (k=0 is rejected at validation)
-                    "k": float(p.get("k") or 3.5),
-                    "by": p.get("by"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-volume"))
-
-    if "x-quantile" in schema and not ctx.silent:
-        # order-statistics band gate (operators/stats.py
-        # quantile_violations) — one-aggregate relational pass like
-        # x-benford; numeric top-level columns only
-        p = schema["x-quantile"]
-        if (is_top and isinstance(ctx.dtype, _NUMERIC)
-                and (p.get("by") is None
-                     or p["by"] in ctx.df_schema.fieldNames())):
-            ctx.out.table_checks.append(
-                ("quantile", ctx.instance_path[1:], {
-                    "q": float(p["q"]),
-                    "lo": (None if p.get("lo") is None
-                           else float(p["lo"])),
-                    "hi": (None if p.get("hi") is None
-                           else float(p["hi"])),
-                    "by": p.get("by"),
-                    "approx": bool(p.get("approx", False)),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-quantile"))
-
-    if "x-readability" in schema and not ctx.silent:
-        # Flesch reading-ease band gate (operators/text.py
-        # readability_violations) — map-only per-row pass like x-gopher;
-        # string top-level columns only
-        if is_top and isinstance(ctx.dtype, T.StringType):
-            p = schema["x-readability"]
-            ctx.out.table_checks.append(
-                ("readability", ctx.instance_path[1:], {
-                    "id": p["id"],
-                    "lo": float(p.get("lo", 0.0)),
-                    "hi": float(p.get("hi", 121.0)),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-readability"))
-
-    if "x-gibberish" in schema and not ctx.silent:
-        # corpus-relative language-plausibility gate (operators/text.py
-        # gibberish_violations) — needs the whole corpus's bigram
-        # distribution, so a relational pass; top-level only
-        if is_top:
-            p = schema["x-gibberish"]
-            ctx.out.table_checks.append(
-                ("gibberish", ctx.instance_path[1:], {
-                    "id": p["id"],
-                    "min_logp": float(p["min_logp"]),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-gibberish"))
-
-    if "x-lm-ppl" in schema and not ctx.silent:
-        # corpus-relative n-gram LM perplexity gate (operators/lm.py
-        # lm_ppl_violations, the CCNet recipe) — trains on the whole
-        # corpus, so a relational pass; top-level only
-        if is_top:
-            p = schema["x-lm-ppl"]
-            ctx.out.table_checks.append(
-                ("lm_ppl", ctx.instance_path[1:], {
-                    "id": p["id"],
-                    "max_ppl": float(p["max_ppl"]),
-                    "n": int(p.get("n") or 2),
-                    "k": float(p.get("k") or 0.5),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-lm-ppl"))
-
-    if "x-mask" in schema and not ctx.silent:
-        # shape-conformance gate (operators/stats.py mask_violations):
-        # the column's dominant value mask must cover min_share of rows
-        # — relational aggregate pass, top-level columns only
-        if is_top:
-            p = schema["x-mask"]
-            ctx.out.table_checks.append(
-                ("mask", ctx.instance_path[1:], {
-                    "expect": p["expect"],
-                    "min_share": float(p.get("min_share", 0.99)),
-                    "by": p.get("by"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-mask"))
-
-    if "x-corr" in schema and not ctx.silent:
-        # derived-column expectation (operators/stats.py
-        # correlation_violations): |corr(this, with)| >= min_abs —
-        # relational aggregate pass, numeric top-level columns only;
-        # the partner column must exist in the bound schema
-        p = schema["x-corr"]
-        if (is_top and isinstance(ctx.dtype, _NUMERIC)
-                and p["with"] in ctx.df_schema.fieldNames()):
-            ctx.out.table_checks.append(
-                ("corr", ctx.instance_path[1:], {
-                    "with": p["with"],
-                    "min_abs": float(p["min_abs"]),
-                    "by": p.get("by"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-corr"))
-
-    if "x-benford" in schema and not ctx.silent:
-        # Benford first-digit conformance gate (operators/drift.py
-        # benford_violations, MAD-thresholded) — a relational pass like
-        # x-outlier, numeric top-level columns only
-        if is_top and isinstance(ctx.dtype, _NUMERIC):
-            p = schema["x-benford"]
-            ctx.out.table_checks.append(
-                ("benford", ctx.instance_path[1:], {
-                    "max_mad": float(p.get("max_mad", 0.015)),
-                    # per-segment form ("Benford per region"): one
-                    # violation row per non-conforming group
-                    "by": p.get("by"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-benford"))
-
-    if "x-calendar" in schema and not ctx.silent:
-        # calendar completeness (operators/sequence.py
-        # calendar_violations): every time bucket between the observed
-        # min and max must contain rows — relational pass, top-level only
-        if is_top:
-            p = schema["x-calendar"]
-            ctx.out.table_checks.append(
-                ("calendar", ctx.instance_path[1:], {
-                    "unit": p.get("unit", "day"),
-                    "by": p.get("by"),
-                    "max_buckets": int(p.get("max_buckets") or 100_000),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-calendar"))
-
-    if "x-freshness" in schema and not ctx.silent:
-        # freshness (operators/sequence.py freshness_violations): the
-        # newest row (per group) must be younger than max_age_seconds at
-        # as_of (run time when omitted) — relational pass, top-level only
-        if is_top:
-            p = schema["x-freshness"]
-            ctx.out.table_checks.append(
-                ("freshness", ctx.instance_path[1:], {
-                    "max_age_seconds": float(p["max_age_seconds"]),
-                    "as_of": p.get("as_of"),
-                    "by": p.get("by"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-freshness"))
-
-    if "x-gap" in schema and not ctx.silent:
-        # continuity check (operators/sequence.py gap_violations): the
-        # monotonic machinery ordered by the column itself — relational
-        # window pass, top-level columns only
-        if is_top:
-            p = schema["x-gap"]
-            ctx.out.table_checks.append(
-                ("gap", ctx.instance_path[1:], {
-                    "max_seconds": float(p["max_seconds"]),
-                    "by": p.get("by"),
-                    "n_buckets": int(p.get("n_buckets") or 64),
-                    "id": p.get("id"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-gap"))
-
-    if "x-fd" in schema and not ctx.silent:
-        # functional dependency (operators/fd.py): the column must take a
-        # single value per determinant group — a relational (two-scan
-        # groupBy+join) pass like x-unique, so top-level columns only
-        if is_top:
-            p = schema["x-fd"]
-            ctx.out.table_checks.append(
-                ("fd", ctx.instance_path[1:], {
-                    "determined_by": list(p["determined_by"]),
-                    "id": p.get("id"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-fd"))
-
-    if "x-drift" in schema and not ctx.silent:
-        if is_top:
-            p = schema["x-drift"]
-            ctx.out.table_checks.append(
-                ("drift", ctx.instance_path[1:], {
-                    "partition_col": p["partition_col"],
-                    "side_a": p["side_a"], "side_b": p["side_b"],
-                    "lo": float(p["lo"]), "hi": float(p["hi"]),
-                    "n_buckets": int(p.get("n_buckets", 25)),
-                    "ks_threshold": float(p.get("ks_threshold", 0.1)),
-                    "psi_threshold": float(p.get("psi_threshold", 0.2)),
-                    # optional third statistic: 1-D Wasserstein in the
-                    # value's units (magnitude-aware; None = not checked)
-                    "emd_threshold": (
-                        float(p["emd_threshold"])
-                        if p.get("emd_threshold") is not None else None),
-                    # optional 4th/5th statistics on the same histogram:
-                    # JSD (finite under disjoint supports) and CvM
-                    # (L2 of the CDF gap); None = not checked
-                    "jsd_threshold": (
-                        float(p["jsd_threshold"])
-                        if p.get("jsd_threshold") is not None else None),
-                    "cvm_threshold": (
-                        float(p["cvm_threshold"])
-                        if p.get("cvm_threshold") is not None else None),
-                    # per-segment form ("drift per event type"): one
-                    # violation row per drifted group (ks/psi only)
-                    "by": p.get("by"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-drift"))
-
-    if "x-dedup" in schema and not ctx.silent:
-        # duplicate-content declaration: exact sha256 groups, n-gram
-        # Jaccard near-dup clusters, acoustic-fingerprint clusters over a
-        # binary audio column, or canonical-URL groups (operators/
-        # clusters.dedup_violations); a relational pass like x-unique,
-        # so top-level only
-        if is_top:
-            p = schema["x-dedup"]
-            ctx.out.table_checks.append(
-                ("dedup", ctx.instance_path[1:], {
-                    "id": p["id"],
-                    "method": p.get("method", "exact"),
-                    "block": p.get("block"),
-                    "n": int(p.get("n", 3)),
-                    "threshold": float(p.get("threshold", 0.55)),
-                    "max_distance": int(p.get("max_distance", 3)),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-dedup"))
-
-    if "x-dup-ngram" in schema and not ctx.silent:
-        # cross-corpus partial-overlap declaration (operators/dedup.
-        # cross_doc_dup_fraction): flags documents whose duplicated
-        # word-n-gram fraction exceeds max_frac — a relational pass like
-        # x-dedup, so top-level only
-        if is_top:
-            p = schema["x-dup-ngram"]
-            ctx.out.table_checks.append(
-                ("dup_ngram", ctx.instance_path[1:], {
-                    "id": p["id"],
-                    "n": int(p.get("n", 5)),
-                    "max_frac": float(p.get("max_frac", 0.5)),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-dup-ngram"))
-
-    if "x-gopher" in schema and not ctx.silent:
-        # Gopher quality-rule declaration (operators/text.gopher_violations):
-        # flags documents failing the enabled Rae et al. 2021 rules — a
-        # map-only per-row pass, but routed as a table check because the
-        # rules read a whole text column, not the validated node's value
-        if is_top:
-            p = schema["x-gopher"]
-            ctx.out.table_checks.append(
-                ("gopher", ctx.instance_path[1:], {
-                    "id": p["id"],
-                    "rules": list(p["rules"]) if p.get("rules") else None,
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-gopher"))
-
-    if "x-leakage" in schema and not ctx.silent:
-        # split-leakage declaration on the SPLIT column (operators/
-        # sampling.leakage_violations): groups spanning >1 split
-        if is_top:
-            p = schema["x-leakage"]
-            ctx.out.table_checks.append(
-                ("leakage", ctx.instance_path[1:], {
-                    "group": p["group"],
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-leakage"))
-
-    if "x-c4" in schema and not ctx.silent:
-        # C4 page-gate declaration (operators/text.c4_violations) — same
-        # routing rationale as x-gopher
-        if is_top:
-            p = schema["x-c4"]
-            ctx.out.table_checks.append(
-                ("c4", ctx.instance_path[1:], {
-                    "id": p["id"],
-                    "min_words_per_line": int(p.get("min_words_per_line")
-                                              or 5),
-                    "min_sentences": int(p.get("min_sentences") or 3),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-c4"))
-
-    if "x-decontaminate" in schema and not ctx.silent:
-        # benchmark-overlap declaration: like x-ref, names a dim (the
-        # benchmark table) resolved from the dims dict at run time
-        if is_top:
-            p = schema["x-decontaminate"]
-            ctx.out.table_checks.append(
-                ("decontaminate", ctx.instance_path[1:], {
-                    "id": p["id"],
-                    "bench": p["bench"],
-                    "bench_text_col": p.get("bench_text_col"),
-                    "bench_id_col": p.get("bench_id_col"),
-                    "n": int(p.get("n", 8)),
-                    "min_shared": int(p.get("min_shared", 1)),
-                    "bloom": bool(p.get("bloom", False)),
-                    "n_items": p.get("n_items"),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-decontaminate"))
-
-    if "x-label-conflict" in schema and not ctx.silent:
-        # transcript-vs-acoustic-near-dup consistency: declared on the
-        # binary audio column, names the id and transcript columns; a
-        # separate relational pass (fingerprint self-join) like x-dedup
-        if is_top:
-            p = schema["x-label-conflict"]
-            # explicit nulls pass the shape check (None is "use the
-            # default"), and dict.get does NOT apply its default for
-            # present-but-null keys — coerce explicitly
-            md = p.get("max_distance")
-            cb = p.get("contradiction_below")
-            ctx.out.table_checks.append(
-                ("label_conflict", ctx.instance_path[1:], {
-                    "id": p["id"],
-                    "transcript": p["transcript"],
-                    "max_distance": 2 if md is None else int(md),
-                    # edit-similarity grading: contradiction (below the
-                    # knee) escalates to error, ASR noise stays warning
-                    "grade": bool(p.get("grade", False)),
-                    "contradiction_below": 0.5 if cb is None else float(cb),
-                    "severity": ctx.severity,
-                }))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "x-label-conflict"))
+    if not ctx.silent:
+        _table_checks(schema, ctx)
 
     if "x-langid" in schema and ctx.col is not None:
         # declared-vs-detected language consistency: a pure row expression
@@ -2017,6 +1264,37 @@ def _compile_keywords(schema: dict, ctx: _Ctx, *,
                 # staged, the check crosses once per row
                 ok = ctx.stage(f"{ctx.instance_path}.check", ok)
             _add(ctx, "x-spark-check", _present(ctx) & ~ok, msg)
+
+
+def _table_checks(schema: dict, ctx: _Ctx) -> None:
+    """Compile the node's table-level declarations, in the declaration
+    order of operators/table_checks.py (the union order of their
+    violation rows). A table check aggregates or joins whole columns, so
+    it compiles only at its declared placement; any other use lands in
+    ``unknown`` so strict mode flags the dropped declaration."""
+    names = ctx.df_schema.fieldNames()
+    top = ctx.instance_path.count("/") == 1 and ctx.col is not None
+    for spec in TABLE_CHECKS.values():
+        v = schema.get(spec.keyword)
+        if v is None or not spec.declares(v):
+            continue
+        p = spec.compile(v, ctx.severity)
+        if spec.where == ROOT:
+            placed = ctx.instance_path == "" and all(
+                k in names for k in p["keys"])
+        else:
+            placed = (top
+                      and (spec.where != NUMERIC
+                           or isinstance(ctx.dtype, _NUMERIC))
+                      and (spec.where != STRING
+                           or isinstance(ctx.dtype, T.StringType))
+                      and (spec.column is None or p[spec.column] is None
+                           or p[spec.column] in names))
+        if placed:
+            ctx.out.table_checks.append(
+                (spec.kind, ctx.instance_path[1:], p))
+        else:
+            ctx.out.unknown.append((ctx.instance_path, spec.keyword))
 
 
 def _calls_python(col: Column) -> bool:
@@ -2228,10 +1506,10 @@ def _probe_validity(sub_schema: dict, ctx: _Ctx, *, col, dtype,
     # Surface them as unknown so strict mode flags the dropped declaration
     # instead of silently discarding it with the probe ruleset.
     for kind, column, _params in probe.table_checks:
-        # kind is the internal dispatch name; the DSL keyword spells it
-        # with dashes (x-dup-ngram, x-label-conflict)
-        u = (f"{ctx.instance_path}/{column}",
-             f"x-{kind.replace('_', '-')}:in-composition")
+        # a table check lands at a top-level column or, with column "",
+        # at the root
+        u = (f"/{column}" if column else "",
+             f"{TABLE_CHECKS[kind].keyword}:in-composition")
         if u not in ctx.out.unknown:
             ctx.out.unknown.append(u)
     ctx.out.columns_read.update(probe.columns_read)

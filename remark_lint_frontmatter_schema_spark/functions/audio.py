@@ -27,6 +27,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
+from .pcm_codecs import (_decode_int_pcm, _is_plain_pcm16, _walk_wav,
+                         decode_wav_extended)
+
 # ---------------------------------------------------------------------------
 # synthesis (driver/executor side, deterministic)
 # ---------------------------------------------------------------------------
@@ -76,7 +79,7 @@ def wav_bytes_multi(channels: np.ndarray, sr_hz: int,
     """RIFF/WAVE PCM16 writer for (n_samples, n_channels) int16 arrays,
     with optional extra chunks injected between ``fmt `` and ``data`` —
     the fixture generator for the non-canonical containers
-    :func:`_parse_wav_pcm16` must accept (stereo corpora, editors that
+    :func:`decode_wav_pcm16` must accept (stereo corpora, editors that
     write LIST/INFO metadata)."""
     if channels.ndim == 1:
         channels = channels[:, None]
@@ -1401,71 +1404,36 @@ def opus_consistency_violations(clips, *, tolerance_ms: int = 5,
     )
 
 
-def _parse_wav_pcm16(b: bytes) -> tuple[int, int, np.ndarray]:
-    """RIFF chunk walker -> (sample_rate, n_channels, mono float samples).
-
-    Accepts any chunk layout (``fmt ``/``data`` in any order, LIST/fact/
-    cue chunks skipped, odd-size pad bytes honored per RIFF) and any PCM16
-    channel count — multi-channel payloads are downmixed to mono by
-    channel mean, the canonical training-corpus representation. Only
-    format 1 (integer PCM) at 16 bits is audio this engine decodes; other
-    encodings raise like any other malformed container.
-
-    Raises ValueError on malformed containers — callers turn that into a
-    ``decode`` violation row, never a job failure (the reference's
-    YAML-parse guard, /root/reference/index.ts:240-245)."""
-    if len(b) < 12 or b[0:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE container")
-    pos, end = 12, len(b)
-    sr = n_ch = None
-    raw = None
-    while pos + 8 <= end:
-        cid = b[pos:pos + 4]
-        size = struct.unpack_from("<I", b, pos + 4)[0]
-        body = pos + 8
-        if cid == b"fmt ":
-            if size < 16 or body + 16 > end:
-                raise ValueError("truncated fmt chunk")
-            fmt_tag, n_ch, sr, _, _, bits = struct.unpack_from(
-                "<HHIIHH", b, body)
-            if fmt_tag != 1 or bits != 16 or n_ch < 1:
-                raise ValueError("not integer PCM16")
-        elif cid == b"data":
-            raw = b[body: body + size]
-            if len(raw) < size:
-                raise ValueError("truncated data chunk")
-        pos = body + size + (size & 1)  # RIFF pads odd chunks to even
-    if sr is None:
-        raise ValueError("missing fmt chunk")
-    if raw is None:
-        raise ValueError("missing data chunk")
-    frame_bytes = 2 * n_ch
-    x = np.frombuffer(raw[: (len(raw) // frame_bytes) * frame_bytes],
-                      dtype="<i2").astype(np.float64) / 32767.0
-    if n_ch > 1:
-        x = x.reshape(-1, n_ch).mean(axis=1)
-    return sr, n_ch, x
-
-
 def decode_wav_pcm16(b: bytes) -> tuple[int, np.ndarray]:
     """Parse a PCM16 WAV -> (sample_rate, mono float samples in [-1,1)).
 
-    The canonical-container decode; see :func:`_parse_wav_pcm16` for the
-    container grammar (chunk walk, multi-channel downmix) and the
-    malformed-input policy."""
-    sr, _, x = _parse_wav_pcm16(b)
-    return sr, x
+    The container walk is :func:`.pcm_codecs._walk_wav` (any chunk
+    order, LIST/fact/cue chunks skipped, odd-size pad bytes honored per
+    RIFF); any PCM16 channel count is accepted and downmixed to mono by
+    channel mean, the canonical training-corpus representation. Only
+    plain format 1 (integer PCM) at 16 bits is decoded here: every other
+    encoding, a WAVE_FORMAT_EXTENSIBLE wrapper included, raises like any
+    other malformed container (:func:`.pcm_codecs.decode_wav_extended`
+    decodes those).
+
+    Raises ValueError on malformed containers — callers turn that into a
+    ``decode`` violation row, never a job failure (the reference's
+    YAML-parse guard, index.ts:240-245)."""
+    info = _walk_wav(b)
+    if not _is_plain_pcm16(info):
+        raise ValueError("not integer PCM16")
+    return info["sr"], _decode_int_pcm(info["raw"], 16, info["n_ch"])
 
 
 def decode_payload_any(b: bytes) -> tuple[int, np.ndarray]:
     """Decode ANY engine-decodable payload -> (sr, mono float in [-1,1)):
-    the WAV family at every supported fmt tag (PCM16 takes the fast
-    path; G.711, IMA ADPCM, wide/float PCM and EXTENSIBLE wrappers route
-    through pcm_codecs) and FLAC. This is the decode entry point every
-    payload OPERATOR uses (features, VAD, fingerprints, loudness,
-    augmentation, chunking), so a mixed-codec corpus needs no transcode
-    materialization pass before analysis — round 2 required
-    ``transcode_clips`` first; round 3 decodes in place.
+    the WAV family at every supported fmt tag (one
+    :func:`.pcm_codecs.decode_wav_extended` call: PCM16, G.711, IMA
+    ADPCM, wide/float PCM and EXTENSIBLE wrappers) and FLAC. This is the
+    decode entry point every payload OPERATOR uses (features, VAD,
+    fingerprints, loudness, augmentation, chunking), so a mixed-codec
+    corpus needs no transcode materialization pass before analysis —
+    round 2 required ``transcode_clips`` first; round 3 decodes in place.
 
     Ogg/Opus and MP3 raise ValueError like any undecodable container
     (entropy decode is the documented sandbox seam): compressed rows
@@ -1478,10 +1446,6 @@ def decode_payload_any(b: bytes) -> tuple[int, np.ndarray]:
             raise ValueError(str(exc)) from exc
         return sr, pcm.astype(np.float64) / 32767.0
     if b[:4] == b"RIFF":
-        fast = b[20:22] == b"\x01\x00" and b[34:36] == b"\x10\x00"
-        if fast and b[12:16] == b"fmt ":      # canonical PCM16 layout
-            return decode_wav_pcm16(b)
-        from .pcm_codecs import decode_wav_extended
         try:
             return decode_wav_extended(b)
         except NotImplementedError as exc:
@@ -1812,26 +1776,22 @@ HEADER_PREFIX_LEN = 64  # covers WAV 44-byte canonical header + OpusHead@28:36
 
 
 def codec_header_ok_col(bytes_col="bytes", codec_col="codec",
-                        sr_col="sr_hz", *,
-                        prefix_len: int = HEADER_PREFIX_LEN):
+                        sr_col="sr_hz"):
     """The production form of the header check: slice the first 64 bytes
     JVM-side, THEN cross to Python. The Arrow channel carries 64 B/row
     instead of the whole payload — at 8M x ~900 B rows that is a 14x cut in
     transfer volume, and the difference between a stage that anti-scales
     (measured 15s@4 cores -> 22s@16) and one that scales.
 
-    This is the ``codec_header`` entry of :func:`register_audio_checks`;
-    the fully-JVM :func:`codec_header_ok_expr` is ``codec_header_jvm``.
+    ``codec='mp3'`` rows send the whole payload: a leading ID3v2 tag has
+    no size bound, so the first frame header can sit anywhere.
 
-    Caveat for ``codec='mp3'``: an ID3v2 tag longer than ``prefix_len-4``
-    pushes the first frame header past the slice and the row fails the
-    check; raise ``prefix_len`` for ID3-heavy corpora, or prefer
-    ``codec_header_jvm``, which reads dynamic offsets with no prefix at
-    all."""
-    prefix = F.substring(F.col(bytes_col) if isinstance(bytes_col, str)
-                         else bytes_col, 1, prefix_len)
-    return codec_header_ok(prefix,
-                           F.col(codec_col) if isinstance(codec_col, str) else codec_col,
+    This is the ``codec_header`` entry of :func:`register_audio_checks`."""
+    b = F.col(bytes_col) if isinstance(bytes_col, str) else bytes_col
+    codec = F.col(codec_col) if isinstance(codec_col, str) else codec_col
+    payload = F.when(codec == "mp3", b).otherwise(
+        F.substring(b, 1, HEADER_PREFIX_LEN))
+    return codec_header_ok(payload, codec,
                            F.col(sr_col) if isinstance(sr_col, str) else sr_col)
 
 
@@ -1842,59 +1802,23 @@ def _le_u32_expr(b, off0: int):
     return F.conv(F.hex(rev), 16, 10).cast("long")
 
 
-def codec_header_ok_expr(bytes_col="bytes", codec_col="codec",
-                         sr_col="sr_hz"):
-    """Fully-JVM (whole-stage-codegen) variant of the header check — zero
-    Python in the plan. Same semantics as header_ok_batch."""
-    b = F.col(bytes_col) if isinstance(bytes_col, str) else bytes_col
-    codec = F.col(codec_col) if isinstance(codec_col, str) else codec_col
-    sr = F.col(sr_col) if isinstance(sr_col, str) else sr_col
-    long_enough = F.length(b) >= 4
-    is_wav = (long_enough
-              & (F.substring(b, 1, 4) == F.lit(b"RIFF"))
-              & (F.substring(b, 9, 4) == F.lit(b"WAVE")))
-    wav_ok = is_wav & (_le_u32_expr(b, 24) == sr.cast("long"))
-    flac_ok = long_enough & (F.substring(b, 1, 4) == F.lit(b"fLaC"))
-    opus_ok = (long_enough & (F.substring(b, 1, 4) == F.lit(b"OggS"))
-               & (F.substring(b, 29, 8) == F.lit(b"OpusHead")))
-    fmt_tag = F.conv(F.hex(F.concat(F.substring(b, 22, 1),
-                                    F.substring(b, 21, 1))), 16, 10) \
-        .cast("long")
-    return (F.when(codec == "pcm_s16le", wav_ok)
-             .when(codec == "flac", flac_ok)
-             .when(codec == "opus", opus_ok)
-             .when(codec == "pcm_alaw", wav_ok & (fmt_tag == 6))
-             .when(codec == "pcm_mulaw", wav_ok & (fmt_tag == 7))
-             .when(codec == "adpcm_ima_wav", wav_ok & (fmt_tag == 0x11))
-             .when(codec.isin("pcm_u8", "pcm_s24le", "pcm_s32le"),
-                   wav_ok & fmt_tag.isin(1, 0xFFFE))
-             .when(codec.isin("pcm_f32le", "pcm_f64le"),
-                   wav_ok & fmt_tag.isin(3, 0xFFFE))
-             .when(codec == "mp3", long_enough & _mp3_expr(b, sr))
-             .otherwise(F.lit(False)))
-
-
-def _mp3_expr(b, sr):
-    from .mp3 import mp3_header_ok_expr
-    return mp3_header_ok_expr(b, sr)
-
-
 def register_audio_checks() -> dict:
     """Named vectorized checks for the DSL's ``x-spark-check`` extension
     point (the reference's custom-Ajv-keyword analog, index.ts:49).
 
-    ``wav_riff_magic``, ``codec_header_jvm`` and ``canonical_wav`` are
-    pure-JVM expressions: they stay inline in the one-projection checks
-    pass. Every other entry is a pandas UDF. The compiler stages those
-    below the checks projection (``CompiledRuleset.staged``), so each
-    crosses to Python once per row, and an ArrowEvalPython stage appears
-    in the plan only when a ruleset references one. ``codec_header`` is
-    the Arrow prefix-UDF form (:func:`codec_header_ok_col`);
-    ``codec_header_jvm`` gives the same results with no Python."""
+    ``wav_riff_magic`` and ``canonical_wav`` are pure-JVM expressions:
+    they stay inline in the one-projection checks pass. Every other
+    entry is a pandas UDF. The compiler stages those below the checks
+    projection (``CompiledRuleset.staged``), so each crosses to Python
+    once per row, and an ArrowEvalPython stage appears in the plan only
+    when a ruleset references one. ``codec_header`` is the Arrow
+    prefix-UDF form (:func:`codec_header_ok_col`); a Column-expression
+    form of it generated about 13x the Java of ``canonical_wav`` per
+    projection and cost more CPU per lint (BASELINE.md "Header check:
+    one form")."""
     return {
         "wav_riff_magic": lambda col: F.substring(col, 1, 4) == F.lit(b"RIFF"),
         "codec_header": lambda col: codec_header_ok_col(col, "codec", "sr_hz"),
-        "codec_header_jvm": lambda col: codec_header_ok_expr(col, "codec", "sr_hz"),
         "voiced_content": lambda col: has_voiced_content(col),
         "tonal_content": lambda col: has_tonal_content(col),
         "not_clipped": lambda col: is_not_clipped(col),
@@ -1905,24 +1829,6 @@ def register_audio_checks() -> dict:
                                                           F.col("sr_hz")),
         "duration_consistent": duration_consistent_check(),
     }
-
-
-def decode_stats_map_in_pandas(iterator):
-    """mapInPandas decoder: per-batch loop over binary payloads (binary
-    container parsing is inherently per-value, but it stays inside one Arrow
-    batch — no per-row Python UDF dispatch). Emits decode stats; malformed
-    payloads become decode_ok=false rows, never exceptions."""
-    for pdf in iterator:
-        rows = []
-        for cid, b in zip(pdf["clip_id"], pdf["bytes"]):
-            try:
-                sr, samples = decode_payload_any(bytes(b) if b is not None else b"")
-                rows.append((cid, True, sr, len(samples),
-                             float(np.sqrt(np.mean(samples**2))) if len(samples) else 0.0))
-            except ValueError:
-                rows.append((cid, False, None, None, None))
-        yield pd.DataFrame(rows, columns=["clip_id", "decode_ok",
-                                          "sr_hz_payload", "n_samples", "rms"])
 
 
 # ---------------------------------------------------------------------------
@@ -2440,22 +2346,11 @@ def canonicalize_clips(clips, *, target_sr: int = 16000,
         schema = f"{schema}, {pt_ddl}"
 
     def _decode_with_channels(b: bytes):
-        """(sr, src_channels, mono float x) for any engine codec: the
-        PCM16 chunk-walker keeps its exact path; other containers route
-        through decode_payload_any with src_channels read from container
-        metadata (wav_info for the WAV family; the FLAC subset is mono)."""
-        try:
-            return _parse_wav_pcm16(b)
-        except ValueError:
-            pass
+        """(sr, src_channels, mono float x) for any engine codec:
+        src_channels is the WAV fmt chunk's channel count (the FLAC
+        subset is mono)."""
         sr, x = decode_payload_any(b)       # ValueError propagates
-        n_ch = 1
-        if b[:4] == b"RIFF":
-            from .pcm_codecs import wav_info
-            try:
-                n_ch = int(wav_info(b)["n_ch"])
-            except (ValueError, NotImplementedError):
-                n_ch = 1
+        n_ch = int(_walk_wav(b)["n_ch"]) if b[:4] == b"RIFF" else 1
         return sr, n_ch, x
 
     def fn(iterator):
@@ -2507,7 +2402,6 @@ def transcode_payload(b: bytes, codec: str) -> bytes:
         return wav_bytes(pcm, sr)
     if codec in ("pcm_mulaw", "pcm_alaw", "adpcm_ima_wav", "pcm_u8",
                  "pcm_s24le", "pcm_s32le", "pcm_f32le", "pcm_f64le"):
-        from .pcm_codecs import decode_wav_extended
         sr, x = decode_wav_extended(b)
         return wav_bytes(_to_pcm16(x), sr)
     if codec == "opus":

@@ -197,47 +197,6 @@ def mp3_header_ok_batch(b: pd.Series, sr_hz: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="bool")
 
 
-def mp3_header_ok_expr(bytes_col: str = "bytes", sr_col: str = "sr_hz"):
-    """Pure-JVM twin of :func:`mp3_header_ok_batch` (whole-stage-codegen
-    Column expression, parity-tested): skip a leading ID3v2 tag via its
-    syncsafe size, then check frame sync, non-reserved version/layer/
-    bitrate/samplerate fields, and that the header's samplerate equals
-    the declared column."""
-    from pyspark.sql import functions as F
-
-    b = F.col(bytes_col) if isinstance(bytes_col, str) else bytes_col
-    sr_declared = (F.col(sr_col) if isinstance(sr_col, str)
-                   else sr_col).cast("int")
-
-    def u8(pos):
-        return F.conv(F.hex(F.substring(b, pos, 1)), 16, 10).cast("int")
-
-    is_id3 = F.substring(b, 1, 3) == F.lit(b"ID3")
-    syncsafe = ((u8(F.lit(7)) * F.lit(1 << 21))
-                + (u8(F.lit(8)) * F.lit(1 << 14))
-                + (u8(F.lit(9)) * F.lit(1 << 7)) + u8(F.lit(10)))
-    footer = F.when(u8(F.lit(6)).bitwiseAND(0x10) > 0, F.lit(10)) \
-        .otherwise(F.lit(0))
-    # 1-based offset of the first frame header
-    off = F.when(is_id3, F.lit(11) + syncsafe + footer).otherwise(F.lit(1))
-    b1, b2, b3 = u8(off), u8(off + 1), u8(off + 2)
-    ver = F.shiftright(b2, 3).bitwiseAND(3)
-    layer = F.shiftright(b2, 1).bitwiseAND(3)
-    bidx = F.shiftright(b3, 4).bitwiseAND(15)
-    sidx = F.shiftright(b3, 2).bitwiseAND(3)
-    sr = (F.when(ver == 3, F.when(sidx == 0, 44100)
-                 .when(sidx == 1, 48000).otherwise(32000))
-          .when(ver == 2, F.when(sidx == 0, 22050)
-                .when(sidx == 1, 24000).otherwise(16000))
-          .otherwise(F.when(sidx == 0, 11025)
-                     .when(sidx == 1, 12000).otherwise(8000)))
-    return ((F.length(b) >= off + 3)
-            & (b1 == 255) & (b2.bitwiseAND(0xE0) == 0xE0)
-            & (ver != 1) & (layer != 0)
-            & (bidx != 0) & (bidx != 15) & (sidx != 3)
-            & (sr == sr_declared))
-
-
 # ---------------------------------------------------------------------------
 # deterministic fixture writer (CBR/VBR; header-real, payload opaque)
 # ---------------------------------------------------------------------------

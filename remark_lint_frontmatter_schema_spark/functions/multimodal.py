@@ -1,8 +1,8 @@
 """Multimodal payload plumbing: opaque binary columns + typed metadata.
 
 Images/video/audio are carried as ``binary`` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample run as Arrow-
-batched ``mapInPandas`` stages. Pixel decode is REAL for PNG (pure
+struct; decode / feature-extract / resize run as Arrow-batched
+``mapInPandas`` stages (video frame sampling: functions/video.py). Pixel decode is REAL for PNG (pure
 numpy+zlib below: all five scanline filters, chunk CRC-32 verified,
 8-bit gray/GA/RGB/RGBA), GIF (variable-width LZW below) and baseline
 JPEG (functions/jpeg.py: Annex-K tables, Huffman + DCT, 4:4:4 subset)
@@ -42,12 +42,6 @@ MEDIA_SCHEMA = ("media_id string, bytes binary, media_type string, "
 
 IMAGE_META_SCHEMA = ("media_id string, format string, width int, height int, "
                      "n_bytes long, decode_ok boolean")
-
-IMAGE_FEATURES_SCHEMA = ("media_id string, feature array<float>, "
-                         "feat_dim int")
-
-FRAME_SAMPLE_SCHEMA = ("media_id string, frame_idx int, frame_ts_ms int, "
-                       "frame_bytes_stub string")
 
 
 def sniff_image_format(b: bytes) -> str | None:
@@ -579,7 +573,7 @@ def make_gif(i: int, w: int = 11, h: int = 7, n_colors: int = 16) -> bytes:
 def image_magic_ok_expr(bytes_col="bytes"):
     """Pure-JVM (whole-stage-codegen) container sniff: payload starts with
     a known image magic (PNG/JPEG/GIF/WEBP) — the image twin of audio's
-    ``codec_header_jvm``. Zero Python in the plan; the cheap first gate a
+    ``wav_riff_magic``. Zero Python in the plan; the cheap first gate a
     ruleset runs before paying for a real decode."""
     b = F.col(bytes_col) if isinstance(bytes_col, str) else bytes_col
     png = F.substring(b, 1, 8) == F.lit(_PNG_SIG)
@@ -764,10 +758,10 @@ def _header_dims(raw: bytes) -> tuple[int | None, int | None]:
 
 def image_decode_stats_map_in_pandas(iterator):
     """mapInPandas: binary -> REAL pixel-decode verdicts (PNG decodes
-    natively; formats needing a codec lib report ok=false with the reason
-    — the image twin of audio's decode_stats_map_in_pandas). The decoded
-    dims are proof, not header trust: a PNG whose IHDR lies about its size
-    fails the stream-length check and lands here as a violation row.
+    natively; formats needing a codec lib report ok=false with the
+    reason). The decoded dims are proof, not header trust: a PNG whose
+    IHDR lies about its size fails the stream-length check and lands
+    here as a violation row.
     Subset-refused streams (e.g. progressive SOF2 JPEG) report
     ok=false WITH their header dimensions populated — the refusal is
     about pixels, not metadata."""
@@ -792,8 +786,7 @@ def decoded_image_features(b: bytes, *, hist_bins: int = 8,
                            thumb: int = 4) -> np.ndarray:
     """Real feature vector from decoded pixels: per-channel mean/std,
     luminance histogram, and a bilinear thumbnail — deterministic, and
-    actually a function of the image content (unlike fake_image_features,
-    which hashes bytes for plumbing tests)."""
+    a function of the image content."""
     px = decode_image(b).astype(np.float32)
     ch_mean = px.mean(axis=(0, 1)) / 255.0
     ch_std = px.std(axis=(0, 1)) / 255.0
@@ -804,14 +797,6 @@ def decoded_image_features(b: bytes, *, hist_bins: int = 8,
     return np.concatenate([ch_mean, ch_std, hist,
                            tiny.mean(axis=2).ravel() / 255.0]).astype(
                                np.float32)
-
-
-def fake_image_features(b: bytes, dim: int = 16) -> np.ndarray:
-    """Deterministic stand-in feature vector derived from the bytes alone
-    (so plumbing tests have stable expected values)."""
-    arr = np.frombuffer(b[:1024].ljust(1024, b"\0"), dtype=np.uint8)
-    chunks = arr.reshape(dim, -1).astype(np.float32)
-    return chunks.mean(axis=1) / 255.0
 
 
 def image_meta_map_in_pandas(iterator):
@@ -827,40 +812,6 @@ def image_meta_map_in_pandas(iterator):
             rows.append((mid, fmt, w, h, len(raw), fmt is not None))
         yield pd.DataFrame(rows, columns=["media_id", "format", "width",
                                           "height", "n_bytes", "decode_ok"])
-
-
-def image_features_map_in_pandas(iterator):
-    """mapInPandas: binary -> feature vectors (deterministic fake embedder;
-    swap fake_image_features for a real model at deploy time)."""
-    for pdf in iterator:
-        rows = []
-        for mid, b in zip(pdf["media_id"], pdf["bytes"]):
-            raw = bytes(b) if b is not None else b""
-            feat = fake_image_features(raw)
-            rows.append((mid, [float(x) for x in feat], len(feat)))
-        yield pd.DataFrame(rows, columns=["media_id", "feature", "feat_dim"])
-
-
-def frame_sample_map_in_pandas(every_ms: int = 1000):
-    """Video frame-sampling SCHEDULE stub for compressed codecs: emits
-    indices + timestamps from declared duration metadata with a stub
-    payload marker. For real frame sampling with real pixel decode use
-    functions/video.py (Y4M: closed-form frame offsets, decodes ONLY the
-    sampled frames); this shape remains for codecs that need an external
-    decoder. One input row -> many frame rows, still map-only."""
-
-    def fn(iterator):
-        for pdf in iterator:
-            rows = []
-            for mid, meta in zip(pdf["media_id"], pdf["meta"]):
-                meta = meta or {}
-                dur = int(meta.get("dur_ms", "0"))
-                for k, ts in enumerate(range(0, max(dur, 0), every_ms)):
-                    rows.append((mid, k, ts, "STUB:frame-decode-needs-codec"))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx",
-                                              "frame_ts_ms",
-                                              "frame_bytes_stub"])
-    return fn
 
 
 def make_png_stub(i: int, w: int = 4, h: int = 3) -> bytes:

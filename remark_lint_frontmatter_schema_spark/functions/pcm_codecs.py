@@ -356,9 +356,12 @@ def wav_bytes_pcm(x: np.ndarray, sr_hz: int, *, bits: int = 16,
 
 
 def _walk_wav(b: bytes) -> dict:
-    """RIFF chunk walk -> {fmt fields, data payload, fact count}.
-    Same grammar/policy as audio._parse_wav_pcm16 (any chunk order,
-    pad bytes honored, ValueError on malformed)."""
+    """RIFF chunk walk -> {fmt fields, data payload, fact count}: the
+    one WAV container parser behind every WAV decode. Any chunk order,
+    unknown chunks skipped, odd-size pad bytes honored per RIFF; an
+    EXTENSIBLE wrapper's subformat GUID routes back to the classic tag
+    (``container_tag`` records the wrapper). ValueError on malformed
+    containers."""
     if len(b) < 12 or b[0:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE container")
     pos, end = 12, len(b)
@@ -373,8 +376,6 @@ def _walk_wav(b: bytes) -> dict:
             (info["fmt_tag"], info["n_ch"], info["sr"], _,
              info["block_align"], info["bits"]) = struct.unpack_from(
                 "<HHIIHH", b, body)
-            if size >= 20:
-                info["ext"] = struct.unpack_from("<H", b, body + 18)[0]
             if info["fmt_tag"] == WAVE_FORMAT_EXTENSIBLE:
                 # cbSize(2) validBits(2) channelMask(4) SubFormat GUID(16)
                 if size < 40 or body + 40 > end:
@@ -406,6 +407,12 @@ def _walk_wav(b: bytes) -> dict:
     if info["raw"] is None:
         raise ValueError("missing data chunk")
     return info
+
+
+def _is_plain_pcm16(info: dict) -> bool:
+    """A walked fmt is bare integer PCM at 16 bits (no EXTENSIBLE)."""
+    return (info["fmt_tag"] == WAVE_FORMAT_PCM and info["bits"] == 16
+            and info["n_ch"] >= 1 and "container_tag" not in info)
 
 
 def _ima_samples_per_block(block_align: int, n_ch: int = 1) -> int:
@@ -443,18 +450,17 @@ def decode_wav_extended(b: bytes) -> tuple[int, np.ndarray]:
     WAVE_FORMAT_EXTENSIBLE (0xFFFE — the subformat GUID routes back to
     the classic tag). Multi-channel payloads downmix by channel mean
     (the corpus canonical form). ValueError on malformed containers,
-    same policy as decode_wav_pcm16."""
+    same policy as audio.decode_wav_pcm16, which is this decode
+    restricted to plain PCM16."""
     info = _walk_wav(b)
     tag, raw = info["fmt_tag"], info["raw"]
     n_ch, sr = info["n_ch"], info["sr"]
     if n_ch < 1:
         raise ValueError("bad channel count")
     if tag == WAVE_FORMAT_PCM:
-        if info["bits"] == 16 and "container_tag" not in info:
-            from .audio import decode_wav_pcm16
-            return decode_wav_pcm16(b)
         x = _decode_int_pcm(raw, info["bits"], n_ch)
-        if info["fact"] is not None:
+        # plain PCM16 keeps every data frame, a fact chunk notwithstanding
+        if info["fact"] is not None and not _is_plain_pcm16(info):
             x = x[: info["fact"]]
         return sr, x
     if tag == WAVE_FORMAT_IEEE_FLOAT:

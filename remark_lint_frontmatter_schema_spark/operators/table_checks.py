@@ -134,18 +134,21 @@ _GOPHER_RULES = {"word_count", "mean_word_len", "symbol_ratio",
                  "stopwords"}
 
 
-def _band(v: dict) -> bool:
-    """lo or hi is given, and lo <= hi when both are"""
-    lo, hi = v.get("lo"), v.get("hi")
-    return (lo is not None or hi is not None) and (
-        lo is None or hi is None or lo <= hi)
+# a cross-field rule sees the value as written (``v``) and the compiled
+# params (``p``, defaults filled in), so a bound left to its default is
+# checked too
+def _band(v: dict, p: dict) -> bool:
+    """lo or hi is given, and lo <= hi once both are known"""
+    return (v.get("lo") is not None or v.get("hi") is not None) and (
+        p["lo"] is None or p["hi"] is None or p["lo"] <= p["hi"])
 
 
-def _drift_rule(v: dict) -> bool:
-    """the per-segment form carries ks/psi only (emd/jsd/cvm are global)"""
-    return v.get("by") is None or all(
-        v.get(k) is None
-        for k in ("emd_threshold", "jsd_threshold", "cvm_threshold"))
+def _drift_rule(v: dict, p: dict) -> bool:
+    """lo < hi, and the per-segment form carries ks/psi only (emd/jsd/
+    cvm are global)"""
+    return p["lo"] < p["hi"] and (p["by"] is None or all(
+        p[k] is None
+        for k in ("emd_threshold", "jsd_threshold", "cvm_threshold")))
 
 
 # placements: where in the schema tree a declaration compiles (anything
@@ -173,7 +176,7 @@ class TableCheck:
     run: Callable                 # runner(df, column, params, ctx)
     where: str = TOP              # placement
     params: tuple = ()            # Param declarations, in params order
-    rule: Callable | None = None  # cross-field predicate on the raw dict
+    rule: Callable | None = None  # cross-field predicate(v, params)
     column: str | None = None     # param naming a column that must exist
     dim: str | None = None        # param naming the relation in ``dims``
     form: str = "params"          # or x-unique's "flag" / "keys"
@@ -189,7 +192,7 @@ class TableCheck:
         return isinstance(v, dict) and all(
             not p.required if v.get(p.name) is None else p.ok(v[p.name])
             for p in self.params) and (
-            self.rule is None or self.rule(v))
+            self.rule is None or self.rule(v, self.compile(v, "")))
 
     def declares(self, v) -> bool:
         """A shape-valid value of the keyword declares this kind."""

@@ -1,10 +1,10 @@
 """Binary header checks as first-class DSL constraints (x-spark-check),
-and equivalence of the three header-check implementations."""
+and the header check's 64-byte prefix form against the full payload."""
 
 import pytest
 
 from remark_lint_frontmatter_schema_spark import compile_ruleset, validate
-from remark_lint_frontmatter_schema_spark.functions import audio
+from remark_lint_frontmatter_schema_spark.functions import audio, mp3
 from remark_lint_frontmatter_schema_spark.sources import fixtures
 
 
@@ -15,17 +15,50 @@ def clips(spark):
     return df
 
 
-def test_three_header_impls_agree(clips):
-    df = clips.where("bytes is not null").select(
-        "clip_id",
-        audio.codec_header_ok("bytes", "codec", "sr_hz").alias("full"),
-        audio.codec_header_ok_col().alias("prefix"),
-        audio.codec_header_ok_expr().alias("jvm"),
-    )
+def _long_id3_mp3(i: int) -> bytes:
+    """An MP3 behind a 200-byte ID3v2 tag: its first frame header sits
+    past the 64-byte prefix the other codecs are checked on."""
+    body = b"\x00" * 200
+    return (b"ID3\x04\x00\x00" + bytes([0, 0, len(body) >> 7,
+                                          len(body) & 0x7F]) + body
+            + mp3.make_mp3(i, sr_hz=44100, audio_ms=100))
+
+
+def test_header_prefix_matches_full_payload(clips):
+    long_id3 = clips.sparkSession.createDataFrame(
+        [("mp3_long_id3", _long_id3_mp3(1), "mp3", 44100)],
+        "clip_id string, bytes binary, codec string, sr_hz int")
+    df = (clips.where("bytes is not null")
+          .select("clip_id", "bytes", "codec", "sr_hz")
+          .unionByName(long_id3)
+          .select(
+              "clip_id",
+              audio.codec_header_ok("bytes", "codec", "sr_hz").alias("full"),
+              audio.codec_header_ok_col().alias("prefix")))
     rows = df.collect()
     assert rows
     for r in rows:
-        assert r.full == r.prefix == r.jvm, r
+        assert r.full == r.prefix, r
+    assert [r.prefix for r in rows if r.clip_id == "mp3_long_id3"] == [True]
+
+
+def test_header_check_dsl_null_and_long_id3(spark):
+    """codec_header through the DSL: an MP3 behind a long ID3v2 tag
+    passes; a RIFF/WAVE payload with a NULL sr_hz, or cut to 20 bytes,
+    is a violation (the check is false there, never NULL)."""
+    wav = audio.synth_wav(1, 16000, 50)
+    df = spark.createDataFrame(
+        [("mp3_long_id3", _long_id3_mp3(2), "mp3", 44100),
+         ("wav_null_sr", wav, "pcm_s16le", None),
+         ("wav_cut_20", wav[:20], "pcm_s16le", 16000)],
+        "clip_id string, bytes binary, codec string, sr_hz int")
+    compiled = compile_ruleset(
+        {"properties": {"bytes": {"x-spark-check": "codec_header"}}},
+        df.schema, name="hdr", extra_checks=audio.register_audio_checks())
+    got = sorted((r.row_id, r.keyword) for r in validate(
+        df, compiled, row_id="clip_id").violations.collect())
+    assert got == [("wav_cut_20", "x-spark-check"),
+                   ("wav_null_sr", "x-spark-check")]
 
 
 def test_header_check_via_dsl(clips):
@@ -85,7 +118,7 @@ def _filters(df) -> int:
 def test_jvm_check_is_not_staged_and_keeps_prefilter(clips):
     checks = audio.register_audio_checks()
     jvm = compile_ruleset(
-        {"properties": {"bytes": {"x-spark-check": "codec_header_jvm"}}},
+        {"properties": {"bytes": {"x-spark-check": "canonical_wav"}}},
         clips.schema, name="jvm", extra_checks=checks)
     assert jvm.staged == []
     res = validate(clips, jvm, row_id="clip_id")

@@ -2,7 +2,7 @@
 pcm_s16le/flac/opus + telephony G.711/IMA-ADPCM + wide/float PCM with
 bare or WAVE_FORMAT_EXTENSIBLE containers) driven through the WHOLE
 validation loop — fixture generation, DSL compile, one-projection
-validate with the JVM codec-header check, canonicalizing transcode, and
+validate with the codec-header check, canonicalizing transcode, and
 the north-star per-row fidelity invariant (decoded-PCM SNR vs the
 generator's reference signal, BASELINE.json input_hint).
 
@@ -37,7 +37,7 @@ def _ruleset():
         "properties": {
             "codec": {"enum": fx.CODECS_EXTENDED},
             "sr_hz": {"type": "integer", "minimum": 8000, "maximum": 48000},
-            "bytes": {"x-spark-check": "codec_header_jvm"},
+            "bytes": {"x-spark-check": "codec_header"},
         },
         "required": ["clip_id", "bytes", "codec", "transcript"],
     }
@@ -46,8 +46,8 @@ def _ruleset():
 def test_extended_corpus_full_loop(spark, ext_rows):
     """Validate the extended corpus end-to-end: the violating rows are
     exactly the injected defect classes the ruleset covers, across every
-    codec family (so the JVM header expression's new tag branches are
-    exercised by the same one-projection plan the base corpus uses)."""
+    codec family (so the header check's new tag branches are exercised
+    by the same plan the base corpus uses)."""
     df, _ = ext_rows
     compiled = compile_ruleset(
         _ruleset(), df.schema,

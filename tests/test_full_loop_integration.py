@@ -85,13 +85,13 @@ def test_table_checks_compose_over_repaired_output(spark, clips):
 
 def test_curation_gate_runs_on_repaired_corpus(spark, clips):
     """Payload gates (header sanity) compose after repair: the repaired
-    table still carries the binary column untouched, so the pure-JVM
-    canonical/header checks run unchanged on it."""
+    table still carries the binary column untouched, so the header
+    check runs unchanged on it."""
     from remark_lint_frontmatter_schema_spark.functions import audio
 
     rep = repair(clips, RULESET, row_id="clip_id")
     ok = (rep.repaired.where("bytes is not null")
-          .where(audio.codec_header_ok_expr()))
+          .where(audio.codec_header_ok_col()))
     n_ok = ok.count()
     n_all = rep.repaired.where("bytes is not null").count()
     assert 0 < n_ok < n_all  # fixture injects corrupt headers

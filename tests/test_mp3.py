@@ -128,7 +128,9 @@ def _rows():
     ]
 
 
-def test_header_check_pandas_and_jvm_parity(spark):
+def test_header_check_batch_and_column_parity(spark):
+    """header_ok_batch and the codec_header column (64-byte prefix, the
+    whole payload for mp3 rows) agree on MP3 rows and their mismatches."""
     rows = _rows()
     got = audio.header_ok_batch(
         pd.Series([r[1] for r in rows]),
@@ -138,18 +140,9 @@ def test_header_check_pandas_and_jvm_parity(spark):
     df = spark.createDataFrame(
         [(r[0], r[1], r[2], r[3]) for r in rows],
         "clip_id string, bytes binary, codec string, sr_hz int")
-    jvm = {r["clip_id"]: r["ok"] for r in df.select(
-        "clip_id", audio.codec_header_ok_expr().alias("ok")).collect()}
-    assert jvm == {r[0]: r[4] for r in rows}
-
-
-def test_jvm_expr_is_codegen_clean(spark):
-    df = spark.createDataFrame(
-        [("a", b"\xff\xfb\x90\x64", "mp3", 44100)],
-        "clip_id string, bytes binary, codec string, sr_hz int")
-    plan = df.select(audio.codec_header_ok_expr().alias("ok")) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    col = {r["clip_id"]: r["ok"] for r in df.select(
+        "clip_id", audio.codec_header_ok_col().alias("ok")).collect()}
+    assert col == {r[0]: r[4] for r in rows}
 
 
 def test_payload_duration_routes_mp3():

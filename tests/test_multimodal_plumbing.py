@@ -13,7 +13,6 @@ def media(spark):
         for i in range(10)
     ] + [
         ("bad_0", b"\x00\x01not-an-image", "image", {}),
-        ("vid_0", b"\x00" * 16, "video", {"dur_ms": "3500"}),
     ]
     return spark.createDataFrame(rows, mm.MEDIA_SCHEMA).cache()
 
@@ -28,29 +27,6 @@ def test_image_meta(media):
     assert (rows["img_0"].width, rows["img_0"].height) == (4, 3)
     assert (rows["img_3"].width, rows["img_3"].height) == (7, 6)
     assert rows["bad_0"].decode_ok is False
-
-
-def test_image_features_deterministic(media):
-    out = media.where("media_type = 'image'") \
-        .select("media_id", "bytes") \
-        .mapInPandas(mm.image_features_map_in_pandas,
-                     schema=mm.IMAGE_FEATURES_SCHEMA)
-    rows = {r.media_id: r for r in out.collect()}
-    assert all(r.feat_dim == 16 for r in rows.values())
-    expect = mm.fake_image_features(mm.make_png_stub(2, w=6, h=5))
-    got = rows["img_2"].feature
-    assert all(abs(a - b) < 1e-6 for a, b in zip(got, expect))
-
-
-def test_frame_sample_schedule(media):
-    out = media.where("media_type = 'video'") \
-        .select("media_id", "meta") \
-        .mapInPandas(mm.frame_sample_map_in_pandas(every_ms=1000),
-                     schema=mm.FRAME_SAMPLE_SCHEMA)
-    rows = out.collect()
-    assert [(r.frame_idx, r.frame_ts_ms) for r in rows] == \
-        [(0, 0), (1, 1000), (2, 2000), (3, 3000)]
-    assert all(r.frame_bytes_stub.startswith("STUB:") for r in rows)
 
 
 def test_pixel_decode_png_real_others_stubbed():

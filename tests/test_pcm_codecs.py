@@ -253,9 +253,9 @@ def test_payload_duration_covers_new_codecs():
 
 
 def test_header_check_telephony_parity():
-    """header_ok_batch and the pure-JVM expr agree on the new codecs:
-    tag match, tag mismatch (declared mulaw, payload alaw), sr mismatch,
-    garbage."""
+    """header_ok_batch and the codec_header column agree on the new
+    codecs: tag match, tag mismatch (declared mulaw, payload alaw), sr
+    mismatch, garbage."""
     import pandas as pd
     from pyspark.sql import functions as F
     from conftest import get_spark
@@ -278,9 +278,9 @@ def test_header_check_telephony_parity():
     df = spark.createDataFrame(
         [(r[0], r[1], r[2], r[3]) for r in rows],
         "clip_id string, bytes binary, codec string, sr_hz int")
-    jvm = {r["clip_id"]: r["ok"] for r in df.select(
-        "clip_id", audio.codec_header_ok_expr().alias("ok")).collect()}
-    assert jvm == {r[0]: r[4] for r in rows}
+    col = {r["clip_id"]: r["ok"] for r in df.select(
+        "clip_id", audio.codec_header_ok_col().alias("ok")).collect()}
+    assert col == {r[0]: r[4] for r in rows}
 
 
 # --- transcode integration ---------------------------------------------------
@@ -393,8 +393,8 @@ def test_float_wav_clips_out_of_range_samples():
 
 
 def test_header_check_extended_pcm_parity():
-    """Python batch and pure-JVM expr agree on wide/float PCM codecs,
-    bare and EXTENSIBLE-wrapped, plus tag and sr mismatches."""
+    """Python batch and the codec_header column agree on wide/float PCM
+    codecs, bare and EXTENSIBLE-wrapped, plus tag and sr mismatches."""
     import pandas as pd
     from conftest import get_spark
     x = _signal(512)
@@ -424,9 +424,9 @@ def test_header_check_extended_pcm_parity():
     df = spark.createDataFrame(
         [(r[0], r[1], r[2], r[3]) for r in rows],
         "clip_id string, bytes binary, codec string, sr_hz int")
-    jvm = {r["clip_id"]: r["ok"] for r in df.select(
-        "clip_id", audio.codec_header_ok_expr().alias("ok")).collect()}
-    assert jvm == {r[0]: r[4] for r in rows}
+    col = {r["clip_id"]: r["ok"] for r in df.select(
+        "clip_id", audio.codec_header_ok_col().alias("ok")).collect()}
+    assert col == {r[0]: r[4] for r in rows}
 
 
 def test_transcode_payload_extended_pcm():

@@ -94,3 +94,17 @@ def test_table_check_in_composition_names_keyword_and_path(
     c = compile_ruleset(ruleset, T._parse_datatype_string(SCHEMA))
     assert c.table_checks == []
     assert c.unknown == unknown
+
+
+@pytest.mark.parametrize("kw,column,value", [
+    # hi is left to its default, 121
+    ("x-readability", "a", {"id": "b", "lo": 200}),
+    ("x-drift", "n", {"partition_col": "t", "side_a": "x", "side_b": "y",
+                      "lo": 5, "hi": 1}),
+], ids=["readability-lo-above-default-hi", "drift-lo-above-hi"])
+def test_inverted_band_is_rejected(spark, kw, column, value):
+    from remark_lint_frontmatter_schema_spark.plans.bundler import (
+        RulesetCompileError)
+    with pytest.raises(RulesetCompileError,
+                       match=f"bad value for '{kw}' at "):
+        _compile(kw, column, value)

@@ -10,6 +10,17 @@ Two behaviours are deliberately left out because they are defined
 elsewhere: an explicit ``null`` param (``test_table_check_specs.py``)
 and a table check inside a composition at a property node.
 
+The row keywords (every JSON-Schema keyword and every row ``x-*``
+keyword) have their own matrix at ten placements: a string, integral,
+double, binary, ``array<string>``, ``array<double>``, struct and
+``map<string,string>`` column, the root and a variant column. Each case
+pins every compiled check in full (ids, paths, message, expected,
+severity and the printed ``violated`` and ``actual`` Columns) plus the
+staged columns, ``unknown``, the static passes and failures and
+``columns_read``, in ``compile_snapshot_rows.json``. Lambda variables
+print with a JVM-global counter (``x_17``), so they are renumbered in
+order of appearance, and a binary literal's identity hash is dropped.
+
 Regenerate the expectations with ``python tests/test_compile_snapshot.py``
 only when a compile output changes on purpose.
 """
@@ -17,6 +28,7 @@ only when a compile output changes on purpose.
 from __future__ import annotations
 
 import json
+import re
 from pathlib import Path
 
 import pytest
@@ -31,6 +43,7 @@ from remark_lint_frontmatter_schema_spark.sources.fixtures import (
     CLIPS_SCHEMA)
 
 SNAPSHOT = Path(__file__).with_name("compile_snapshot.json")
+ROW_SNAPSHOT = Path(__file__).with_name("compile_snapshot_rows.json")
 RULESETS = Path(__file__).resolve().parent.parent / "rulesets"
 
 # table schemas as DDL, parsed once a session is up
@@ -385,11 +398,265 @@ def test_compile_matches_snapshot(spark, expected, case):
     assert _compile(spark, case) == expected[case]
 
 
+
+
+# -- row keywords -----------------------------------------------------------
+
+# one column per placement, plus the columns x-langid / x-rate name
+ROWS = ("s string, i int, d double, b binary, sa array<string>, "
+        "da array<double>, st struct<a:int,b:string>, "
+        "m map<string,string>, v variant, lang string, dur_ms int")
+ROW_PLACEMENTS = ("s", "i", "d", "b", "sa", "da", "st", "m", "root", "v")
+_DEFS = {"pos": {"minimum": 0, "maxLength": 3}}
+_ROW_CHECKS = {"present": lambda c: c.isNotNull()}
+
+# keyword -> the schema nodes that exercise it (companion keywords ride
+# along where the keyword reads them)
+ROW_FORMS = {
+    "type": [{"type": t} for t in ("string", "integer", "number",
+                                   "boolean", "object", "array", "null")]
+    + [{"type": ["integer", "string"]}, {"type": ["integer", "null"]}],
+    "enum": [{"enum": ["a", "b"]}, {"enum": [1, 2.5]},
+             {"enum": [None, "a"]}, {"enum": [None]},
+             {"enum": [{"k": 1}]}],
+    "const": [{"const": "a"}, {"const": 3}, {"const": None},
+              {"const": [1]}],
+    "maxLength": [{"maxLength": 3}],
+    "minLength": [{"minLength": 2}],
+    "pattern": [{"pattern": "^a+$"}],
+    "format": [{"format": f} for f in ("date", "int32", "password",
+                                       "double", "regex", "bogus")],
+    "contentEncoding": [{"contentEncoding": "base64"},
+                        {"contentEncoding": "quoted-printable"}],
+    "contentMediaType": [
+        {"contentMediaType": "application/json"},
+        {"contentMediaType": "image/png"},
+        {"contentEncoding": "base64", "contentMediaType": "image/png"},
+        {"contentEncoding": "base64",
+         "contentMediaType": "application/json"}],
+    "contentSchema": [
+        {"contentMediaType": "application/json",
+         "contentSchema": {"required": ["a"]}},
+        {"contentEncoding": "base64", "contentMediaType": "application/json",
+         "contentSchema": {"properties": {"a": {"type": "integer"}}}},
+        {"contentSchema": {"required": ["a"]}}],
+    "minimum": [{"minimum": 0}, {"minimum": 1.5}],
+    "maximum": [{"maximum": 10}],
+    "exclusiveMinimum": [{"exclusiveMinimum": 0}],
+    "exclusiveMaximum": [{"exclusiveMaximum": 10}],
+    "multipleOf": [{"multipleOf": 2}, {"multipleOf": 0.5}],
+    "x-finite": [{"x-finite": True}, {"x-finite": False}],
+    "maxItems": [{"maxItems": 2}],
+    "minItems": [{"minItems": 1}],
+    "required": [{"required": ["a", "zz"]}, {"required": ["s", "i"]}],
+    "properties": [{"properties": {"a": {"minimum": 0},
+                                   "zz": {"type": "string", "bogus": 1}}},
+                   {"properties": {"s": {"minLength": 1}}}],
+    "patternProperties": [{"patternProperties": {"^a": {"minimum": 0},
+                                                 "^q": {"type": "string"}}}],
+    "prefixItems": [{"prefixItems": [{"minLength": 1}]},
+                    {"prefixItems": [{"minLength": 1}],
+                     "items": {"maxLength": 5}},
+                    {"prefixItems": [{"minLength": 1}],
+                     "additionalItems": False}],
+    "items": [{"items": {"minLength": 1}},
+              {"items": [{"type": "string"}, {"minimum": 0}]},
+              {"items": [{"type": "string"}], "additionalItems": False},
+              {"items": [{"type": "string"}],
+               "additionalItems": {"maxLength": 2}}],
+    "additionalItems": [{"additionalItems": False}],
+    "additionalProperties": [
+        {"additionalProperties": False},
+        {"additionalProperties": {"minimum": 0}},
+        {"properties": {"a": {}}, "patternProperties": {"^s": {}},
+         "additionalProperties": False},
+        {"properties": {"a": {}}, "additionalProperties": True}],
+    "unevaluatedProperties": [
+        {"unevaluatedProperties": False},
+        {"allOf": [{"properties": {"a": {}}}],
+         "unevaluatedProperties": {"minLength": 1}},
+        {"unevaluatedProperties": True}],
+    "unevaluatedItems": [
+        {"unevaluatedItems": False},
+        {"prefixItems": [{}], "contains": {"minLength": 2},
+         "unevaluatedItems": {"maxLength": 1}}],
+    "allOf": [{"allOf": [{"minimum": 0}, {"maxLength": 3}]}],
+    "anyOf": [{"anyOf": [{"type": "string"}, {"minimum": 0}]}],
+    "oneOf": [{"oneOf": [{"type": "string"}, {"minimum": 0}]}],
+    "not": [{"not": {"type": "string"}}],
+    "uniqueItems": [{"uniqueItems": True}, {"uniqueItems": False}],
+    "contains": [{"contains": {"minLength": 1}},
+                 {"contains": {"minimum": 1}, "minContains": 2,
+                  "maxContains": 3},
+                 {"contains": {"minLength": 1}, "minContains": 0}],
+    "minContains": [{"minContains": 2}],
+    "maxContains": [{"maxContains": 2}],
+    "minProperties": [{"minProperties": 1}],
+    "maxProperties": [{"maxProperties": 2}],
+    "dependentRequired": [{"dependentRequired": {"a": ["b"],
+                                                 "s": ["i", "zz"]}}],
+    "dependencies": [{"dependencies": {"a": ["b"]}},
+                     {"dependencies": {"a": {"required": ["b"]},
+                                       "s": {"required": ["i"]}}}],
+    "dependentSchemas": [{"dependentSchemas": {"a": {"required": ["b"]}}}],
+    "if": [{"if": {"minimum": 5}, "then": {"maximum": 10},
+            "else": {"minLength": 2}},
+           {"if": {"minLength": 1}, "then": {"maxLength": 4}},
+           {"if": {"minLength": 1}}],
+    "then": [{"then": {"maxLength": 4}}],
+    "else": [{"else": {"maxLength": 4}}],
+    "propertyNames": [{"propertyNames": {"pattern": "^[a-z]+$",
+                                         "maxLength": 1}},
+                      {"propertyNames": {"type": "integer"}},
+                      {"propertyNames": {"minimum": 1, "enum": ["a"]}}],
+    "$ref": [{"$ref": "#/definitions/pos"},
+             {"$ref": "#/definitions/pos", "x-severity": "info"}],
+    "x-severity": [{"x-severity": "error", "minimum": 0,
+                    "allOf": [{"maxLength": 3, "x-severity": "info"}]}],
+    "x-spark-check": [{"x-spark-check": "present"},
+                      {"x-spark-check": "missing"}],
+    "x-langid": [{"x-langid": {"declared": "lang"}},
+                 {"x-langid": {"declared": "lang", "min_tokens": 3}},
+                 {"x-langid": {"declared": "nope"}}],
+    "x-rate": [{"x-rate": {"duration": "dur_ms"}},
+               {"x-rate": {"duration": "dur_ms", "lo": 2, "hi": 20}},
+               {"x-rate": {"duration": "dur_ms", "hi": 30.5}},
+               {"x-rate": {"duration": "nope"}}],
+    "x-encoding": [{"x-encoding": {}},
+                   {"x-encoding": {"max_artifacts": 2,
+                                   "patterns": ["replacement",
+                                                "c1_control"]}},
+                   {"x-encoding": {"patterns": ["bogus"]}}],
+    "x-embedding": [{"x-embedding": {}},
+                    {"x-embedding": {"dim": 3}},
+                    {"x-embedding": {"dim": 3, "finite": False,
+                                     "nonzero": True, "normalized": True,
+                                     "norm_tol": 0.01}}],
+    "x-repair": [{"x-repair": False, "minimum": 0}],
+    "$bundled_from": [{"$bundled_from": "other.yaml", "minimum": 0}],
+    "annotations": [{"title": "t", "description": "d", "default": 1,
+                     "examples": [1], "$comment": "c", "readOnly": True,
+                     "writeOnly": False, "deprecated": False, "$id": "x",
+                     "$anchor": "a", "$schema": "s",
+                     "definitions": {"q": {"minimum": 0}},
+                     "$defs": {"q": {"minimum": 0}}}],
+}
+
+# keyword -> one value per rejected shape rule (placed on column s)
+ROW_MALFORMED = {
+    "type": [1, ["string", 1]], "enum": [[], "a"], "required": ["a", [1]],
+    "maxLength": [1.5, True], "minLength": ["1"], "pattern": ["(", 1],
+    "format": [1], "contentEncoding": [1], "contentMediaType": [1],
+    "contentSchema": [[]], "minimum": ["1", True], "maximum": [None],
+    "exclusiveMinimum": [[]], "exclusiveMaximum": [False],
+    "multipleOf": [0, -1, "2"], "maxItems": [1.5], "minItems": [True],
+    "properties": [[], {"a": 1}], "patternProperties": [{"(": {}},
+                                                        {"a": 1}],
+    "items": [1, [1]], "prefixItems": [{}, [1]],
+    "additionalItems": [1], "additionalProperties": [1],
+    "allOf": [{}, [1]], "anyOf": [[], [1]], "oneOf": [[]], "not": [True],
+    "uniqueItems": [1], "contains": [True], "minContains": [-1, 1.5],
+    "maxContains": [-1], "minProperties": [-1], "maxProperties": [True],
+    "dependentRequired": [{"a": "b"}, {"a": [1]}],
+    "dependencies": [{"a": 1}, {"a": [1]}],
+    "dependentSchemas": [{"a": []}],
+    "unevaluatedProperties": [1], "unevaluatedItems": [[]],
+    "if": [True], "then": [1], "else": [[]], "propertyNames": [True],
+    "x-severity": ["fatal"], "x-finite": [1],
+    "x-langid": [{}, {"declared": 1}, {"declared": "lang",
+                                       "min_tokens": -1},
+                 {"declared": "lang", "min_tokens": 1.5}],
+    "x-rate": [{}, {"duration": 1}, {"duration": "d", "lo": "1"},
+               {"duration": "d", "lo": 5, "hi": 2},
+               {"duration": "d", "hi": True}],
+    "x-encoding": [[], {"max_artifacts": -1}, {"patterns": []},
+                   {"patterns": "replacement"}, {"patterns": [1]}],
+    "x-embedding": [[], {"dim": 0}, {"dim": 1.5}, {"finite": 1},
+                    {"normalized": "yes"}, {"norm_tol": 0},
+                    {"norm_tol": True}],
+}
+
+
+def _row_ruleset(where: str, node: dict) -> dict:
+    rs = dict(node) if where == "root" else {"properties": {where: node}}
+    if "$ref" in node:
+        rs["definitions"] = _DEFS
+    return rs
+
+
+def _normalize(rec):
+    """Renumber lambda variables (``x_17``) in order of appearance, and
+    drop the identity hash a binary literal prints with (``[B@1f2e``)."""
+    seen = {}
+
+    def sub(m):
+        return seen.setdefault(m.group(0),
+                               f"{m.group(1)}_{len(seen) + 1}")
+    text = re.sub(r"\b([xyz])_(\d+)\b", sub, json.dumps(rec))
+    return json.loads(re.sub(r"\[B@[0-9a-f]+", "[B@", text))
+
+
+def _compile_row_node(rs: dict, schema) -> dict:
+    try:
+        c = compile_ruleset(rs, schema, name="snap",
+                            extra_checks=_ROW_CHECKS)
+    except RulesetCompileError as exc:
+        return {"error": ": ".join(str(exc).split(": ")[:2])}
+    return _normalize(json.loads(json.dumps({
+        "checks": [{"constraint_id": k.constraint_id, "keyword": k.keyword,
+                    "instance_path": k.instance_path,
+                    "schema_path": k.schema_path, "message": k.message,
+                    "expected": k.expected, "severity": k.severity,
+                    "violated": str(k.violated), "actual": str(k.actual)}
+                   for k in c.checks],
+        "staged": [[n, str(e)] for n, e in c.staged],
+        "unknown": c.unknown,
+        "static_passes": c.static_passes,
+        "static_failures": c.static_failures,
+        "columns_read": sorted(c.columns_read),
+        "table_checks": c.table_checks,
+    })))
+
+
+def _compile_row_keyword(spark, kw: str) -> dict:
+    """case name -> record, for every form of ``kw`` at every placement
+    and every malformed value of it"""
+    schema = T._parse_datatype_string(ROWS)
+    out = {}
+    for i, node in enumerate(ROW_FORMS[kw]):
+        for where in ROW_PLACEMENTS:
+            out[f"{i}-{where}"] = _compile_row_node(
+                _row_ruleset(where, node), schema)
+    for i, v in enumerate(ROW_MALFORMED.get(kw, ())):
+        out[f"malformed-{i}"] = _compile_row_node(
+            {"properties": {"s": {kw: v}}}, schema)
+    return out
+
+
+@pytest.fixture(scope="module")
+def row_expected():
+    return json.loads(ROW_SNAPSHOT.read_text())
+
+
+def test_row_forms_cover_every_row_keyword(row_expected):
+    assert sorted(row_expected) == sorted(ROW_FORMS)
+    named = {kw for nodes in ROW_FORMS.values() for n in nodes for kw in n}
+    assert set(ROW_MALFORMED) <= named
+
+
+@pytest.mark.parametrize("kw", sorted(ROW_FORMS))
+def test_row_keyword_matches_snapshot(spark, row_expected, kw):
+    assert _compile_row_keyword(spark, kw) == row_expected[kw]
+
+
 if __name__ == "__main__":
     from remark_lint_frontmatter_schema_spark.session import get_spark
 
     s = get_spark(master="local[1]", app_name="compile-snapshot")
     SNAPSHOT.write_text(json.dumps(
         {case: _compile(s, case) for case in sorted(CASES)},
+        indent=1, sort_keys=True) + "\n")
+    ROW_SNAPSHOT.write_text(json.dumps(
+        {kw: _compile_row_keyword(s, kw) for kw in sorted(ROW_FORMS)},
         indent=1, sort_keys=True) + "\n")
     s.stop()

@@ -92,6 +92,20 @@ class Param:
         return self.default is _REQUIRED
 
 
+def read_params(params: tuple, v: dict) -> dict:
+    """The compiled params of a shape-valid dict, defaults filled in."""
+    return {p.name: p.default if v.get(p.name) is None
+            else p.to(v[p.name]) if p.to else v[p.name] for p in params}
+
+
+def params_ok(params: tuple, v, rule: Callable | None = None) -> bool:
+    """``v`` is a dict that every param's shape rule accepts, and the
+    cross-field ``rule(v, compiled params)`` holds on it."""
+    return isinstance(v, dict) and all(
+        not p.required if v.get(p.name) is None else p.ok(v[p.name])
+        for p in params) and (rule is None or rule(v, read_params(params, v)))
+
+
 def _is_num(v) -> bool:
     return isinstance(v, (int, float)) and not isinstance(v, bool)
 
@@ -112,8 +126,8 @@ def _int(name, default=_REQUIRED, within=lambda x: x > 0) -> Param:
     return Param(name, lambda v: _is_int(v) and within(v), default, int)
 
 
-def _bool(name) -> Param:
-    return Param(name, lambda v: isinstance(v, bool), False)
+def _bool(name, default=False) -> Param:
+    return Param(name, lambda v: isinstance(v, bool), default)
 
 
 def _choice(name, choices, default) -> Param:
@@ -189,10 +203,7 @@ class TableCheck:
             return (isinstance(v, list) and len(v) >= 2
                     and all(isinstance(k, str) for k in v)
                     and len(set(v)) == len(v))
-        return isinstance(v, dict) and all(
-            not p.required if v.get(p.name) is None else p.ok(v[p.name])
-            for p in self.params) and (
-            self.rule is None or self.rule(v, self.compile(v, "")))
+        return params_ok(self.params, v, self.rule)
 
     def declares(self, v) -> bool:
         """A shape-valid value of the keyword declares this kind."""
@@ -205,9 +216,7 @@ class TableCheck:
         if self.form == "keys":
             out = {"keys": list(v)}
         else:
-            out = {p.name: p.default if v.get(p.name) is None
-                   else p.to(v[p.name]) if p.to else v[p.name]
-                   for p in self.params}
+            out = read_params(self.params, v)
         out["severity"] = severity
         return out
 

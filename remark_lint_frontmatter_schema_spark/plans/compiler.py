@@ -17,6 +17,15 @@ Every message is schema-determined, so templates are baked at compile time
 (the reference recomputes them per error; at 10^12 rows they must be
 literals that Catalyst constant-folds).
 
+Like Ajv, which defines each keyword once, every keyword is declared
+once, in ``_KEYWORDS``: its shape rule, where its subschemas sit, its
+route on a variant node, its compile function and, for the row ``x-*``
+keywords, its params (``operators/table_checks.Param``). The table's
+order is the compile order, which fixes the constraint ids. The
+meta-validation pre-pass (``_shape_walk``), the per-node pre-check, the
+variant routing and the compile loop are all derived from it; the
+table-check keywords enter it from ``operators/table_checks.TABLE_CHECKS``.
+
 Unknown keywords warn-don't-fail, mirroring Ajv ``strict: false``
 (``index.ts:313``); they are collected into ``CompiledRuleset.unknown``.
 """
@@ -25,8 +34,11 @@ from __future__ import annotations
 
 import hashlib
 import json
+import operator
 import re
 from dataclasses import dataclass, field, replace as _dc_replace
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -35,7 +47,9 @@ from pyspark.sql import types as T
 from .bundler import RulesetCompileError, resolve_internal_ref
 from . import variant as _vr
 from ..functions import content as _content
-from ..operators.table_checks import NUMERIC, ROOT, STRING, TABLE_CHECKS
+from ..operators.table_checks import (NUMERIC, ROOT, STRING, TABLE_CHECKS,
+                                      Param, _bool, _int, _is_int, _is_num,
+                                      _num, _str, params_ok, read_params)
 from ..functions.formats import (FORMAT_ALWAYS_OK, FORMAT_FINITE,
                                  FORMAT_NUMERIC_RANGE, FORMAT_REGEX,
                                  FORMAT_UDF_CHECKERS)
@@ -54,31 +68,6 @@ _STATIC_TYPE_OK = {
     "null": lambda t: False,
 }
 
-_KNOWN_KEYWORDS = {
-    "type", "enum", "const", "required", "maxLength", "minLength", "pattern",
-    "contentEncoding", "contentMediaType", "contentSchema",
-    "format", "minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum",
-    "multipleOf", "properties", "patternProperties", "items",
-    "additionalItems", "prefixItems", "additionalProperties", "allOf",
-    "anyOf", "oneOf", "not", "$ref", "$schema", "$id", "$anchor",
-    "$bundled_from",
-    "title", "description", "definitions", "$defs", "default", "examples",
-    # annotation-only keywords (Ajv collects, never validates): known so
-    # strict mode doesn't false-flag documented schemas
-    "$comment", "readOnly", "writeOnly", "deprecated",
-    "maxItems", "minItems",
-    "uniqueItems", "contains", "minContains", "maxContains",
-    "minProperties", "maxProperties", "dependentRequired", "dependencies",
-    "dependentSchemas", "unevaluatedProperties", "unevaluatedItems",
-    "if", "then", "else", "propertyNames",
-    # engine extension points (reference analog: custom Ajv keywords via
-    # ajvOptions, index.ts:49): named vectorized pandas-UDF check and the
-    # row-level x- keywords; the table-level declarations are added below
-    # from operators/table_checks.py
-    "x-spark-check", "x-severity", "x-langid", "x-rate",
-    "x-repair",  # per-property opt-out consumed by operators/repair.py
-    "x-embedding", "x-finite", "x-encoding",
-}
 # table-level declarations (uniqueness / referential / drift / ...): each
 # kind is declared once in operators/table_checks.py, compiles into
 # CompiledRuleset.table_checks and runs as a separate relational pass.
@@ -86,7 +75,6 @@ _KNOWN_KEYWORDS = {
 _TABLE_KEYWORDS: dict = {}
 for _spec in TABLE_CHECKS.values():
     _TABLE_KEYWORDS.setdefault(_spec.keyword, []).append(_spec)
-_KNOWN_KEYWORDS |= set(_TABLE_KEYWORDS)
 
 
 @dataclass(frozen=True)
@@ -160,7 +148,8 @@ class _Ctx:
     stage: object = None
     # per-variant-node staged views {"t": tag, "s": string, "d": double,
     # "actual": rendered actual} — set by _compile_variant_node, consumed
-    # by _variant_scalar_checks / _type_check / _add
+    # by the keyword views (_string_view, _number_view), _type_check and
+    # _add
     vstage: dict | None = None
 
 
@@ -269,7 +258,10 @@ def _add(ctx: _Ctx, kw: str, violated: Column, message: str,
 
 
 # ---------------------------------------------------------------------------
-# keyword compilers — each returns the `violated` Column it registered
+# keyword compilers — ``fn(ctx, schema, k)`` compiles keyword ``k`` (its
+# declaration in ``_KEYWORDS``) of the node ``schema``: it registers checks
+# through ``_add`` or records static passes, static failures and unknowns,
+# and returns nothing
 # ---------------------------------------------------------------------------
 
 def _present(ctx: _Ctx) -> Column:
@@ -278,7 +270,33 @@ def _present(ctx: _Ctx) -> Column:
     return ctx.col.isNotNull()
 
 
-def _type_check(ctx: _Ctx, json_type) -> None:
+def _guarded(ctx: _Ctx, violated: Column) -> Column:
+    """Composition keywords at a property node are guarded by presence:
+    Ajv skips all value keywords on an absent property (only the parent's
+    `required` fires), and an absent value makes every child schema
+    vacuously valid — without the guard, oneOf (n_ok == len(children) !=
+    1) and not would fire on NULLs."""
+    return violated if ctx.col is None else _present(ctx) & violated
+
+
+def _severity(ctx: _Ctx, schema: dict, k) -> None:
+    """Severity annotation: applies to every check compiled at this node
+    and below (engine extension; the reference's messages are uniformly
+    warnings — remark-lint message() semantics)."""
+    ctx.severity = schema[k.name]
+
+
+def _ref(ctx: _Ctx, schema: dict, k) -> None:
+    if isinstance(schema[k.name], str):
+        sub = resolve_internal_ref(ctx.root_schema, schema[k.name])
+        # shallow ctx copy: keywords inside the $ref'd subtree (notably
+        # x-severity) must not leak into the referring node's remaining
+        # keywords via the shared mutable ctx
+        _compile_keywords(sub, _dc_replace(ctx))
+
+
+def _type_check(ctx: _Ctx, schema: dict, k) -> None:
+    json_type = schema[k.name]
     types = json_type if isinstance(json_type, list) else [json_type]
     msg = _reason(f"must be {types[0] if len(types) == 1 else ','.join(types)}",
                   ctx, "type")
@@ -314,10 +332,8 @@ def _type_check(ctx: _Ctx, json_type) -> None:
             elif t == "null":
                 casts.append(F.lit(False))
         if casts:
-            ok = casts[0]
-            for c in casts[1:]:
-                ok = ok | c
-            _add(ctx, "type", _present(ctx) & ~ok, msg)
+            _add(ctx, "type", _present(ctx) & ~reduce(operator.or_, casts),
+                 msg)
             return
     if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)) \
             and "integer" in types:
@@ -344,10 +360,7 @@ def _type_check(ctx: _Ctx, json_type) -> None:
                  f"no JSON type in {types} is testable"))
             _add(ctx, "type", _present(ctx), msg)
             return
-        any_ok = oks[0]
-        for o in oks[1:]:
-            any_ok = any_ok | o
-        _add(ctx, "type", _present(ctx) & ~any_ok, msg)
+        _add(ctx, "type", _present(ctx) & ~reduce(operator.or_, oks), msg)
         return
     # statically impossible (e.g. int column where string required):
     # every present value violates
@@ -356,9 +369,610 @@ def _type_check(ctx: _Ctx, json_type) -> None:
     _add(ctx, "type", _present(ctx), msg)
 
 
-# keyword -> shape predicate; violations of these are "JSON schema malformed"
-# (the guard the reference hits when Ajv compile throws, index.ts:335-340)
-_NUM = (int, float)
+def _variant_eq(ctx: _Ctx, v) -> Column | None:
+    """JSON equality of a variant node with the literal ``v`` (None for
+    an object/array literal: JSON equality is key-order insensitive, a
+    serialized compare would not be)."""
+    vs = ctx.vstage or {}
+    return _vr.value_eq(ctx.col, v, t=vs.get("t"), s=vs.get("s"),
+                        d=vs.get("d"))
+
+
+def _enum(ctx: _Ctx, schema: dict, k) -> None:
+    if ctx.col is None:
+        return
+    allowed = schema[k.name]
+    if _vr.is_variant(ctx.dtype):
+        eqs = [_variant_eq(ctx, v) for v in allowed]
+        if any(e is None for e in eqs):
+            ctx.out.unknown.append(
+                (ctx.instance_path, f"{k.name}:variant-composite-literal"))
+            return
+        ok = reduce(operator.or_, eqs)
+    else:
+        ok = ctx.col.isin(*allowed)
+    msg = _reason("must be equal to one of the allowed values", ctx, k.name,
+                  expected=allowed)
+    _add(ctx, k.name, _present(ctx) & ~ok, msg, expected=allowed)
+
+
+def _const(ctx: _Ctx, schema: dict, k) -> None:
+    if ctx.col is None:
+        return
+    v = schema[k.name]
+    if _vr.is_variant(ctx.dtype):
+        eq = _variant_eq(ctx, v)
+        if eq is None:
+            ctx.out.unknown.append(
+                (ctx.instance_path, f"{k.name}:variant-composite-literal"))
+            return
+        violated = _present(ctx) & ~eq
+    else:
+        violated = _present(ctx) & (ctx.col != F.lit(v))
+    msg = _reason("must be equal to constant", ctx, k.name, expected=[v])
+    _add(ctx, k.name, violated, msg, expected=[v])
+
+
+# Views: the operand a keyword compares, and the guard under which it
+# applies (None: the keyword is vacuous at this node). One definition per
+# keyword serves every node kind; the typed and variant paths differ only
+# in the view. On a variant node the per-row JSON type tag is part of the
+# guard: Ajv applies string keywords to strings only and numeric keywords
+# to numbers only (the unguarded string/double views would coerce "10"
+# vs 10, and true).
+
+def _string_view(ctx: _Ctx):
+    if not _vr.is_variant(ctx.dtype):
+        return ctx.col, _present(ctx)
+    vs = ctx.vstage or {}
+    s = vs["s"] if vs.get("s") is not None else _vr.as_string(ctx.col)
+    return s, _present(ctx) & _vr.is_string(ctx.col, vs.get("t"))
+
+
+def _length_view(ctx: _Ctx):
+    if ctx.col is None:
+        return None
+    s, guard = _string_view(ctx)
+    return F.length(s), guard
+
+
+def _number_view(ctx: _Ctx):
+    if ctx.col is None:
+        return None
+    if _vr.is_variant(ctx.dtype):
+        vs = ctx.vstage or {}
+        d = vs["d"] if vs.get("d") is not None else _vr.as_double(ctx.col)
+        return d, _present(ctx) & _vr.is_numeric(ctx.col, vs.get("t"))
+    if isinstance(ctx.dtype, T.StringType):
+        return ctx.col.try_cast("double"), _present(ctx)
+    return ctx.col, _present(ctx)
+
+
+def _size_view(ctx: _Ctx):
+    if ctx.col is None or not isinstance(ctx.dtype, T.ArrayType):
+        return None
+    return F.size(ctx.col), _present(ctx)
+
+
+def _property_count_view(ctx: _Ctx):
+    n_props = _property_count(ctx)
+    if n_props is None:
+        return None
+    return n_props, None if ctx.col is None else _present(ctx)
+
+
+def _compare(view, op, txt: str):
+    """A keyword whose check is ``op(view operand, value)``, with the
+    message ``txt`` formatted with the value."""
+    def compile_(ctx: _Ctx, schema: dict, k) -> None:
+        got = view(ctx)
+        if got is None:
+            return
+        operand, guard = got
+        n = schema[k.name]
+        violated = op(operand, F.lit(n))
+        _add(ctx, k.name, violated if guard is None else guard & violated,
+             _reason(txt.format(n), ctx, k.name))
+    return compile_
+
+
+def _pattern(ctx: _Ctx, schema: dict, k) -> None:
+    if ctx.col is None:
+        return
+    p = schema[k.name]
+    s, guard = _string_view(ctx)
+    # Ajv `pattern` is an unanchored search; rlike has identical semantics
+    _add(ctx, k.name, guard & ~s.rlike(p),
+         _reason(f'must match pattern "{p}"', ctx, k.name))
+
+
+def _format(ctx: _Ctx, schema: dict, k) -> None:
+    if ctx.col is None:
+        return
+    f = schema[k.name]
+    msg = _reason(f'must match format "{f}"', ctx, k.name)
+    s, guard = _string_view(ctx)
+    if f in FORMAT_REGEX:
+        _add(ctx, k.name, guard & ~s.rlike(FORMAT_REGEX[f]), msg)
+    elif f in FORMAT_ALWAYS_OK:
+        # ajv-formats registers these as unconditionally valid
+        ctx.out.static_passes.append((ctx.instance_path, f"format:{f}"))
+    elif _vr.is_variant(ctx.dtype):
+        # numeric-range / finite / UDF formats stay typed-column-only
+        ctx.out.unknown.append((ctx.instance_path, f"format:{f}:variant"))
+    elif f in FORMAT_NUMERIC_RANGE and isinstance(ctx.dtype, _NUMERIC):
+        # ajv-formats type:"number" formats — integral + in-range
+        lo, hi = FORMAT_NUMERIC_RANGE[f]
+        bad = (ctx.col < F.lit(lo)) | (ctx.col > F.lit(hi))
+        if not isinstance(ctx.dtype, _INTEGRAL):
+            bad = bad | (ctx.col != F.floor(ctx.col))
+        _add(ctx, k.name, _present(ctx) & bad, msg)
+    elif f in FORMAT_FINITE:
+        if isinstance(ctx.dtype, (T.FloatType, T.DoubleType)):
+            bad = F.isnan(ctx.col) | (F.abs(ctx.col) == float("inf"))
+            _add(ctx, k.name, _present(ctx) & bad, msg)
+        elif isinstance(ctx.dtype, _NUMERIC):
+            # integral/decimal values are always finite
+            ctx.out.static_passes.append(
+                (ctx.instance_path, f"format:{f}"))
+        else:
+            ctx.out.unknown.append((ctx.instance_path, f"format:{f}"))
+    elif f in FORMAT_UDF_CHECKERS:
+        # vectorized Python probe (e.g. `regex` = re.compile validity):
+        # an Arrow-batched pandas UDF in an otherwise pure-JVM
+        # projection — opt-in via the udf_formats engine option
+        if ctx.out.options.get("udf_formats"):
+            ok = FORMAT_UDF_CHECKERS[f](ctx.col)
+            _add(ctx, k.name,
+                 _present(ctx) & ~F.coalesce(ok, F.lit(False)), msg)
+        else:
+            ctx.out.unknown.append(
+                (ctx.instance_path, f"format:{f}:requires-udf_formats"))
+    else:
+        ctx.out.unknown.append((ctx.instance_path, f"format:{f}"))
+
+
+# draft-07 content keywords — ASSERTED, a documented deviation from
+# Ajv's annotate-only default (functions/content.py module docstring);
+# unverifiable encodings/types fall to `unknown`, never vacuous-pass
+
+def _content_encoding(ctx: _Ctx, schema: dict, k) -> None:
+    if ctx.col is None:
+        return
+    enc = schema[k.name]
+    if (isinstance(ctx.dtype, T.StringType)
+            and enc in _content.SUPPORTED_ENCODINGS):
+        msg = _reason(f'must be {enc} encoded', ctx, k.name)
+        _add(ctx, k.name, _present(ctx) & ~_content.base64_ok(ctx.col), msg)
+    else:
+        ctx.out.unknown.append((ctx.instance_path, f"{k.name}:{enc}"))
+
+
+def _content_media_type(ctx: _Ctx, schema: dict, k) -> None:
+    if ctx.col is None:
+        return
+    mt = schema[k.name]
+    enc = schema.get("contentEncoding")
+    msg = _reason(f'must be media type "{mt}"', ctx, k.name)
+    ok = None
+    if isinstance(ctx.dtype, T.BinaryType):
+        # binary instance: sniff the payload's own magic bytes
+        ok = _content.magic_ok(ctx.col, mt)
+    elif isinstance(ctx.dtype, T.StringType) and enc == "base64":
+        if mt == "application/json":
+            # full decode is unavoidable for JSON; the CASE guard
+            # keeps unbase64 off malformed payloads
+            ok = F.when(
+                _content.base64_ok(ctx.col),
+                _content.json_ok(F.unbase64(ctx.col).cast("string")))
+        else:
+            ok = _content.magic_ok(_content.b64_probe(ctx.col), mt)
+    elif isinstance(ctx.dtype, T.StringType) and enc is None \
+            and mt == "application/json":
+        ok = _content.json_ok(ctx.col)
+    if ok is not None:
+        _add(ctx, k.name, _present(ctx) & ~F.coalesce(ok, F.lit(False)), msg)
+    else:
+        ctx.out.unknown.append((ctx.instance_path, f"{k.name}:{mt}"))
+
+
+def _content_schema(ctx: _Ctx, schema: dict, k) -> None:
+    """2019-09 contentSchema: validate the EMBEDDED document against a
+    schema. Spark-4 composition: try_parse_json -> VariantType -> the
+    whole variant keyword machinery (exact JSON types, staged views)
+    applies to the parsed content. Unparsable content stays vacuous here
+    — contentMediaType is the wellformedness check, so the two keywords
+    layer exactly like Ajv's annotations would."""
+    if ctx.col is None:
+        return
+    sub = schema[k.name]
+    enc = schema.get("contentEncoding")
+    if (schema.get("contentMediaType") == "application/json"
+            and isinstance(ctx.dtype, T.StringType) and _vr.HAVE_VARIANT):
+        raw = (F.unbase64(ctx.col).cast("string") if enc == "base64"
+               else ctx.col)
+        _compile_keywords(sub, _dc_replace(
+            ctx, col=F.try_parse_json(raw), dtype=_vr.VariantType(),
+            schema_path=f"{ctx.schema_path}/{k.name}", vstage=None))
+    else:
+        ctx.out.unknown.append((ctx.instance_path, k.name))
+
+
+def _finite(ctx: _Ctx, schema: dict, k) -> None:
+    if schema[k.name] is not True:
+        return
+    if ctx.col is not None and isinstance(ctx.dtype,
+                                          (T.FloatType, T.DoubleType)):
+        # NaN/±Inf slip through minimum alone (NaN sorts above every
+        # double so `>= min` holds); JSON has no non-finite numbers,
+        # so the reference's Ajv never faces them — table columns do
+        msg = _reason("must be finite", ctx, k.name)
+        _add(ctx, k.name,
+             _present(ctx) & (F.isnan(ctx.col)
+                              | (F.abs(ctx.col) == F.lit(float("inf")))),
+             msg)
+    elif not ctx.silent:
+        # non-float columns cannot hold NaN/Inf — surface the no-op
+        # declaration instead of a silent vacuous pass
+        ctx.out.unknown.append((ctx.instance_path, k.name))
+
+
+def _required(ctx: _Ctx, schema: dict, k) -> None:
+    for prop in schema[k.name]:
+        child_col, child_t, exists = _child(ctx, prop)
+        msg = _reason(f"must have required property '{prop}'", ctx, k.name)
+        if not exists:
+            # property absent from the schema entirely: statically
+            # violated — but only when the enclosing object EXISTS
+            # (Ajv skips the whole subschema on an absent object; an
+            # unguarded lit(True) fired on NULL parents too)
+            ctx.out.static_failures.append(
+                (ctx.instance_path, k.name, f"no column for {prop!r}"))
+            violated = F.lit(True) if ctx.col is None \
+                else ctx.col.isNotNull()
+        elif isinstance(ctx.dtype, T.MapType):
+            violated = ~F.map_contains_key(ctx.col, prop)
+            if ctx.col is not None:
+                violated = ctx.col.isNotNull() & violated
+        else:
+            violated = child_col.isNull()
+            if ctx.col is not None:
+                # nested object: required fires only when the object exists
+                violated = ctx.col.isNotNull() & violated
+        # Ajv reports required at the *object's* path with param
+        # missingProperty (index.ts:175-177)
+        _add(ctx, k.name, violated, msg, actual=F.lit(None).cast("string"))
+
+
+def _properties(ctx: _Ctx, schema: dict, k) -> None:
+    for prop, sub in schema[k.name].items():
+        child_col, child_t, exists = _child(ctx, prop)
+        if not exists:
+            # property constrained but column missing: value keywords are
+            # vacuous on an absent property (Ajv semantics) — skip. But
+            # unknown keywords must still surface (a typo'd keyword is a
+            # schema bug whether or not the column exists today; Ajv
+            # strict flags it at compile time, data-independent)
+            for kw in sub if isinstance(sub, dict) else ():
+                if kw not in _BY_NAME:
+                    ctx.out.unknown.append(
+                        (f"{ctx.instance_path}/{prop}", kw))
+            ctx.out.static_passes.append(
+                (f"{ctx.instance_path}/{prop}", "absent-column"))
+            continue
+        _compile_keywords(sub, _dc_replace(
+            ctx, col=child_col, dtype=child_t,
+            instance_path=f"{ctx.instance_path}/{prop}",
+            schema_path=f"{ctx.schema_path}/{k.name}/{prop}",
+            schema_file=_sub_file(ctx, sub)))
+
+
+def _prefix_items(ctx: _Ctx, schema: dict, k) -> None:
+    """2020-12 positional form: `items` (dict) is the TAIL schema when
+    prefixItems is present (same role additionalItems plays in draft-07);
+    compiled through the shared tuple path."""
+    if ctx.col is None or not isinstance(ctx.dtype, T.ArrayType):
+        return
+    tail = schema["items"] if isinstance(schema.get("items"), dict) \
+        else schema.get("additionalItems")
+    _tuple_items_check(ctx, schema[k.name], tail, kw=k.name)
+
+
+def _items(ctx: _Ctx, schema: dict, k) -> None:
+    if "prefixItems" in schema or ctx.col is None \
+            or not isinstance(ctx.dtype, T.ArrayType):
+        return
+    if isinstance(schema[k.name], dict):
+        _items_check(ctx, schema[k.name])
+    elif isinstance(schema[k.name], list):
+        _tuple_items_check(ctx, schema[k.name],
+                           schema.get("additionalItems"))
+
+
+def _all_of(ctx: _Ctx, schema: dict, k) -> None:
+    for i, sub in enumerate(schema[k.name]):
+        _compile_keywords(sub, _dc_replace(
+            ctx, schema_path=f"{ctx.schema_path}/{k.name}/{i}",
+            schema_file=_sub_file(ctx, sub)))
+
+
+def _any_of(ctx: _Ctx, schema: dict, k) -> None:
+    vals = [_validity(sub, ctx, f"{ctx.schema_path}/{k.name}/{i}")
+            for i, sub in enumerate(schema[k.name])]
+    msg = _reason("must match a schema in anyOf", ctx, k.name)
+    _add(ctx, k.name, _guarded(ctx, ~reduce(operator.or_, vals)), msg)
+
+
+def _one_of(ctx: _Ctx, schema: dict, k) -> None:
+    vals = [_validity(sub, ctx, f"{ctx.schema_path}/{k.name}/{i}")
+            for i, sub in enumerate(schema[k.name])]
+    n_ok = balanced_reduce(lambda a, b: a + b,
+                           [v.cast("int") for v in vals])
+    msg = _reason("must match exactly one schema in oneOf", ctx, k.name)
+    _add(ctx, k.name, _guarded(ctx, n_ok != 1), msg)
+
+
+def _not(ctx: _Ctx, schema: dict, k) -> None:
+    ok = _validity(schema[k.name], ctx, f"{ctx.schema_path}/{k.name}")
+    _add(ctx, k.name, _guarded(ctx, ok),
+         _reason("must NOT be valid", ctx, k.name))
+
+
+def _unique_items(ctx: _Ctx, schema: dict, k) -> None:
+    if schema[k.name] is not True or ctx.col is None \
+            or not isinstance(ctx.dtype, T.ArrayType):
+        return
+    msg = _reason("must NOT have duplicate items", ctx, k.name)
+    _add(ctx, k.name,
+         _present(ctx) & (F.size(F.array_distinct(ctx.col))
+                          < F.size(ctx.col)), msg)
+
+
+def _contains(ctx: _Ctx, schema: dict, k) -> None:
+    if ctx.col is None or not isinstance(ctx.dtype, T.ArrayType):
+        return
+    elem_ok = _element_validity_fn(ctx, schema[k.name],
+                                   f"{ctx.schema_path}/{k.name}")
+    n_match = F.size(F.filter(ctx.col, elem_ok))
+    lo = schema.get("minContains", 1)
+    if lo > 0:
+        msg = _reason(f"must contain at least {lo} valid item(s)",
+                      ctx, k.name)
+        _add(ctx, k.name, _present(ctx) & (n_match < lo), msg)
+    if "maxContains" in schema:
+        hi = schema["maxContains"]
+        msg = _reason(f"must contain at most {hi} valid item(s)",
+                      ctx, "maxContains")
+        _add(ctx, "maxContains", _present(ctx) & (n_match > hi), msg)
+
+
+def _dependencies(ctx: _Ctx, schema: dict, k) -> None:
+    """dependentRequired / dependentSchemas (2019-09) and draft-07
+    ``dependencies`` (either form)."""
+    for trigger, reqs in (schema[k.name] or {}).items():
+        t_col, _t, t_exists = _child(ctx, trigger)
+        if not t_exists:
+            ctx.out.static_passes.append(
+                (f"{ctx.instance_path}/{trigger}", k.name))
+            continue
+        t_present = (F.map_contains_key(ctx.col, trigger)
+                     if isinstance(ctx.dtype, T.MapType)
+                     else t_col.isNotNull())
+        if isinstance(reqs, dict):  # dependencies schema form
+            dep_ok = _validity(reqs, ctx,
+                               f"{ctx.schema_path}/{k.name}/{trigger}")
+            msg = _reason(f'must match "{trigger}" dependency schema',
+                          ctx, k.name)
+            _add(ctx, k.name, t_present & ~dep_ok, msg)
+            continue
+        for req in reqs:
+            r_col, _rt, r_exists = _child(ctx, req)
+            msg = _reason(
+                f"must have property {req} when property {trigger} "
+                f"is present", ctx, k.name)
+            if not r_exists:
+                violated = t_present
+            elif isinstance(ctx.dtype, T.MapType):
+                violated = t_present & ~F.map_contains_key(ctx.col, req)
+            else:
+                violated = t_present & r_col.isNull()
+            _add(ctx, k.name, violated, msg,
+                 actual=F.lit(None).cast("string"))
+
+
+def _if(ctx: _Ctx, schema: dict, k) -> None:
+    cond_ok = _validity(schema[k.name], ctx, f"{ctx.schema_path}/{k.name}")
+    if "then" in schema:
+        then_ok = _validity(schema["then"], ctx, f"{ctx.schema_path}/then")
+        msg = _reason('must match "then" schema', ctx, k.name)
+        _add(ctx, k.name, _guarded(ctx, cond_ok & ~then_ok), msg)
+    if "else" in schema:
+        else_ok = _validity(schema["else"], ctx, f"{ctx.schema_path}/else")
+        msg = _reason('must match "else" schema', ctx, k.name)
+        _add(ctx, k.name, _guarded(ctx, ~cond_ok & ~else_ok), msg)
+
+
+def _table_check(ctx: _Ctx, schema: dict, k) -> None:
+    """A table-level declaration (operators/table_checks.py): it
+    aggregates or joins whole columns, so it compiles only at its
+    declared placement; any other use lands in ``unknown`` so strict mode
+    flags the dropped declaration. Not compiled inside a composition
+    probe (``_probe_validity`` reports it there)."""
+    if ctx.silent:
+        return
+    v = schema[k.name]
+    names = ctx.df_schema.fieldNames()
+    top = ctx.instance_path.count("/") == 1 and ctx.col is not None
+    for spec in _TABLE_KEYWORDS[k.name]:
+        if v is None or not spec.declares(v):
+            continue
+        p = spec.compile(v, ctx.severity)
+        if spec.where == ROOT:
+            placed = ctx.instance_path == "" and all(
+                key in names for key in p["keys"])
+        else:
+            placed = (top
+                      and (spec.where != NUMERIC
+                           or isinstance(ctx.dtype, _NUMERIC))
+                      and (spec.where != STRING
+                           or isinstance(ctx.dtype, T.StringType))
+                      and (spec.column is None or p[spec.column] is None
+                           or p[spec.column] in names))
+        if placed:
+            ctx.out.table_checks.append(
+                (spec.kind, ctx.instance_path[1:], p))
+        else:
+            ctx.out.unknown.append((ctx.instance_path, spec.keyword))
+
+
+def _langid(ctx: _Ctx, schema: dict, k) -> None:
+    """Declared-vs-detected language consistency: a pure row expression
+    (marker-token argmax, operators/text.lang_guess) so it rides the
+    one-projection scan — no extra pass."""
+    if ctx.col is None:
+        return
+    from ..operators import text as _text
+
+    p = read_params(k.params, schema[k.name])
+    declared = p["declared"]
+    if declared not in ctx.df_schema.fieldNames():
+        # declared column absent from the table: can't evaluate —
+        # surfaced, never silently vacuous
+        ctx.out.unknown.append((ctx.instance_path, f"{k.name}:{declared}"))
+        return
+    if not ctx.silent:
+        ctx.out.columns_read.add(declared)
+    dcol = F.col(declared)
+    guess = _text.lang_guess(ctx.col)
+    violated = (_present(ctx) & dcol.isNotNull()
+                & (_text.token_count(ctx.col) >= p["min_tokens"])
+                & (guess != F.lit("und"))
+                & (guess != dcol))
+    msg = _reason(f'must match declared language in "{declared}"', ctx,
+                  k.name)
+    _add(ctx, k.name, violated, msg, actual=guess)
+
+
+def _rate(ctx: _Ctx, schema: dict, k) -> None:
+    """Transcript-vs-duration plausibility (the audio-tier cross-field
+    check, functions/audio.speaking_rate_violations as a DSL row
+    expression): chars/sec of this string column against a declared
+    millisecond duration column must land in [lo, hi]."""
+    if ctx.col is None:
+        return
+    p = read_params(k.params, schema[k.name])
+    dur_name, lo, hi = p["duration"], p["lo"], p["hi"]
+    if dur_name not in ctx.df_schema.fieldNames():
+        ctx.out.unknown.append((ctx.instance_path, f"{k.name}:{dur_name}"))
+        return
+    if not ctx.silent:
+        ctx.out.columns_read.add(dur_name)
+    dur = F.col(dur_name)
+    rate = F.length(ctx.col) / (dur / F.lit(1000.0))
+    violated = (_present(ctx) & dur.isNotNull() & (dur > 0)
+                & ((rate < lo) | (rate > hi)))
+    msg = _reason(
+        f'must have plausible speaking rate ({lo}-{hi} chars/sec '
+        f'against "{dur_name}")', ctx, k.name)
+    _add(ctx, k.name, violated, msg, actual=F.round(rate, 2).cast("string"))
+
+
+def _encoding(ctx: _Ctx, schema: dict, k) -> None:
+    """Encoding-damage gate (operators/text.MOJIBAKE_PATTERNS): total
+    mojibake-artifact occurrences in this string column must not exceed
+    max_artifacts. Pure-JVM regexp_count sum — rides the one-projection
+    pass like every row check."""
+    if ctx.col is None:
+        return
+    from ..operators.text import MOJIBAKE_PATTERNS
+
+    p = read_params(k.params, schema[k.name])
+    names = p["patterns"] or list(MOJIBAKE_PATTERNS)
+    unknown_pats = [n for n in names if n not in MOJIBAKE_PATTERNS]
+    if unknown_pats:
+        ctx.out.unknown.append(
+            (ctx.instance_path, f"{k.name}:" + ",".join(unknown_pats)))
+        return
+    total = balanced_reduce(
+        lambda a, b: a + b,
+        [F.coalesce(F.regexp_count(ctx.col, F.lit(MOJIBAKE_PATTERNS[n])),
+                    F.lit(0)) for n in names])
+    msg = _reason(
+        f"must contain at most {p['max_artifacts']} encoding-damage "
+        f"artifact(s) ({'/'.join(names)})", ctx, k.name)
+    _add(ctx, k.name, _present(ctx) & (total > p["max_artifacts"]), msg,
+         actual=total.cast("string"))
+
+
+def _embedding(ctx: _Ctx, schema: dict, k) -> None:
+    """``x-embedding``: quality invariants of an embedding column — the
+    validation surface an embeddings table needs before any ANN/near-dup
+    pass will behave (similarity.py assumes finite, consistently-sized,
+    optionally L2-normalized vectors). All pure row-level Column
+    expressions (probes inside compositions work), presence-guarded:
+
+    * ``dim``        — exact dimensionality
+    * ``finite``     — no NaN/Inf elements
+    * ``nonzero``    — not the all-zero vector
+    * ``normalized`` — |L2 norm − 1| ≤ ``norm_tol``; only
+      tested on finite vectors (NaN norms already fail ``finite``, and
+      NaN comparison semantics differ across engines)
+    """
+    if ctx.col is None:
+        return
+    if not isinstance(ctx.dtype, T.ArrayType) or not isinstance(
+            ctx.dtype.elementType, (T.FloatType, T.DoubleType, T.DecimalType)):
+        # declared on a non-float-array column: config bug, surface it
+        ctx.out.unknown.append((ctx.instance_path, k.name))
+        return
+    p = read_params(k.params, schema[k.name])
+    c = ctx.col.cast("array<double>")
+    present = _present(ctx)
+    n_bad = F.size(F.filter(
+        c, lambda x: F.isnan(x) | (F.abs(x) == float("inf"))))
+    finite_ok = n_bad == 0
+    if p["dim"] is not None:
+        d = p["dim"]
+        msg = _reason(f"must have embedding dimension {d}", ctx,
+                      "x-embedding")
+        _add(ctx, "x-embedding-dim", present & (F.size(c) != d), msg,
+             actual=F.size(c).cast("string"))
+    if p["finite"]:
+        msg = _reason("must contain only finite values", ctx, "x-embedding")
+        _add(ctx, "x-embedding-finite", present & ~finite_ok, msg,
+             actual=F.concat(n_bad.cast("string"), F.lit(" non-finite")))
+    norm2 = F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
+    if p["nonzero"]:
+        msg = _reason("must not be the zero vector", ctx, "x-embedding")
+        _add(ctx, "x-embedding-nonzero",
+             present & finite_ok & (norm2 == 0.0), msg,
+             actual=F.lit("0.0"))
+    if p["normalized"]:
+        tol = p["norm_tol"]
+        msg = _reason(f"must be L2-normalized (|norm-1| <= {tol:g})", ctx,
+                      "x-embedding")
+        _add(ctx, "x-embedding-norm",
+             present & finite_ok
+             & (F.abs(F.sqrt(norm2) - 1.0) > tol), msg,
+             actual=F.round(F.sqrt(norm2), 6).cast("string"))
+
+
+def _spark_check(ctx: _Ctx, schema: dict, k) -> None:
+    if ctx.col is None:
+        return
+    name = schema[k.name]
+    fn = ctx.extra_checks.get(name)
+    if fn is None:
+        ctx.out.unknown.append((ctx.instance_path, f"{k.name}:{name}"))
+        return
+    msg = _reason(f'must pass check "{name}"', ctx, k.name)
+    ok = fn(ctx.col)
+    if ctx.stage is not None and _calls_python(ok):
+        # inline, every consumer of the predicate (the violations
+        # prefilter and the explode) gets its own Python crossing;
+        # staged, the check crosses once per row
+        ok = ctx.stage(f"{ctx.instance_path}.check", ok)
+    _add(ctx, k.name, _present(ctx) & ~ok, msg)
 
 
 def _regex_ok(p) -> bool:
@@ -389,914 +1003,6 @@ def _regex_ok(p) -> bool:
         return False
 
 
-_KEYWORD_SHAPE = {
-    "enum": lambda v: isinstance(v, list) and len(v) > 0,
-    "required": lambda v: isinstance(v, list) and all(isinstance(p, str) for p in v),
-    "maxLength": lambda v: isinstance(v, int) and not isinstance(v, bool),
-    "minLength": lambda v: isinstance(v, int) and not isinstance(v, bool),
-    "pattern": _regex_ok,
-    "contentEncoding": lambda v: isinstance(v, str),
-    "contentMediaType": lambda v: isinstance(v, str),
-    "contentSchema": lambda v: isinstance(v, dict),
-    "format": lambda v: isinstance(v, str),
-    "minimum": lambda v: isinstance(v, _NUM) and not isinstance(v, bool),
-    "maximum": lambda v: isinstance(v, _NUM) and not isinstance(v, bool),
-    "exclusiveMinimum": lambda v: isinstance(v, _NUM) and not isinstance(v, bool),
-    "exclusiveMaximum": lambda v: isinstance(v, _NUM) and not isinstance(v, bool),
-    "multipleOf": lambda v: isinstance(v, _NUM) and not isinstance(v, bool) and v > 0,
-    "maxItems": lambda v: isinstance(v, int) and not isinstance(v, bool),
-    "minItems": lambda v: isinstance(v, int) and not isinstance(v, bool),
-    "properties": lambda v: isinstance(v, dict),
-    "patternProperties": lambda v: isinstance(v, dict) and all(
-        _regex_ok(p) and isinstance(s, dict) for p, s in v.items()),
-    "items": lambda v: isinstance(v, dict) or (
-        isinstance(v, list) and all(isinstance(s, dict) for s in v)),
-    "prefixItems": lambda v: isinstance(v, list) and all(
-        isinstance(s, dict) for s in v),
-    "additionalItems": lambda v: isinstance(v, (bool, dict)),
-    "allOf": lambda v: isinstance(v, list) and all(isinstance(s, dict) for s in v),
-    "anyOf": lambda v: isinstance(v, list) and len(v) > 0 and all(isinstance(s, dict) for s in v),
-    "oneOf": lambda v: isinstance(v, list) and len(v) > 0 and all(isinstance(s, dict) for s in v),
-    "not": lambda v: isinstance(v, dict),
-    "type": lambda v: isinstance(v, str) or (isinstance(v, list) and all(isinstance(t, str) for t in v)),
-    "uniqueItems": lambda v: isinstance(v, bool),
-    "contains": lambda v: isinstance(v, dict),
-    "minContains": lambda v: isinstance(v, int) and not isinstance(v, bool) and v >= 0,
-    "maxContains": lambda v: isinstance(v, int) and not isinstance(v, bool) and v >= 0,
-    "minProperties": lambda v: isinstance(v, int) and not isinstance(v, bool) and v >= 0,
-    "maxProperties": lambda v: isinstance(v, int) and not isinstance(v, bool) and v >= 0,
-    "dependentRequired": lambda v: isinstance(v, dict) and all(
-        isinstance(r, list) and all(isinstance(p, str) for p in r)
-        for r in v.values()),
-    # draft-07 `dependencies`: array form (property deps) or dict form (schema deps)
-    "dependencies": lambda v: isinstance(v, dict) and all(
-        (isinstance(r, list) and all(isinstance(p, str) for p in r))
-        or isinstance(r, dict)
-        for r in v.values()),
-    "dependentSchemas": lambda v: isinstance(v, dict) and all(
-        isinstance(r, dict) for r in v.values()),
-    "unevaluatedProperties": lambda v: isinstance(v, (bool, dict)),
-    "unevaluatedItems": lambda v: isinstance(v, (bool, dict)),
-    "x-embedding": lambda v: isinstance(v, dict)
-    and (v.get("dim") is None
-         or (isinstance(v["dim"], int) and not isinstance(v["dim"], bool)
-             and v["dim"] > 0))
-    and all(v.get(k) is None or isinstance(v[k], bool)
-            for k in ("finite", "nonzero", "normalized"))
-    and (v.get("norm_tol") is None
-         or (isinstance(v["norm_tol"], _NUM)
-             and not isinstance(v["norm_tol"], bool) and v["norm_tol"] > 0)),
-    "if": lambda v: isinstance(v, dict),
-    "then": lambda v: isinstance(v, dict),
-    "else": lambda v: isinstance(v, dict),
-    "propertyNames": lambda v: isinstance(v, dict),
-    "x-severity": lambda v: v in ("error", "warning", "info"),
-    "x-finite": lambda v: isinstance(v, bool),
-    "x-langid": lambda v: isinstance(v, dict)
-    and isinstance(v.get("declared"), str)
-    and (v.get("min_tokens") is None
-         or (isinstance(v["min_tokens"], int)
-             and not isinstance(v["min_tokens"], bool)
-             and v["min_tokens"] >= 0)),
-    "x-encoding": lambda v: isinstance(v, dict)
-    and (v.get("max_artifacts") is None
-         or (isinstance(v["max_artifacts"], int)
-             and not isinstance(v["max_artifacts"], bool)
-             and v["max_artifacts"] >= 0))
-    and (v.get("patterns") is None
-         or (isinstance(v["patterns"], list) and v["patterns"]
-             and all(isinstance(p, str) for p in v["patterns"]))),
-    "x-rate": lambda v: isinstance(v, dict)
-    and isinstance(v.get("duration"), str)
-    and all(v.get(k) is None
-            or (isinstance(v[k], _NUM) and not isinstance(v[k], bool))
-            for k in ("lo", "hi"))
-    and (v.get("lo") is None or v.get("hi") is None
-         or float(v["lo"]) < float(v["hi"])),
-}
-_KEYWORD_SHAPE.update({
-    kw: (lambda v, specs=tuple(specs): any(s.shape_ok(v) for s in specs))
-    for kw, specs in _TABLE_KEYWORDS.items()})
-
-
-def _shape_walk(schema: dict, path: str = "#") -> None:
-    """Meta-validate the whole schema tree BEFORE binding to columns.
-
-    Ajv compiles the full schema up front, so a malformed keyword fails
-    even inside a subtree the instance never reaches (e.g. a property
-    whose column is absent). The per-node checks in ``_compile_keywords``
-    can't see skipped subtrees, hence this pure pre-pass.
-    """
-    for kw, v in schema.items():
-        if kw in _KEYWORD_SHAPE and not _KEYWORD_SHAPE[kw](v):
-            raise RulesetCompileError(
-                f"JSON schema malformed: bad value for {kw!r} at {path}: {v!r}")
-    for prop, sub in (schema.get("properties") or {}).items():
-        if not isinstance(sub, dict):
-            raise RulesetCompileError(
-                f"JSON schema malformed: schema for property {prop!r} at "
-                f"{path} is not an object: {sub!r}")
-        _shape_walk(sub, f"{path}/properties/{prop}")
-    for pat, sub in (schema.get("patternProperties") or {}).items():
-        if isinstance(sub, dict):
-            _shape_walk(sub, f"{path}/patternProperties/{pat}")
-    if isinstance(schema.get("additionalItems"), dict):
-        _shape_walk(schema["additionalItems"], f"{path}/additionalItems")
-    for key in ("allOf", "anyOf", "oneOf"):
-        for i, sub in enumerate(schema.get(key) or []):
-            _shape_walk(sub, f"{path}/{key}/{i}")
-    items = schema.get("items")
-    if isinstance(items, dict):
-        _shape_walk(items, f"{path}/items")
-    elif isinstance(items, list):  # tuple-form items (draft-07)
-        for i, sub in enumerate(items):
-            if isinstance(sub, dict):
-                _shape_walk(sub, f"{path}/items/{i}")
-    for i, sub in enumerate(schema.get("prefixItems") or []):
-        if isinstance(sub, dict):
-            _shape_walk(sub, f"{path}/prefixItems/{i}")
-    if isinstance(schema.get("not"), dict):
-        _shape_walk(schema["not"], f"{path}/not")
-    if isinstance(schema.get("additionalProperties"), dict):
-        _shape_walk(schema["additionalProperties"],
-                    f"{path}/additionalProperties")
-    for key in ("contains", "if", "then", "else", "propertyNames",
-                "contentSchema"):
-        if isinstance(schema.get(key), dict):
-            _shape_walk(schema[key], f"{path}/{key}")
-    for dep_kw in ("dependencies", "dependentSchemas"):
-        for dep, sub in (schema.get(dep_kw) or {}).items():
-            if isinstance(sub, dict):
-                _shape_walk(sub, f"{path}/{dep_kw}/{dep}")
-    for kw in ("unevaluatedProperties", "unevaluatedItems"):
-        if isinstance(schema.get(kw), dict):
-            _shape_walk(schema[kw], f"{path}/{kw}")
-    for key in ("definitions", "$defs"):
-        for name, sub in (schema.get(key) or {}).items():
-            if isinstance(sub, dict):
-                _shape_walk(sub, f"{path}/{key}/{name}")
-
-
-# keyword routing for Spark-4 VariantType nodes (plans/variant.py):
-# scalars compile against per-row JSON type tags; object/array keywords
-# reuse the generic MapType/ArrayType machinery through typed views;
-# composition re-enters the generic body on the variant column itself
-_VARIANT_ARRAY_KWS = frozenset((
-    "items", "additionalItems", "prefixItems", "maxItems", "minItems",
-    "contains", "minContains", "maxContains", "unevaluatedItems"))
-_VARIANT_OBJECT_KWS = frozenset((
-    "required", "properties", "patternProperties", "additionalProperties",
-    "minProperties", "maxProperties", "propertyNames", "dependentRequired",
-    "dependencies", "dependentSchemas", "unevaluatedProperties"))
-_VARIANT_PASSTHROUGH_KWS = frozenset((
-    "allOf", "anyOf", "oneOf", "not", "if", "then", "else",
-    # user callable receives the variant Column itself
-    "x-spark-check"))
-# known keywords with no variant compile: surfaced in `unknown` (strict
-# mode flags them), never a silent vacuous pass. uniqueItems needs value
-# equality and Catalyst defines no ordering on VARIANT; content keywords,
-# these row x- keywords and every relational table-check declaration are
-# typed-column operators.
-_VARIANT_UNSUPPORTED_KWS = frozenset((
-    "uniqueItems", "contentEncoding", "contentMediaType", "contentSchema",
-    "x-langid", "x-rate", "x-encoding", "x-repair", "x-embedding",
-    *_TABLE_KEYWORDS))
-
-
-def _compile_variant_node(schema: dict, ctx: _Ctx) -> None:
-    """One schema node bound to a VariantType column.
-
-    The value's own JSON type survives per row, so this path has exact
-    Ajv type semantics (``type: "number"`` fires on the JSON string
-    ``"10"``) — the fidelity the ``from_json``-to-map path coerces away.
-    Null-vs-missing is exact too: a missing property is SQL NULL (value
-    keywords vacuous, ``required`` fires), JSON ``null`` is a present
-    VOID variant (``required`` satisfied, ``type`` fires).
-    """
-    for kw in schema:
-        if kw not in _KNOWN_KEYWORDS:
-            ctx.out.unknown.append((ctx.instance_path, kw))
-        elif kw in _KEYWORD_SHAPE and not _KEYWORD_SHAPE[kw](schema[kw]):
-            raise RulesetCompileError(
-                f"JSON schema malformed: bad value for {kw!r} at "
-                f"{ctx.instance_path or '/'}: {schema[kw]!r}")
-        elif kw in _VARIANT_UNSUPPORTED_KWS:
-            ctx.out.unknown.append((ctx.instance_path, f"{kw}:variant"))
-    if "x-severity" in schema:
-        ctx.severity = schema["x-severity"]
-
-    # Stage this node's expensive views once (variant expressions are
-    # CodegenFallback; without staging every keyword re-walks the binary —
-    # the SimHash/text-profile inlining trap, plans/variant.py docstring).
-    # Only at row-level contexts: inside HOF lambdas / probes stage is None.
-    if ctx.stage is not None and ctx.col is not None and ctx.vstage is None:
-        hint = ctx.instance_path or "root"
-        vcol = ctx.stage(hint, ctx.col)
-        t_st = ctx.stage(f"{hint}.tag", _vr.tag(vcol))
-        s_st = ctx.stage(f"{hint}.str", _vr.as_string(vcol))
-        d_st = ctx.stage(f"{hint}.dbl", _vr.as_double(vcol))
-        act = F.when(t_st == "VOID", F.lit("null")).otherwise(s_st)
-        ctx = _dc_replace(ctx, col=vcol,
-                          vstage={"t": t_st, "s": s_st, "d": d_st,
-                                  "actual": act})
-
-    if "$ref" in schema and isinstance(schema["$ref"], str):
-        sub = resolve_internal_ref(ctx.root_schema, schema["$ref"])
-        _compile_keywords(sub, _dc_replace(ctx))
-    _variant_scalar_checks(schema, ctx)
-    arr = {k: v for k, v in schema.items() if k in _VARIANT_ARRAY_KWS}
-    if arr:
-        # array<variant> view: NULL for non-arrays, so array keywords are
-        # vacuous there (JSON Schema semantics); element probes recurse
-        # back through the variant entry
-        arr_view = _vr.as_array(ctx.col)
-        if ctx.stage is not None:
-            arr_view = ctx.stage(f"{ctx.instance_path or 'root'}.arr",
-                                 arr_view)
-        _compile_keywords(arr, _dc_replace(
-            ctx, col=arr_view, vstage=None,
-            dtype=T.ArrayType(_vr.VariantType())))
-    obj = {k: v for k, v in schema.items() if k in _VARIANT_OBJECT_KWS}
-    if obj:
-        # map<string,variant> view: keeps a JSON-null field as a PRESENT
-        # entry, so map_contains_key == Ajv `required`; property values
-        # are variants that recurse back through the variant entry
-        obj_view = _vr.as_object(ctx.col)
-        if ctx.stage is not None:
-            obj_view = ctx.stage(f"{ctx.instance_path or 'root'}.obj",
-                                 obj_view)
-        _compile_keywords(obj, _dc_replace(
-            ctx, col=obj_view, vstage=None,
-            dtype=T.MapType(T.StringType(), _vr.VariantType())))
-    comp = {k: v for k, v in schema.items() if k in _VARIANT_PASSTHROUGH_KWS}
-    if comp:
-        # composition probes need the variant column itself; the flag
-        # suppresses re-entry for THIS node only — probe recursion into
-        # sub-schemas comes back through the variant entry as usual
-        _compile_keywords(comp, _dc_replace(ctx), _variant_entry_done=True)
-
-
-def _variant_scalar_checks(schema: dict, ctx: _Ctx) -> None:
-    """Scalar keywords on a variant node — every check is a pure-JVM
-    Catalyst expression over the variant binary; messages byte-match the
-    typed-column compilers so report fidelity is path-independent."""
-    col = ctx.col
-    vs = ctx.vstage or {}
-    vt, vss, vd = vs.get("t"), vs.get("s"), vs.get("d")
-    if "type" in schema:
-        _type_check(ctx, schema["type"])
-
-    if "enum" in schema:
-        allowed = schema["enum"]
-        eqs = [_vr.value_eq(col, v, t=vt, s=vss, d=vd) for v in allowed]
-        if any(e is None for e in eqs):
-            # object/array enum members: JSON equality is key-order
-            # insensitive, a serialized compare would not be — surface
-            ctx.out.unknown.append(
-                (ctx.instance_path, "enum:variant-composite-literal"))
-        else:
-            ok = eqs[0]
-            for e in eqs[1:]:
-                ok = ok | e
-            msg = _reason("must be equal to one of the allowed values",
-                          ctx, "enum", expected=allowed)
-            _add(ctx, "enum", _present(ctx) & ~ok, msg, expected=allowed)
-
-    if "const" in schema:
-        v = schema["const"]
-        eq = _vr.value_eq(col, v, t=vt, s=vss, d=vd)
-        if eq is None:
-            ctx.out.unknown.append(
-                (ctx.instance_path, "const:variant-composite-literal"))
-        else:
-            msg = _reason("must be equal to constant", ctx, "const",
-                          expected=[v])
-            _add(ctx, "const", _present(ctx) & ~eq, msg, expected=[v])
-
-    # string keywords: Ajv applies them to string instances only — the
-    # per-row STRING tag is the guard (a number is vacuously valid); the
-    # unguarded string VIEW would coerce numbers ("10" vs 10)
-    s = vss if vss is not None else _vr.as_string(col)
-    is_str = _vr.is_string(col, vt)
-    if "maxLength" in schema:
-        n = schema["maxLength"]
-        msg = _reason(f"must NOT have more than {n} characters", ctx,
-                      "maxLength")
-        _add(ctx, "maxLength",
-             _present(ctx) & is_str & (F.length(s) > n), msg)
-    if "minLength" in schema:
-        n = schema["minLength"]
-        msg = _reason(f"must NOT have fewer than {n} characters", ctx,
-                      "minLength")
-        _add(ctx, "minLength",
-             _present(ctx) & is_str & (F.length(s) < n), msg)
-    if "pattern" in schema:
-        p = schema["pattern"]
-        msg = _reason(f'must match pattern "{p}"', ctx, "pattern")
-        _add(ctx, "pattern", _present(ctx) & is_str & ~s.rlike(p), msg)
-    if "format" in schema:
-        f = schema["format"]
-        msg = _reason(f'must match format "{f}"', ctx, "format")
-        if f in FORMAT_REGEX:
-            _add(ctx, "format",
-                 _present(ctx) & is_str & ~s.rlike(FORMAT_REGEX[f]), msg)
-        elif f in FORMAT_ALWAYS_OK:
-            ctx.out.static_passes.append((ctx.instance_path, f"format:{f}"))
-        else:
-            # numeric-range / finite / UDF formats stay typed-column-only
-            ctx.out.unknown.append(
-                (ctx.instance_path, f"format:{f}:variant"))
-
-    # numeric keywords: guarded by the numeric tag (Ajv: non-numbers are
-    # vacuously valid; the double view alone would coerce "10" and true)
-    d = vd if vd is not None else _vr.as_double(col)
-    is_num = _vr.is_numeric(col, vt)
-    for kw, op, txt in (
-        ("minimum", lambda c, n: c < n, "must be >= {}"),
-        ("maximum", lambda c, n: c > n, "must be <= {}"),
-        ("exclusiveMinimum", lambda c, n: c <= n, "must be > {}"),
-        ("exclusiveMaximum", lambda c, n: c >= n, "must be < {}"),
-    ):
-        if kw in schema:
-            n = schema[kw]
-            msg = _reason(txt.format(n), ctx, kw)
-            _add(ctx, kw, _present(ctx) & is_num & op(d, F.lit(n)), msg)
-    if "multipleOf" in schema:
-        k = schema["multipleOf"]
-        msg = _reason(f"must be multiple of {k}", ctx, "multipleOf")
-        _add(ctx, "multipleOf",
-             _present(ctx) & is_num & (F.pmod(d, F.lit(k)) != 0), msg)
-
-
-def _compile_keywords(schema: dict, ctx: _Ctx, *,
-                      _variant_entry_done: bool = False) -> None:
-    """Compile every keyword of one schema node (no short-circuit)."""
-    if (not _variant_entry_done and ctx.col is not None
-            and _vr.is_variant(ctx.dtype)):
-        # Spark-4 VariantType node: scalar keywords compile against
-        # per-row JSON type tags; object/array keywords reuse this very
-        # body through map<string,variant> / array<variant> views
-        # (plans/variant.py module docstring)
-        _compile_variant_node(schema, ctx)
-        return
-    for kw in schema:
-        if kw not in _KNOWN_KEYWORDS:
-            ctx.out.unknown.append((ctx.instance_path, kw))
-        elif kw in _KEYWORD_SHAPE and not _KEYWORD_SHAPE[kw](schema[kw]):
-            raise RulesetCompileError(
-                f"JSON schema malformed: bad value for {kw!r} at "
-                f"{ctx.instance_path or '/'}: {schema[kw]!r}")
-
-    if "x-severity" in schema:
-        # severity annotation: applies to every check compiled at this
-        # node and below (engine extension; the reference's messages are
-        # uniformly warnings — remark-lint message() semantics)
-        ctx.severity = schema["x-severity"]
-
-    if "$ref" in schema and isinstance(schema["$ref"], str):
-        sub = resolve_internal_ref(ctx.root_schema, schema["$ref"])
-        # shallow ctx copy: keywords inside the $ref'd subtree (notably
-        # x-severity) must not leak into the referring node's remaining
-        # keywords via the shared mutable ctx
-        _compile_keywords(sub, _dc_replace(ctx))
-
-    if "type" in schema:
-        _type_check(ctx, schema["type"])
-
-    if "enum" in schema and ctx.col is not None:
-        allowed = schema["enum"]
-        msg = _reason("must be equal to one of the allowed values",
-                      ctx, "enum", expected=allowed)
-        _add(ctx, "enum", _present(ctx) & ~ctx.col.isin(*allowed), msg,
-             expected=allowed)
-
-    if "const" in schema and ctx.col is not None:
-        v = schema["const"]
-        msg = _reason("must be equal to constant", ctx, "const", expected=[v])
-        _add(ctx, "const", _present(ctx) & (ctx.col != F.lit(v)), msg,
-             expected=[v])
-
-    if "maxLength" in schema and ctx.col is not None:
-        n = schema["maxLength"]
-        msg = _reason(f"must NOT have more than {n} characters", ctx, "maxLength")
-        _add(ctx, "maxLength", _present(ctx) & (F.length(ctx.col) > n), msg)
-
-    if "minLength" in schema and ctx.col is not None:
-        n = schema["minLength"]
-        msg = _reason(f"must NOT have fewer than {n} characters", ctx, "minLength")
-        _add(ctx, "minLength", _present(ctx) & (F.length(ctx.col) < n), msg)
-
-    if "pattern" in schema and ctx.col is not None:
-        p = schema["pattern"]
-        msg = _reason(f'must match pattern "{p}"', ctx, "pattern")
-        # Ajv `pattern` is an unanchored search; rlike has identical semantics
-        _add(ctx, "pattern", _present(ctx) & ~ctx.col.rlike(p), msg)
-
-    if "format" in schema and ctx.col is not None:
-        f = schema["format"]
-        msg = _reason(f'must match format "{f}"', ctx, "format")
-        if f in FORMAT_REGEX:
-            _add(ctx, "format", _present(ctx) & ~ctx.col.rlike(FORMAT_REGEX[f]), msg)
-        elif f in FORMAT_NUMERIC_RANGE and isinstance(ctx.dtype, _NUMERIC):
-            # ajv-formats type:"number" formats — integral + in-range
-            lo, hi = FORMAT_NUMERIC_RANGE[f]
-            bad = (ctx.col < F.lit(lo)) | (ctx.col > F.lit(hi))
-            if not isinstance(ctx.dtype, _INTEGRAL):
-                bad = bad | (ctx.col != F.floor(ctx.col))
-            _add(ctx, "format", _present(ctx) & bad, msg)
-        elif f in FORMAT_ALWAYS_OK:
-            # ajv-formats registers these as unconditionally valid
-            ctx.out.static_passes.append((ctx.instance_path, f"format:{f}"))
-        elif f in FORMAT_FINITE:
-            if isinstance(ctx.dtype, (T.FloatType, T.DoubleType)):
-                bad = F.isnan(ctx.col) | (F.abs(ctx.col) == float("inf"))
-                _add(ctx, "format", _present(ctx) & bad, msg)
-            elif isinstance(ctx.dtype, _NUMERIC):
-                # integral/decimal values are always finite
-                ctx.out.static_passes.append(
-                    (ctx.instance_path, f"format:{f}"))
-            else:
-                ctx.out.unknown.append((ctx.instance_path, f"format:{f}"))
-        elif f in FORMAT_UDF_CHECKERS:
-            # vectorized Python probe (e.g. `regex` = re.compile validity):
-            # an Arrow-batched pandas UDF in an otherwise pure-JVM
-            # projection — opt-in via the udf_formats engine option
-            if ctx.out.options.get("udf_formats"):
-                ok = FORMAT_UDF_CHECKERS[f](ctx.col)
-                _add(ctx, "format",
-                     _present(ctx) & ~F.coalesce(ok, F.lit(False)), msg)
-            else:
-                ctx.out.unknown.append(
-                    (ctx.instance_path, f"format:{f}:requires-udf_formats"))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, f"format:{f}"))
-
-    # draft-07 content keywords — ASSERTED, a documented deviation from
-    # Ajv's annotate-only default (functions/content.py module docstring);
-    # unverifiable encodings/types fall to `unknown`, never vacuous-pass
-    if "contentEncoding" in schema and ctx.col is not None:
-        enc = schema["contentEncoding"]
-        if (isinstance(ctx.dtype, T.StringType)
-                and enc in _content.SUPPORTED_ENCODINGS):
-            msg = _reason(f'must be {enc} encoded', ctx, "contentEncoding")
-            _add(ctx, "contentEncoding",
-                 _present(ctx) & ~_content.base64_ok(ctx.col), msg)
-        else:
-            ctx.out.unknown.append(
-                (ctx.instance_path, f"contentEncoding:{enc}"))
-
-    if "contentMediaType" in schema and ctx.col is not None:
-        mt = schema["contentMediaType"]
-        enc = schema.get("contentEncoding")
-        msg = _reason(f'must be media type "{mt}"', ctx,
-                      "contentMediaType")
-        ok = None
-        if isinstance(ctx.dtype, T.BinaryType):
-            # binary instance: sniff the payload's own magic bytes
-            ok = _content.magic_ok(ctx.col, mt)
-        elif isinstance(ctx.dtype, T.StringType) and enc == "base64":
-            if mt == "application/json":
-                # full decode is unavoidable for JSON; the CASE guard
-                # keeps unbase64 off malformed payloads
-                ok = F.when(
-                    _content.base64_ok(ctx.col),
-                    _content.json_ok(F.unbase64(ctx.col).cast("string")))
-            else:
-                ok = _content.magic_ok(_content.b64_probe(ctx.col), mt)
-        elif isinstance(ctx.dtype, T.StringType) and enc is None \
-                and mt == "application/json":
-            ok = _content.json_ok(ctx.col)
-        if ok is not None:
-            _add(ctx, "contentMediaType",
-                 _present(ctx) & ~F.coalesce(ok, F.lit(False)), msg)
-        else:
-            ctx.out.unknown.append(
-                (ctx.instance_path, f"contentMediaType:{mt}"))
-
-    if "contentSchema" in schema and ctx.col is not None:
-        # 2019-09 contentSchema: validate the EMBEDDED document against a
-        # schema. Spark-4 composition: try_parse_json -> VariantType ->
-        # the whole variant keyword machinery (exact JSON types, staged
-        # views) applies to the parsed content. Unparsable content stays
-        # vacuous here — contentMediaType is the wellformedness check, so
-        # the two keywords layer exactly like Ajv's annotations would.
-        sub = schema["contentSchema"]
-        mt = schema.get("contentMediaType")
-        enc = schema.get("contentEncoding")
-        if (isinstance(sub, dict) and mt == "application/json"
-                and isinstance(ctx.dtype, T.StringType)
-                and _vr.HAVE_VARIANT):
-            raw = (F.unbase64(ctx.col).cast("string") if enc == "base64"
-                   else ctx.col)
-            sub_ctx = _dc_replace(
-                ctx, col=F.try_parse_json(raw), dtype=_vr.VariantType(),
-                schema_path=f"{ctx.schema_path}/contentSchema",
-                vstage=None)
-            _compile_keywords(sub, sub_ctx)
-        else:
-            ctx.out.unknown.append((ctx.instance_path, "contentSchema"))
-
-    for kw, op, txt in (
-        ("minimum", lambda c, n: c < n, "must be >= {}"),
-        ("maximum", lambda c, n: c > n, "must be <= {}"),
-        ("exclusiveMinimum", lambda c, n: c <= n, "must be > {}"),
-        ("exclusiveMaximum", lambda c, n: c >= n, "must be < {}"),
-    ):
-        if kw in schema and ctx.col is not None:
-            n = schema[kw]
-            num = (ctx.col.try_cast("double")
-                   if isinstance(ctx.dtype, T.StringType) else ctx.col)
-            msg = _reason(txt.format(n), ctx, kw)
-            _add(ctx, kw, _present(ctx) & op(num, F.lit(n)), msg)
-
-    if "multipleOf" in schema and ctx.col is not None:
-        k = schema["multipleOf"]
-        num = (ctx.col.try_cast("double")
-               if isinstance(ctx.dtype, T.StringType) else ctx.col)
-        msg = _reason(f"must be multiple of {k}", ctx, "multipleOf")
-        _add(ctx, "multipleOf", _present(ctx) & (F.pmod(num, F.lit(k)) != 0), msg)
-
-    if schema.get("x-finite") is True:
-        if ctx.col is not None and isinstance(ctx.dtype,
-                                              (T.FloatType, T.DoubleType)):
-            # NaN/±Inf slip through minimum alone (NaN sorts above every
-            # double so `>= min` holds); JSON has no non-finite numbers,
-            # so the reference's Ajv never faces them — table columns do
-            msg = _reason("must be finite", ctx, "x-finite")
-            _add(ctx, "x-finite",
-                 _present(ctx) & (F.isnan(ctx.col)
-                                  | (F.abs(ctx.col)
-                                     == F.lit(float("inf")))),
-                 msg)
-        elif not ctx.silent:
-            # non-float columns cannot hold NaN/Inf — surface the no-op
-            # declaration instead of a silent vacuous pass
-            ctx.out.unknown.append((ctx.instance_path, "x-finite"))
-
-    for kw, op, txt in (
-        ("maxItems", lambda c, n: F.size(c) > n, "must NOT have more than {} items"),
-        ("minItems", lambda c, n: F.size(c) < n, "must NOT have fewer than {} items"),
-    ):
-        if kw in schema and ctx.col is not None and isinstance(ctx.dtype, T.ArrayType):
-            n = schema[kw]
-            msg = _reason(txt.format(n), ctx, kw)
-            _add(ctx, kw, _present(ctx) & op(ctx.col, F.lit(n)), msg)
-
-    if "required" in schema:
-        for prop in schema["required"]:
-            child_col, child_t, exists = _child(ctx, prop)
-            msg = _reason(f"must have required property '{prop}'", ctx, "required")
-            if not exists:
-                # property absent from the schema entirely: statically
-                # violated — but only when the enclosing object EXISTS
-                # (Ajv skips the whole subschema on an absent object; an
-                # unguarded lit(True) fired on NULL parents too)
-                ctx.out.static_failures.append(
-                    (ctx.instance_path, "required", f"no column for {prop!r}"))
-                violated = F.lit(True) if ctx.col is None \
-                    else ctx.col.isNotNull()
-            elif isinstance(ctx.dtype, T.MapType):
-                violated = ~F.map_contains_key(ctx.col, prop)
-                if ctx.col is not None:
-                    violated = ctx.col.isNotNull() & violated
-            else:
-                violated = child_col.isNull()
-                if ctx.col is not None:
-                    # nested object: required fires only when the object exists
-                    violated = ctx.col.isNotNull() & violated
-            # Ajv reports required at the *object's* path with param
-            # missingProperty (index.ts:175-177)
-            _add(ctx, "required", violated, msg,
-                 actual=F.lit(None).cast("string"))
-
-    if "properties" in schema:
-        for prop, sub in schema["properties"].items():
-            child_col, child_t, exists = _child(ctx, prop)
-            if not exists:
-                # property constrained but column missing: value keywords are
-                # vacuous on an absent property (Ajv semantics) — skip. But
-                # unknown keywords must still surface (a typo'd keyword is a
-                # schema bug whether or not the column exists today; Ajv
-                # strict flags it at compile time, data-independent)
-                for kw in sub if isinstance(sub, dict) else ():
-                    if kw not in _KNOWN_KEYWORDS:
-                        ctx.out.unknown.append(
-                            (f"{ctx.instance_path}/{prop}", kw))
-                ctx.out.static_passes.append(
-                    (f"{ctx.instance_path}/{prop}", "absent-column"))
-                continue
-            sub_ctx = _Ctx(
-                col=child_col, dtype=child_t,
-                instance_path=f"{ctx.instance_path}/{prop}",
-                schema_path=f"{ctx.schema_path}/properties/{prop}",
-                schema_file=_sub_file(ctx, sub),
-                df_schema=ctx.df_schema, root_schema=ctx.root_schema,
-                out=ctx.out, extra_checks=ctx.extra_checks, silent=ctx.silent,
-                severity=ctx.severity, stage=ctx.stage,
-            )
-            _compile_keywords(sub, sub_ctx)
-
-    if "patternProperties" in schema:
-        _pattern_properties(ctx, schema["patternProperties"])
-
-    if "prefixItems" in schema and ctx.col is not None \
-            and isinstance(ctx.dtype, T.ArrayType):
-        # 2020-12 positional form: `items` (dict) is the TAIL schema when
-        # prefixItems is present (same role additionalItems plays in
-        # draft-07); compiled through the shared tuple path
-        tail = schema["items"] if isinstance(schema.get("items"), dict) \
-            else schema.get("additionalItems")
-        _tuple_items_check(ctx, schema["prefixItems"], tail,
-                           kw="prefixItems")
-    elif "items" in schema and ctx.col is not None \
-            and isinstance(ctx.dtype, T.ArrayType):
-        if isinstance(schema["items"], dict):
-            _items_check(ctx, schema["items"])
-        elif isinstance(schema["items"], list):
-            _tuple_items_check(ctx, schema["items"],
-                               schema.get("additionalItems"))
-
-    if schema.get("additionalProperties") is False \
-            or isinstance(schema.get("additionalProperties"), dict):
-        _additional_properties(ctx, schema)
-
-    if "unevaluatedProperties" in schema:
-        _unevaluated_properties(ctx, schema)
-
-    if "unevaluatedItems" in schema:
-        _unevaluated_items(ctx, schema)
-
-    if "allOf" in schema:
-        for i, sub in enumerate(schema["allOf"]):
-            sub_ctx = _Ctx(
-                col=ctx.col, dtype=ctx.dtype,
-                instance_path=ctx.instance_path,
-                schema_path=f"{ctx.schema_path}/allOf/{i}",
-                schema_file=_sub_file(ctx, sub),
-                df_schema=ctx.df_schema, root_schema=ctx.root_schema,
-                out=ctx.out, extra_checks=ctx.extra_checks, silent=ctx.silent,
-                severity=ctx.severity, stage=ctx.stage, vstage=ctx.vstage,
-            )
-            _compile_keywords(sub, sub_ctx)
-
-    # Composition keywords at a property node are guarded by presence:
-    # Ajv skips all value keywords on an absent property (only the parent's
-    # `required` fires), and an absent value makes every child schema
-    # vacuously valid — without the guard, oneOf (n_ok == len(children) != 1)
-    # and not would fire on NULLs.
-    def _guard(violated: Column) -> Column:
-        return violated if ctx.col is None else _present(ctx) & violated
-
-    if "anyOf" in schema:
-        vals = [_validity(sub, ctx, f"{ctx.schema_path}/anyOf/{i}")
-                for i, sub in enumerate(schema["anyOf"])]
-        any_ok = vals[0]
-        for v in vals[1:]:
-            any_ok = any_ok | v
-        msg = _reason("must match a schema in anyOf", ctx, "anyOf")
-        _add(ctx, "anyOf", _guard(~any_ok), msg)
-
-    if "oneOf" in schema:
-        vals = [_validity(sub, ctx, f"{ctx.schema_path}/oneOf/{i}")
-                for i, sub in enumerate(schema["oneOf"])]
-        n_ok = balanced_reduce(lambda a, b: a + b,
-                               [v.cast("int") for v in vals])
-        msg = _reason("must match exactly one schema in oneOf", ctx, "oneOf")
-        _add(ctx, "oneOf", _guard(n_ok != 1), msg)
-
-    if "not" in schema:
-        ok = _validity(schema["not"], ctx, f"{ctx.schema_path}/not")
-        msg = _reason("must NOT be valid", ctx, "not")
-        _add(ctx, "not", _guard(ok), msg)
-
-    if schema.get("uniqueItems") is True and ctx.col is not None \
-            and isinstance(ctx.dtype, T.ArrayType):
-        msg = _reason("must NOT have duplicate items", ctx, "uniqueItems")
-        _add(ctx, "uniqueItems",
-             _present(ctx) & (F.size(F.array_distinct(ctx.col))
-                              < F.size(ctx.col)), msg)
-
-    if "contains" in schema and ctx.col is not None \
-            and isinstance(ctx.dtype, T.ArrayType):
-        elem_ok = _element_validity_fn(ctx, schema["contains"],
-                                       f"{ctx.schema_path}/contains")
-        n_match = F.size(F.filter(ctx.col, elem_ok))
-        lo = schema.get("minContains", 1)
-        if lo > 0:
-            msg = _reason(f"must contain at least {lo} valid item(s)",
-                          ctx, "contains")
-            _add(ctx, "contains", _present(ctx) & (n_match < lo), msg)
-        if "maxContains" in schema:
-            hi = schema["maxContains"]
-            msg = _reason(f"must contain at most {hi} valid item(s)",
-                          ctx, "maxContains")
-            _add(ctx, "maxContains", _present(ctx) & (n_match > hi), msg)
-
-    for kw, cmp_fn, txt in (
-        ("minProperties", lambda n, k: n < k,
-         "must NOT have fewer than {} properties"),
-        ("maxProperties", lambda n, k: n > k,
-         "must NOT have more than {} properties"),
-    ):
-        if kw in schema:
-            k = schema[kw]
-            n_props = _property_count(ctx)
-            if n_props is None:
-                continue
-            msg = _reason(txt.format(k), ctx, kw)
-            violated = cmp_fn(n_props, F.lit(k))
-            if ctx.col is not None:
-                violated = _present(ctx) & violated
-            _add(ctx, kw, violated, msg)
-
-    # dependentRequired/dependentSchemas (2019-09) + draft-07 `dependencies`
-    for dep_kw in ("dependentRequired", "dependencies", "dependentSchemas"):
-        for trigger, reqs in (schema.get(dep_kw) or {}).items():
-            t_col, _t, t_exists = _child(ctx, trigger)
-            if not t_exists:
-                ctx.out.static_passes.append(
-                    (f"{ctx.instance_path}/{trigger}", dep_kw))
-                continue
-            t_present = (F.map_contains_key(ctx.col, trigger)
-                         if isinstance(ctx.dtype, T.MapType)
-                         else t_col.isNotNull())
-            if isinstance(reqs, dict):  # dependencies schema form
-                dep_ok = _validity(reqs, ctx,
-                                   f"{ctx.schema_path}/{dep_kw}/{trigger}")
-                msg = _reason(f'must match "{trigger}" dependency schema',
-                              ctx, dep_kw)
-                _add(ctx, dep_kw, t_present & ~dep_ok, msg)
-                continue
-            for req in reqs:
-                r_col, _rt, r_exists = _child(ctx, req)
-                msg = _reason(
-                    f"must have property {req} when property {trigger} "
-                    f"is present", ctx, dep_kw)
-                if not r_exists:
-                    violated = t_present
-                elif isinstance(ctx.dtype, T.MapType):
-                    violated = t_present & ~F.map_contains_key(ctx.col, req)
-                else:
-                    violated = t_present & r_col.isNull()
-                _add(ctx, dep_kw, violated, msg,
-                     actual=F.lit(None).cast("string"))
-
-    if "if" in schema:
-        cond_ok = _validity(schema["if"], ctx, f"{ctx.schema_path}/if")
-        if "then" in schema:
-            then_ok = _validity(schema["then"], ctx,
-                                f"{ctx.schema_path}/then")
-            msg = _reason('must match "then" schema', ctx, "if")
-            _add(ctx, "if", _guard(cond_ok & ~then_ok), msg)
-        if "else" in schema:
-            else_ok = _validity(schema["else"], ctx,
-                                f"{ctx.schema_path}/else")
-            msg = _reason('must match "else" schema', ctx, "if")
-            _add(ctx, "if", _guard(~cond_ok & ~else_ok), msg)
-
-    if "propertyNames" in schema:
-        _property_names(ctx, schema["propertyNames"])
-
-    if not ctx.silent:
-        _table_checks(schema, ctx)
-
-    if "x-langid" in schema and ctx.col is not None:
-        # declared-vs-detected language consistency: a pure row expression
-        # (marker-token argmax, operators/text.lang_guess) so it rides the
-        # one-projection scan — no extra pass
-        from ..operators import text as _text
-
-        p = schema["x-langid"]
-        declared = p["declared"]
-        if declared not in ctx.df_schema.fieldNames():
-            # declared column absent from the table: can't evaluate —
-            # surfaced, never silently vacuous
-            ctx.out.unknown.append(
-                (ctx.instance_path, f"x-langid:{declared}"))
-        else:
-            if not ctx.silent:
-                ctx.out.columns_read.add(declared)
-            dcol = F.col(declared)
-            guess = _text.lang_guess(ctx.col)
-            min_toks = int(p.get("min_tokens", 5))
-            violated = (_present(ctx) & dcol.isNotNull()
-                        & (_text.token_count(ctx.col) >= min_toks)
-                        & (guess != F.lit("und"))
-                        & (guess != dcol))
-            msg = _reason(
-                f'must match declared language in "{declared}"', ctx,
-                "x-langid")
-            _add(ctx, "x-langid", violated, msg, actual=guess)
-
-    if "x-rate" in schema and ctx.col is not None:
-        # transcript-vs-duration plausibility (the audio-tier cross-field
-        # check, functions/audio.speaking_rate_violations as a DSL row
-        # expression): chars/sec of this string column against a declared
-        # millisecond duration column must land in [lo, hi]
-        p = schema["x-rate"]
-        dur_name = p["duration"]
-        if dur_name not in ctx.df_schema.fieldNames():
-            ctx.out.unknown.append(
-                (ctx.instance_path, f"x-rate:{dur_name}"))
-        else:
-            if not ctx.silent:
-                ctx.out.columns_read.add(dur_name)
-            lo = float(p.get("lo", 1.0))
-            hi = float(p.get("hi", 40.0))
-            dur = F.col(dur_name)
-            rate = F.length(ctx.col) / (dur / F.lit(1000.0))
-            violated = (_present(ctx) & dur.isNotNull() & (dur > 0)
-                        & ((rate < lo) | (rate > hi)))
-            msg = _reason(
-                f'must have plausible speaking rate ({lo}-{hi} chars/sec '
-                f'against "{dur_name}")', ctx, "x-rate")
-            _add(ctx, "x-rate", violated, msg,
-                 actual=F.round(rate, 2).cast("string"))
-
-    if "x-encoding" in schema and ctx.col is not None:
-        # encoding-damage gate (operators/text.MOJIBAKE_PATTERNS): total
-        # mojibake-artifact occurrences in this string column must not
-        # exceed max_artifacts. Pure-JVM regexp_count sum — rides the
-        # one-projection pass like every row check
-        from ..operators.text import MOJIBAKE_PATTERNS
-        p = schema["x-encoding"]
-        names = p.get("patterns") or list(MOJIBAKE_PATTERNS)
-        unknown_pats = [n for n in names if n not in MOJIBAKE_PATTERNS]
-        if unknown_pats:
-            ctx.out.unknown.append(
-                (ctx.instance_path,
-                 "x-encoding:" + ",".join(unknown_pats)))
-        else:
-            max_art = int(p.get("max_artifacts", 0))
-            total = balanced_reduce(
-                lambda a, b: a + b,
-                [F.coalesce(
-                    F.regexp_count(ctx.col,
-                                   F.lit(MOJIBAKE_PATTERNS[n])),
-                    F.lit(0)) for n in names])
-            violated = _present(ctx) & (total > max_art)
-            msg = _reason(
-                f"must contain at most {max_art} encoding-damage "
-                f"artifact(s) ({'/'.join(names)})", ctx, "x-encoding")
-            _add(ctx, "x-encoding", violated, msg,
-                 actual=total.cast("string"))
-
-    if "x-embedding" in schema and ctx.col is not None:
-        if isinstance(ctx.dtype, T.ArrayType) and isinstance(
-                ctx.dtype.elementType,
-                (T.FloatType, T.DoubleType, T.DecimalType)):
-            _embedding_checks(ctx, schema["x-embedding"])
-        else:
-            # declared on a non-float-array column: config bug, surface it
-            ctx.out.unknown.append((ctx.instance_path, "x-embedding"))
-
-    if "x-spark-check" in schema and ctx.col is not None:
-        name = schema["x-spark-check"]
-        fn = ctx.extra_checks.get(name)
-        if fn is None:
-            ctx.out.unknown.append((ctx.instance_path, f"x-spark-check:{name}"))
-        else:
-            msg = _reason(f'must pass check "{name}"', ctx, "x-spark-check")
-            ok = fn(ctx.col)
-            if ctx.stage is not None and _calls_python(ok):
-                # inline, every consumer of the predicate (the violations
-                # prefilter and the explode) gets its own Python crossing;
-                # staged, the check crosses once per row
-                ok = ctx.stage(f"{ctx.instance_path}.check", ok)
-            _add(ctx, "x-spark-check", _present(ctx) & ~ok, msg)
-
-
-def _table_checks(schema: dict, ctx: _Ctx) -> None:
-    """Compile the node's table-level declarations, in the declaration
-    order of operators/table_checks.py (the union order of their
-    violation rows). A table check aggregates or joins whole columns, so
-    it compiles only at its declared placement; any other use lands in
-    ``unknown`` so strict mode flags the dropped declaration."""
-    names = ctx.df_schema.fieldNames()
-    top = ctx.instance_path.count("/") == 1 and ctx.col is not None
-    for spec in TABLE_CHECKS.values():
-        v = schema.get(spec.keyword)
-        if v is None or not spec.declares(v):
-            continue
-        p = spec.compile(v, ctx.severity)
-        if spec.where == ROOT:
-            placed = ctx.instance_path == "" and all(
-                k in names for k in p["keys"])
-        else:
-            placed = (top
-                      and (spec.where != NUMERIC
-                           or isinstance(ctx.dtype, _NUMERIC))
-                      and (spec.where != STRING
-                           or isinstance(ctx.dtype, T.StringType))
-                      and (spec.column is None or p[spec.column] is None
-                           or p[spec.column] in names))
-        if placed:
-            ctx.out.table_checks.append(
-                (spec.kind, ctx.instance_path[1:], p))
-        else:
-            ctx.out.unknown.append((ctx.instance_path, spec.keyword))
-
-
 def _calls_python(col: Column) -> bool:
     """True iff ``col`` evaluates a Python UDF. Decided on the JVM
     expression tree (its PYTHON_UDF pattern bit), so no Spark job runs.
@@ -1311,51 +1017,6 @@ def _calls_python(col: Column) -> bool:
             jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PYTHON_UDF()))
     except (AttributeError, Py4JError):
         return False
-
-
-def _embedding_checks(ctx: _Ctx, p: dict) -> None:
-    """``x-embedding``: quality invariants of an embedding column — the
-    validation surface an embeddings table needs before any ANN/near-dup
-    pass will behave (similarity.py assumes finite, consistently-sized,
-    optionally L2-normalized vectors). All pure row-level Column
-    expressions (probes inside compositions work), presence-guarded:
-
-    * ``dim``        — exact dimensionality
-    * ``finite``     — no NaN/Inf elements (default True)
-    * ``nonzero``    — not the all-zero vector
-    * ``normalized`` — |L2 norm − 1| ≤ ``norm_tol`` (default 1e-3); only
-      tested on finite vectors (NaN norms already fail ``finite``, and
-      NaN comparison semantics differ across engines)
-    """
-    c = ctx.col.cast("array<double>")
-    present = _present(ctx)
-    n_bad = F.size(F.filter(
-        c, lambda x: F.isnan(x) | (F.abs(x) == float("inf"))))
-    finite_ok = n_bad == 0
-    if "dim" in p:
-        d = int(p["dim"])
-        msg = _reason(f"must have embedding dimension {d}", ctx,
-                      "x-embedding")
-        _add(ctx, "x-embedding-dim", present & (F.size(c) != d), msg,
-             actual=F.size(c).cast("string"))
-    if p.get("finite", True):
-        msg = _reason("must contain only finite values", ctx, "x-embedding")
-        _add(ctx, "x-embedding-finite", present & ~finite_ok, msg,
-             actual=F.concat(n_bad.cast("string"), F.lit(" non-finite")))
-    norm2 = F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    if p.get("nonzero"):
-        msg = _reason("must not be the zero vector", ctx, "x-embedding")
-        _add(ctx, "x-embedding-nonzero",
-             present & finite_ok & (norm2 == 0.0), msg,
-             actual=F.lit("0.0"))
-    if p.get("normalized"):
-        tol = float(p.get("norm_tol", 1e-3))
-        msg = _reason(f"must be L2-normalized (|norm-1| <= {tol:g})", ctx,
-                      "x-embedding")
-        _add(ctx, "x-embedding-norm",
-             present & finite_ok
-             & (F.abs(F.sqrt(norm2) - 1.0) > tol), msg,
-             actual=F.round(F.sqrt(norm2), 6).cast("string"))
 
 
 def _items_check(ctx: _Ctx, items_schema: dict) -> None:
@@ -1415,7 +1076,7 @@ def _tuple_items_check(ctx: _Ctx, items_list: list, additional,
              _present(ctx) & F.exists(tail, lambda e: ~elem_ok(e)), msg)
 
 
-def _pattern_properties(ctx: _Ctx, pp: dict) -> None:
+def _pattern_properties(ctx: _Ctx, schema: dict, k) -> None:
     """``patternProperties``: every property whose NAME matches a pattern
     (unanchored search, Ajv semantics) must have a value valid under that
     pattern's schema.
@@ -1428,6 +1089,7 @@ def _pattern_properties(ctx: _Ctx, pp: dict) -> None:
     runtime forall over ``map_entries`` (matching keys with invalid values
     are listed in ``actual``).
     """
+    pp = schema[k.name]
     if ctx.col is None or isinstance(ctx.dtype, T.StructType):
         names = (ctx.df_schema.fieldNames() if ctx.col is None
                  else ctx.dtype.fieldNames())
@@ -1439,16 +1101,12 @@ def _pattern_properties(ctx: _Ctx, pp: dict) -> None:
                     (ctx.instance_path, f"patternProperties:{pattern}"))
             for nm in matched:
                 child_col, child_t, _exists = _child(ctx, nm)
-                sub_ctx = _Ctx(
-                    col=child_col, dtype=child_t,
+                _compile_keywords(sub, _dc_replace(
+                    ctx, col=child_col, dtype=child_t,
                     instance_path=f"{ctx.instance_path}/{nm}",
-                    schema_path=f"{ctx.schema_path}/patternProperties/{pattern}",
-                    schema_file=_sub_file(ctx, sub),
-                    df_schema=ctx.df_schema, root_schema=ctx.root_schema,
-                    out=ctx.out, extra_checks=ctx.extra_checks,
-                    silent=ctx.silent, severity=ctx.severity,
-                )
-                _compile_keywords(sub, sub_ctx)
+                    schema_path=f"{ctx.schema_path}/{k.name}/{pattern}",
+                    schema_file=_sub_file(ctx, sub), stage=None,
+                    vstage=None))
         return
     if isinstance(ctx.dtype, T.MapType):
         val_t = ctx.dtype.valueType
@@ -1613,11 +1271,12 @@ def _static_name_ok(name: str, sub: dict) -> bool:
     return True
 
 
-def _property_names(ctx: _Ctx, sub: dict) -> None:
+def _property_names(ctx: _Ctx, schema: dict, k) -> None:
     """`propertyNames`: every property name satisfies ``sub``. Map keys are
     data -> runtime forall over map_keys; struct/root names are static.
     Both paths enforce exactly ``_PNAME_KEYWORDS`` (+ the string-type
     rule)."""
+    sub = schema[k.name]
     msg = _reason("property name must be valid", ctx, "propertyNames")
     for kw in sub:
         if kw not in _PNAME_KEYWORDS + ("type",):
@@ -1808,12 +1467,12 @@ def _item_coverage(ctx: _Ctx, schema: dict, *, _top: bool = False):
     return covs, preds
 
 
-def _unevaluated_items(ctx: _Ctx, schema: dict) -> None:
+def _unevaluated_items(ctx: _Ctx, schema: dict, k) -> None:
     """2019-09 ``unevaluatedItems``: indexes below a validating branch's
     prefix/items coverage (or matching a ``contains`` schema) are
     evaluated; the rest must be absent (``false``) or match the given
     schema. Non-array nodes are vacuous."""
-    ui = schema["unevaluatedItems"]
+    ui = schema[k.name]
     msg = _reason("must NOT have unevaluated items", ctx,
                   "unevaluatedItems")
     if ui is True or ctx.col is None \
@@ -1844,13 +1503,13 @@ def _unevaluated_items(ctx: _Ctx, schema: dict) -> None:
          actual=n_bad.cast("string"))
 
 
-def _unevaluated_properties(ctx: _Ctx, schema: dict) -> None:
+def _unevaluated_properties(ctx: _Ctx, schema: dict, k) -> None:
     """2019-09 ``unevaluatedProperties``: like additionalProperties but
     seeing THROUGH in-place applicators — a property declared by a
     validating allOf/anyOf/oneOf/then/else/$ref branch counts as
     evaluated. ``false`` forbids unevaluated properties; a schema
     validates their values; ``true`` is vacuous."""
-    up = schema["unevaluatedProperties"]
+    up = schema[k.name]
     msg = _reason("must NOT have unevaluated properties", ctx,
                   "unevaluatedProperties")
     if up is True:
@@ -1917,13 +1576,15 @@ def _unevaluated_properties(ctx: _Ctx, schema: dict) -> None:
         (ctx.instance_path, "unevaluatedProperties"))
 
 
-def _additional_properties(ctx: _Ctx, schema: dict) -> None:
+def _additional_properties(ctx: _Ctx, schema: dict, k) -> None:
     """``additionalProperties``: a property is *additional* when its name
     is neither in ``properties`` nor matched by any ``patternProperties``
     regex (JSON Schema core). ``false`` forbids additional properties;
     a schema validates their values (previously the dict form compiled to
-    nothing, silently)."""
-    ap = schema.get("additionalProperties")
+    nothing, silently). ``true`` is vacuous."""
+    ap = schema[k.name]
+    if ap is not False and not isinstance(ap, dict):
+        return
     allowed = list(schema.get("properties", {}).keys())
     patterns = list(schema.get("patternProperties", {}).keys())
     msg = _reason("must NOT have additional properties", ctx,
@@ -1943,16 +1604,12 @@ def _additional_properties(ctx: _Ctx, schema: dict) -> None:
             # shape as a patternProperties static match
             for nm in extra:
                 child_col, child_t, _exists = _child(ctx, nm)
-                sub_ctx = _Ctx(
-                    col=child_col, dtype=child_t,
+                _compile_keywords(ap, _dc_replace(
+                    ctx, col=child_col, dtype=child_t,
                     instance_path=f"{ctx.instance_path}/{nm}",
-                    schema_path=f"{ctx.schema_path}/additionalProperties",
-                    schema_file=_sub_file(ctx, ap),
-                    df_schema=ctx.df_schema, root_schema=ctx.root_schema,
-                    out=ctx.out, extra_checks=ctx.extra_checks,
-                    silent=ctx.silent, severity=ctx.severity,
-                )
-                _compile_keywords(ap, sub_ctx)
+                    schema_path=f"{ctx.schema_path}/{k.name}",
+                    schema_file=_sub_file(ctx, ap), stage=None,
+                    vstage=None))
             if not extra:
                 ctx.out.static_passes.append((ctx.instance_path,
                                               "additionalProperties"))
@@ -2013,6 +1670,329 @@ def _additional_properties(ctx: _Ctx, schema: dict) -> None:
         _add(ctx, "additionalProperties",
              _present(ctx) & (F.size(extra_keys) > 0), msg,
              actual=F.concat_ws(",", extra_keys))
+
+
+# ---------------------------------------------------------------------------
+# the keyword table
+# ---------------------------------------------------------------------------
+
+# where a keyword's subschemas sit (``_shape_walk`` descends into them)
+SCHEMA = "schema"  # the value is a schema, or a list of schemas
+MAP = "map"        # the value maps names to schemas
+PROPS = "props"    # like MAP, but a value that is not a schema is an error
+
+# how a keyword compiles on a Spark-4 VariantType node (plans/variant.py):
+# scalars compile against per-row JSON type tags; object/array keywords
+# reuse the generic MapType/ArrayType machinery through typed views;
+# composition re-enters the generic body on the variant column itself.
+# UNSUPPORTED keywords are surfaced in `unknown` (strict mode flags them),
+# never a silent vacuous pass. None: the keyword adds no check there.
+SCALAR = "scalar"
+ARRAY_VIEW = "array"
+OBJECT_VIEW = "object"
+PASSTHROUGH = "passthrough"
+UNSUPPORTED = "unsupported"
+
+
+@dataclass(frozen=True)
+class _Keyword:
+    """One row keyword, declared once."""
+
+    name: str
+    shape: object = None             # the value's type(s), a predicate or
+    #                                  None (any value)
+    subs: str | None = None          # where its subschemas sit
+    route: str | None = None         # its compile on a variant node
+    compile: Callable | None = None  # fn(ctx, schema, k); None: another
+    #                                  entry reads it, or an annotation
+    params: tuple = ()               # x-* keywords: table_checks.Param
+    rule: Callable | None = None     # cross-field predicate(v, params)
+
+    def shape_ok(self, v) -> bool:
+        if self.params:
+            return params_ok(self.params, v, self.rule)
+        if isinstance(self.shape, (type, tuple)):
+            return isinstance(v, self.shape)
+        return self.shape is None or self.shape(v)
+
+
+def _nonneg(v) -> bool:
+    return v >= 0
+
+
+def _count(v) -> bool:
+    return _is_int(v) and v >= 0
+
+
+def _strings(v) -> bool:
+    return isinstance(v, list) and all(isinstance(s, str) for s in v)
+
+
+def _schemas(v) -> bool:
+    return isinstance(v, list) and all(isinstance(s, dict) for s in v)
+
+
+def _table_keyword(kw: str) -> _Keyword:
+    """A table-check keyword, derived from its operators/table_checks.py
+    declarations (x-unique has two forms)."""
+    specs = _TABLE_KEYWORDS[kw]
+    return _Keyword(kw, lambda v: any(s.shape_ok(v) for s in specs),
+                    route=UNSUPPORTED, compile=_table_check)
+
+
+# Every keyword, in compile order: the order sets the constraint ids (and
+# their #2 suffixes) and the `unknown` order, so it is part of the output.
+# Keywords whose compile reads a companion (prefixItems/items ->
+# additionalItems, contains -> minContains/maxContains, if -> then/else)
+# declare the companion with no compile of its own.
+_KEYWORDS = (
+    _Keyword("x-severity", lambda v: v in ("error", "warning", "info"),
+             route=SCALAR, compile=_severity),
+    _Keyword("$ref", route=SCALAR, compile=_ref),
+    _Keyword("type", lambda v: isinstance(v, str) or _strings(v),
+             route=SCALAR, compile=_type_check),
+    _Keyword("enum", lambda v: isinstance(v, list) and len(v) > 0,
+             route=SCALAR, compile=_enum),
+    _Keyword("const", route=SCALAR, compile=_const),
+    _Keyword("maxLength", _is_int, route=SCALAR, compile=_compare(
+        _length_view, operator.gt, "must NOT have more than {} characters")),
+    _Keyword("minLength", _is_int, route=SCALAR, compile=_compare(
+        _length_view, operator.lt, "must NOT have fewer than {} characters")),
+    _Keyword("pattern", _regex_ok, route=SCALAR, compile=_pattern),
+    _Keyword("format", str, route=SCALAR, compile=_format),
+    # content keywords are typed-column operators
+    _Keyword("contentEncoding", str, route=UNSUPPORTED,
+             compile=_content_encoding),
+    _Keyword("contentMediaType", str, route=UNSUPPORTED,
+             compile=_content_media_type),
+    _Keyword("contentSchema", dict, SCHEMA, UNSUPPORTED,
+             _content_schema),
+    _Keyword("minimum", _is_num, route=SCALAR, compile=_compare(
+        _number_view, operator.lt, "must be >= {}")),
+    _Keyword("maximum", _is_num, route=SCALAR, compile=_compare(
+        _number_view, operator.gt, "must be <= {}")),
+    _Keyword("exclusiveMinimum", _is_num, route=SCALAR, compile=_compare(
+        _number_view, operator.le, "must be > {}")),
+    _Keyword("exclusiveMaximum", _is_num, route=SCALAR, compile=_compare(
+        _number_view, operator.ge, "must be < {}")),
+    _Keyword("multipleOf", lambda v: _is_num(v) and v > 0, route=SCALAR,
+             compile=_compare(_number_view,
+                              lambda c, n: F.pmod(c, n) != 0,
+                              "must be multiple of {}")),
+    _Keyword("x-finite", bool, compile=_finite),
+    _Keyword("maxItems", _is_int, route=ARRAY_VIEW, compile=_compare(
+        _size_view, operator.gt, "must NOT have more than {} items")),
+    _Keyword("minItems", _is_int, route=ARRAY_VIEW, compile=_compare(
+        _size_view, operator.lt, "must NOT have fewer than {} items")),
+    _Keyword("required", _strings, route=OBJECT_VIEW, compile=_required),
+    _Keyword("properties", dict, PROPS, OBJECT_VIEW, _properties),
+    _Keyword("patternProperties", lambda v: isinstance(v, dict) and all(
+        _regex_ok(p) and isinstance(s, dict) for p, s in v.items()),
+        MAP, OBJECT_VIEW, _pattern_properties),
+    _Keyword("prefixItems", _schemas, SCHEMA, ARRAY_VIEW, _prefix_items),
+    _Keyword("items", lambda v: isinstance(v, dict) or _schemas(v),
+             SCHEMA, ARRAY_VIEW, _items),
+    _Keyword("additionalItems", (bool, dict), SCHEMA, ARRAY_VIEW),
+    _Keyword("additionalProperties", None, SCHEMA, OBJECT_VIEW,
+             _additional_properties),
+    _Keyword("unevaluatedProperties", (bool, dict), SCHEMA, OBJECT_VIEW,
+             _unevaluated_properties),
+    _Keyword("unevaluatedItems", (bool, dict), SCHEMA, ARRAY_VIEW,
+             _unevaluated_items),
+    _Keyword("allOf", _schemas, SCHEMA, PASSTHROUGH, _all_of),
+    _Keyword("anyOf", lambda v: _schemas(v) and len(v) > 0, SCHEMA,
+             PASSTHROUGH, _any_of),
+    _Keyword("oneOf", lambda v: _schemas(v) and len(v) > 0, SCHEMA,
+             PASSTHROUGH, _one_of),
+    _Keyword("not", dict, SCHEMA, PASSTHROUGH, _not),
+    # value equality: Catalyst defines no ordering on VARIANT
+    _Keyword("uniqueItems", bool, route=UNSUPPORTED,
+             compile=_unique_items),
+    _Keyword("contains", dict, SCHEMA, ARRAY_VIEW, _contains),
+    _Keyword("minContains", _count, route=ARRAY_VIEW),
+    _Keyword("maxContains", _count, route=ARRAY_VIEW),
+    _Keyword("minProperties", _count, route=OBJECT_VIEW, compile=_compare(
+        _property_count_view, operator.lt,
+        "must NOT have fewer than {} properties")),
+    _Keyword("maxProperties", _count, route=OBJECT_VIEW, compile=_compare(
+        _property_count_view, operator.gt,
+        "must NOT have more than {} properties")),
+    _Keyword("dependentRequired", lambda v: isinstance(v, dict) and all(
+        _strings(r) for r in v.values()),
+        route=OBJECT_VIEW, compile=_dependencies),
+    # draft-07: array form (property deps) or dict form (schema deps)
+    _Keyword("dependencies", lambda v: isinstance(v, dict) and all(
+        _strings(r) or isinstance(r, dict) for r in v.values()),
+        MAP, OBJECT_VIEW, _dependencies),
+    _Keyword("dependentSchemas", lambda v: isinstance(v, dict) and all(
+        isinstance(r, dict) for r in v.values()),
+        MAP, OBJECT_VIEW, _dependencies),
+    _Keyword("if", dict, SCHEMA, PASSTHROUGH, _if),
+    _Keyword("then", dict, SCHEMA, PASSTHROUGH),
+    _Keyword("else", dict, SCHEMA, PASSTHROUGH),
+    _Keyword("propertyNames", dict, SCHEMA, OBJECT_VIEW,
+             _property_names),
+    # table-level declarations, in operators/table_checks.py order (the
+    # union order of their violation rows)
+    *map(_table_keyword, _TABLE_KEYWORDS),
+    # engine extension points (reference analog: custom Ajv keywords via
+    # ajvOptions, index.ts:49): the row-level x- keywords, typed-column
+    # operators all but the named vectorized check, whose callable
+    # receives the variant Column itself
+    _Keyword("x-langid", route=UNSUPPORTED, compile=_langid, params=(
+        _str("declared"), _int("min_tokens", 5, within=_nonneg))),
+    _Keyword("x-rate", route=UNSUPPORTED, compile=_rate, params=(
+        _str("duration"), _num("lo", 1.0), _num("hi", 40.0)),
+        rule=lambda v, p: p["lo"] < p["hi"]),
+    _Keyword("x-encoding", route=UNSUPPORTED, compile=_encoding, params=(
+        _int("max_artifacts", 0, within=_nonneg),
+        Param("patterns", lambda v: isinstance(v, list) and len(v) > 0
+              and _strings(v), None))),
+    _Keyword("x-embedding", route=UNSUPPORTED, compile=_embedding, params=(
+        _int("dim", None), _bool("finite", True), _bool("nonzero"),
+        _bool("normalized"),
+        _num("norm_tol", 1e-3, within=lambda x: x > 0))),
+    _Keyword("x-spark-check", route=PASSTHROUGH, compile=_spark_check),
+    # per-property opt-out consumed by operators/repair.py
+    _Keyword("x-repair", route=UNSUPPORTED),
+    # identifiers and annotations (Ajv collects, never validates): known
+    # so strict mode doesn't false-flag documented schemas
+    *(_Keyword(kw) for kw in (
+        "$schema", "$id", "$anchor", "$bundled_from", "title",
+        "description", "default", "examples", "$comment", "readOnly",
+        "writeOnly", "deprecated")),
+    _Keyword("definitions", subs=MAP),
+    _Keyword("$defs", subs=MAP),
+)
+_BY_NAME = {k.name: k for k in _KEYWORDS}
+
+
+def _shape_walk(schema: dict, path: str = "#") -> None:
+    """Meta-validate the whole schema tree BEFORE binding to columns.
+
+    Ajv compiles the full schema up front, so a malformed keyword fails
+    even inside a subtree the instance never reaches (e.g. a property
+    whose column is absent). The per-node checks in ``_check_node``
+    can't see skipped subtrees, hence this pure pre-pass: every known
+    keyword's shape rule, then a descent into the subschemas of each
+    keyword declared with ``subs``, in table order.
+    """
+    for kw, v in schema.items():
+        if kw in _BY_NAME and not _BY_NAME[kw].shape_ok(v):
+            raise RulesetCompileError(
+                f"JSON schema malformed: bad value for {kw!r} at {path}: {v!r}")
+    for k in _KEYWORDS:
+        v = schema.get(k.name)
+        if k.subs is None or v is None:
+            continue
+        at = f"{path}/{k.name}"
+        if k.subs == SCHEMA and isinstance(v, dict):
+            _shape_walk(v, at)
+        elif k.subs == SCHEMA and isinstance(v, list):
+            for i, sub in enumerate(v):
+                if isinstance(sub, dict):
+                    _shape_walk(sub, f"{at}/{i}")
+        elif k.subs != SCHEMA:
+            for name, sub in (v or {}).items():
+                if isinstance(sub, dict):
+                    _shape_walk(sub, f"{at}/{name}")
+                elif k.subs == PROPS:
+                    raise RulesetCompileError(
+                        f"JSON schema malformed: schema for property "
+                        f"{name!r} at {path} is not an object: {sub!r}")
+
+
+def _check_node(schema: dict, ctx: _Ctx, variant: bool = False) -> None:
+    """The node pre-check: unknown keywords warn-don't-fail (Ajv
+    ``strict: false``), a malformed known one fails the compile, and on a
+    variant node a keyword with no variant compile is surfaced."""
+    for kw, v in schema.items():
+        k = _BY_NAME.get(kw)
+        if k is None:
+            ctx.out.unknown.append((ctx.instance_path, kw))
+        elif not k.shape_ok(v):
+            raise RulesetCompileError(
+                f"JSON schema malformed: bad value for {kw!r} at "
+                f"{ctx.instance_path or '/'}: {v!r}")
+        elif variant and k.route == UNSUPPORTED:
+            ctx.out.unknown.append((ctx.instance_path, f"{kw}:variant"))
+
+
+def _run_keywords(schema: dict, ctx: _Ctx) -> None:
+    """Compile the node's keywords in table order (no short-circuit)."""
+    for k in _KEYWORDS:
+        if k.compile is not None and k.name in schema:
+            k.compile(ctx, schema, k)
+
+
+def _compile_keywords(schema: dict, ctx: _Ctx) -> None:
+    """Compile every keyword of one schema node."""
+    if ctx.col is not None and _vr.is_variant(ctx.dtype):
+        # Spark-4 VariantType node: scalar keywords compile against
+        # per-row JSON type tags; object/array keywords reuse this very
+        # body through map<string,variant> / array<variant> views
+        # (plans/variant.py module docstring)
+        _compile_variant_node(schema, ctx)
+        return
+    _check_node(schema, ctx)
+    _run_keywords(schema, ctx)
+
+
+def _compile_variant_node(schema: dict, ctx: _Ctx) -> None:
+    """One schema node bound to a VariantType column.
+
+    The value's own JSON type survives per row, so this path has exact
+    Ajv type semantics (``type: "number"`` fires on the JSON string
+    ``"10"``) — the fidelity the ``from_json``-to-map path coerces away.
+    Null-vs-missing is exact too: a missing property is SQL NULL (value
+    keywords vacuous, ``required`` fires), JSON ``null`` is a present
+    VOID variant (``required`` satisfied, ``type`` fires).
+    """
+    _check_node(schema, ctx, variant=True)
+    # Stage this node's expensive views once (variant expressions are
+    # CodegenFallback; without staging every keyword re-walks the binary —
+    # the SimHash/text-profile inlining trap, plans/variant.py docstring).
+    # Only at row-level contexts: inside HOF lambdas / probes stage is None.
+    if ctx.stage is not None and ctx.col is not None and ctx.vstage is None:
+        hint = ctx.instance_path or "root"
+        vcol = ctx.stage(hint, ctx.col)
+        t_st = ctx.stage(f"{hint}.tag", _vr.tag(vcol))
+        s_st = ctx.stage(f"{hint}.str", _vr.as_string(vcol))
+        d_st = ctx.stage(f"{hint}.dbl", _vr.as_double(vcol))
+        act = F.when(t_st == "VOID", F.lit("null")).otherwise(s_st)
+        ctx = _dc_replace(ctx, col=vcol,
+                          vstage={"t": t_st, "s": s_st, "d": d_st,
+                                  "actual": act})
+    routed: dict = {}
+    for kw, v in schema.items():
+        if kw in _BY_NAME:
+            routed.setdefault(_BY_NAME[kw].route, {})[kw] = v
+    _run_keywords(routed.get(SCALAR, {}), ctx)
+    if ARRAY_VIEW in routed:
+        # array<variant> view: NULL for non-arrays, so array keywords are
+        # vacuous there (JSON Schema semantics); element probes recurse
+        # back through the variant entry
+        arr_view = _vr.as_array(ctx.col)
+        if ctx.stage is not None:
+            arr_view = ctx.stage(f"{ctx.instance_path or 'root'}.arr",
+                                 arr_view)
+        _compile_keywords(routed[ARRAY_VIEW], _dc_replace(
+            ctx, col=arr_view, vstage=None,
+            dtype=T.ArrayType(_vr.VariantType())))
+    if OBJECT_VIEW in routed:
+        # map<string,variant> view: keeps a JSON-null field as a PRESENT
+        # entry, so map_contains_key == Ajv `required`; property values
+        # are variants that recurse back through the variant entry
+        obj_view = _vr.as_object(ctx.col)
+        if ctx.stage is not None:
+            obj_view = ctx.stage(f"{ctx.instance_path or 'root'}.obj",
+                                 obj_view)
+        _compile_keywords(routed[OBJECT_VIEW], _dc_replace(
+            ctx, col=obj_view, vstage=None,
+            dtype=T.MapType(T.StringType(), _vr.VariantType())))
+    # composition probes need the variant column itself; probe recursion
+    # into sub-schemas comes back through the variant entry as usual
+    _run_keywords(routed.get(PASSTHROUGH, {}), ctx)
 
 
 def _validity(schema: dict, ctx: _Ctx, schema_path: str) -> Column:

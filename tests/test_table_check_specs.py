@@ -1,5 +1,6 @@
 """Table-check declarations (operators/table_checks.py TABLE_CHECKS):
-one null policy for every optional param, and the unknowns a table
+one null policy for every optional param, shared by the row ``x-*``
+keywords' params (plans/compiler.py _KEYWORDS), and the unknowns a table
 check inside a composition branch reports."""
 
 import pytest
@@ -9,7 +10,7 @@ from pyspark.sql import types as T
 from remark_lint_frontmatter_schema_spark.plans.compiler import (
     compile_ruleset)
 
-SCHEMA = "a string, b string, n double, t string"
+SCHEMA = "a string, b string, n double, t string, e array<double>"
 
 # keyword -> (column it is placed on, smallest valid dict, its optional
 # params). x-quantile / x-readability carry both bounds so that nulling
@@ -51,6 +52,12 @@ NULLABLE = {
                          "min_shared", "bloom", "n_items")),
     "x-label-conflict": ("a", {"id": "b", "transcript": "t"},
                          ("max_distance", "grade", "contradiction_below")),
+    # row x- keywords: they compile to row checks, not table checks
+    "x-langid": ("a", {"declared": "b"}, ("min_tokens",)),
+    "x-rate": ("a", {"duration": "n", "lo": 2, "hi": 20}, ("lo", "hi")),
+    "x-encoding": ("a", {}, ("max_artifacts", "patterns")),
+    "x-embedding": ("e", {"normalized": True},
+                    ("dim", "finite", "nonzero", "normalized", "norm_tol")),
 }
 
 CASES = [(kw, param) for kw, (_c, _d, params) in NULLABLE.items()
@@ -60,7 +67,8 @@ CASES = [(kw, param) for kw, (_c, _d, params) in NULLABLE.items()
 def _compile(kw, column, value):
     schema = T._parse_datatype_string(SCHEMA)
     c = compile_ruleset({"properties": {column: {kw: value}}}, schema)
-    return c.table_checks, c.unknown
+    return (c.table_checks, c.unknown,
+            [(k.constraint_id, k.message) for k in c.checks])
 
 
 @pytest.mark.parametrize("kw,param", CASES,
@@ -69,15 +77,18 @@ def test_explicit_null_param_means_default(spark, kw, param):
     column, base, _ = NULLABLE[kw]
     omitted = {k: v for k, v in base.items() if k != param}
     expected = _compile(kw, column, omitted)
-    assert expected[0], expected          # the omitted form compiles
+    assert expected[0] or expected[2], expected  # the omitted form compiles
     assert _compile(kw, column, {**omitted, param: None}) == expected
 
 
 def test_null_cases_cover_every_optional_param():
     from remark_lint_frontmatter_schema_spark.operators.table_checks import (
         TABLE_CHECKS)
+    from remark_lint_frontmatter_schema_spark.plans.compiler import _KEYWORDS
     declared = {(s.keyword, p.name) for s in TABLE_CHECKS.values()
                 for p in s.params if not p.required}
+    declared |= {(k.name, p.name) for k in _KEYWORDS
+                 for p in k.params if not p.required}
     assert declared == set(CASES)
 
 
@@ -101,7 +112,10 @@ def test_table_check_in_composition_names_keyword_and_path(
     ("x-readability", "a", {"id": "b", "lo": 200}),
     ("x-drift", "n", {"partition_col": "t", "side_a": "x", "side_b": "y",
                       "lo": 5, "hi": 1}),
-], ids=["readability-lo-above-default-hi", "drift-lo-above-hi"])
+    # hi is left to its default, 40
+    ("x-rate", "a", {"duration": "n", "lo": 50}),
+], ids=["readability-lo-above-default-hi", "drift-lo-above-hi",
+        "rate-lo-above-default-hi"])
 def test_inverted_band_is_rejected(spark, kw, column, value):
     from remark_lint_frontmatter_schema_spark.plans.bundler import (
         RulesetCompileError)

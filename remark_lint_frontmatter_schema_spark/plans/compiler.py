@@ -390,10 +390,14 @@ def _enum(ctx: _Ctx, schema: dict, k) -> None:
             return
         ok = reduce(operator.or_, eqs)
     else:
-        ok = ctx.col.isin(*allowed)
+        # a present typed value is never JSON null, so a null member
+        # allows nothing (isin against NULL would make the check NULL)
+        members = [v for v in allowed if v is not None]
+        ok = ctx.col.isin(*members) if members else None
     msg = _reason("must be equal to one of the allowed values", ctx, k.name,
                   expected=allowed)
-    _add(ctx, k.name, _present(ctx) & ~ok, msg, expected=allowed)
+    _add(ctx, k.name, _present(ctx) if ok is None else _present(ctx) & ~ok,
+         msg, expected=allowed)
 
 
 def _const(ctx: _Ctx, schema: dict, k) -> None:
@@ -407,6 +411,9 @@ def _const(ctx: _Ctx, schema: dict, k) -> None:
                 (ctx.instance_path, f"{k.name}:variant-composite-literal"))
             return
         violated = _present(ctx) & ~eq
+    elif v is None:
+        # a present typed value is never JSON null
+        violated = _present(ctx)
     else:
         violated = _present(ctx) & (ctx.col != F.lit(v))
     msg = _reason("must be equal to constant", ctx, k.name, expected=[v])

@@ -84,6 +84,20 @@ def test_enum(result):
                             "`pcm_s16le`, `flac`, `opus` • #/properties/codec/enum")
 
 
+def test_null_enum_and_const_members_on_typed_columns(spark):
+    """A present typed value is never JSON null: a null enum member
+    allows nothing and ``const: null`` rejects every present value; a
+    NULL cell is an absent property, so neither fires on it."""
+    df = spark.createDataFrame([("r1", "a"), ("r2", "b"), ("r3", None)],
+                               "id string, s string")
+    for node, bad in (({"enum": [None, "a"]}, {"r2"}),
+                      ({"enum": [None]}, {"r1", "r2"}),
+                      ({"const": None}, {"r1", "r2"})):
+        compiled = compile_ruleset({"properties": {"s": node}}, df.schema)
+        res = validate(df, compiled, row_id="id")
+        assert {r.row_id for r in res.violations.collect()} == bad, node
+
+
 def test_required(result):
     v = [r for r in _by_row(result)["c3"] if r.keyword == "required"]
     assert len(v) == 1

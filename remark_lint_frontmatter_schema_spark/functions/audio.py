@@ -1408,8 +1408,8 @@ def decode_wav_pcm16(b: bytes) -> tuple[int, np.ndarray]:
     """Parse a PCM16 WAV -> (sample_rate, mono float samples in [-1,1)).
 
     The container walk is :func:`.pcm_codecs._walk_wav` (any chunk
-    order, LIST/fact/cue chunks skipped, odd-size pad bytes honored per
-    RIFF); any PCM16 channel count is accepted and downmixed to mono by
+    order, LIST/cue chunks skipped, odd-size pad bytes honored per
+    RIFF, a ``fact`` sample count honored); any PCM16 channel count is accepted and downmixed to mono by
     channel mean, the canonical training-corpus representation. Only
     plain format 1 (integer PCM) at 16 bits is decoded here: every other
     encoding, a WAVE_FORMAT_EXTENSIBLE wrapper included, raises like any
@@ -1422,7 +1422,10 @@ def decode_wav_pcm16(b: bytes) -> tuple[int, np.ndarray]:
     info = _walk_wav(b)
     if not _is_plain_pcm16(info):
         raise ValueError("not integer PCM16")
-    return info["sr"], _decode_int_pcm(info["raw"], 16, info["n_ch"])
+    x = _decode_int_pcm(info["raw"], 16, info["n_ch"])
+    # a fact chunk caps the sample count, as at every other bit depth
+    # (decode_wav_extended, wav_info); without one every frame is kept
+    return info["sr"], x[: info["fact"]]
 
 
 def decode_payload_any(b: bytes) -> tuple[int, np.ndarray]:

@@ -459,8 +459,7 @@ def decode_wav_extended(b: bytes) -> tuple[int, np.ndarray]:
         raise ValueError("bad channel count")
     if tag == WAVE_FORMAT_PCM:
         x = _decode_int_pcm(raw, info["bits"], n_ch)
-        # plain PCM16 keeps every data frame, a fact chunk notwithstanding
-        if info["fact"] is not None and not _is_plain_pcm16(info):
+        if info["fact"] is not None:
             x = x[: info["fact"]]
         return sr, x
     if tag == WAVE_FORMAT_IEEE_FLOAT:

@@ -460,3 +460,18 @@ def test_payload_duration_covers_wide_pcm():
                                     bits=8, extensible=True)])
     got = audio.payload_duration_ms_batch(s)
     assert list(got.round(3)) == [125.0, 125.0, 125.0]
+
+
+@pytest.mark.parametrize("bits", [8, 16, 24])
+def test_fact_chunk_caps_pcm_decode_at_every_depth(bits):
+    """A PCM WAV whose fact chunk counts fewer samples than its data
+    holds (mono 8 kHz, 100 frames, fact = 10): wav_info and every
+    decoder report the fact count, at every bit depth."""
+    plain = pc.wav_bytes_pcm(np.linspace(-0.5, 0.5, 100), 8000, bits=bits)
+    assert plain[36:40] == b"data"              # fmt body is plain[20:36]
+    b = pc._riff([(b"fmt ", plain[20:36]), (b"fact", struct.pack("<I", 10)),
+                  (b"data", plain[44:])])
+    assert pc.wav_info(b)["n_samples"] == 10
+    assert len(audio.decode_payload_any(b)[1]) == 10
+    if bits == 16:
+        assert len(audio.decode_wav_pcm16(b)[1]) == 10

@@ -1703,7 +1703,7 @@ UNSUPPORTED = "unsupported"
 
 @dataclass(frozen=True)
 class _Keyword:
-    """One row keyword, declared once."""
+    """One keyword, declared once."""
 
     name: str
     shape: object = None             # the value's type(s), a predicate or

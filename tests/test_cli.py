@@ -530,3 +530,79 @@ def test_cli_main_releases_persisted_intermediates(table, tmp_path,
         out = json.loads(capsys.readouterr().out)
         assert out["n_violations"] == 1   # 'O' holds 2/3 of the rows
         assert len(dedup._PERSISTED) == before
+
+
+@pytest.fixture()
+def parted_table(spark, tmp_path):
+    """Two partitions, a duplicated id (x-unique) and row-check misses."""
+    df = spark.createDataFrame(
+        [(1, "O", 10.0, "a"), (2, "X", -5.0, "a"), (2, "O", 3.0, "b"),
+         (4, "F", -1.0, "b"), (5, "O", 1.0, "b")],
+        "id long, status string, price double, part string")
+    p = str(tmp_path / "pt")
+    df.write.parquet(p)
+    embed = tmp_path / "parted.schema.yaml"
+    embed.write_text(
+        "properties:\n"
+        "  id: {x-unique: true}\n"
+        "  status: {enum: [O, F]}\n"
+        "  price: {minimum: 0}\n")
+    return p, str(embed)
+
+
+@pytest.mark.parametrize("frail", [False, True], ids=["lax", "frail"])
+@pytest.mark.parametrize("with_sinks", [False, True],
+                         ids=["nosinks", "sinks"])
+@pytest.mark.parametrize("report", ["json", "text", "none"])
+def test_cli_outputs_agree(spark, parted_table, tmp_path, capsys, report,
+                           with_sinks, frail):
+    """Every CLI output tells one story: the verdict sink, the JSON
+    verdicts and the library's own verdicts are the same rows, the JSON
+    violation count is the violation sink's row count for the run, and
+    the exit code follows the violations."""
+    from remark_lint_frontmatter_schema_spark.operators.table_checks import (
+        table_check_violations)
+    from remark_lint_frontmatter_schema_spark.operators.validate import (
+        validate)
+    from remark_lint_frontmatter_schema_spark.plans.bundler import bundle
+    from remark_lint_frontmatter_schema_spark.plans.compiler import (
+        compile_ruleset)
+
+    table, embed = parted_table
+    vout, dout = str(tmp_path / "viols"), str(tmp_path / "verds")
+    argv = [table, "--row-id", "id", "--partition-col", "part",
+            "--embed", embed, "--report", report, "--run-id", "r1"]
+    if with_sinks:
+        argv += ["--violations-out", vout, "--verdicts-out", dout]
+    if frail:
+        argv.append("--frail")
+    rc = cli.main(argv)
+    out = capsys.readouterr().out
+
+    df = spark.read.parquet(table)
+    compiled = compile_ruleset(bundle(embed), df.schema, name="embed")
+    res = validate(df, compiled, row_id="id", partition_col="part",
+                   run_id="r1")
+
+    def by_part(rows):
+        return sorted(rows, key=lambda r: r["partition_id"])
+    want = by_part(r.asDict() for r in res.verdicts.collect())
+    n_want = (res.violations.count()
+              + table_check_violations(df, compiled, row_id="id").count())
+    assert n_want > 3   # three row-check misses plus the duplicated id
+    assert rc == (1 if frail else 0)
+    if report == "json":
+        rep = json.loads(out.strip().splitlines()[-1])
+        assert by_part(rep["verdicts"]) == want
+        assert rep["n_violations"] == n_want
+    elif report == "text":
+        summary = out.strip().splitlines()[-1]
+        assert summary.split()[1] == str(n_want)
+    else:
+        assert out == ""
+    if with_sinks:
+        got = by_part(r.asDict() for r in spark.read.parquet(dout).collect())
+        assert got == want
+        assert spark.read.parquet(vout).where("run_id = 'r1'").count() \
+            == n_want
+

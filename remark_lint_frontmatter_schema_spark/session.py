@@ -4,6 +4,8 @@ Defaults chosen for the 100 TB design point and scaled down for local
 testing: AQE on (runtime re-plan + skew-join splitting), Arrow on (all
 Python crossings are vectorized batches — the input_hint mandates no
 per-row Python), shuffle partitions proportional to parallelism.
+Generated classes are named without their codegen stage id, which AQE
+renumbers from run to run, so one plan shape is compiled once per session.
 """
 
 from __future__ import annotations
@@ -45,6 +47,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # stage ids stay in the `*(N)` plan markers and codegen comments
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in (extra_conf or {}).items():

@@ -606,3 +606,38 @@ def test_cli_outputs_agree(spark, parted_table, tmp_path, capsys, report,
         assert spark.read.parquet(vout).where("run_id = 'r1'").count() \
             == n_want
 
+
+def test_repeat_cli_lint_compiles_no_new_classes(spark, tmp_path, capsys):
+    """A second identical lint in one session reuses every generated class:
+    codegen class names carry no stage id, so the same plan shape hits
+    Spark's codegen cache instead of going back through Janino."""
+    fact = str(tmp_path / "fact")
+    spark.createDataFrame(
+        [(i, i % 7, 1000 + 37 * i % 900, "2026-01-01" if i < 40
+          else "2026-01-08") for i in range(80)] + [(3, 2, 1200, "2026-01-08")],
+        "clip_id long, speaker_id long, dur_ms long, part_date string") \
+        .write.parquet(fact)
+    dimp = str(tmp_path / "speakers")
+    spark.createDataFrame([(i,) for i in range(5)], "speaker_id long") \
+        .write.parquet(dimp)
+    embed = tmp_path / "cli.schema.yaml"
+    embed.write_text(
+        "properties:\n"
+        "  clip_id: {x-unique: true}\n"
+        "  speaker_id: {x-ref: {dim: speakers, key: speaker_id}}\n"
+        "  dur_ms:\n"
+        "    minimum: 1100\n"
+        "    x-drift: {partition_col: part_date, side_a: '2026-01-01',\n"
+        "              side_b: '2026-01-08', lo: 0, hi: 3000}\n")
+    argv = [fact, "--row-id", "clip_id", "--partition-col", "part_date",
+            "--embed", str(embed), "--dim", f"speakers={dimp}",
+            "--verdicts-out", str(tmp_path / "verds"), "--report", "json"]
+    compiles = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+    assert cli.main(argv) == 0
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    before = compiles.getCount()
+    assert cli.main(argv) == 0
+    second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert second == first and first["n_violations"] > 0
+    assert compiles.getCount() - before == 0

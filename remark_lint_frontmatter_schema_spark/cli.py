@@ -310,6 +310,9 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     val_run_id = args.run_id or "run_0"
 
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from .session import get_spark
     from .plans.bundler import bundle
     from .plans.routing import RoutedPass, RoutingReport, route_and_validate
@@ -498,23 +501,31 @@ def main(argv: list[str] | None = None) -> int:
             extra_checks=_builtin_checks())
     violations, verdicts = report.violations, report.verdicts
 
-    # The violations relation can be consumed up to three times (count,
-    # sink write, report render) — persist it once instead of re-running
-    # the full validation plan per consumer, and skip the count entirely
-    # when nothing needs it (--report none without --frail).
-    n_consumers = sum((args.report != "none", bool(args.violations_out),
-                       args.frail or args.report == "json"))
-    if violations is not None and n_consumers > 1:
+    # Evaluate each output once. The verdicts are one row per partition:
+    # collect them once, then write and report those rows. The violation
+    # count is observed on the sink write when there is one; the
+    # violations are persisted only when the text report reads them again.
+    verdict_rows = None
+    if verdicts is not None and (args.verdicts_out or args.report == "json"):
+        verdict_rows = verdicts.collect()
+    need_count = args.frail or args.report == "json"
+    persisted = (violations is not None and args.report == "text"
+                 and bool(args.violations_out or need_count))
+    if persisted:
         violations = violations.persist()
     n_viol = 0
-    if violations is not None and (args.frail or args.report == "json"):
-        n_viol = violations.count()
-
     if args.violations_out and violations is not None:
-        sinks.write_violations(violations, args.violations_out,
-                               run_id=val_run_id)
-    if args.verdicts_out and verdicts is not None:
-        sinks.write_verdicts(verdicts, args.verdicts_out)
+        counted = Observation()
+        sinks.write_violations(
+            violations.observe(counted, F.count(F.lit(1)).alias("n")),
+            args.violations_out, run_id=val_run_id)
+        n_viol = counted.get["n"]
+    elif violations is not None and need_count:
+        n_viol = violations.count()
+    if args.verdicts_out and verdict_rows is not None:
+        sinks.write_verdicts(
+            spark.createDataFrame(verdict_rows, verdicts.schema).coalesce(1),
+            args.verdicts_out)
 
     if args.report == "text":
         if violations is not None:
@@ -529,11 +540,11 @@ def main(argv: list[str] | None = None) -> int:
             "errors": [{"ruleset": n, "stage": s, "message": m}
                        for n, s, m in report.errors],
         }
-        if verdicts is not None:
-            out["verdicts"] = [r.asDict() for r in verdicts.collect()]
+        if verdict_rows is not None:
+            out["verdicts"] = [r.asDict() for r in verdict_rows]
         print(json.dumps(out, default=str))
 
-    if violations is not None and n_consumers > 1:
+    if persisted:
         violations.unpersist()
     # free what reuse=True operators persisted (e.g. x-skew's per-key
     # counts) once the last consumer above has run, as the workspace

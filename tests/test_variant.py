@@ -226,6 +226,19 @@ def test_variant_unsupported_keywords_surface_not_vacuous(spark):
     assert kws == {"uniqueItems:variant", "x-unique:variant"}
 
 
+def test_variant_x_finite_surfaces_in_strict_mode(spark):
+    """x-finite has no variant compile: it lands in `unknown` and strict
+    mode refuses the ruleset, rather than dropping the check silently."""
+    from remark_lint_frontmatter_schema_spark.plans.bundler import (
+        RulesetCompileError)
+    df = _variant_df(spark, [("r0", '{"k": 1.5}')])
+    schema = {"properties": {"doc": {"x-finite": True}}}
+    compiled = compile_ruleset(schema, df.schema, name="vf")
+    assert compiled.unknown == [("/doc", "x-finite:variant")]
+    with pytest.raises(RulesetCompileError, match="x-finite:variant"):
+        compile_ruleset(schema, df.schema, name="vf",
+                        options={"strict": True})
+
 def test_variant_plan_is_map_only_jvm(spark):
     """The whole variant validation projection is scalar Catalyst
     expressions: no shuffle, no Python UDF stage."""

@@ -502,11 +502,19 @@ def main(argv: list[str] | None = None) -> int:
     violations, verdicts = report.violations, report.verdicts
 
     # Evaluate each output once. The verdicts are one row per partition:
-    # collect them once, then write and report those rows. The violation
-    # count is observed on the sink write when there is one; the
-    # violations are persisted only when the text report reads them again.
+    # the verdict sink write observes its rows (one collect when there is
+    # no sink) and the report reuses them. The violation count is observed
+    # on the violations write when there is one; the violations are
+    # persisted only when the text report reads them again.
     verdict_rows = None
-    if verdicts is not None and (args.verdicts_out or args.report == "json"):
+    if args.verdicts_out and verdicts is not None:
+        seen = Observation()
+        sinks.write_verdicts(
+            verdicts.observe(seen, F.collect_list(
+                F.struct(*verdicts.columns)).alias("rows")),
+            args.verdicts_out)
+        verdict_rows = seen.get["rows"]
+    elif args.report == "json" and verdicts is not None:
         verdict_rows = verdicts.collect()
     need_count = args.frail or args.report == "json"
     persisted = (violations is not None and args.report == "text"
@@ -522,10 +530,6 @@ def main(argv: list[str] | None = None) -> int:
         n_viol = counted.get["n"]
     elif violations is not None and need_count:
         n_viol = violations.count()
-    if args.verdicts_out and verdict_rows is not None:
-        sinks.write_verdicts(
-            spark.createDataFrame(verdict_rows, verdicts.schema).coalesce(1),
-            args.verdicts_out)
 
     if args.report == "text":
         if violations is not None:

@@ -1786,7 +1786,8 @@ _KEYWORDS = (
              compile=_compare(_number_view,
                               lambda c, n: F.pmod(c, n) != 0,
                               "must be multiple of {}")),
-    # float columns only; elsewhere, a variant node too, it is surfaced
+    # float and double columns only: anywhere else, a variant node
+    # included, it lands in `unknown`
     _Keyword("x-finite", bool, route=UNSUPPORTED, compile=_finite),
     _Keyword("maxItems", _is_int, route=ARRAY_VIEW, compile=_compare(
         _size_view, operator.gt, "must NOT have more than {} items")),

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
+from ..operators.validate import to_col, violation_rows
 from .pcm_codecs import (_decode_int_pcm, _is_plain_pcm16, _walk_wav,
                          decode_wav_extended)
 
@@ -1141,23 +1142,17 @@ def dtx_violations(clips, *, max_dtx_fraction: float = 0.5,
                     & F.col("dtx_fraction").isNotNull()
                     & (F.col("dtx_fraction")
                        > F.lit(float(max_dtx_fraction))))
-    return bad.select(
-        F.col("clip_id").cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit("dtx:bytes").alias("constraint_id"),
-        F.lit("x-dtx").alias("keyword"),
-        F.lit("/bytes").alias("instance_path"),
-        F.lit("#/x-dtx").alias("schema_path"),
-        F.concat(
-            F.lit(f"Must carry speech, not dead air: "),
+    return violation_rows(
+        bad, row_id=F.col("clip_id"), constraint_id="dtx:bytes",
+        keyword="x-dtx", instance_path="/bytes", schema_path="#/x-dtx",
+        message=F.concat(
+            F.lit("Must carry speech, not dead air: "),
             F.round(F.col("dtx_fraction") * 100, 1).cast("string"),
             F.lit(f"% of frames are DTX silence (limit "
-                  f"{max_dtx_fraction * 100:g}%)")).alias("message"),
-        F.round("dtx_fraction", 4).cast("string").alias("actual"),
-        F.array(F.lit(f"<= {max_dtx_fraction:g}")).alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+                  f"{max_dtx_fraction * 100:g}%)")),
+        actual=F.round("dtx_fraction", 4),
+        expected=[f"<= {max_dtx_fraction:g}"], ruleset_name=ruleset_name,
+        severity=severity)
 
 
 def ogg_opus_silence_bytes(i: int, sr_hz: int = 16000,
@@ -1389,19 +1384,11 @@ def opus_consistency_violations(clips, *, tolerance_ms: int = 5,
                      F.col("channels").cast("string"))
                .when(sr_bad, F.col("input_sample_rate").cast("string"))
                .otherwise(F.col("duration_ms").cast("string")))
-    return bad.select(
-        F.col("clip_id").cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.concat(kw, F.lit(":bytes")).alias("constraint_id"),
-        kw.alias("keyword"),
-        F.lit("/bytes").alias("instance_path"),
-        F.lit("#/x-opus").alias("schema_path"),
-        msg.alias("message"),
-        actual.alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit("warning").alias("severity"),
-    )
+    return violation_rows(
+        bad, row_id=F.col("clip_id"),
+        constraint_id=F.concat(kw, F.lit(":bytes")), keyword=kw,
+        instance_path="/bytes", schema_path="#/x-opus", message=msg,
+        actual=actual, ruleset_name=ruleset_name, severity="warning")
 
 
 def decode_wav_pcm16(b: bytes) -> tuple[int, np.ndarray]:
@@ -1790,12 +1777,10 @@ def codec_header_ok_col(bytes_col="bytes", codec_col="codec",
     no size bound, so the first frame header can sit anywhere.
 
     This is the ``codec_header`` entry of :func:`register_audio_checks`."""
-    b = F.col(bytes_col) if isinstance(bytes_col, str) else bytes_col
-    codec = F.col(codec_col) if isinstance(codec_col, str) else codec_col
+    b, codec = to_col(bytes_col), to_col(codec_col)
     payload = F.when(codec == "mp3", b).otherwise(
         F.substring(b, 1, HEADER_PREFIX_LEN))
-    return codec_header_ok(payload, codec,
-                           F.col(sr_col) if isinstance(sr_col, str) else sr_col)
+    return codec_header_ok(payload, codec, to_col(sr_col))
 
 
 def _le_u32_expr(b, off0: int):
@@ -2570,7 +2555,7 @@ def canonical_wav_expr(bytes_col="bytes", sr: int = 16000):
     size equal to the remaining bytes. A ruleset gates ingestion on this
     AFTER canonicalization, with zero Python in the plan — the fast
     declarative twin of re-decoding."""
-    b = F.col(bytes_col) if isinstance(bytes_col, str) else bytes_col
+    b = to_col(bytes_col)
     return (
         (F.length(b) >= 44)
         & (F.substring(b, 1, 4) == F.lit(b"RIFF"))
@@ -2746,20 +2731,14 @@ def speaking_rate_violations(clips, *, transcript_col: str = "transcript",
     rate = F.length(t) / (d / F.lit(1000.0))
     bad = clips.where(t.isNotNull() & d.isNotNull() & (d > 0)
                       & ((rate < lo) | (rate > hi)))
-    return bad.select(
-        F.col("clip_id").cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"rate:{transcript_col}").alias("constraint_id"),
-        F.lit("x-rate").alias("keyword"),
-        F.lit(f"/{transcript_col}").alias("instance_path"),
-        F.lit("#/x-rate").alias("schema_path"),
-        F.lit(f"Must have plausible speaking rate ({lo}-{hi} chars/sec "
-              f"against `{dur_col}`)").alias("message"),
-        F.round(rate, 2).cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit("warning").alias("severity"),
-    )
+    return violation_rows(
+        bad, row_id=F.col("clip_id"), constraint_id=f"rate:{transcript_col}",
+        keyword="x-rate", instance_path=f"/{transcript_col}",
+        schema_path="#/x-rate",
+        message=(f"Must have plausible speaking rate ({lo}-{hi} chars/sec "
+                 f"against `{dur_col}`)"),
+        actual=F.round(rate, 2), ruleset_name=ruleset_name,
+        severity="warning")
 
 
 def duration_consistency_violations(clips, *, tolerance_ms: int = 5,
@@ -2779,25 +2758,19 @@ def duration_consistency_violations(clips, *, tolerance_ms: int = 5,
         (~F.col("decode_ok"))
         | (F.abs(F.col("dur_ms_payload") - F.col("dur_ms")) >
            F.lit(tolerance_ms)))
-    return bad.select(
-        F.col("clip_id").cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.when(~F.col("decode_ok"), F.lit("decode:bytes"))
-         .otherwise(F.lit("x-duration:dur_ms")).alias("constraint_id"),
-        F.when(~F.col("decode_ok"), F.lit("decode"))
-         .otherwise(F.lit("x-duration")).alias("keyword"),
-        F.lit("/dur_ms").alias("instance_path"),
-        F.lit("#/x-duration").alias("schema_path"),
-        F.when(~F.col("decode_ok"),
-               F.lit("Must be a decodable audio payload"))
-         .otherwise(F.lit(
-             f"Must match payload duration within {tolerance_ms} ms"))
-         .alias("message"),
-        F.col("dur_ms").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit("warning").alias("severity"),
-    )
+    failed = ~F.col("decode_ok")
+    return violation_rows(
+        bad, row_id=F.col("clip_id"),
+        constraint_id=F.when(failed, F.lit("decode:bytes"))
+        .otherwise(F.lit("x-duration:dur_ms")),
+        keyword=F.when(failed, F.lit("decode"))
+        .otherwise(F.lit("x-duration")),
+        instance_path="/dur_ms", schema_path="#/x-duration",
+        message=F.when(failed, F.lit("Must be a decodable audio payload"))
+        .otherwise(F.lit(
+            f"Must match payload duration within {tolerance_ms} ms")),
+        actual=F.col("dur_ms"), ruleset_name=ruleset_name,
+        severity="warning")
 
 
 def transcript_conflict_violations(clips, *, max_distance: int = 2,
@@ -2876,24 +2849,18 @@ def transcript_conflict_violations(clips, *, max_distance: int = 2,
         F.col("id_a").alias("rid"), F.col("id_b").alias("other"), *carry
     ).unionByName(conflicts.select(
         F.col("id_b").alias("rid"), F.col("id_a").alias("other"), *carry))
-    out = both.select(
-        F.col("rid").cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"label-conflict:{transcript_col}").alias("constraint_id"),
-        F.lit("x-label-conflict").alias("keyword"),
-        F.lit(f"/{transcript_col}").alias("instance_path"),
-        F.lit("#/x-label-conflict").alias("schema_path"),
-        F.concat(
+    out = violation_rows(
+        both, row_id=F.col("rid"),
+        constraint_id=f"label-conflict:{transcript_col}",
+        keyword="x-label-conflict", instance_path=f"/{transcript_col}",
+        schema_path="#/x-label-conflict",
+        message=F.concat(
             F.lit("Must not contradict the transcript of acoustic "
                   "near-duplicate `"), F.col("other"), F.lit("`"),
             *((F.lit(" (edit_sim "), F.col("edit_sim").cast("string"),
                F.lit(")"))
-              if grade_with_edit_sim else ())).alias("message"),
-        F.col("hamming").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        sev.alias("severity"),
-    )
+              if grade_with_edit_sim else ())),
+        actual=F.col("hamming"), ruleset_name=ruleset_name, severity=sev)
     # carry the persisted fingerprint relation's handle so release(df)
     # works on the violations (release_all remains the session safety net)
     return _track(out, pairs)
@@ -3160,20 +3127,12 @@ def snr_violations(clips, *, min_snr_db: float = 15.0,
     bad = est.where(F.col("decode_ok")
                     & F.col("snr_vad_db").isNotNull()
                     & (F.col("snr_vad_db") < float(min_snr_db)))
-    return bad.select(
-        F.col("clip_id").cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit("snr:bytes").alias("constraint_id"),
-        F.lit("x-snr").alias("keyword"),
-        F.lit("/bytes").alias("instance_path"),
-        F.lit("#/x-snr").alias("schema_path"),
-        F.concat(
+    return violation_rows(
+        bad, row_id=F.col("clip_id"), constraint_id="snr:bytes",
+        keyword="x-snr", instance_path="/bytes", schema_path="#/x-snr",
+        message=F.concat(
             F.lit(f"Must have speech SNR >= {min_snr_db:g} dB above the "
                   "noise floor: got "),
-            F.round("snr_vad_db", 1).cast("string"),
-            F.lit(" dB")).alias("message"),
-        F.round("snr_vad_db", 4).cast("string").alias("actual"),
-        F.array(F.lit(f">= {min_snr_db:g}")).alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+            F.round("snr_vad_db", 1).cast("string"), F.lit(" dB")),
+        actual=F.round("snr_vad_db", 4), expected=[f">= {min_snr_db:g}"],
+        ruleset_name=ruleset_name, severity=severity)

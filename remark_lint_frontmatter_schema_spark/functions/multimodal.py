@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
+from ..operators.validate import to_col
+
 MEDIA_SCHEMA = ("media_id string, bytes binary, media_type string, "
                 "meta map<string,string>")
 
@@ -575,7 +577,7 @@ def image_magic_ok_expr(bytes_col="bytes"):
     a known image magic (PNG/JPEG/GIF/WEBP) — the image twin of audio's
     ``wav_riff_magic``. Zero Python in the plan; the cheap first gate a
     ruleset runs before paying for a real decode."""
-    b = F.col(bytes_col) if isinstance(bytes_col, str) else bytes_col
+    b = to_col(bytes_col)
     png = F.substring(b, 1, 8) == F.lit(_PNG_SIG)
     jpg = F.substring(b, 1, 3) == F.lit(b"\xff\xd8\xff")
     gif = ((F.substring(b, 1, 6) == F.lit(b"GIF87a"))
@@ -628,7 +630,7 @@ def png_dims_match_col(bytes_col="bytes", width_col="width",
     width/height, prove them against the pixels. Undecodable payloads and
     NULL metadata fail (wellformedness messages belong to image_magic /
     image_decodes; a silent pass here would be a hole)."""
-    b = F.col(bytes_col) if isinstance(bytes_col, str) else bytes_col
+    b = to_col(bytes_col)
     return _png_dims_match(b, F.col(width_col).cast("int"),
                            F.col(height_col).cast("int"))
 

@@ -20,6 +20,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .operators.validate import VIOLATION_SCHEMA
+
 STATUS_VALIDATED = "validated"
 STATUS_INGESTED = "ingested"   # validated + split + canonicalized
 STATUS_SKIPPED = "skipped"
@@ -317,14 +319,6 @@ def metric_regressions(manifest: Manifest, *, ruleset_hash: str | None = None,
     return out
 
 
-_VIOLATIONS_DDL = (
-    "row_id string, partition_id string, ruleset_id string, "
-    "constraint_id string, keyword string, instance_path string, "
-    "schema_path string, message string, actual string, "
-    "expected array<string>, severity string"
-)
-
-
 def regressions_to_violations(spark, regressions: list[dict],
                               ruleset_id: str):
     """Regression dicts -> a DataFrame in the engine's standard violations
@@ -341,7 +335,7 @@ def regressions_to_violations(spark, regressions: list[dict],
          "warning")
         for r in regressions
     ]
-    return spark.createDataFrame(rows, _VIOLATIONS_DDL)
+    return spark.createDataFrame(rows, VIOLATION_SCHEMA)
 
 
 def snapshot_id_for(table_path: str) -> str:
@@ -440,4 +434,4 @@ def schema_drift_violations(spark, diffs: list[dict], ruleset_id: str):
          "info" if d["kind"] == "column_added" else "warning")
         for d in diffs
     ]
-    return spark.createDataFrame(rows, _VIOLATIONS_DDL)
+    return spark.createDataFrame(rows, VIOLATION_SCHEMA)

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .validate import violation_rows
+
 __all__ = ["asof_join", "asof_join_bucketed", "asof_ref_violations"]
 
 _ORD = "_asof_ord"
@@ -284,19 +286,13 @@ def asof_ref_violations(fact: DataFrame, fact_key: str, dim: DataFrame,
               if bucket else asof_join(left, right, **kw))
     when = "at" if direction == "backward" else "by"
     tol = f" within {tolerance:g}s" if tolerance is not None else ""
-    return joined.where(F.col("_matched").isNull()).select(
-        F.col(row_id).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"ref-asof:{fact_key}->{dim_key}@{dim_ts}")
-         .alias("constraint_id"),
-        F.lit("ref-asof").alias("keyword"),
-        F.lit(f"/{fact_key}").alias("instance_path"),
-        F.lit(f"#/x-ref-asof/{fact_key}").alias("schema_path"),
-        F.lit(f"Must reference a '{dim_key}' effective {when} "
-              f"`{ts_col}`{tol}").alias("message"),
-        F.concat_ws("@", F.col(fact_key).cast("string"),
-                    F.col(ts_col).cast("string")).alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        joined.where(F.col("_matched").isNull()), row_id=F.col(row_id),
+        constraint_id=f"ref-asof:{fact_key}->{dim_key}@{dim_ts}",
+        keyword="ref-asof", instance_path=f"/{fact_key}",
+        schema_path=f"#/x-ref-asof/{fact_key}",
+        message=(f"Must reference a '{dim_key}' effective {when} "
+                 f"`{ts_col}`{tol}"),
+        actual=F.concat_ws("@", F.col(fact_key).cast("string"),
+                           F.col(ts_col).cast("string")),
+        ruleset_name=ruleset_name, severity=severity)

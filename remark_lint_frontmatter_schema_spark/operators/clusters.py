@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .validate import violation_rows
+
 
 def _sym(e: DataFrame) -> DataFrame:
     """Both orientations of every edge."""
@@ -174,9 +176,8 @@ def dedup_violations(df: DataFrame, text_col: str, id_col: str, *,
                      max_distance: int = 3,
                      allow_full_cross: bool = False,
                      max_iter: int = 25) -> DataFrame:
-    """Violation rows for duplicate *content* — the ``x-dedup`` table check
-    (shape mirrors ``operators/validate.py`` VIOLATION_FIELDS, same as
-    ``uniqueness_violations``). One row per NON-canonical duplicate; the
+    """Violation rows for duplicate *content* — the ``x-dedup`` table
+    check. One row per NON-canonical duplicate; the
     canonical survivor (minimum id of the sha-group / near-dup cluster)
     never violates, so ``anti-join(violations)`` is exactly the dedup.
 
@@ -242,21 +243,14 @@ def dedup_violations(df: DataFrame, text_col: str, id_col: str, *,
     else:
         raise ValueError(f"unknown x-dedup method {method!r}")
 
-    return dup.select(
-        F.col(id_col).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"dedup:{text_col}").alias("constraint_id"),
-        F.lit("dedup").alias("keyword"),
-        F.lit(f"/{text_col}").alias("instance_path"),
-        F.lit(f"#/x-dedup/{text_col}").alias("schema_path"),
-        F.concat(F.lit(f"Must be unique content ({detail}): duplicate of "
-                       "`"),
-                 F.col("_keep").cast("string"), F.lit("`")).alias("message"),
-        F.col("_keep").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        dup, row_id=F.col(id_col), constraint_id=f"dedup:{text_col}",
+        keyword="dedup", instance_path=f"/{text_col}",
+        schema_path=f"#/x-dedup/{text_col}",
+        message=F.concat(F.lit(f"Must be unique content ({detail}): "
+                               "duplicate of `"),
+                         F.col("_keep").cast("string"), F.lit("`")),
+        actual=F.col("_keep"), ruleset_name=ruleset_name, severity=severity)
 
 
 def cluster_dedup(df: DataFrame, pairs: DataFrame, id_col: str, *,

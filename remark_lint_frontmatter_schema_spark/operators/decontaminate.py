@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from .text import tokens
+from .validate import violation_rows
 
 
 def word_shingle_hashes(col, n: int = 8) -> Column:
@@ -120,30 +121,22 @@ def contamination_violations(df: DataFrame, bench: DataFrame,
                              ruleset_name: str = "engine",
                              severity: str = "warning") -> DataFrame:
     """Violation rows for the ``x-decontaminate`` table check — one per
-    (document, benchmark-doc) overlap, shape mirrors
-    ``operators/validate.py`` VIOLATION_FIELDS (``actual`` carries the
-    matched benchmark id; the shared-shingle count is in the message)."""
+    (document, benchmark-doc) overlap (``actual`` carries the matched
+    benchmark id; the shared-shingle count is in the message)."""
     pairs = contamination_pairs(
         df, bench, text_col, id_col, bench_text_col=bench_text_col,
         bench_id_col=bench_id_col, n=n, min_shared=min_shared,
         use_bloom=use_bloom, n_items_hint=n_items_hint)
-    return pairs.select(
-        F.col(id_col).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"decontaminate:{text_col}").alias("constraint_id"),
-        F.lit("decontaminate").alias("keyword"),
-        F.lit(f"/{text_col}").alias("instance_path"),
-        F.lit(f"#/x-decontaminate/{text_col}").alias("schema_path"),
-        F.concat(F.lit("Must not overlap the benchmark set: shares "),
-                 F.col("n_shared").cast("string"),
-                 F.lit(f" {n}-gram(s) with `"),
-                 F.col("bench_id").cast("string"),
-                 F.lit("`")).alias("message"),
-        F.col("bench_id").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        pairs, row_id=F.col(id_col), constraint_id=f"decontaminate:{text_col}",
+        keyword="decontaminate", instance_path=f"/{text_col}",
+        schema_path=f"#/x-decontaminate/{text_col}",
+        message=F.concat(F.lit("Must not overlap the benchmark set: shares "),
+                         F.col("n_shared").cast("string"),
+                         F.lit(f" {n}-gram(s) with `"),
+                         F.col("bench_id").cast("string"), F.lit("`")),
+        actual=F.col("bench_id"), ruleset_name=ruleset_name,
+        severity=severity)
 
 
 def decontaminate(df: DataFrame, bench: DataFrame, text_col: str,

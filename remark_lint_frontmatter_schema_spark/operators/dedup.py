@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .text import tokens
+from .validate import to_col, violation_rows
 
 
 # Session-scoped registry of every intermediate a reuse=True operator
@@ -114,7 +115,7 @@ def char_shingles(col, n: int = 3):
     descending array [1, 0] (not empty), and ``substr`` treats position 0
     like 1 — without the guard every short/empty/NULL text got one bogus
     shingle, so e.g. two NULL-text docs compared as Jaccard-1 near-dups."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = to_col(col)
     n_sh = F.greatest(F.length(c) - n + 1, F.lit(0))
     arr = F.array_distinct(
         F.transform(F.sequence(F.lit(1), n_sh), lambda i: c.substr(i, F.lit(n))))
@@ -441,8 +442,7 @@ def edit_similarity(a, b, *, decimals: int = 6):
     length, rounded. One definition — :func:`edit_distance_pairs` and
     the audio label-conflict grading both compare against it, so the
     formula must not fork."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
+    a, b = to_col(a), to_col(b)
     return F.round(
         1 - F.levenshtein(a, b) / F.greatest(F.length(a), F.length(b)),
         decimals)
@@ -776,7 +776,7 @@ def word_shingles(tokens_col, n: int = 5):
     is [1, 0], not empty). Takes the token array, not the text, so callers
     stage the tokenization once — referencing ``tokens(text)`` here would
     re-split the text per shingle (HOF lambdas are never CSE'd)."""
-    t = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
+    t = to_col(tokens_col)
     n_sh = F.greatest(F.size(t) - n + 1, F.lit(0))
     arr = F.array_distinct(F.transform(
         F.sequence(F.lit(1), n_sh),
@@ -840,28 +840,21 @@ def dup_ngram_violations(df: DataFrame, text_col: str, id_col: str, *,
                          ruleset_name: str = "engine",
                          severity: str = "warning") -> DataFrame:
     """Violation rows for the ``x-dup-ngram`` table check: documents whose
-    :func:`cross_doc_dup_fraction` exceeds ``max_frac`` (shape mirrors
-    VIOLATION_FIELDS, same as the other table checks). Unlike ``x-dedup``
+    :func:`cross_doc_dup_fraction` exceeds ``max_frac``. Unlike ``x-dedup``
     this flags PARTIAL overlap — a document may be no one's duplicate yet
     still be mostly stitched from spans that exist elsewhere."""
     scored = cross_doc_dup_fraction(df, text_col, id_col, n=n)
-    return (scored.where(F.col("dup_frac") > max_frac)
-            .select(
-                F.col(id_col).cast("string").alias("row_id"),
-                F.lit("all").alias("partition_id"),
-                F.lit(ruleset_name).alias("ruleset_id"),
-                F.lit(f"dup-ngram:{text_col}").alias("constraint_id"),
-                F.lit("dup-ngram").alias("keyword"),
-                F.lit(f"/{text_col}").alias("instance_path"),
-                F.lit(f"#/x-dup-ngram/{text_col}").alias("schema_path"),
-                F.concat(
-                    F.lit(f"Must have <= {max_frac:g} duplicated {n}-gram "
-                          "fraction across the corpus: got "),
-                    F.col("dup_frac").cast("string")).alias("message"),
-                F.col("dup_frac").cast("string").alias("actual"),
-                F.array(F.lit(f"<= {max_frac:g}")).alias("expected"),
-                F.lit(severity).alias("severity"),
-            ))
+    return violation_rows(
+        scored.where(F.col("dup_frac") > max_frac),
+        row_id=F.col(id_col), constraint_id=f"dup-ngram:{text_col}",
+        keyword="dup-ngram", instance_path=f"/{text_col}",
+        schema_path=f"#/x-dup-ngram/{text_col}",
+        message=F.concat(
+            F.lit(f"Must have <= {max_frac:g} duplicated {n}-gram "
+                  "fraction across the corpus: got "),
+            F.col("dup_frac").cast("string")),
+        actual=F.col("dup_frac"), expected=[f"<= {max_frac:g}"],
+        ruleset_name=ruleset_name, severity=severity)
 
 
 # ---------------------------------------------------------------------------

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .validate import to_col, violation_rows
+
 
 def histogram(df: DataFrame, value_col: str, side_col, *,
               lo: float, hi: float, n_buckets: int = 50) -> DataFrame:
@@ -28,7 +30,7 @@ def histogram(df: DataFrame, value_col: str, side_col, *,
     would report confident drift between two identical NaN-bearing
     distributions). Count NaNs exactly with stats.column_stats
     (n_nonfinite) or gate them with x-finite."""
-    side = F.col(side_col) if isinstance(side_col, str) else side_col
+    side = to_col(side_col)
     bucket = F.coalesce(
         F.width_bucket(F.col(value_col).cast("double"),
                        F.lit(float(lo)), F.lit(float(hi)),
@@ -45,7 +47,7 @@ def histogram_by(df: DataFrame, value_col: str, side_col, group_col: str, *,
     """Per-GROUP fixed-bucket histogram: (grp, side, bucket, n) — one
     hash-aggregate whose shuffle carries (group, side, bucket) keys only,
     feeding :func:`ks_by` for per-category drift."""
-    side = F.col(side_col) if isinstance(side_col, str) else side_col
+    side = to_col(side_col)
     bucket = F.coalesce(
         F.width_bucket(F.col(value_col).cast("double"),
                        F.lit(float(lo)), F.lit(float(hi)),
@@ -97,7 +99,7 @@ def categorical_hist(df: DataFrame, value_col: str, side_col) -> DataFrame:
     :func:`psi`, :func:`chi_square` — work unchanged; KS/EMD are
     order-dependent and have no meaning over unordered categories).
     NULL categories are out of scope (``required`` owns presence)."""
-    side = F.col(side_col) if isinstance(side_col, str) else side_col
+    side = to_col(side_col)
     return (df.where(F.col(value_col).isNotNull())
               .groupBy(side.cast("string").alias("side"),
                        F.col(value_col).cast("string").alias("bucket"))
@@ -111,7 +113,7 @@ def categorical_hist_by(df: DataFrame, value_col: str, side_col,
     of :func:`histogram_by`, feeding :func:`psi_by` for per-segment
     category-mix drift. One hash-aggregate; the shuffle carries
     (group, side, category) keys only."""
-    side = F.col(side_col) if isinstance(side_col, str) else side_col
+    side = to_col(side_col)
     return (df.where(F.col(value_col).isNotNull()
                      & F.col(group_col).isNotNull())
               .groupBy(F.col(group_col).alias("grp"),
@@ -432,9 +434,8 @@ def drift_violations(df: DataFrame, value_col: str, *, partition_col: str,
                      ruleset_name: str = "engine",
                      severity: str = "warning") -> DataFrame:
     """Lazy violation-row form of :func:`drift_check` for the ``x-drift``
-    declarative table check: at most ONE run-level violation row (shaped
-    like operators/validate.py VIOLATION_FIELDS so it unions with row
-    checks), emitted when either statistic crosses its threshold.
+    declarative table check: at most ONE run-level violation row,
+    emitted when either statistic crosses its threshold.
 
     KS and PSI each consume the histogram aggregate; kept lazy (no
     persist/collect) so the declarative plan composes — two passes over a
@@ -517,17 +518,13 @@ def drift_violations(df: DataFrame, value_col: str, *, partition_col: str,
                       | F.coalesce(emd_fired, F.lit(False))
                       | F.coalesce(jsd_fired, F.lit(False))
                       | F.coalesce(cvm_fired, F.lit(False)) | missing)
-    return drifted.select(
-        rid.alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"drift:{value_col}"
-              + (f":by={by}" if by else "")).alias("constraint_id"),
-        F.when(missing, F.lit("drift-config")).otherwise(F.lit("drift"))
-         .alias("keyword"),
-        F.lit(f"/{value_col}").alias("instance_path"),
-        F.lit(f"#/x-drift/{value_col}").alias("schema_path"),
-        F.when(missing,
+    return violation_rows(
+        drifted, row_id=rid,
+        constraint_id=f"drift:{value_col}" + (f":by={by}" if by else ""),
+        keyword=F.when(missing, F.lit("drift-config"))
+        .otherwise(F.lit("drift")),
+        instance_path=f"/{value_col}", schema_path=f"#/x-drift/{value_col}",
+        message=F.when(missing,
                F.lit(f"Drift sides '{side_a}'/'{side_b}' not both present "
                      f"in '{partition_col}'"))
          .otherwise(F.lit(
@@ -539,15 +536,12 @@ def drift_violations(df: DataFrame, value_col: str, *, partition_col: str,
              + (f" or jsd>{jsd_threshold:g}"
                 if jsd_threshold is not None else "")
              + (f" or cvm>{cvm_threshold:g}"
-                if cvm_threshold is not None else ""))).alias("message"),
-        F.when(missing, F.lit("sides missing"))
-         .otherwise(F.concat(F.lit("ks="), F.col("ks_stat").cast("string"),
-                             F.lit(" psi="), F.col("psi").cast("string"),
-                             emd_tail, jsd_tail, cvm_tail))
-         .alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+                if cvm_threshold is not None else ""))),
+        actual=F.when(missing, F.lit("sides missing"))
+        .otherwise(F.concat(F.lit("ks="), F.col("ks_stat").cast("string"),
+                            F.lit(" psi="), F.col("psi").cast("string"),
+                            emd_tail, jsd_tail, cvm_tail)),
+        ruleset_name=ruleset_name, severity=severity)
 
 
 def drift_check(df: DataFrame, value_col: str, side_col, side_a: str,
@@ -692,26 +686,19 @@ def benford_violations(df: DataFrame, value_col: str, *,
     # not a pass (the x-freshness policy)
     bad = mad.where(F.col("_mad").isNull()
                     | (F.col("_mad") > F.lit(float(max_mad))))
-    return bad.select(
-        rid.alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"benford:{value_col}"
-              + (f":by={by}" if by else "")).alias("constraint_id"),
-        F.lit("x-benford").alias("keyword"),
-        F.lit(f"/{value_col}").alias("instance_path"),
-        F.lit(f"#/x-benford/{value_col}").alias("schema_path"),
-        F.when(F.col("_mad").isNull(),
-               F.lit("Must conform to Benford's law: no measurable "
-                     "first digits (empty or all zero/NULL/non-finite)"))
-         .otherwise(F.concat(
-             F.lit("Must conform to Benford's law: first-digit MAD "),
-             F.col("_mad").cast("string"),
-             F.lit(f" (limit {max_mad})"))).alias("message"),
-        F.col("_mad").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        bad, row_id=rid,
+        constraint_id=f"benford:{value_col}" + (f":by={by}" if by else ""),
+        keyword="x-benford", instance_path=f"/{value_col}",
+        schema_path=f"#/x-benford/{value_col}",
+        message=F.when(
+            F.col("_mad").isNull(),
+            F.lit("Must conform to Benford's law: no measurable "
+                  "first digits (empty or all zero/NULL/non-finite)"))
+        .otherwise(F.concat(
+            F.lit("Must conform to Benford's law: first-digit MAD "),
+            F.col("_mad").cast("string"), F.lit(f" (limit {max_mad})"))),
+        actual=F.col("_mad"), ruleset_name=ruleset_name, severity=severity)
 
 
 

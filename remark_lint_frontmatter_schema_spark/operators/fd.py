@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .validate import violation_rows
+
 
 def fd_conflicts(df: DataFrame, dependent: str,
                  determined_by: list[str]) -> DataFrame:
@@ -93,8 +95,7 @@ def fd_discover(df: DataFrame, candidates: list[tuple], *,
 def fd_violations(df: DataFrame, dependent: str, determined_by: list[str],
                   *, row_id: str, ruleset_name: str = "engine",
                   severity: str = "warning") -> DataFrame:
-    """Violation rows (operators/validate.py VIOLATION_FIELDS shape) for
-    every row holding a non-majority dependent value inside a conflicted
+    """Violation rows for every row holding a non-majority dependent value inside a conflicted
     determinant group. The majority rows of a conflicted group do NOT
     violate — dropping the violating rows (or repairing them to
     ``expected``) restores the dependency exactly."""
@@ -107,24 +108,18 @@ def fd_violations(df: DataFrame, dependent: str, determined_by: list[str],
              .na.drop(subset=[*dets, dependent])
     det_desc = ",".join(dets)
     det_vals = F.concat_ws(",", *[F.col(c).cast("string") for c in dets])
-    return (fact.join(conflicts, dets)
-                .where(F.col(dependent) != F.col("majority"))
-                .select(
-                    F.col(row_id).cast("string").alias("row_id"),
-                    F.lit("all").alias("partition_id"),
-                    F.lit(ruleset_name).alias("ruleset_id"),
-                    F.lit(f"fd:{det_desc}->{dependent}").alias("constraint_id"),
-                    F.lit("fd").alias("keyword"),
-                    F.lit(f"/{dependent}").alias("instance_path"),
-                    F.lit(f"#/properties/{dependent}/x-fd").alias("schema_path"),
-                    F.concat(
-                        F.lit(f"Must be functionally determined by "
-                              f"`{det_desc}`: expected `"),
-                        F.col("majority").cast("string"),
-                        F.lit("` for ("), det_vals, F.lit("), got `"),
-                        F.col(dependent).cast("string"), F.lit("`"))
-                     .alias("message"),
-                    F.col(dependent).cast("string").alias("actual"),
-                    F.array(F.col("majority").cast("string"))
-                     .alias("expected"),
-                    F.lit(severity).alias("severity")))
+    return violation_rows(
+        fact.join(conflicts, dets)
+        .where(F.col(dependent) != F.col("majority")),
+        row_id=F.col(row_id), constraint_id=f"fd:{det_desc}->{dependent}",
+        keyword="fd", instance_path=f"/{dependent}",
+        schema_path=f"#/properties/{dependent}/x-fd",
+        message=F.concat(
+            F.lit(f"Must be functionally determined by "
+                  f"`{det_desc}`: expected `"),
+            F.col("majority").cast("string"),
+            F.lit("` for ("), det_vals, F.lit("), got `"),
+            F.col(dependent).cast("string"), F.lit("`")),
+        actual=F.col(dependent),
+        expected=F.array(F.col("majority").cast("string")),
+        ruleset_name=ruleset_name, severity=severity)

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .asof import _check_same_kind, _ord_expr
+from .validate import violation_rows
 
 __all__ = ["point_in_interval_join", "interval_overlap_join",
            "interval_ref_violations"]
@@ -229,19 +230,14 @@ def interval_ref_violations(fact: DataFrame, fact_key: str,
         pts, iv, on=[fact_key], point_ts=ts_col, start_col=start_col,
         end_col=end_col, bucket=bucket, payload=["_covered"], how="left",
         max_span_buckets=max_span_buckets)
-    return joined.where(F.col("_covered").isNull()).select(
-        F.col(row_id).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"ref-interval:{fact_key}->{dim_key}"
-              f"[{start_col},{end_col}]").alias("constraint_id"),
-        F.lit("ref-interval").alias("keyword"),
-        F.lit(f"/{fact_key}").alias("instance_path"),
-        F.lit(f"#/x-ref-interval/{fact_key}").alias("schema_path"),
-        F.lit(f"Must fall inside a '{dim_key}' interval "
-              f"[{start_col}, {end_col}] at `{ts_col}`").alias("message"),
-        F.concat_ws("@", F.col(fact_key).cast("string"),
-                    F.col(ts_col).cast("string")).alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        joined.where(F.col("_covered").isNull()), row_id=F.col(row_id),
+        constraint_id=(f"ref-interval:{fact_key}->{dim_key}"
+                       f"[{start_col},{end_col}]"),
+        keyword="ref-interval", instance_path=f"/{fact_key}",
+        schema_path=f"#/x-ref-interval/{fact_key}",
+        message=(f"Must fall inside a '{dim_key}' interval "
+                 f"[{start_col}, {end_col}] at `{ts_col}`"),
+        actual=F.concat_ws("@", F.col(fact_key).cast("string"),
+                           F.col(ts_col).cast("string")),
+        ruleset_name=ruleset_name, severity=severity)

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _persist, _track
+from .validate import to_col, violation_rows
 
 #: Beginning-of-document sentinel. Prepended (n-1)× so the first real
 #: token is conditioned on document start, as in any sentence-level LM.
@@ -70,7 +71,7 @@ def canon_tokens(col) -> F.Column:
     single space, split — the corpus-wide tokenization also used by the
     gibberish scorer (operators/text.py), chosen because it is
     reproducible verbatim in ANSI SQL for the oracle."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = to_col(col)
     canon = F.trim(F.regexp_replace(F.lower(c), "[^a-z]+", " "))
     return F.filter(F.split(canon, " "), lambda t: t != "")
 
@@ -255,8 +256,7 @@ def lm_ppl_violations(df: DataFrame, text_col: str, id_col: str, *,
                       max_ppl: float, n: int = 2, k: float = 0.5,
                       ruleset_name: str = "engine",
                       severity: str = "warning") -> DataFrame:
-    """Violation rows (operators/validate.py VIOLATION_FIELDS shape) for
-    documents whose perplexity under the corpus's own n-gram LM exceeds
+    """Violation rows for documents whose perplexity under the corpus's own n-gram LM exceeds
     ``max_ppl`` — the ``x-lm-ppl`` declarative gate (the CCNet tail
     bucket as a lint finding). Unscorable documents (no n-grams after
     canonicalization) never violate here: emptiness/shortness is
@@ -265,20 +265,14 @@ def lm_ppl_violations(df: DataFrame, text_col: str, id_col: str, *,
     scored = train_and_score(df, n=n, k=k, id_col=id_col,
                              text_col=text_col)
     bad = scored.where(F.col("ppl") > max_ppl)
-    out = bad.select(
-        F.col(id_col).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"lm-ppl:{text_col}").alias("constraint_id"),
-        F.lit("lm-ppl").alias("keyword"),
-        F.lit(f"/{text_col}").alias("instance_path"),
-        F.lit(f"#/x-lm-ppl/{text_col}").alias("schema_path"),
-        F.lit(f"Must score at most {max_ppl:g} perplexity under the "
-              f"corpus {n}-gram LM").alias("message"),
-        F.col("ppl").cast("string").alias("actual"),
-        F.array(F.lit(f"<= {max_ppl:g}")).alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    out = violation_rows(
+        bad, row_id=F.col(id_col), constraint_id=f"lm-ppl:{text_col}",
+        keyword="lm-ppl", instance_path=f"/{text_col}",
+        schema_path=f"#/x-lm-ppl/{text_col}",
+        message=(f"Must score at most {max_ppl:g} perplexity under the "
+                 f"corpus {n}-gram LM"),
+        actual=F.col("ppl"), expected=[f"<= {max_ppl:g}"],
+        ruleset_name=ruleset_name, severity=severity)
     return _track(out, scored)
 
 

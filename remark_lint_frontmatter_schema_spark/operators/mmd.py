@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _persist
+from .validate import to_col
 
 
 def _rff_partials(batches, *, w, b, side_col: str, vec_col: str, dim: int):
@@ -83,7 +84,7 @@ def mmd_drift(df: DataFrame, vec_col: str, side_col, side_a: str,
     definitely not the phantom ||mean_other||^2 a zero-filled mean
     would produce).
     """
-    side = F.col(side_col) if isinstance(side_col, str) else side_col
+    side = to_col(side_col)
     src = (df.select(side.cast("string").alias("_side"),
                      F.col(vec_col).alias("_vec"))
            .where(F.col("_side").isin([side_a, side_b])

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .validate import violation_rows
+
 _MZ = 0.6745  # standard-normal consistency constant (P75 of |N(0,1)|)
 
 
@@ -124,30 +126,23 @@ def outlier_violations(df: DataFrame, value_col: str, *, row_id: str,
                        accuracy: int = 1000,
                        ruleset_name: str = "engine",
                        severity: str = "warning") -> DataFrame:
-    """Violation rows for the ``x-outlier`` declarative table check,
-    shaped like operators/validate.py VIOLATION_FIELDS so they union
-    with the row-level checks. Grouped checks carry the group value as
-    ``partition_id`` (the per-partition verdict addressing)."""
+    """Violation rows for the ``x-outlier`` declarative table check.
+    Grouped checks carry the group value as ``partition_id`` (the
+    per-partition verdict addressing)."""
     scored = outlier_scores(df, value_col, row_id=row_id, k=k,
                             group_col=group_col, approx=approx,
                             accuracy=accuracy)
-    part = (F.lit("all") if group_col is None
-            else F.col(group_col).cast("string"))
-    return scored.select(
-        F.col("row_id"),
-        part.alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"outlier:{value_col}").alias("constraint_id"),
-        F.lit("outlier").alias("keyword"),
-        F.lit(f"/{value_col}").alias("instance_path"),
-        F.lit(f"#/x-outlier/{value_col}").alias("schema_path"),
-        F.concat(F.lit(f"Robust outlier on `{value_col}`: |z| = "),
-                 F.coalesce(F.col("z").cast("string"), F.lit("inf")),
-                 F.lit(f" exceeds {k}")).alias("message"),
-        F.col("value").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        scored, row_id=F.col("row_id"),
+        partition_id=("all" if group_col is None
+                      else F.col(group_col).cast("string")),
+        constraint_id=f"outlier:{value_col}", keyword="outlier",
+        instance_path=f"/{value_col}",
+        schema_path=f"#/x-outlier/{value_col}",
+        message=F.concat(F.lit(f"Robust outlier on `{value_col}`: |z| = "),
+                         F.coalesce(F.col("z").cast("string"), F.lit("inf")),
+                         F.lit(f" exceeds {k}")),
+        actual=F.col("value"), ruleset_name=ruleset_name, severity=severity)
 
 
 def volume_anomalies(df: DataFrame, ts_col: str, *, unit: str = "day",
@@ -185,8 +180,7 @@ def volume_violations(df: DataFrame, ts_col: str, *, unit: str = "day",
                       ruleset_name: str = "engine",
                       severity: str = "warning") -> DataFrame:
     """Violation rows for the ``x-volume`` table check: one row per
-    anomalous time bucket (shape mirrors VIOLATION_FIELDS like the other
-    table checks — x-calendar's thin/flooded-bucket companion).
+    anomalous time bucket (x-calendar's thin/flooded-bucket companion).
 
     ``by`` scores each bucket against ITS GROUP's median/MAD ("typical
     hourly volume per event type" — a type that floods while another
@@ -204,17 +198,14 @@ def volume_violations(df: DataFrame, ts_col: str, *, unit: str = "day",
                  .agg(F.count(F.lit(1)).alias("n_rows")))
     bad = outlier_scores(buckets, "n_rows", row_id="bucket", k=k,
                          group_col="_grp" if by is not None else None)
-    return bad.select(
-        F.col("row_id"),
-        (F.col("_grp") if by is not None else F.lit("all"))
-        .alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"volume:{ts_col}" + (f":by={by}" if by is not None else ""))
-        .alias("constraint_id"),
-        F.lit("x-volume").alias("keyword"),
-        F.lit(f"/{ts_col}").alias("instance_path"),
-        F.lit(f"#/x-volume/{ts_col}").alias("schema_path"),
-        F.concat(
+    return violation_rows(
+        bad, row_id=F.col("row_id"),
+        partition_id=F.col("_grp") if by is not None else "all",
+        constraint_id=f"volume:{ts_col}"
+        + (f":by={by}" if by is not None else ""),
+        keyword="x-volume", instance_path=f"/{ts_col}",
+        schema_path=f"#/x-volume/{ts_col}",
+        message=F.concat(
             F.lit(f"Must have typical {unit} row volume "
                   f"(median/MAD |z| <= {k:g}): bucket has "),
             F.col("value").cast("long").cast("string"),
@@ -222,9 +213,6 @@ def volume_violations(df: DataFrame, ts_col: str, *, unit: str = "day",
             F.when(F.col("z").isNotNull(),
                    F.concat(F.lit(" (z="),
                             F.round("z", 2).cast("string"),
-                            F.lit(")"))).otherwise(F.lit(""))
-        ).alias("message"),
-        F.col("value").cast("long").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+                            F.lit(")"))).otherwise(F.lit(""))),
+        actual=F.col("value").cast("long"), ruleset_name=ruleset_name,
+        severity=severity)

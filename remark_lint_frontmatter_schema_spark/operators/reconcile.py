@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .validate import violation_rows
+
 _AGGS = {
     "sum": F.sum,
     "count": lambda c: F.count(c),
@@ -98,8 +100,7 @@ def reconcile_violations(fact: DataFrame, dim: DataFrame, *, key: str,
                          on_missing: str = "violate",
                          ruleset_name: str = "engine",
                          severity: str = "warning") -> DataFrame:
-    """Violation rows (operators/validate.py shape) for every dimension
-    key whose stored value disagrees with the fact-side aggregate beyond
+    """Violation rows for every dimension key whose stored value disagrees with the fact-side aggregate beyond
     ``tolerance`` — and, unless ``on_missing="ignore"``, every key with
     no fact rows at all."""
     if on_missing not in ("violate", "ignore"):
@@ -121,19 +122,13 @@ def reconcile_violations(fact: DataFrame, dim: DataFrame, *, key: str,
     null_msg = F.lit(
         f"Must reconcile: stored '{dim_value}' is NULL/NaN "
         "(nothing to reconcile against)")
-    return rep.select(
-        F.col(key).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"reconcile:{dim_value}").alias("constraint_id"),
-        F.lit("x-reconcile").alias("keyword"),
-        F.lit(f"/{dim_value}").alias("instance_path"),
-        F.lit(f"#/x-reconcile/{dim_value}").alias("schema_path"),
-        F.when(F.col("status") == "mismatch", mismatch_msg)
-         .when(F.col("status") == "null_stored", null_msg)
-         .otherwise(missing_msg).alias("message"),
-        F.round(F.col("actual"), 6).cast("string").alias("actual"),
-        F.array(F.round(F.col("expected"), 6).cast("string"))
-         .alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        rep, row_id=F.col(key), constraint_id=f"reconcile:{dim_value}",
+        keyword="x-reconcile", instance_path=f"/{dim_value}",
+        schema_path=f"#/x-reconcile/{dim_value}",
+        message=F.when(F.col("status") == "mismatch", mismatch_msg)
+        .when(F.col("status") == "null_stored", null_msg)
+        .otherwise(missing_msg),
+        actual=F.round(F.col("actual"), 6),
+        expected=F.array(F.round(F.col("expected"), 6).cast("string")),
+        ruleset_name=ruleset_name, severity=severity)

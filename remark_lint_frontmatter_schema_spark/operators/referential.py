@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
+from .validate import violation_rows
+
 _MERSENNE = (1 << 61) - 1
 
 
@@ -185,18 +187,12 @@ def referential_violations(fact: DataFrame, fact_key: str, dim: DataFrame,
                            use_bloom: bool = False,
                            n_items_hint: int | None = None,
                            severity: str = "warning") -> DataFrame:
-    d = dangling_keys(fact, fact_key, dim, dim_key, use_bloom=use_bloom,
-                      n_items_hint=n_items_hint)
-    return d.select(
-        F.col(row_id).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"ref:{fact_key}->{dim_key}").alias("constraint_id"),
-        F.lit("ref").alias("keyword"),
-        F.lit(f"/{fact_key}").alias("instance_path"),
-        F.lit(f"#/x-ref/{fact_key}").alias("schema_path"),
-        F.lit(f"Must reference an existing '{dim_key}'").alias("message"),
-        F.col(fact_key).cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        dangling_keys(fact, fact_key, dim, dim_key, use_bloom=use_bloom,
+                      n_items_hint=n_items_hint),
+        row_id=F.col(row_id), constraint_id=f"ref:{fact_key}->{dim_key}",
+        keyword="ref", instance_path=f"/{fact_key}",
+        schema_path=f"#/x-ref/{fact_key}",
+        message=f"Must reference an existing '{dim_key}'",
+        actual=F.col(fact_key), ruleset_name=ruleset_name,
+        severity=severity)

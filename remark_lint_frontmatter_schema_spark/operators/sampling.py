@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .validate import to_col, violation_rows
+
 # 8 hex chars = 32 bits of sha2 — plenty of resolution for a fraction
 _HEX_DIGITS = 8
 _HEX_SPACE = 16 ** _HEX_DIGITS
@@ -240,28 +242,22 @@ def leakage_violations(df: DataFrame, split_col: str, group_col: str, *,
                        ruleset_name: str = "engine",
                        severity: str = "warning") -> DataFrame:
     """Violation rows for the ``x-leakage`` table check: one row per
-    group whose members span more than one split (shape mirrors
-    VIOLATION_FIELDS, like the other table checks; ``row_id`` carries
+    group whose members span more than one split (``row_id`` carries
     the GROUP value — these are group-level findings)."""
-    leaks = split_leakage(df, group_col, split_col)
-    return leaks.select(
-        F.col(group_col).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"leakage:{split_col}:{group_col}").alias("constraint_id"),
-        F.lit("leakage").alias("keyword"),
-        F.lit(f"/{split_col}").alias("instance_path"),
-        F.lit(f"#/x-leakage/{split_col}").alias("schema_path"),
-        F.concat(
+    return violation_rows(
+        split_leakage(df, group_col, split_col),
+        row_id=F.col(group_col),
+        constraint_id=f"leakage:{split_col}:{group_col}",
+        keyword="leakage", instance_path=f"/{split_col}",
+        schema_path=f"#/x-leakage/{split_col}",
+        message=F.concat(
             F.lit(f"Must keep every `{group_col}` group in one split: "
                   "found in "),
             F.array_join("splits", ", "),
             F.lit(" across "), F.col("n_rows").cast("string"),
-            F.lit(" rows")).alias("message"),
-        F.col("n_splits").cast("string").alias("actual"),
-        F.array(F.lit("1 split per group")).alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+            F.lit(" rows")),
+        actual=F.col("n_splits"), expected=["1 split per group"],
+        ruleset_name=ruleset_name, severity=severity)
 
 
 def weighted_sample(df: DataFrame, id_col: str, weight_col, k: int) -> DataFrame:
@@ -284,8 +280,7 @@ def weighted_sample(df: DataFrame, id_col: str, weight_col, k: int) -> DataFrame
     """
     if k <= 0:
         raise ValueError("k must be > 0")
-    w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    w = w.cast("double")
+    w = to_col(weight_col).cast("double")
     u = (F.conv(F.substring(F.sha2(F.col(id_col).cast("string"), 256),
                             1, 13), 16, 10).cast("double")
          / F.lit(float(16 ** 13)))

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .validate import violation_rows
+
 DIRECTIONS = ("non-decreasing", "increasing", "non-increasing", "decreasing")
 
 # cur-vs-prev "pair is fine" predicates
@@ -137,20 +139,13 @@ def gap_violations(
     gap = _secs(F.col(column)) - _secs(F.col("_prev"))
     bad = pairs.where(F.col("_prev").isNotNull() & (gap > max_seconds))
     scope = f" within '{by}'" if by else ""
-    return bad.select(
-        F.col(row_id).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"gap:{column}").alias("constraint_id"),
-        F.lit("x-gap").alias("keyword"),
-        F.lit(f"/{column}").alias("instance_path"),
-        F.lit(f"#/x-gap/{column}").alias("schema_path"),
-        F.lit(f"Must not gap more than {max_seconds:g} s{scope}")
-         .alias("message"),
-        F.round(gap, 3).cast("string").alias("actual"),
-        F.array(F.lit(f"<= {max_seconds:g}")).alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        bad, row_id=F.col(row_id), constraint_id=f"gap:{column}",
+        keyword="x-gap", instance_path=f"/{column}",
+        schema_path=f"#/x-gap/{column}",
+        message=f"Must not gap more than {max_seconds:g} s{scope}",
+        actual=F.round(gap, 3), expected=[f"<= {max_seconds:g}"],
+        ruleset_name=ruleset_name, severity=severity)
 
 
 def sessionize(
@@ -220,8 +215,7 @@ def monotonic_violations(
     ruleset_name: str = "engine",
     severity: str = "warning",
 ) -> DataFrame:
-    """Violation rows (operators/validate.py VIOLATION_FIELDS shape) for
-    adjacent-pair ordering failures; unions cleanly with DSL checks."""
+    """Violation rows for adjacent-pair ordering failures."""
     if direction not in _OK:
         raise ValueError(f"direction must be one of {DIRECTIONS}, "
                          f"got {direction!r}")
@@ -232,21 +226,14 @@ def monotonic_violations(
     ok = _OK[direction](F.col(column), F.col("_prev"))
     bad = pairs.where(F.col("_prev").isNotNull() & ~ok)
     scope = f" within '{by}'" if by else ""
-    return bad.select(
-        F.col(row_id).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"monotonic:{column}").alias("constraint_id"),
-        F.lit("x-monotonic").alias("keyword"),
-        F.lit(f"/{column}").alias("instance_path"),
-        F.lit(f"#/x-monotonic/{column}").alias("schema_path"),
-        F.lit(f"Must be {direction} over '{order_by}'{scope}")
-         .alias("message"),
-        F.concat(F.col("_prev").cast("string"), F.lit(" -> "),
-                 F.col(column).cast("string")).alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        bad, row_id=F.col(row_id), constraint_id=f"monotonic:{column}",
+        keyword="x-monotonic", instance_path=f"/{column}",
+        schema_path=f"#/x-monotonic/{column}",
+        message=f"Must be {direction} over '{order_by}'{scope}",
+        actual=F.concat(F.col("_prev").cast("string"), F.lit(" -> "),
+                        F.col(column).cast("string")),
+        ruleset_name=ruleset_name, severity=severity)
 
 
 def resample_fill(
@@ -408,20 +395,14 @@ def calendar_violations(df: DataFrame, ts_col: str, *,
                            max_buckets=max_buckets)
     rid = (F.col(by).cast("string") if by is not None
            else F.lit("all"))
-    return miss.select(
-        rid.alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"calendar:{ts_col}").alias("constraint_id"),
-        F.lit("x-calendar").alias("keyword"),
-        F.lit(f"/{ts_col}").alias("instance_path"),
-        F.lit(f"#/x-calendar/{ts_col}").alias("schema_path"),
-        F.concat(F.lit(f"Must cover every {unit}: no rows in "),
-                 F.col("bucket").cast("string")).alias("message"),
-        F.col("bucket").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        miss, row_id=rid, constraint_id=f"calendar:{ts_col}",
+        keyword="x-calendar", instance_path=f"/{ts_col}",
+        schema_path=f"#/x-calendar/{ts_col}",
+        message=F.concat(F.lit(f"Must cover every {unit}: no rows in "),
+                         F.col("bucket").cast("string")),
+        actual=F.col("bucket"), ruleset_name=ruleset_name,
+        severity=severity)
 
 
 def freshness_violations(df: DataFrame, ts_col: str, *,
@@ -454,22 +435,14 @@ def freshness_violations(df: DataFrame, ts_col: str, *,
            - F.unix_micros(F.col("_newest").cast("timestamp")) / 1e6)
     stale = agg.where(F.col("_newest").isNull()
                       | (age > F.lit(float(max_age_seconds))))
-    return stale.select(
-        rid.alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"freshness:{ts_col}").alias("constraint_id"),
-        F.lit("x-freshness").alias("keyword"),
-        F.lit(f"/{ts_col}").alias("instance_path"),
-        F.lit(f"#/x-freshness/{ts_col}").alias("schema_path"),
-        F.when(F.col("_newest").isNull(),
-               F.lit(f"Must be fresh: no non-NULL '{ts_col}' rows"))
-         .otherwise(F.concat(
-             F.lit("Must be fresh: newest row is "),
-             F.round(age, 1).cast("string"),
-             F.lit(f" s old (limit {max_age_seconds})")))
-         .alias("message"),
-        F.col("_newest").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        stale, row_id=rid, constraint_id=f"freshness:{ts_col}",
+        keyword="x-freshness", instance_path=f"/{ts_col}",
+        schema_path=f"#/x-freshness/{ts_col}",
+        message=F.when(F.col("_newest").isNull(),
+                       F.lit(f"Must be fresh: no non-NULL '{ts_col}' rows"))
+        .otherwise(F.concat(F.lit("Must be fresh: newest row is "),
+                            F.round(age, 1).cast("string"),
+                            F.lit(f" s old (limit {max_age_seconds})"))),
+        actual=F.col("_newest"), ruleset_name=ruleset_name,
+        severity=severity)

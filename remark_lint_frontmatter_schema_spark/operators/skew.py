@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import _persist
+from .validate import violation_rows
 
 
 def key_counts(df: DataFrame, key: str, *, n_salts: int = 32) -> DataFrame:
@@ -247,9 +248,8 @@ def skew_violations(df: DataFrame, key: str, *,
     """Table-level declarative form (``x-skew``): a violation row when the
     hottest ``key`` value holds more than ``max_share`` of all rows — the
     lint that says "shuffling on this key will strand one reducer; salt
-    it or bucket it". Violation shape mirrors
-    operators/validate.py VIOLATION_FIELDS so sinks union cleanly; the
-    row carries the measured share as ``actual`` and the hottest key's
+    it or bucket it". The row carries the measured share as ``actual``
+    and the hottest key's
     recommended salt factor in the message.
 
     ``by`` gates PER GROUP over :func:`skew_profile_by` ("skew per
@@ -277,28 +277,20 @@ def skew_gate_from_profile(prof: DataFrame, key: str, *,
     """The x-skew gate over a precomputed :func:`skew_profile` (or
     :func:`skew_profile_by`, with ``rid``/``by``) relation — shared
     by the global and grouped :func:`skew_violations`."""
-    if rid is None:
-        rid = F.lit("all")
-    bad = prof.where(F.col("max_share") > F.lit(float(max_share)))
-    return bad.select(
-        rid.alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"skew:{key}"
-              + (f":by={by}" if by else "")).alias("constraint_id"),
-        F.lit("x-skew").alias("keyword"),
-        F.lit(f"/{key}").alias("instance_path"),
-        F.lit(f"#/x-skew/{key}").alias("schema_path"),
-        F.concat(
+    return violation_rows(
+        prof.where(F.col("max_share") > F.lit(float(max_share))),
+        row_id="all" if rid is None else rid,
+        constraint_id=f"skew:{key}" + (f":by={by}" if by else ""),
+        keyword="x-skew", instance_path=f"/{key}",
+        schema_path=f"#/x-skew/{key}",
+        message=F.concat(
             F.lit(f"Key '{key}' is skewed: hottest value holds "),
             F.col("max_share").cast("string"),
             F.lit(f" of rows (limit {max_share}); shuffle on it with >= "),
             F.col("recommended_salts").cast("string"),
-            F.lit(" salts")).alias("message"),
-        F.col("max_share").cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+            F.lit(" salts")),
+        actual=F.col("max_share"), ruleset_name=ruleset_name,
+        severity=severity)
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .validate import to_col, violation_rows
+
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
             T.FloatType, T.DoubleType, T.DecimalType)
 
@@ -165,7 +167,7 @@ def failure_rate_ci(df: DataFrame, failed_col, group_col: str, *,
     already encode its own NULL policy).
 
     ``failed_col`` may be a column name or boolean Column expression."""
-    failed = F.col(failed_col) if isinstance(failed_col, str) else failed_col
+    failed = to_col(failed_col)
     agg = df.groupBy(F.col(group_col).alias("grp")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(failed, 1).otherwise(0)).alias("k"))
@@ -334,30 +336,22 @@ def correlation_violations(df: DataFrame, col_a: str, col_b: str, *,
         rid = F.coalesce(F.col("_grp"), F.lit("<null>"))
     bad = rep.where(F.col("corr").isNull()
                     | (F.abs(F.col("corr")) < F.lit(float(min_abs))))
-    return bad.select(
-        rid.alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"corr:{col_a}~{col_b}"
-              + (f":by={by}" if by else "")).alias("constraint_id"),
-        F.lit("x-corr").alias("keyword"),
-        F.lit(f"/{col_a}").alias("instance_path"),
-        F.lit(f"#/x-corr/{col_a}").alias("schema_path"),
-        F.when(F.col("corr").isNull(),
-               F.lit(f"Must correlate with '{col_b}': correlation "
-                     "undefined (constant column or < 2 pairs)"))
-         .otherwise(F.concat(
-             F.lit(f"Must correlate with '{col_b}': |corr| = "),
-             # decimal(12,6), not double->string: tiny correlations
-             # would render in E-notation, which SQL oracles don't emit
-             F.abs(F.col("corr")).cast("decimal(12,6)").cast("string"),
-             F.lit(f" below {min_abs}")))
-         .alias("message"),
-        F.col("corr").cast("decimal(12,6)").cast("string")
-         .alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        bad, row_id=rid,
+        constraint_id=f"corr:{col_a}~{col_b}" + (f":by={by}" if by else ""),
+        keyword="x-corr", instance_path=f"/{col_a}",
+        schema_path=f"#/x-corr/{col_a}",
+        message=F.when(F.col("corr").isNull(),
+                       F.lit(f"Must correlate with '{col_b}': correlation "
+                             "undefined (constant column or < 2 pairs)"))
+        .otherwise(F.concat(
+            F.lit(f"Must correlate with '{col_b}': |corr| = "),
+            # decimal(12,6), not double->string: tiny correlations
+            # would render in E-notation, which SQL oracles don't emit
+            F.abs(F.col("corr")).cast("decimal(12,6)").cast("string"),
+            F.lit(f" below {min_abs}"))),
+        actual=F.col("corr").cast("decimal(12,6)"),
+        ruleset_name=ruleset_name, severity=severity)
 
 
 def mask_expr(column: str):
@@ -441,29 +435,22 @@ def mask_violations(df: DataFrame, column: str, *, expect: str,
     # policy), not a silent pass
     bad = joined.where(F.col("_total").isNull()
                        | (share < F.lit(float(min_share))))
-    return bad.select(
-        rid.alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"mask:{column}"
-              + (f":by={by}" if by else "")).alias("constraint_id"),
-        F.lit("x-mask").alias("keyword"),
-        F.lit(f"/{column}").alias("instance_path"),
-        F.lit(f"#/x-mask/{column}").alias("schema_path"),
-        F.when(F.col("_total").isNull(),
-               F.lit(f"Must match shape '{expect}': no non-NULL values "
-                     "to check"))
-         .otherwise(F.concat(
-             F.lit(f"Must match shape '{expect}': only "),
-             share.cast("string"),
-             F.lit(f" of values conform (limit {min_share}); "
-                   "top offender "),
-             F.coalesce(F.col("_top_bad"), F.lit("<none>"))))
-         .alias("message"),
-        share.cast("string").alias("actual"),
-        F.array(F.lit(expect)).alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        bad, row_id=rid,
+        constraint_id=f"mask:{column}" + (f":by={by}" if by else ""),
+        keyword="x-mask", instance_path=f"/{column}",
+        schema_path=f"#/x-mask/{column}",
+        message=F.when(F.col("_total").isNull(),
+                       F.lit(f"Must match shape '{expect}': no non-NULL "
+                             "values to check"))
+        .otherwise(F.concat(
+            F.lit(f"Must match shape '{expect}': only "),
+            share.cast("string"),
+            F.lit(f" of values conform (limit {min_share}); "
+                  "top offender "),
+            F.coalesce(F.col("_top_bad"), F.lit("<none>")))),
+        actual=share, expected=[expect], ruleset_name=ruleset_name,
+        severity=severity)
 
 
 def quantile_violations(df: DataFrame, column: str, *,
@@ -519,22 +506,17 @@ def quantile_violations(df: DataFrame, column: str, *,
             else (f">= {lo:g}" if lo is not None else f"<= {hi:g}"))
     band_text = (f"in {band}" if lo is not None and hi is not None
                  else band)
-    return bad.select(
-        rid.alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"quantile:{column}:{q:g}"
-              + (f":by={by}" if by else "")).alias("constraint_id"),
-        F.lit("x-quantile").alias("keyword"),
-        F.lit(f"/{column}").alias("instance_path"),
-        F.lit(f"#/x-quantile/{column}").alias("schema_path"),
-        F.when(F.col("_q").isNull(),
-               F.lit(f"Must have p{q * 100:g} {band_text}: no non-NULL "
-                     "values to measure"))
-         .otherwise(F.concat(
-             F.lit(f"Must have p{q * 100:g} {band_text}: got "),
-             F.col("_q").cast("string"))).alias("message"),
-        F.col("_q").cast("string").alias("actual"),
-        F.array(F.lit(band)).alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    return violation_rows(
+        bad, row_id=rid,
+        constraint_id=f"quantile:{column}:{q:g}"
+        + (f":by={by}" if by else ""),
+        keyword="x-quantile", instance_path=f"/{column}",
+        schema_path=f"#/x-quantile/{column}",
+        message=F.when(F.col("_q").isNull(),
+                       F.lit(f"Must have p{q * 100:g} {band_text}: no "
+                             "non-NULL values to measure"))
+        .otherwise(F.concat(
+            F.lit(f"Must have p{q * 100:g} {band_text}: got "),
+            F.col("_q").cast("string"))),
+        actual=F.col("_q"), expected=[band], ruleset_name=ruleset_name,
+        severity=severity)

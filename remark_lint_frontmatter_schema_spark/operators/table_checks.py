@@ -46,6 +46,7 @@ from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 if TYPE_CHECKING:  # the compiler imports this module for TABLE_CHECKS
     from ..plans.compiler import CompiledRuleset
@@ -168,13 +169,27 @@ def _drift_rule(v: dict, p: dict) -> bool:
 # placements: where in the schema tree a declaration compiles (anything
 # else is recorded in ``unknown`` as (instance_path, keyword)). Table
 # checks aggregate or join whole columns, which a nested struct field or
-# a composition branch cannot be conditioned on. NUMERIC kinds cast the
-# column to double, so on a non-numeric column they would see all-NULL
-# and vacuously pass.
-TOP = "top"            # a top-level column
-NUMERIC = "numeric"    # a top-level numeric column
-STRING = "string"      # a top-level string column
+# a composition branch cannot be conditioned on. A column placement is
+# the tuple of column types the runner reads, so a declaration on any
+# other type lands in ``unknown`` instead of failing while its plan is
+# built. NUMERIC kinds cast the column to double, so on a non-numeric
+# column they would see all-NULL and vacuously pass.
+TOP = (T.DataType,)                  # any top-level column
+NUMERIC = (T.NumericType,)
+STRING = (T.StringType,)
+# date_trunc / sequence over a timestamp (a string or date casts to one)
+_TRUNC = (T.StringType, T.DateType, T.TimestampType, T.TimestampNTZType)
+# the newest value cast to a timestamp
+_INSTANT = _TRUNC + NUMERIC
+# the value cast to double (x-gap reads TIMESTAMP_NTZ as epoch micros)
+_DOUBLE = (T.StringType, T.TimestampType) + NUMERIC
 ROOT = "root"          # the root, every key a column of the table
+
+
+def _dedup_types(p: dict) -> tuple:
+    """exact groups hash the column with sha2, which reads bytes"""
+    return (T.StringType, T.BinaryType) if p["method"] == "exact" else TOP
+
 
 # the keyword of both x-unique forms: `true` on a column, a key list at
 # the root (``false`` declares nothing)
@@ -188,7 +203,9 @@ class TableCheck:
     keyword: str                  # the DSL keyword
     kind: str                     # names it in the compiled tuples
     run: Callable                 # runner(df, column, params, ctx)
-    where: str = TOP              # placement
+    # placement: ROOT, the column types the runner reads, or a function
+    # of the compiled params that returns them
+    where: tuple | str | Callable = TOP
     params: tuple = ()            # Param declarations, in params order
     rule: Callable | None = None  # cross-field predicate(v, params)
     column: str | None = None     # param naming a column that must exist
@@ -204,6 +221,10 @@ class TableCheck:
                     and all(isinstance(k, str) for k in v)
                     and len(set(v)) == len(v))
         return params_ok(self.params, v, self.rule)
+
+    def column_types(self, p: dict) -> tuple:
+        """The column types a declaration with params ``p`` reads."""
+        return self.where(p) if callable(self.where) else self.where
 
     def declares(self, v) -> bool:
         """A shape-valid value of the keyword declares this kind."""
@@ -472,7 +493,7 @@ TABLE_CHECKS = {s.kind: s for s in (
                 "non-decreasing"),
         _int("n_buckets", 64), _OPT_ID)),
     # time buckets with outlier row counts
-    TableCheck("x-volume", "volume", _volume, params=(
+    TableCheck("x-volume", "volume", _volume, _TRUNC, params=(
         _choice("unit", _UNITS, "day"), _num("k", 3.5, lambda x: x > 0),
         _BY)),
     TableCheck("x-quantile", "quantile", _quantile, NUMERIC, params=(
@@ -500,14 +521,15 @@ TABLE_CHECKS = {s.kind: s for s in (
     TableCheck("x-benford", "benford", _benford, NUMERIC, params=(
         _num("max_mad", 0.015, lambda x: x > 0), _BY)),
     # every time bucket between the observed min and max has rows
-    TableCheck("x-calendar", "calendar", _calendar, params=(
+    TableCheck("x-calendar", "calendar", _calendar, _TRUNC, params=(
         _choice("unit", _UNITS, "day"), _BY, _int("max_buckets", 100_000))),
     # the newest row (per group) is younger than max_age_seconds at as_of
     # (run time when omitted)
-    TableCheck("x-freshness", "freshness", _freshness, params=(
+    TableCheck("x-freshness", "freshness", _freshness, _INSTANT, params=(
         _num("max_age_seconds", within=lambda x: x > 0),
         _str("as_of", None), _BY)),
-    TableCheck("x-gap", "gap", _gap, params=(
+    TableCheck("x-gap", "gap", _gap, _DOUBLE + (T.TimestampNTZType,),
+               params=(
         _num("max_seconds", within=lambda x: x > 0), _BY,
         _int("n_buckets", 64), _OPT_ID)),
     # functional dependency: one value per determinant group
@@ -518,7 +540,7 @@ TABLE_CHECKS = {s.kind: s for s in (
     # KS / PSI between two partitions; emd (1-D Wasserstein, in the
     # value's units), jsd (finite under disjoint supports) and cvm (L2 of
     # the CDF gap) are optional, None = not checked
-    TableCheck("x-drift", "drift", _drift, params=(
+    TableCheck("x-drift", "drift", _drift, _DOUBLE, params=(
         _str("partition_col"), _any("side_a"), _any("side_b"),
         _num("lo"), _num("hi"), _num("n_buckets", 25, to=int),
         _num("ks_threshold", 0.1), _num("psi_threshold", 0.2),
@@ -527,7 +549,7 @@ TABLE_CHECKS = {s.kind: s for s in (
     # exact sha256 groups, n-gram Jaccard near-dup clusters, acoustic-
     # fingerprint clusters over a binary audio column, or canonical-URL
     # groups
-    TableCheck("x-dedup", "dedup", _dedup, params=(
+    TableCheck("x-dedup", "dedup", _dedup, _dedup_types, params=(
         _ID, _choice("method", ("exact", "jaccard", "acoustic", "url"),
                      "exact"),
         _str("block", None), _int("n", 3), _num("threshold", 0.55),

@@ -14,6 +14,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .validate import to_col, violation_rows
+
 # marker stopwords per language for the n-gram-ish heuristic language ID
 LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "is"],
@@ -32,8 +34,7 @@ BPE_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 def tokens(col) -> Column:
     """Whitespace tokens (empty-string artifacts removed)."""
-    return F.filter(F.split(F.col(col) if isinstance(col, str) else col,
-                            r"\s+"), lambda t: t != "")
+    return F.filter(F.split(to_col(col), r"\s+"), lambda t: t != "")
 
 
 def token_count(col) -> Column:
@@ -41,7 +42,7 @@ def token_count(col) -> Column:
 
 
 def bpe_token_count(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
+    c = to_col(col)
     return F.size(F.regexp_extract_all(c, F.lit(BPE_REGEX), F.lit(0)))
 
 
@@ -53,8 +54,7 @@ def lang_scores(col) -> dict[str, Column]:
     re-copied the full document once per marker word (25 string scans/row);
     this touches each token 25 times with tiny set probes.
     """
-    toks = F.split(F.lower(F.col(col) if isinstance(col, str) else col),
-                   r"\s+")
+    toks = F.split(F.lower(to_col(col)), r"\s+")
 
     def member_fn(markers):
         # closure, not a default arg: pyspark HOF lambdas must have exactly
@@ -94,7 +94,7 @@ def stopword_ratio(col) -> Column:
 
 
 def punct_ratio(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
+    c = to_col(col)
     n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
     return F.when(F.length(c) > 0, n_punct / F.length(c)).otherwise(F.lit(0.0))
 
@@ -102,7 +102,7 @@ def punct_ratio(col) -> Column:
 def quality_score(col) -> Column:
     """Composite [0,1] quality heuristic: length band + stopword presence +
     low punctuation density (the usual pretraining-filter features)."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = to_col(col)
     len_ok = (F.length(c) >= 20) & (F.length(c) <= 10000)
     tok = token_count(c)
     mean_word_len = F.when(tok > 0, F.length(c) / tok).otherwise(F.lit(0.0))
@@ -120,7 +120,7 @@ def normalized(col) -> Column:
     collapsed — the shared normalization under :func:`fingerprint` and
     the transcript label-conflict check (formatting-only variants
     normalize equal)."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = to_col(col)
     return F.trim(F.regexp_replace(
         F.regexp_replace(F.lower(c), r"[^a-z0-9 ]", ""), r" +", " "))
 
@@ -209,7 +209,7 @@ def encoding_scan(df: DataFrame, text_col: str, id_col: str,
 def dup_line_fraction(col) -> Column:
     """Fraction of non-unique lines (Gopher-style repetition filter):
     1 - distinct/total over newline-split lines; 0 for empty/NULL text."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = to_col(col)
     lines = F.filter(F.split(c, r"\n"), lambda x: x != "")
     n = F.size(lines)
     return F.when(n > 0,
@@ -467,8 +467,7 @@ def gopher_violations(df: DataFrame, text_col: str, id_col: str, *,
                       ruleset_name: str = "engine",
                       severity: str = "warning") -> DataFrame:
     """Violation rows for the ``x-gopher`` table check: one row per
-    document per failing enabled Gopher rule (shape mirrors
-    VIOLATION_FIELDS, like the other table checks). ``rules`` selects a
+    document per failing enabled Gopher rule. ``rules`` selects a
     subset of :data:`GOPHER_RULE_SPECS` names (default: all seven).
 
     Same plan as :func:`gopher_gates` plus one Generate: the per-rule
@@ -491,22 +490,17 @@ def gopher_violations(df: DataFrame, text_col: str, id_col: str, *,
             F.array(*[F.lit(e) for e in expected]).alias("expected"),
         )))
     v = F.explode(F.filter(F.array(*structs), lambda s: s.isNotNull()))
-    return (gates.select(F.col(id_col), v.alias("_v"))
-            .select(
-                F.col(id_col).cast("string").alias("row_id"),
-                F.lit("all").alias("partition_id"),
-                F.lit(ruleset_name).alias("ruleset_id"),
-                F.concat(F.lit(f"gopher:{text_col}:"),
-                         F.col("_v.rule")).alias("constraint_id"),
-                F.lit("gopher").alias("keyword"),
-                F.lit(f"/{text_col}").alias("instance_path"),
-                F.concat(F.lit(f"#/x-gopher/{text_col}/"),
-                         F.col("_v.rule")).alias("schema_path"),
-                F.col("_v.message").alias("message"),
-                F.col("_v.actual").alias("actual"),
-                F.col("_v.expected").alias("expected"),
-                F.lit(severity).alias("severity"),
-            ))
+    return violation_rows(
+        gates.select(F.col(id_col), v.alias("_v")),
+        row_id=F.col(id_col),
+        constraint_id=F.concat(F.lit(f"gopher:{text_col}:"),
+                               F.col("_v.rule")),
+        keyword="gopher", instance_path=f"/{text_col}",
+        schema_path=F.concat(F.lit(f"#/x-gopher/{text_col}/"),
+                             F.col("_v.rule")),
+        message=F.col("_v.message"), actual=F.col("_v.actual"),
+        expected=F.col("_v.expected"), ruleset_name=ruleset_name,
+        severity=severity)
 
 
 def redact_pii(df: DataFrame, text_col: str, id_col: str,
@@ -623,8 +617,8 @@ def c4_violations(df: DataFrame, text_col: str, id_col: str, *,
                   ruleset_name: str = "engine",
                   severity: str = "warning") -> DataFrame:
     """Violation rows for the ``x-c4`` table check: one row per document
-    per failing C4 page gate (shape mirrors VIOLATION_FIELDS; the
-    :func:`gopher_violations` pattern). Line-level drops are a rewrite
+    per failing C4 page gate (the :func:`gopher_violations` pattern).
+    Line-level drops are a rewrite
     concern (:func:`c4_clean`), not violations — the page gates are what
     a lint pass should surface."""
     gates = c4_clean(df, text_col, id_col,
@@ -640,22 +634,16 @@ def c4_violations(df: DataFrame, text_col: str, id_col: str, *,
                       for e in expected]).alias("expected"),
         )))
     v = F.explode(F.filter(F.array(*structs), lambda s: s.isNotNull()))
-    return (gates.select(F.col(id_col), v.alias("_v"))
-            .select(
-                F.col(id_col).cast("string").alias("row_id"),
-                F.lit("all").alias("partition_id"),
-                F.lit(ruleset_name).alias("ruleset_id"),
-                F.concat(F.lit(f"c4:{text_col}:"),
-                         F.col("_v.rule")).alias("constraint_id"),
-                F.lit("c4").alias("keyword"),
-                F.lit(f"/{text_col}").alias("instance_path"),
-                F.concat(F.lit(f"#/x-c4/{text_col}/"),
-                         F.col("_v.rule")).alias("schema_path"),
-                F.col("_v.message").alias("message"),
-                F.lit(None).cast("string").alias("actual"),
-                F.col("_v.expected").alias("expected"),
-                F.lit(severity).alias("severity"),
-            ))
+    return violation_rows(
+        gates.select(F.col(id_col), v.alias("_v")),
+        row_id=F.col(id_col),
+        constraint_id=F.concat(F.lit(f"c4:{text_col}:"), F.col("_v.rule")),
+        keyword="c4", instance_path=f"/{text_col}",
+        schema_path=F.concat(F.lit(f"#/x-c4/{text_col}/"),
+                             F.col("_v.rule")),
+        message=F.col("_v.message"), actual=None,
+        expected=F.col("_v.expected"), ruleset_name=ruleset_name,
+        severity=severity)
 
 
 # ---------------------------------------------------------------------------
@@ -678,7 +666,7 @@ def _char_bigrams(col) -> Column:
     the scale-stress corpus).
     NOTE: ``sequence(1, 0)`` in Spark COUNTS DOWN, so the length guard is
     load-bearing, not defensive."""
-    t = F.col(col) if isinstance(col, str) else col
+    t = to_col(col)
     return F.when(
         F.length(t) >= 2,
         F.transform(F.sequence(F.lit(1), F.length(t) - 1),
@@ -732,28 +720,21 @@ def gibberish_scores(df: DataFrame, text_col: str, id_col: str,
 def gibberish_violations(df: DataFrame, text_col: str, id_col: str, *,
                          min_logp: float, ruleset_name: str = "engine",
                          severity: str = "warning") -> DataFrame:
-    """Violation rows (operators/validate.py VIOLATION_FIELDS shape) for
-    documents scoring below ``min_logp`` under :func:`gibberish_scores`
+    """Violation rows for documents scoring below ``min_logp`` under
+    :func:`gibberish_scores`
     — the ``x-gibberish`` declarative gate. Unscorable documents (<2
     normalized chars or NULL) never violate here: emptiness/shortness is
     minLength's finding, not a language-model one."""
     from .dedup import _track
     scored = gibberish_scores(df, text_col, id_col)
     bad = scored.where(F.col("avg_logp") < min_logp)
-    return _track(bad.select(
-        F.col(id_col).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"gibberish:{text_col}").alias("constraint_id"),
-        F.lit("gibberish").alias("keyword"),
-        F.lit(f"/{text_col}").alias("instance_path"),
-        F.lit(f"#/x-gibberish/{text_col}").alias("schema_path"),
-        F.lit(f"Must read as language: avg bigram logp >= {min_logp:g}")
-         .alias("message"),
-        F.col("avg_logp").cast("string").alias("actual"),
-        F.array(F.lit(f">= {min_logp:g}")).alias("expected"),
-        F.lit(severity).alias("severity"),
-    ), scored)
+    return _track(violation_rows(
+        bad, row_id=F.col(id_col), constraint_id=f"gibberish:{text_col}",
+        keyword="gibberish", instance_path=f"/{text_col}",
+        schema_path=f"#/x-gibberish/{text_col}",
+        message=f"Must read as language: avg bigram logp >= {min_logp:g}",
+        actual=F.col("avg_logp"), expected=[f">= {min_logp:g}"],
+        ruleset_name=ruleset_name, severity=severity), scored)
 
 
 # ---------------------------------------------------------------------------
@@ -985,8 +966,7 @@ def readability_violations(df: DataFrame, text_col: str, id_col: str, *,
                            severity: str = "warning") -> DataFrame:
     """Violation rows for the ``x-readability`` table check: documents
     whose Flesch reading ease (:func:`readability`) falls outside
-    ``[lo, hi]`` (shape mirrors VIOLATION_FIELDS like the other table
-    checks). Both extremes are quality signals: telegraphic fragments
+    ``[lo, hi]``. Both extremes are quality signals: telegraphic fragments
     score far above 100, run-on machine legalese goes negative.
 
     Documents with a NULL score (no words / NULL text) do NOT violate —
@@ -995,24 +975,16 @@ def readability_violations(df: DataFrame, text_col: str, id_col: str, *,
     scored = readability(df, text_col, id_col)
     out_of_range = (F.col("flesch") < float(lo)) \
         | (F.col("flesch") > float(hi))
-    return (scored.where(F.col("flesch").isNotNull() & out_of_range)
-            .select(
-                F.col(id_col).cast("string").alias("row_id"),
-                F.lit("all").alias("partition_id"),
-                F.lit(ruleset_name).alias("ruleset_id"),
-                F.lit(f"readability:{text_col}").alias("constraint_id"),
-                F.lit("readability").alias("keyword"),
-                F.lit(f"/{text_col}").alias("instance_path"),
-                F.lit(f"#/x-readability/{text_col}").alias("schema_path"),
-                F.concat(
-                    F.lit(f"Must have Flesch reading ease in [{lo:g}, "
-                          f"{hi:g}]: got "),
-                    F.round("flesch", 2).cast("string")).alias("message"),
-                F.round("flesch", 6).cast("string").alias("actual"),
-                F.array(F.lit(f">= {lo:g}"), F.lit(f"<= {hi:g}"))
-                 .alias("expected"),
-                F.lit(severity).alias("severity"),
-            ))
+    return violation_rows(
+        scored.where(F.col("flesch").isNotNull() & out_of_range),
+        row_id=F.col(id_col), constraint_id=f"readability:{text_col}",
+        keyword="readability", instance_path=f"/{text_col}",
+        schema_path=f"#/x-readability/{text_col}",
+        message=F.concat(F.lit(f"Must have Flesch reading ease in "
+                               f"[{lo:g}, {hi:g}]: got "),
+                         F.round("flesch", 2).cast("string")),
+        actual=F.round("flesch", 6), expected=[f">= {lo:g}", f"<= {hi:g}"],
+        ruleset_name=ruleset_name, severity=severity)
 
 
 def tfidf_keywords(df: DataFrame, text_col: str, id_col: str, *,

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .validate import violation_rows
+
 
 def duplicate_keys(df: DataFrame, key: str, *, n_salts: int = 32,
                    salted: bool = True) -> DataFrame:
@@ -49,24 +51,15 @@ def uniqueness_violations(df: DataFrame, key: str, *,
                           ruleset_name: str = "engine",
                           n_salts: int = 32,
                           severity: str = "warning") -> DataFrame:
-    """Violation rows for duplicated keys, one per duplicate key value
-    (violation shape mirrors operators/validate.py VIOLATION_FIELDS)."""
-    dups = duplicate_keys(df, key, n_salts=n_salts)
-    return dups.select(
-        F.col(key).cast("string").alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"unique:{key}").alias("constraint_id"),
-        F.lit("unique").alias("keyword"),
-        F.lit(f"/{key}").alias("instance_path"),
-        F.lit(f"#/x-unique/{key}").alias("schema_path"),
-        F.concat(F.lit(f"Must be unique: '{key}' occurs "),
-                 F.col("n_occurrences").cast("string"),
-                 F.lit(" times")).alias("message"),
-        F.col(key).cast("string").alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    """Violation rows for duplicated keys, one per duplicate key value."""
+    return violation_rows(
+        duplicate_keys(df, key, n_salts=n_salts),
+        row_id=F.col(key), constraint_id=f"unique:{key}", keyword="unique",
+        instance_path=f"/{key}", schema_path=f"#/x-unique/{key}",
+        message=F.concat(F.lit(f"Must be unique: '{key}' occurs "),
+                         F.col("n_occurrences").cast("string"),
+                         F.lit(" times")),
+        actual=F.col(key), ruleset_name=ruleset_name, severity=severity)
 
 
 def duplicate_keys_multi(df: DataFrame, keys: list[str], *,
@@ -105,22 +98,14 @@ def uniqueness_violations_multi(df: DataFrame, keys: list[str], *,
     """Violation rows for duplicated composite keys (root-level
     ``x-unique: [col, ...]``); row_id is the '|'-joined component
     values."""
-    dups = duplicate_keys_multi(df, keys, n_salts=n_salts)
     key_list = ", ".join(keys)
-    return dups.select(
-        F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
-         .alias("row_id"),
-        F.lit("all").alias("partition_id"),
-        F.lit(ruleset_name).alias("ruleset_id"),
-        F.lit(f"unique:({key_list})").alias("constraint_id"),
-        F.lit("unique").alias("keyword"),
-        F.lit("/" + "/".join(keys)).alias("instance_path"),
-        F.lit(f"#/x-unique/({key_list})").alias("schema_path"),
-        F.concat(F.lit(f"Must be unique: ({key_list}) occurs "),
-                 F.col("n_occurrences").cast("string"),
-                 F.lit(" times")).alias("message"),
-        F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
-         .alias("actual"),
-        F.lit(None).cast("array<string>").alias("expected"),
-        F.lit(severity).alias("severity"),
-    )
+    joined = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
+    return violation_rows(
+        duplicate_keys_multi(df, keys, n_salts=n_salts),
+        row_id=joined, constraint_id=f"unique:({key_list})",
+        keyword="unique", instance_path="/" + "/".join(keys),
+        schema_path=f"#/x-unique/({key_list})",
+        message=F.concat(F.lit(f"Must be unique: ({key_list}) occurs "),
+                         F.col("n_occurrences").cast("string"),
+                         F.lit(" times")),
+        actual=joined, ruleset_name=ruleset_name, severity=severity)

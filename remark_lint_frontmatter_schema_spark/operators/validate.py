@@ -26,13 +26,65 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..plans.compiler import Check, CompiledRuleset, balanced_reduce
 
-VIOLATION_FIELDS = (
-    "constraint_id", "keyword", "instance_path", "schema_path",
-    "message", "actual", "expected", "severity",
-)
+# One violation row: where it was found, then the VFileMessage fields.
+# Every producer of violation rows builds them with violation_rows.
+VIOLATION_SCHEMA = T.StructType([
+    T.StructField(name, T.ArrayType(T.StringType()) if name == "expected"
+                  else T.StringType())
+    for name in ("row_id", "partition_id", "ruleset_id", "constraint_id",
+                 "keyword", "instance_path", "schema_path", "message",
+                 "actual", "expected", "severity")])
+VIOLATION_FIELDS = tuple(VIOLATION_SCHEMA.names[3:])
+
+
+def to_col(c) -> Column:
+    """A column name (str) as ``F.col(name)``; a Column passes through.
+    The opposite of :func:`violation_rows`, where a str is a literal."""
+    return F.col(c) if isinstance(c, str) else c
+
+
+def _value(v) -> Column:
+    return v if isinstance(v, Column) else F.lit(v)
+
+
+def _expected(v) -> Column:
+    if v is None:
+        return F.lit(None).cast("array<string>")
+    if not isinstance(v, Column):
+        v = F.array(*[F.lit(e) for e in v])
+    return v.cast("array<string>")
+
+
+def violation_rows(df: DataFrame, *, row_id, constraint_id, keyword,
+                   instance_path, schema_path, message, actual,
+                   expected=None, ruleset_name, severity,
+                   partition_id="all") -> DataFrame:
+    """``df`` projected to :data:`VIOLATION_SCHEMA`, one violation per row.
+
+    Every argument is a Column or a Python value, and a Python value
+    (a str too) is a literal: pass ``F.col(name)`` to read a column.
+    ``row_id`` and ``actual`` are cast to string. ``expected`` is None
+    (a NULL array), a list of str (a literal array) or a Column, cast
+    to ``array<string>``.
+    """
+    return df.select(
+        _value(row_id).cast("string").alias("row_id"),
+        _value(partition_id).alias("partition_id"),
+        _value(ruleset_name).alias("ruleset_id"),
+        _value(constraint_id).alias("constraint_id"),
+        _value(keyword).alias("keyword"),
+        _value(instance_path).alias("instance_path"),
+        _value(schema_path).alias("schema_path"),
+        _value(message).alias("message"),
+        _value(actual).cast("string").alias("actual"),
+        _expected(expected).alias("expected"),
+        _value(severity).alias("severity"),
+    )
+
 
 _CHUNK = 64  # whens per F.array chunk (codegen hugeMethodLimit headroom)
 
@@ -61,30 +113,23 @@ def staged_names(compiled: CompiledRuleset) -> list[str]:
 
 
 def _violation_struct(c: Check) -> Column:
-    expected = (
-        F.array(*[F.lit(v) for v in c.expected]).cast("array<string>")
-        if c.expected else F.lit(None).cast("array<string>")
-    )
+    value = {
+        "constraint_id": F.lit(c.constraint_id),
+        "keyword": F.lit(c.keyword),
+        "instance_path": F.lit(c.instance_path or ""),
+        "schema_path": F.lit(c.schema_path),
+        "message": F.lit(c.message),
+        "actual": c.actual,
+        "expected": _expected(c.expected or None),
+        "severity": F.lit(c.severity),
+    }
     return F.when(
         F.coalesce(c.violated, F.lit(False)),
-        F.struct(
-            F.lit(c.constraint_id).alias("constraint_id"),
-            F.lit(c.keyword).alias("keyword"),
-            F.lit(c.instance_path or "").alias("instance_path"),
-            F.lit(c.schema_path).alias("schema_path"),
-            F.lit(c.message).alias("message"),
-            c.actual.alias("actual"),
-            expected.alias("expected"),
-            F.lit(c.severity).alias("severity"),
-        ),
+        F.struct(*[value[f].alias(f) for f in VIOLATION_FIELDS]),
     )  # otherwise NULL -> filtered out below
 
 
-_EMPTY_ARR_TYPE = (
-    "array<struct<constraint_id:string,keyword:string,"
-    "instance_path:string,schema_path:string,message:string,"
-    "actual:string,expected:array<string>,severity:string>>"
-)
+_EMPTY_ARR_TYPE = T.ArrayType(T.StructType(VIOLATION_SCHEMA.fields[3:]))
 
 
 def _raw_violations_array(compiled: CompiledRuleset) -> Column:
@@ -220,20 +265,13 @@ def validate(
     # passing check and the post-Generate filter drops them — map-only,
     # parallel, each slot a staged-attribute reference.
     viol_src = work.where(nv > 0) if not compiled.staged else work
-    violations = (
-        viol_src
-        .select(
-            F.col(row_id).cast("string").alias("row_id"),
-            part,
-            F.lit(ruleset_name).alias("ruleset_id"),
-            exploded,
-        )
-        .where(F.col("v").isNotNull())
-        .select(
-            "row_id", "partition_id", "ruleset_id",
-            *[F.col(f"v.{f}").alias(f) for f in VIOLATION_FIELDS],
-        )
-    )
+    violations = violation_rows(
+        viol_src.select(F.col(row_id).cast("string").alias("row_id"), part,
+                        exploded)
+        .where(F.col("v").isNotNull()),
+        row_id=F.col("row_id"), partition_id=F.col("partition_id"),
+        ruleset_name=ruleset_name,
+        **{f: F.col(f"v.{f}") for f in VIOLATION_FIELDS})
 
     # non-allErrors verdicts count at most one violation per row, matching
     # the single-element Ajv error array in that mode. The severity split

@@ -47,9 +47,9 @@ from pyspark.sql import types as T
 from .bundler import RulesetCompileError, resolve_internal_ref
 from . import variant as _vr
 from ..functions import content as _content
-from ..operators.table_checks import (NUMERIC, ROOT, STRING, TABLE_CHECKS,
-                                      Param, _bool, _int, _is_int, _is_num,
-                                      _num, _str, params_ok, read_params)
+from ..operators.table_checks import (ROOT, TABLE_CHECKS, Param, _bool,
+                                      _int, _is_int, _is_num, _num, _str,
+                                      params_ok, read_params)
 from ..functions.formats import (FORMAT_ALWAYS_OK, FORMAT_FINITE,
                                  FORMAT_NUMERIC_RANGE, FORMAT_REGEX,
                                  FORMAT_UDF_CHECKERS)
@@ -818,11 +818,7 @@ def _table_check(ctx: _Ctx, schema: dict, k) -> None:
             placed = ctx.instance_path == "" and all(
                 key in names for key in p["keys"])
         else:
-            placed = (top
-                      and (spec.where != NUMERIC
-                           or isinstance(ctx.dtype, _NUMERIC))
-                      and (spec.where != STRING
-                           or isinstance(ctx.dtype, T.StringType))
+            placed = (top and isinstance(ctx.dtype, spec.column_types(p))
                       and (spec.column is None or p[spec.column] is None
                            or p[spec.column] in names))
         if placed:
@@ -1927,10 +1923,12 @@ def _check_node(schema: dict, ctx: _Ctx, variant: bool = False) -> None:
             ctx.out.unknown.append((ctx.instance_path, f"{kw}:variant"))
 
 
-def _run_keywords(schema: dict, ctx: _Ctx) -> None:
-    """Compile the node's keywords in table order (no short-circuit)."""
+def _run_keywords(schema: dict, ctx: _Ctx, names=None) -> None:
+    """Compile the node's keywords, or those in ``names``, in table order
+    (no short-circuit). Each compile function sees the whole node."""
     for k in _KEYWORDS:
-        if k.compile is not None and k.name in schema:
+        if k.compile is not None \
+                and k.name in (schema if names is None else names):
             k.compile(ctx, schema, k)
 
 
@@ -1985,9 +1983,11 @@ def _compile_variant_node(schema: dict, ctx: _Ctx) -> None:
         if ctx.stage is not None:
             arr_view = ctx.stage(f"{ctx.instance_path or 'root'}.arr",
                                  arr_view)
-        _compile_keywords(routed[ARRAY_VIEW], _dc_replace(
+        # the view's keywords see the whole node: unevaluatedItems counts
+        # what a validating allOf/anyOf/oneOf/$ref/if branch evaluated
+        _run_keywords(schema, _dc_replace(
             ctx, col=arr_view, vstage=None,
-            dtype=T.ArrayType(_vr.VariantType())))
+            dtype=T.ArrayType(_vr.VariantType())), routed[ARRAY_VIEW])
     if OBJECT_VIEW in routed:
         # map<string,variant> view: keeps a JSON-null field as a PRESENT
         # entry, so map_contains_key == Ajv `required`; property values
@@ -1996,9 +1996,10 @@ def _compile_variant_node(schema: dict, ctx: _Ctx) -> None:
         if ctx.stage is not None:
             obj_view = ctx.stage(f"{ctx.instance_path or 'root'}.obj",
                                  obj_view)
-        _compile_keywords(routed[OBJECT_VIEW], _dc_replace(
+        _run_keywords(schema, _dc_replace(
             ctx, col=obj_view, vstage=None,
-            dtype=T.MapType(T.StringType(), _vr.VariantType())))
+            dtype=T.MapType(T.StringType(), _vr.VariantType())),
+            routed[OBJECT_VIEW])
     # composition probes need the variant column itself; probe recursion
     # into sub-schemas comes back through the variant entry as usual
     _run_keywords(routed.get(PASSTHROUGH, {}), ctx)

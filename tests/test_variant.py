@@ -289,3 +289,33 @@ def test_variant_staging_parity_and_plan(spark):
     for line in plan.splitlines():
         if "Scan" in line and "DataFilters" in line:
             assert "SchemaOfVariant" not in line
+
+
+@pytest.mark.parametrize("node", [
+    {"allOf": [{"properties": {"a": {}}}], "unevaluatedProperties": False},
+    {"anyOf": [{"properties": {"a": {"type": "integer"}}}, {"minimum": 0}],
+     "unevaluatedProperties": {"type": "string"}},
+    {"if": {"required": ["a"]}, "then": {"properties": {"b": {}}},
+     "properties": {"a": {}}, "unevaluatedProperties": False},
+    {"allOf": [{"prefixItems": [{}]}], "unevaluatedItems": False},
+    {"oneOf": [{"prefixItems": [{"type": "string"}]},
+               {"prefixItems": [{}, {}]}],
+     "unevaluatedItems": {"type": "integer"}},
+])
+def test_variant_unevaluated_sees_in_place_applicators(spark, node):
+    """On a variant node, unevaluatedProperties / unevaluatedItems count
+    what a validating allOf/anyOf/oneOf/if branch evaluated, as
+    jsonschema (2020-12) does."""
+    docs = [{"a": 1}, {"a": 1, "b": 2}, {"a": "x", "c": "y"}, {"c": 3},
+            {}, [1], [1, 2], ["s", 2], ["s", "t"], [], 5, "a", None]
+    df = _variant_df(spark, [(f"r{i}", json.dumps(d))
+                             for i, d in enumerate(docs)])
+    compiled = compile_ruleset({"properties": {"doc": node}}, df.schema,
+                               name="vu")
+    assert compiled.unknown == []
+    passed = {r.id: r.passed for r in validate(
+        df, compiled, row_id="id").annotated.collect()}
+    validator = jsonschema.Draft202012Validator(node)
+    want = {f"r{i}": validator.is_valid(d) for i, d in enumerate(docs)}
+    assert passed == want
+    assert not all(want.values())
